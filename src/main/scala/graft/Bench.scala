@@ -254,7 +254,7 @@ object Bench {
     // unreadable from the numbers alone — record what this run used
     val shufP = spark.conf.get("spark.sql.shuffle.partitions")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"index_builds":$ib,"vs_committed":$vsCommitted,"shuffle_partitions":$shufP,"warmup":"$warmup","repeat":$repeat,"pass_order":"$passOrder","queries":$qs,"artifact":"$outName","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"index_builds":$ib,"vs_committed":$vsCommitted,"shuffle_partitions":$shufP,"warmup":${Json.str(warmup)},"repeat":$repeat,"pass_order":${Json.str(passOrder)},"queries":$qs,"artifact":${Json.str(outName)},"sf":${Json.str(sfDir)}}"""
     println(line)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outName),
       (line + "\n").getBytes("UTF-8"))
@@ -269,8 +269,7 @@ object Bench {
     // the full line when the capture window reaches it). The totals
     // here are THE SAME numbers as the full line's — a summary, not a
     // second measurement.
-    val cpusJson = if (cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
-    println(s"""{"total":$total,"n_queries":${results.size},"n_failed":$nFailed,"sf":"$sfDir","cpus":$cpusJson,"unit":"sec","artifact":"$outName"}""")
+    println(s"""{"total":$total,"n_queries":${results.size},"n_failed":$nFailed,"sf":${Json.str(sfDir)},"cpus":${Json.str(cpus)},"unit":"sec","artifact":${Json.str(outName)}}""")
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
@@ -28,12 +28,24 @@ import graft.queries.{DedupQueries, RelationalQueries, SimilarityQueries}
   */
 object Checks {
 
-  private case class Check(query: String, metric: String, value: Double,
-                           floor: Double, cmp: String) {
-    def pass: Boolean = if (cmp == "<=") value <= floor else value >= floor
+  /** One measured metric against its floor. A non-finite value (NaN
+    * from an aggregate over an empty or all-null input, or a ratio
+    * over zero) never passes, and prints as JSON `null`.
+    */
+  private[graft] case class Check(query: String, metric: String,
+                                  value: Double, floor: Double, cmp: String) {
+    def pass: Boolean = java.lang.Double.isFinite(value) &&
+      (if (cmp == "<=") value <= floor else value >= floor)
     def json: String =
-      s"""{"metric":"$metric","value":$value,"cmp":"$cmp","floor":$floor,"pass":$pass}"""
+      s"""{"metric":"$metric","value":${Json.num(value)},"cmp":"$cmp","floor":${Json.num(floor)},"pass":$pass}"""
   }
+
+  /** Column `i` of an aggregate row as a double, NaN when it is null:
+    * sum/avg/min/max over an empty or all-null join return null, and a
+    * bare getDouble would kill the whole run with an NPE.
+    */
+  private[graft] def dbl(r: Row, i: Int): Double =
+    if (r.isNullAt(i)) Double.NaN else r.getAs[Number](i).doubleValue
 
   /** Orientation-normalized pair set (doc_a < doc_b). */
   private def norm(df: DataFrame, a: String, b: String): DataFrame =
@@ -124,9 +136,9 @@ object Checks {
       .agg(avg(abs(col("est_jaccard") - col("jexact"))), min(col("jexact")))
       .head()
     checks += Check("dedup_incremental", "estimator_mae_vs_exact",
-      mae.getDouble(0), 0.1, "<=")
+      dbl(mae, 0), 0.1, "<=")
     checks += Check("dedup_incremental", "min_exact_jaccard_of_reported",
-      mae.getDouble(1), 0.45, ">=")
+      dbl(mae, 1), 0.45, ">=")
 
     // dedup_simhash: near-identical pairs (exact trigram Jaccard >=
     // 0.85 — the corpus has no FULL exact-dup pairs, so this is the
@@ -149,17 +161,17 @@ object Checks {
     val hammingCap = 10000.0
     val hClasses = Dedup.fingerprintWords(docs, "doc_id", "text")
       .groupBy(col("_lo"), col("_hi")).agg(count(lit(1)).as("csize")).cache()
-    val maxClass = hClasses.agg(max(col("csize"))).head().getLong(0)
-    val maxBucket = Dedup.bandedFingerprints(
+    val maxClass = dbl(hClasses.agg(max(col("csize"))).head(), 0)
+    val maxBucket = dbl(Dedup.bandedFingerprints(
         hClasses.select(lit(0L).as("doc_id"), col("_lo"), col("_hi")),
         Dedup.hammingBlockCount(3), "")
       .groupBy(col("blk"), col("bv")).agg(count(lit(1)).as("m"))
-      .agg(max(col("m"))).head().getLong(0)
+      .agg(max(col("m"))).head(), 0)
     hClasses.unpersist()
     checks += Check("dedup_hamming", "max_identical_class_vs_cap",
-      maxClass.toDouble, hammingCap, "<=")
+      maxClass, hammingCap, "<=")
     checks += Check("dedup_hamming", "max_block_bucket_vs_cap",
-      maxBucket.toDouble, hammingCap, "<=")
+      maxBucket, hammingCap, "<=")
 
     // dedup_bloom: membership = batch text present in history (exact).
     // Zero false negatives is the Bloom contract; fp rate is bounded.
@@ -223,10 +235,10 @@ object Checks {
     val qvec = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("_qv"))
     def cosMass(ids: Set[Long]): Double =
-      emb.filter(col("vec_id").isInCollection(ids))
+      dbl(emb.filter(col("vec_id").isInCollection(ids))
         .crossJoin(broadcast(qvec))
         .agg(sum(cosineSimilarity(col("embedding"), col("_qv"))))
-        .head().getDouble(0)
+        .head(), 0)
     val bruteIds = SimilarityQueries.annBrute(spark, sfDir)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     val bruteMass = cosMass(bruteIds)
@@ -273,10 +285,10 @@ object Checks {
     // kIvf=16, nProbe=4 — the floor only ever tightens)
     checks += Check("ann_knn_join", "mean_recall_at_5_vs_brute",
       knnHit.toDouble / math.max(5 * nQueries, 1), 0.466, ">=")
-    val knnMass = knn
+    val knnMass = dbl(knn
       .join(directed, Seq("query_id", "vec_id"))
-      .agg(sum(col("cos"))).head().getDouble(0)
-    val bruteKnnMass = bruteKnn.agg(sum(col("cos"))).head().getDouble(0)
+      .agg(sum(col("cos"))).head(), 0)
+    val bruteKnnMass = dbl(bruteKnn.agg(sum(col("cos"))).head(), 0)
     checks += Check("ann_knn_join", "quality_ratio_at_5_vs_brute",
       knnMass / bruteKnnMass, 0.8, ">=")
 
@@ -315,13 +327,13 @@ object Checks {
     val ev = Tables.events(spark, sfDir)
     val vr = ev.agg(min(col("value").cast("double")),
       max(col("value").cast("double"))).head
-    val cellBound = (vr.getDouble(1) - vr.getDouble(0)) / (2 * 512.0)
+    val cellBound = (dbl(vr, 1) - dbl(vr, 0)) / (2 * 512.0)
     val exMed = SparkEntry.queries("ts_rolling_multi")(spark, sfDir)
       .select(col("user_id"), col("ts_c"), col("roll_med"))
     val gridMed = SparkEntry.queries("ts_rolling_median_scalable")(spark, sfDir)
       .select(col("user_id"), col("ts_c"), col("roll_med_grid"))
-    val worstErr = exMed.join(gridMed, Seq("user_id", "ts_c"))
-      .agg(max(abs(col("roll_med_grid") - col("roll_med")))).head.getDouble(0)
+    val worstErr = dbl(exMed.join(gridMed, Seq("user_id", "ts_c"))
+      .agg(max(abs(col("roll_med_grid") - col("roll_med")))).head, 0)
     checks += Check("ts_rolling_median_scalable", "grid_median_max_abs_err",
       worstErr, cellBound + 2e-6, "<=")
 
@@ -332,7 +344,7 @@ object Checks {
       }.mkString(",")
     val nFail = checks.count(!_.pass)
     val line =
-      s"""{"sf":"$sfDir","n_checks":${checks.size},"n_failed":$nFail,"checks":{$byQuery}}"""
+      s"""{"sf":${Json.str(sfDir)},"n_checks":${checks.size},"n_failed":$nFail,"checks":{$byQuery}}"""
     Files.writeString(Paths.get(outPath), line + "\n")
     println(line)
     checks.foreach(c => println(

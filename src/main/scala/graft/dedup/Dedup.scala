@@ -698,9 +698,7 @@ object Dedup {
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
                           dstCol: String = "dst",
                           maxIter: Int = 50,
-                          driverEdgeBound: Long = 1000000L,
-                          roundCounter: Option[java.util.concurrent.atomic
-                            .AtomicInteger] = None): DataFrame = {
+                          driverEdgeBound: Long = 1000000L): DataFrame = {
     // symmetrize with ONE pass over the edge lineage: a union of the
     // edge frame with its own swap computes the (often expensive —
     // banded join + verify) upstream TWICE before the checkpoint can
@@ -804,7 +802,6 @@ object Dedup {
       labels = updated.drop("_prev")
       converged = changes == 0
       iter += 1
-      roundCounter.foreach(_.set(iter))
     }
     // With pointer doubling, 50 rounds covers diameter ~2^50 — hitting
     // maxIter is practically unreachable. But returning non-converged
@@ -817,90 +814,6 @@ object Dedup {
           "2^maxIter under pointer doubling, which indicates a pathological " +
           "edge list)")
     labels
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * rounds (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the variant that moves LESS data per round
-    * than [[connectedComponents]]' pointer doubling on power-law dup
-    * graphs:
-    *
-    *   - large-star: every node's strictly-larger neighbors re-link to
-    *     the minimum of its closed neighborhood;
-    *   - small-star: every node's smaller-or-equal neighbors (and the
-    *     node itself) re-link to that minimum.
-    *
-    * Both operations per round are one min-aggregate + one join on the
-    * SAME node key (the aggregate's shuffle partitioning is reused by
-    * the join), versus pointer doubling's two joins against the full
-    * label table. Edges strictly shrink toward stars; converges in
-    * O(log² n) rounds on any graph. At the fixed point every edge is
-    * (node → component minimum). Same output contract as
-    * [[connectedComponents]]: (node, component) for every node in the
-    * edge list, component = smallest reachable id.
-    *
-    * Per-iteration localCheckpoint(true) for the same reason as the
-    * pointer-doubling loop: the convergence check references the
-    * previous round's frame, and an unbroken lineage doubles per round.
-    */
-  def connectedComponentsLargeSmallStar(edges: DataFrame,
-                                        srcCol: String = "src",
-                                        dstCol: String = "dst",
-                                        maxIter: Int = 50,
-                                        roundCounter: Option[java.util
-                                          .concurrent.atomic.AtomicInteger] =
-                                          None): DataFrame = {
-    val all = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    // nodes come from the UNFILTERED edge list: a self-loop (u, u)
-    // contributes no star work but its node is still "in the edge
-    // list" and must surface as its own singleton component — the
-    // pointer-doubling contract (a generative spec caught the two
-    // implementations disagreeing here)
-    val nodes = all.select(col("u").as("node"))
-      .union(all.select(col("v").as("node"))).distinct()
-      .localCheckpoint(true)
-    val init = all.filter(col("u") =!= col("v"))
-
-    // m(u) = min of the closed neighborhood over the SYMMETRIZED edge
-    // set; emitted edges (v, m) are kept directed large → small so each
-    // round's output is already in small-star's expected orientation.
-    def star(e: DataFrame, large: Boolean): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy(col("u").as("_mu")).agg(min(col("v")).as("_mv"))
-        .select(col("_mu"), least(col("_mv"), col("_mu")).as("_m"))
-      val kept = sym.join(mins, col("u") === col("_mu"))
-        .filter(if (large) col("v") > col("u") else col("v") <= col("u"))
-      val relinked = kept.filter(col("v") =!= col("_m"))
-        .select(col("v").as("u"), col("_m").as("v"))
-      val out =
-        if (large) relinked
-        else relinked.union(mins.filter(col("_mu") =!= col("_m"))
-          .select(col("_mu").as("u"), col("_m").as("v")))
-      out.distinct()
-    }
-
-    var e = init.distinct().localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = star(star(e, large = true), large = false)
-        .localCheckpoint(true)
-      // set equality: both sides are distinct, so equal counts plus an
-      // empty one-way difference ⇒ identical edge sets
-      converged = next.count() == e.count() &&
-        next.except(e).isEmpty
-      e = next
-      iter += 1
-      roundCounter.foreach(_.set(iter))
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsLargeSmallStar did not converge in $maxIter " +
-          "rounds; labels would be partial — raise maxIter")
-    // fixed point: e is (node → component min) for every non-root node
-    nodes.join(e.select(col("u").as("node"), col("v").as("_root")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("_root"), col("node")).as("component"))
   }
 
   /** Keep-one-per-cluster: given near-dup pairs, the ids to DROP (every
@@ -1029,7 +942,8 @@ object Dedup {
     * are a constant fraction of all documents the join falls back to a
     * shuffle on (block, hash) — still bounded by the corpus, and that
     * is exactly the regime where the collapse pays for itself
-    * downstream (graft.AbClassed measures it). sha2-256 equality is
+    * downstream (SCALING.md, "r14: dedup_jaccard class-collapse":
+    * 4.4x wall on a 75%-duplicate corpus). sha2-256 equality is
     * the dedup_exact content-identity convention (no collision risk at
     * corpus scale, unlike a 64-bit hash); null-text rows get per-row
     * synthetic keys so they are always singletons and never surface
@@ -1515,89 +1429,13 @@ object Dedup {
       .agg(count(lit(1)).as("n_windows"))
   }
 
-  /** G4 (prefix-filtered variant): blocked n-gram Jaccard — exact
-    * Jaccard over word n-grams for candidate pairs inside a blocking
-    * key, never across the full corpus.
-    *
-    * Candidate generation uses PREFIX FILTERING (the AllPairs/PPJoin
-    * family, Bayardo et al. WWW'07): order each document's shingles by
-    * ascending global document frequency (ties by hash — a total order
-    * consistent across the block), and index only the first
-    * n − ⌈t·n⌉ + 1 of them. Any pair with Jaccard ≥ t shares at least
-    * ⌈t·n⌉ shingles on each side, so its prefixes must intersect —
-    * the filter is LOSSLESS (the equality-vs-naive property is pinned
-    * in DedupSpec) and the output stays DuckDB-oracleable. The point
-    * at scale: the equi-join mass drops from Σ df² over ALL shingles
-    * to Σ df² over prefix occurrences only, and because the ordering
-    * puts globally-hot shingles LAST, the biggest df² terms (the
-    * quadratic blow-up on vocab-saturated or boilerplate-heavy
-    * corpora — exactly what the r10 scale-stress surfaced) are the
-    * first ones excluded.
-    *
-    * Verification is per-candidate array intersection over the
-    * row-local codegen shingle-hash arrays (≤ doc length longs) —
-    * bounded per pair, no corpus-scale pair aggregation.
-    *
-    * WHEN TO USE WHICH (r10 A/B at sf1-equivalent, 50 k docs,
-    * t = 0.3): the plain [[blockedJaccard]] equi-join ran FASTER
-    * (5.2 s vs 6.0 s; 0.8 s vs 1.3 s at 5 k docs) because a 0.3
-    * threshold keeps 70% of every prefix and this corpus's df
-    * distribution is narrow — the filter's join-mass saving did not
-    * repay its two extra exchanges (df join + per-doc rank window).
-    * On the r10 hot-key fixture (boilerplate line on 60% of docs)
-    * the two variants also measured EQUIVALENT (1.6 s both): the
-    * prefix correctly drops the boilerplate shingles (globally
-    * hottest, ranked last), but chance prefix collisions in the
-    * saturated trigram space regenerate the same candidate set.
-    * Prefer THIS variant when the threshold is high (0.7+: prefix
-    * ≈ 30% of shingles) over a LARGE shingle space with a heavy
-    * df tail. For boilerplate-laden corpora the measured winners are
-    * upstream: [[dropBoilerplateLines]] first (removes the hot
-    * shingles at the source — the CCNet ordering), or [[minhashLsh]]
-    * (hot-key ratio 0.9x on the same fixture) with exact verify.
-    */
-  def blockedJaccardPrefix(docs: DataFrame, idCol: String, textCol: String,
-                           blockCol: String, shingleN: Int = 3,
-                           threshold: Double = 0.3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ex = docs
-      .select(col(idCol).as("doc_id"), col(blockCol).as("blk"),
-        explode(org.apache.spark.sql.graft.TextExpressions
-          .shingleHashes(col(textCol), shingleN)).as("s"))
-    val dfreq = ex.groupBy(col("blk"), col("s")).agg(count(lit(1)).as("_df"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val pref = ex.join(dfreq, Seq("blk", "s"))
-      .withColumn("_r", row_number().over(byDoc.orderBy(col("_df"), col("s"))))
-      .withColumn("_n", count(lit(1)).over(byDoc))
-      .filter(col("_r") <= col("_n") - ceil(col("_n") * lit(threshold)) + 1)
-      .select(col("doc_id"), col("blk"), col("s"))
-    val cand = pref.as("a")
-      .join(pref.as("b"), col("a.blk") === col("b.blk") &&
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val arrs = docs.select(col(idCol).as("_aid"),
-      org.apache.spark.sql.graft.TextExpressions
-        .shingleHashes(col(textCol), shingleN).as("_arr"))
-    cand
-      .join(arrs.select(col("_aid").as("doc_a"), col("_arr").as("_arr_a")),
-        Seq("doc_a"))
-      .join(arrs.select(col("_aid").as("doc_b"), col("_arr").as("_arr_b")),
-        Seq("doc_b"))
-      .withColumn("_i",
-        size(array_intersect(col("_arr_a"), col("_arr_b"))).cast("double"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("_i") / (size(col("_arr_a")) + size(col("_arr_b")) - col("_i")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** [[blockedJaccard]] below — the exact explode-join form: full
-    * (block, shingle) equi-join + per-pair count. With
-    * `maxShingleDocFrac = None` the output is identical to
-    * [[blockedJaccardPrefix]] (the prefix-filter theorem; equality
-    * pinned in DedupSpec) — see that variant's Scaladoc for the
-    * measured crossover between the two.
+    * (block, shingle) equi-join + per-pair count. A lossless
+    * prefix-filtered candidate stage (AllPairs/PPJoin) was measured
+    * against this form and rejected: it was slower at t = 0.3 and
+    * equal on the hot-key fixture (SCALING.md: the r10 scale-stress
+    * and adversarial hot-key sections, and "r14: blockedJaccardPrefix
+    * as the prune candidate stage").
     *
     * VOCAB BOUND of the plain (`None`) form: the equi-join's candidate
     * mass is Σ df² over all (block, shingle) groups, so on a
@@ -1883,10 +1721,10 @@ object Dedup {
     * Scale: the verify join's candidate mass drops from Σ df² over raw
     * copies to Σ df² over distinct contents — quadratic → linear join
     * growth on corpora whose copy mass lives WITHIN blocks (mirrored
-    * same-site spam, the common crawl shape; `graft.AbClassed`
-    * measures that regime). Fixture honesty (r14 TaskMetricsProbe,
-    * sg100, SCALING.md): the sg fixtures plant their exact copies
-    * ACROSS sources (1,273 globally-identical docs, only 105
+    * same-site spam, the common crawl shape; measured in SCALING.md,
+    * "r14: dedup_jaccard class-collapse"). Fixture honesty (r14
+    * TaskMetricsProbe, sg100, SCALING.md): the sg fixtures plant their
+    * exact copies ACROSS sources (1,273 globally-identical docs, only 105
     * same-source), so the blocked entry's sg100 byte metrics match the
     * plain form's (15.1 GB shuffle / 19.2 GB spill — 100%
     * distinct-content near-dup Σ df² plus the id-level pair OUTPUT,

@@ -115,8 +115,7 @@ object SimilarityQueries extends QueryPack {
     * quantizer cuts the pair mass structurally where nProbe only
     * scales it. Measured: candidates −54% at sg10 (16.8M → 7.7M,
     * recall@5 1.0 → 0.988) and −50% at the sf0.01 gate fixture with
-    * recall@5 UP 0.569 → 0.583; at sg100 the candidate stage's bytes
-    * and wall drop ~2x (SCALING.md r16). The batch join keeps its OWN
+    * recall@5 UP 0.569 → 0.583. The batch join keeps its OWN
     * k=64 index (`_k64` path) — ann_ivf's single-probe shape stays on
     * the shared k=16 index whose nProbe=4 knee the r15 sweep pinned,
     * so its declared output is untouched. The k64 cold build is timed

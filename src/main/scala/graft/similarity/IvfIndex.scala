@@ -29,9 +29,10 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     * degradation (240→2,146 files, 0.68→3.2 s probes) without the
     * valve firing. Off by default — compaction belongs to the
     * single-writer ingest owner, and opting in here keeps it on that
-    * same writer thread (no new concurrency). IndexSoak --auto
-    * measures the policy: probe latency stays flat across 8 appends
-    * with NO manual compact call.
+    * same writer thread (no new concurrency). Measured at sg100:
+    * probe latency stays flat across 8 appends with NO manual compact
+    * call (SCALING.md, "r14: append-time auto-maintenance for the
+    * persisted indexes").
     */
   @volatile private var autoPolicy: Option[(Int, Long)] = None
 

@@ -96,4 +96,16 @@ class ContractSpec extends AnyFunSuite {
     assert(rowsOnly === expected,
       s"rows-only drift: extra=${rowsOnly -- expected} missing=${expected -- rowsOnly}")
   }
+
+  test("the only entry points are Bench, Checks, ScaleGen and Verify") {
+    // one-off probe/A-B mains answer one question and then rot; their
+    // measurements belong in perfbench (`perfbench/run.py --trace 1`)
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val mains = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains("def main("))
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    assert(mains === Set("Bench", "Checks", "ScaleGen", "Verify"))
+  }
 }

@@ -236,16 +236,16 @@ class DedupSpec extends SparkSpec {
     assert(pairs.size === 4 * 36 + 6)
   }
 
-  test("large-star/small-star CC matches pointer doubling on chains, cycles, stars, forests") {
+  test("driver and distributed connectedComponents agree on chains, cycles, forests") {
     def labels(e: org.apache.spark.sql.DataFrame) = {
-      val lsss = Dedup.connectedComponentsLargeSmallStar(e).collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("component")).toMap
-      val pd = Dedup.connectedComponents(e).collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("component")).toMap
-      assert(lsss === pd)
-      lsss
+      def run(bound: Long) = Dedup.connectedComponents(e, driverEdgeBound = bound)
+        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("component")).toMap
+      val driver = run(1000000L) // union-find on the driver
+      val distributed = run(0L)  // pointer-doubling loop
+      assert(driver === distributed)
+      driver
     }
-    // long chain — the high-diameter case LS/SS is for
+    // long chain — the high-diameter case
     val chain = (1L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
     assert(labels(chain).values.toSet === Set(1L))
     // cycle + cross edge + separate pair (the pointer-doubling fixture)
@@ -526,36 +526,6 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.blockedJaccard(docs, "doc_id", "text", "source", threshold = 0.4)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs === Set((1L, 2L))) // 1-4 identical but cross-source: blocked out
-  }
-
-  test("prefix-filtered blockedJaccard equals the naive full-join form (lossless)") {
-    // Adversarial fixture for the filter: a SATURATED vocabulary (8
-    // words) so nearly every doc pair shares shingles — the regime
-    // where candidate mass is quadratic and the prefix filter earns
-    // its keep — plus planted near-dups and low/high thresholds.
-    val vocab = Array("a", "b", "c", "d", "e", "f", "g", "h")
-    def txt(seed: Int, len: Int): String = {
-      val rnd = new scala.util.Random(seed)
-      Array.fill(len)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
-    }
-    val corpus = ((0 until 80).map { i =>
-      (i.toLong, txt(i, 12 + i % 25), s"src${i % 3}")
-    } ++ Seq(
-      (900L, txt(3, 12 + 3 % 25), "src0"), // exact dup of doc 3
-      (901L, txt(5, 30) + " a b", "src2") // superset near-dup of doc 5
-    )).toDF("doc_id", "text", "source")
-    for (t <- Seq(0.25, 0.5, 0.8)) {
-      def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
-        (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-          math.round(r.getAs[Double]("jaccard") * 1e9))
-      }.toSet
-      val fast = canon(Dedup.blockedJaccardPrefix(corpus, "doc_id", "text",
-        "source", shingleN = 3, threshold = t))
-      val naive = canon(Dedup.blockedJaccard(corpus, "doc_id", "text",
-        "source", shingleN = 3, threshold = t))
-      assert(fast === naive, s"prefix filter lost/invented pairs at t=$t")
-      assert(fast.nonEmpty, s"degenerate fixture at t=$t")
-    }
   }
 
   test("class-collapsed blockedJaccard is lossless vs the plain form (uncapped); capped form expands classes") {

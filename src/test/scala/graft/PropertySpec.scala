@@ -138,8 +138,6 @@ class PropertySpec extends SparkSpec {
   test("connectedComponents matches union-find min-labels on random graphs") {
     samples(genEdges, 8, 3003L).zipWithIndex.foreach { case (es, i) =>
       if (es.nonEmpty) {
-        val got = Dedup.connectedComponents(es.toDF("src", "dst"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
         // reference: path-compressing union-find, then min node per root
         val parent = scala.collection.mutable.Map[Long, Long]()
         def find(x: Long): Long = {
@@ -153,11 +151,13 @@ class PropertySpec extends SparkSpec {
         val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
         val minOf = nodes.groupBy(find).map { case (r, ns) => (r, ns.min) }
         val exp = nodes.map(n => (n, minOf(find(n)))).toMap
-        assert(got === exp, s"case $i edges=$es")
-        // the alternative large/small-star formulation must agree
-        val lss = Dedup.connectedComponentsLargeSmallStar(es.toDF("src", "dst"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(lss === exp, s"case $i edges=$es (large/small star)")
+        // both paths: driver union-find and the distributed loop
+        for (bound <- Seq(1000000L, 0L)) {
+          val got = Dedup.connectedComponents(es.toDF("src", "dst"),
+              driverEdgeBound = bound)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+          assert(got === exp, s"case $i edges=$es driverEdgeBound=$bound")
+        }
       }
     }
   }
