@@ -157,17 +157,13 @@ object Checks {
     // observed maxima the caps bound; if fixture growth ever pushes
     // either past the cap, THIS row goes red with the attribution in
     // hand, instead of a bare oracle hash mismatch with no hint that
-    // the cap (not the operator) diverged.
+    // the cap (not the operator) diverged. Both maxima come from the
+    // operator's own audit, over the shared banding projection.
     val hammingCap = 10000.0
-    val hClasses = Dedup.fingerprintWords(docs, "doc_id", "text")
-      .groupBy(col("_lo"), col("_hi")).agg(count(lit(1)).as("csize")).cache()
-    val maxClass = dbl(hClasses.agg(max(col("csize"))).head(), 0)
-    val maxBucket = dbl(Dedup.bandedFingerprints(
-        hClasses.select(lit(0L).as("doc_id"), col("_lo"), col("_hi")),
-        Dedup.hammingBlockCount(3), "")
-      .groupBy(col("blk"), col("bv")).agg(count(lit(1)).as("m"))
-      .agg(max(col("m"))).head(), 0)
-    hClasses.unpersist()
+    val hAudit = Dedup.hammingPairMassAudit(docs, "doc_id", "text",
+      maxHamming = 3).head()
+    val maxClass = dbl(hAudit, hAudit.fieldIndex("max_class_size"))
+    val maxBucket = dbl(hAudit, hAudit.fieldIndex("max_bucket_classes"))
     checks += Check("dedup_hamming", "max_identical_class_vs_cap",
       maxClass, hammingCap, "<=")
     checks += Check("dedup_hamming", "max_block_bucket_vs_cap",

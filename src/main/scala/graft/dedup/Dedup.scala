@@ -117,24 +117,6 @@ object Dedup {
         BloomFunctions.mightContain(bytes, xxhash64(col(textCol))))
   }
 
-  /** G2: MinHash + banded LSH near-dup pairs.
-    *
-    * The whole signature is ONE row-local codegen expression
-    * ([[org.apache.spark.sql.graft.MinHashSignature]]): k minima over
-    * the document's own shingles, computed in a projection — the corpus
-    * is never exploded or shuffled to build signatures. (The previous
-    * formulation — shingle rows + 64 min-aggregates — was codegen'd too
-    * but structurally required a full-corpus doc_id exchange.) Banding
-    * is likewise a projection; the only shuffles left are the bounded
-    * (band, bandHash) candidate join and the candidate-only
-    * exact-Jaccard verify.
-    */
-  /** Shared banding for minhashLsh and its audit companion: row-local
-    * signature expression, one (doc_id, band, bh) row per band. Null
-    * texts are excluded up front — the explode formulation never
-    * produced signature rows for them, and a shared null-derived band
-    * hash would otherwise pair every null-text doc with every other.
-    */
   /** The (band, bh) bucket keys of a signature column, as an
     * explodable array of structs — THE banding definition, shared by
     * [[minhashLsh]]'s candidate generation and [[LshIndex]]'s persisted
@@ -152,6 +134,12 @@ object Dedup {
     }: _*)
   }
 
+  /** Shared banding for minhashLsh and its audit companion: row-local
+    * signature expression, one (doc_id, band, bh) row per band. Null
+    * texts are excluded up front — the explode formulation never
+    * produced signature rows for them, and a shared null-derived band
+    * hash would otherwise pair every null-text doc with every other.
+    */
   private def minhashBanded(docs: DataFrame, idCol: String, textCol: String,
                             shingleN: Int, numHashes: Int,
                             bands: Int): DataFrame = {
@@ -215,6 +203,18 @@ object Dedup {
     smallPairs.union(starPairs).distinct()
   }
 
+  /** G2: MinHash + banded LSH near-dup pairs.
+    *
+    * The whole signature is ONE row-local codegen expression
+    * ([[org.apache.spark.sql.graft.MinHashSignature]]): k minima over
+    * the document's own shingles, computed in a projection — the corpus
+    * is never exploded or shuffled to build signatures. (The previous
+    * formulation — shingle rows + 64 min-aggregates — was codegen'd too
+    * but structurally required a full-corpus doc_id exchange.) Banding
+    * is likewise a projection; the only shuffles left are the bounded
+    * (band, bandHash) candidate join and the candidate-only
+    * exact-Jaccard verify.
+    */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
                  threshold: Double = 0.7,
@@ -348,13 +348,13 @@ object Dedup {
     * (sum of bit_count over the xor'd band words) <= maxHamming.
     *
     * Routed through the carried-fingerprint block join
-    * ([[nearDupFromWords]]): same band-sharing candidate semantics as
-    * the previous cappedBucketPairs formulation, but verify and
-    * exactly-once pair dedup are row-local projections on the single
-    * band equi-join — no candidate materialization, no two
-    * corpus-scale join-backs, no distinct() (the shape whose removal
-    * cut dedup_hamming's saturated-fixture wall 148x in r10; r10
-    * measured dedup_simhash growing 18x over 10x data on the old
+    * ([[nearDupFromWords]] over [[bandedSelfJoin]]): same band-sharing
+    * candidate semantics as the previous cappedBucketPairs formulation,
+    * but verify and exactly-once pair dedup are row-local projections
+    * on the single band equi-join — no candidate materialization, no
+    * two corpus-scale join-backs, no distinct() (the shape whose
+    * removal cut dedup_hamming's saturated-fixture wall 148x in r10;
+    * r10 measured dedup_simhash growing 18x over 10x data on the old
     * shape). With 4 bands and maxHamming = 8 > 3 the banding is the
     * standard SimHash near-dup HEURISTIC (a pair can spread its bit
     * flips across all 4 bands) — recall is floor-checked against exact
@@ -378,38 +378,19 @@ object Dedup {
     */
   def oversizedSimhashBuckets(docs: DataFrame, idCol: String, textCol: String,
                               maxBucketSize: Int = 10000): DataFrame =
-    bandedFingerprints(simhashWords(docs, idCol, textCol), 4, "_a")
-      .groupBy(col("blk"), col("bv")).agg(count(lit(1)).as("bucket_size"))
+    bandRows(wordRows(simhashWords(docs, idCol, textCol)), 4,
+        hammingBanding(4), "")
+      .groupBy(col("_blk").as("blk"), col("_bv").as("bv"))
+      .agg(count(lit(1)).as("bucket_size"))
       .filter(col("bucket_size") > maxBucketSize)
-      .withColumn("dropped_pairs",
-        (col("bucket_size") * (col("bucket_size") - 1) / 2).cast("long"))
+      .withColumn("dropped_pairs", pairsIn("bucket_size"))
 
-  /** G12 `dedup_hamming` — EXACT Hamming-radius near-dup pairs over the
-    * portable md5-sign SimHash (the Manku/Jain/Sarma WWW'07 web-crawl
-    * dedup design): every pair of documents whose 64-bit fingerprints
-    * differ in at most `maxHamming` bits, found WITHOUT an all-pairs
-    * scan via multi-index pigeonhole blocking — split the 64 bits into
-    * `maxHamming + 1` equal blocks; a pair within the radius leaves at
-    * least one block untouched (pigeonhole), so the equi-join on
-    * (block index, block value) is a LOSSLESS candidate generator and
-    * the operator's output equals the brute-force pair scan. That is
-    * what puts a signature-based near-dup on the ORACLED surface: the
-    * fingerprint is engine-portable ([[org.apache.spark.sql.graft.PortableSimHash64]])
-    * and the blocking is exact, so DuckDB can state the identical pair
-    * set by brute force at test scale.
-    *
-    * Scale shape: the fingerprint is one codegen projection (the
-    * corpus never shuffles to build it); the only corpus-scale
-    * exchange is the block equi-join, whose mass is Σ bucket² over
-    * (maxHamming+1) × rows block keys — for web-scale corpora the
-    * 16-bit block values spread near-uniformly unless documents are
-    * truly near-identical, and [[cappedBucketPairs]]'s guard (off by
-    * default here, because a cap would break the lossless contract)
-    * can bound adversarial buckets when the caller accepts recall
-    * loss. Verification is row-local xor + bit_count on the joined
-    * word pairs. `maxHamming + 1` must divide 64 evenly into
-    * 32-aligned blocks (1, 3, 7 or 15 — Manku's k is 3).
+  /** c·(c−1)/2 over a count column — the pair mass of a group of c
+    * members, the one expression every candidate-mass audit and guard
+    * sums.
     */
+  private def pairsIn(c: String): Column = expr(s"($c * ($c - 1)) DIV 2")
+
   /** Validated pigeonhole block count for a Hamming radius (blocks must
     * slice the two 32-bit fingerprint words evenly).
     */
@@ -435,6 +416,10 @@ object Dedup {
       .select(col("doc_id"), element_at(col("_fp"), 1).as("_lo"),
         element_at(col("_fp"), 2).as("_hi"))
 
+  /** Fingerprint words as banded-join rows: (id, lo, hi). */
+  private[graft] def wordRows(fp: DataFrame): DataFrame =
+    fp.select(col("doc_id").as("id"), col("_lo").as("lo"), col("_hi").as("hi"))
+
   /** Block `b` of `nBlocks` over the (lo, hi) word pair: bits
     * [b*width, (b+1)*width), low word for the first half of the
     * blocks, high word for the second (width <= 32 by
@@ -448,61 +433,129 @@ object Dedup {
     shiftright(w, (b % (nBlocks / 2)) * width).bitwiseAND(lit(mask))
   }
 
-  /** One row per (doc, pigeonhole block) carrying the doc's fingerprint
-    * words alongside the block: (<pre>id, <pre>lo, <pre>hi, blk, bv).
-    * THE shared banding projection of [[hammingNearDup]] and
-    * [[graft.streaming.Streaming.hammingCheckStream]] — one
-    * definition, so the batch and stream gates cannot drift on block
-    * layout.
+  /** Band `k` of a row as a function of the row's carried columns
+    * (resolved by name on one side of a join): the one input that
+    * varies across the banded pair joins below.
     */
-  private[graft] def bandedFingerprints(fp: DataFrame, nBlocks: Int,
-                                        pre: String,
-                                        carryMask: Boolean = false): DataFrame = {
-    val in = Seq(col("doc_id").as(s"${pre}id"),
-      col("_lo").as(s"${pre}lo"), col("_hi").as(s"${pre}hi")) ++
-      (if (carryMask) Seq(col("_mask").as(s"${pre}mask")) else Nil)
-    val out = Seq(col(s"${pre}id"), col(s"${pre}lo"), col(s"${pre}hi")) ++
-      (if (carryMask) Seq(col(s"${pre}mask")) else Nil)
-    fp.select(in :+
-        explode(array((0 until nBlocks).map(b =>
-          struct(lit(b).as("blk"),
-            hammingBlock(col("_lo"), col("_hi"), b, nBlocks).as("bv"))): _*))
-          .as("bb"): _*)
-      .select(out :+ col("bb.blk").as("blk") :+ col("bb.bv").as("bv"): _*)
+  private[graft] type Banding = (Int, String => Column) => Column
+
+  /** Pigeonhole blocks derived from the carried (lo, hi) words — the
+    * band is recomputed from the words on each side, so no band array
+    * ever rides the shuffle.
+    */
+  private[graft] def hammingBanding(nBlocks: Int): Banding =
+    (k, c) => hammingBlock(c("lo"), c("hi"), k, nBlocks)
+
+  /** Xor+popcount distance of two carried fingerprints (`_a`/`_b`
+    * sides of [[sharedBandJoin]]).
+    */
+  private[graft] def pairHamming: Column =
+    (bit_count(col("_alo").bitwiseXOR(col("_blo"))) +
+      bit_count(col("_ahi").bitwiseXOR(col("_bhi")))).cast("long")
+
+  /** THE banding projection of every carried-payload pair join (batch
+    * and stream, fingerprints and vectors): one row per (row, band)
+    * carrying all of `rows`' columns prefixed by `pre`, plus the band
+    * index `<pre>_blk` and value `<pre>_bv`.
+    */
+  private[graft] def bandRows(rows: DataFrame, nBands: Int, band: Banding,
+                              pre: String): DataFrame = {
+    val carried = rows.columns.toSeq
+    rows.select(carried.map(c => col(c).as(pre + c)) :+
+        explode(array((0 until nBands).map(k =>
+          struct(lit(k).as("blk"), band(k, col).as("bv"))): _*)).as("_bb"): _*)
+      .select(carried.map(c => col(pre + c)) :+ col("_bb.blk").as(s"${pre}_blk") :+
+        col("_bb.bv").as(s"${pre}_bv"): _*)
   }
 
-  /** Smallest block index on which two carried fingerprints agree —
-    * the row-local exactly-once-per-pair dedup shared by the batch and
-    * stream Hamming gates (each joined row survives only when its own
-    * block index equals this). ONLY valid when no block was dropped
-    * before the join: a capped path must dedup pairs another way.
+  /** The equi-join of `_a`- and `_b`-prefixed banded rows on (band,
+    * value), each pair kept ONCE, at its first surviving shared band:
+    * both sides carry their payload, so each joined row recomputes
+    * which bands match and survives only when its own band index is
+    * the smallest matching band whose bit is clear in `aMask` (the
+    * over-cap bitmask; for a matching band both rows share the bucket,
+    * so one side's bit is authoritative). Row-local — no distinct(),
+    * no join-back (a distinct over the candidate set measured 148x
+    * growth on the saturated mult=10 fixture). A masked smallest band
+    * cannot discard a pair that joined via a surviving one (the r10
+    * review-pass finding): the rule skips masked bands rather than
+    * ranking them. With mask 0 it is the plain smallest-shared-band
+    * rule of the uncapped stream gates.
     */
-  private[graft] def firstMatchingBlock(aLo: Column, aHi: Column,
-                                        bLo: Column, bHi: Column,
-                                        nBlocks: Int): Column =
-    firstSurvivingMatchingBlock(aLo, aHi, bLo, bHi, lit(0L), nBlocks)
+  private[graft] def sharedBandJoin(a: DataFrame, b: DataFrame, nBands: Int,
+                                    band: Banding, on: Column = lit(true),
+                                    aMask: Column = lit(0L)): DataFrame =
+    a.join(b, col("_a_blk") === col("_b_blk") && col("_a_bv") === col("_b_bv") && on)
+      .filter(col("_a_blk") === coalesce((0 until nBands).map(k =>
+        when(band(k, c => col("_a" + c)) === band(k, c => col("_b" + c)) &&
+          aMask.bitwiseAND(lit(1L << k)) === 0, lit(k))): _*))
 
-  /** Mask-aware generalization of [[firstMatchingBlock]]: the smallest
-    * block index on which the two carried fingerprints agree AND whose
-    * bit is clear in `aMask` (the per-doc over-cap-bucket bitmask).
-    * For a MATCHING block the two docs share the block's bucket, so
-    * the a-side mask bit equals the b-side bit — one mask suffices.
-    * With mask 0 this is exactly the uncapped smallest-matching-block
-    * rule.
+  /** Per-row bitmask of over-cap bands (`mask`, 0 when uncapped): bit k
+    * is set when the row's band-k bucket holds more than
+    * `maxBucketSize` rows. A mask keeps the exactly-once rule row-local
+    * under a cap — dropping over-cap rows and then deduplicating pairs
+    * shuffles the full candidate set (23.5M wide rows on the mult=10
+    * simhash fixture), where this shuffles the banded rows once for an
+    * audit-sized aggregate. The over-cap key set and the mask table are
+    * empty on a healthy corpus, so AQE broadcasts their joins.
     */
-  private[graft] def firstSurvivingMatchingBlock(aLo: Column, aHi: Column,
-                                                 bLo: Column, bHi: Column,
-                                                 aMask: Column,
-                                                 nBlocks: Int): Column =
-    coalesce((0 until nBlocks).map(k =>
-      when(hammingBlock(aLo, aHi, k, nBlocks) ===
-        hammingBlock(bLo, bHi, k, nBlocks) &&
-        aMask.bitwiseAND(lit(1L << k)) === 0, lit(k))): _*)
+  private def overCapMask(rows: DataFrame, nBands: Int, band: Banding,
+                          maxBucketSize: Int): DataFrame =
+    if (maxBucketSize == Int.MaxValue) rows.withColumn("mask", lit(0L))
+    else {
+      val banded = bandRows(rows, nBands, band, "_x")
+      val bigKeys = banded.groupBy(col("_x_blk"), col("_x_bv"))
+        .agg(count(lit(1)).as("_bn"))
+        .filter(col("_bn") > maxBucketSize)
+        .select(col("_x_blk"), col("_x_bv"))
+      val masks = banded.join(bigKeys, Seq("_x_blk", "_x_bv"))
+        .groupBy(col("_xid").as("id"))
+        // a band index is distinct per row, so sum of 2^blk == bitwise OR
+        .agg(sum(expr("shiftleft(1L, _x_blk)")).as("mask"))
+      rows.join(masks, Seq("id"), "left").na.fill(0L, Seq("mask"))
+    }
 
-  /** G12: exact Hamming-radius near-dup pairs over the 128-bit
-    * fingerprint words — lossless pigeonhole block join over distinct-
-    * fingerprint CLASSES, then output-mass expansion back to document
-    * pairs (the r11 class-collapse rewrite; details inline below).
+  /** The batch banded carried-payload pair join behind dedup_hamming,
+    * dedup_simhash and dedup_embed: `rows` (an `id` column plus the
+    * payload) banded by `band`, over-cap buckets (more than
+    * `maxBucketSize` rows) dropped before the join — bounding the
+    * quadratic in-bucket mass; LOSSY over the cap: a pair survives iff
+    * one of its shared bands sits in an under-cap bucket — and every
+    * pair emitted once (`_aid < _bid`) with both sides' payload as
+    * `_a<col>`/`_b<col>`, ready for a row-local verify projection.
+    */
+  private[graft] def bandedSelfJoin(rows: DataFrame, nBands: Int, band: Banding,
+                                    maxBucketSize: Int): DataFrame = {
+    require(nBands <= 63, s"too many bands for the over-cap bitmask: $nBands")
+    val masked = overCapMask(rows, nBands, band, maxBucketSize)
+    // with mask 0 the filter constant-folds away
+    def side(pre: String): DataFrame = bandRows(masked, nBands, band, pre)
+      .filter(col(s"${pre}mask").bitwiseAND(expr(s"shiftleft(1L, ${pre}_blk)")) === 0)
+    sharedBandJoin(side("_a"), side("_b"), nBands, band,
+      col("_aid") < col("_bid"), col("_amask"))
+  }
+
+  /** G12 `dedup_hamming` — EXACT Hamming-radius near-dup pairs over the
+    * portable md5-sign SimHash (the Manku/Jain/Sarma WWW'07 web-crawl
+    * dedup design): every pair of documents whose 64-bit fingerprints
+    * (held as two 32-bit words) differ in at most `maxHamming` bits,
+    * found WITHOUT an all-pairs scan via multi-index pigeonhole
+    * blocking — split the 64 bits into `maxHamming + 1` equal blocks; a
+    * pair within the radius leaves at least one block untouched
+    * (pigeonhole), so the equi-join on (block index, block value) is a
+    * LOSSLESS candidate generator and the uncapped output equals the
+    * brute-force pair scan. That is what puts a signature-based
+    * near-dup on the ORACLED surface: the fingerprint is
+    * engine-portable ([[org.apache.spark.sql.graft.PortableSimHash64]])
+    * and the blocking is exact, so DuckDB can state the identical pair
+    * set by brute force at test scale. `maxHamming + 1` must divide 64
+    * evenly into 32-aligned blocks (1, 3, 7 or 15 — Manku's k is 3).
+    *
+    * Shape: the fingerprint is one codegen projection; the block join
+    * runs over distinct-fingerprint CLASSES ([[bandedSelfJoin]]), then
+    * output-mass expansion back to document pairs (the r11
+    * class-collapse rewrite; details inline below). Verification is
+    * row-local xor + bit_count on the joined words.
     *
     * CAP SEMANTICS (ADVICE r11 — pre-r12 one knob governed both; they
     * bound DIFFERENT quadratic dimensions and are now separate):
@@ -577,91 +630,26 @@ object Dedup {
     cross.union(within)
   }
 
-  /** Carried-fingerprint block-equi-join near-dup core shared by
-    * [[hammingNearDup]] (nBlocks = maxHamming + 1, so the blocking is
-    * LOSSLESS by pigeonhole) and [[simhashNearDup]] (nBlocks = 4 fixed
-    * by the 4x16-bit band layout while maxHamming may exceed
-    * nBlocks - 1, so the blocking is the classic SimHash banding
-    * HEURISTIC — recall beyond Hamming nBlocks - 1 is probabilistic
-    * and floor-checked in CHECKS, not guaranteed).
-    *
-    * `fp` is (doc_id, _lo, _hi) 64-bit fingerprint words. Each side of
-    * the block join CARRIES its fingerprint words, so the Hamming
-    * verify is a projection on the join output — no candidate
-    * materialization, no join-back. A pair sharing several blocks
-    * would otherwise surface once per shared block and need a
-    * distinct() (a full shuffle of the candidate set — measured 148x
-    * growth on the saturated mult=10 fixture before this rewrite):
-    * instead each joined row recomputes which blocks match from the
-    * two fingerprints in hand and survives only when its own block
-    * index is the SMALLEST matching one — exactly-once per pair,
-    * row-local, no exchange.
+  /** Hamming-verified pairs of (doc_id, _lo, _hi) fingerprint words
+    * over [[bandedSelfJoin]] — shared by [[hammingNearDup]] (nBlocks =
+    * maxHamming + 1, so the blocking is LOSSLESS by pigeonhole) and
+    * [[simhashNearDup]] (nBlocks = 4 fixed by the 4x16-bit band layout
+    * while maxHamming may exceed nBlocks - 1, so the blocking is the
+    * classic SimHash banding HEURISTIC — recall beyond Hamming
+    * nBlocks - 1 is probabilistic and floor-checked in CHECKS, not
+    * guaranteed). `keepWords` also emits both sides' words
+    * (`_alo, _ahi, _blo, _bhi`) for the class expansion.
     */
   private[graft] def nearDupFromWords(fp: DataFrame, nBlocks: Int,
                                       maxHamming: Int,
                                       maxBucketSize: Int,
                                       keepWords: Boolean = false): DataFrame = {
-    // Skew guard (LOSSY over the cap): a pair survives iff at least one
-    // of its shared blocks sits in an under-cap bucket. Implemented as
-    // a per-doc BITMASK of over-cap blocks so the exactly-once dedup
-    // below stays row-local even when capped: the naive alternative —
-    // drop over-cap rows, then dropDuplicates the surviving pairs —
-    // shuffles the full candidate-pair set (measured 23.5M wide rows on
-    // the mult=10 simhash fixture) where this shape shuffles only the
-    // 4n banded rows for one audit-sized aggregate. The over-cap key
-    // set and the per-doc mask table are both tiny in practice (empty
-    // on a healthy corpus) — AQE turns their joins into broadcasts.
-    val masked: DataFrame =
-      if (maxBucketSize == Int.MaxValue) fp.withColumn("_mask", lit(0L))
-      else {
-        val bandedAll = bandedFingerprints(fp, nBlocks, "_x")
-        val bigKeys = bandedAll.groupBy(col("blk"), col("bv"))
-          .agg(count(lit(1)).as("_bn"))
-          .filter(col("_bn") > maxBucketSize)
-          .select(col("blk"), col("bv"))
-        val masks = bandedAll.join(bigKeys, Seq("blk", "bv"))
-          .groupBy(col("_xid"))
-          // blk is distinct per doc, so sum of 2^blk == bitwise OR
-          .agg(sum(expr("shiftleft(1L, blk)")).as("_mask"))
-          .select(col("_xid").as("doc_id"), col("_mask"))
-        fp.join(masks, Seq("doc_id"), "left")
-          .na.fill(0L, Seq("_mask"))
-      }
-    // rows in over-cap buckets are dropped BEFORE the join (bounding
-    // the quadratic in-bucket mass); with mask 0 the filter constant-
-    // folds away
-    def banded(pre: String): DataFrame =
-      bandedFingerprints(masked, nBlocks, pre, carryMask = true)
-        .filter(col(s"${pre}mask")
-          .bitwiseAND(expr("shiftleft(1L, blk)")) === 0)
-    val a = banded("_a")
-    val b = banded("_b")
-      .withColumnRenamed("blk", "_bblk").withColumnRenamed("bv", "_bbv")
-    val joined = a.join(b,
-      col("blk") === col("_bblk") && col("bv") === col("_bbv") &&
-        col("_aid") < col("_bid"))
-    // exactly-once per pair, ROW-LOCAL in both modes: each joined row
-    // recomputes which blocks match from the carried fingerprints and
-    // survives only when its own block index is the smallest matching
-    // block whose bucket was NOT capped (the carried mask — for a
-    // matching block both docs share the bucket, so one side's mask
-    // bit is authoritative). A dropped smallest-matching-block cannot
-    // discard a pair that legitimately joined via a surviving block
-    // (the r10 review-pass finding): the rule skips masked blocks
-    // rather than ranking them.
-    val once = joined
-      .filter(col("blk") === firstSurvivingMatchingBlock(
-        col("_alo"), col("_ahi"), col("_blo"), col("_bhi"),
-        col("_amask"), nBlocks))
-    val base = Seq(col("_aid").as("doc_a"), col("_bid").as("doc_b"),
-      (bit_count(col("_alo").bitwiseXOR(col("_blo"))) +
-        bit_count(col("_ahi").bitwiseXOR(col("_bhi"))))
-        .cast("long").as("hamming"))
     val words =
-      if (keepWords)
-        Seq(col("_alo"), col("_ahi"), col("_blo"), col("_bhi"))
+      if (keepWords) Seq(col("_alo"), col("_ahi"), col("_blo"), col("_bhi"))
       else Nil
-    once.select(base ++ words: _*)
+    bandedSelfJoin(wordRows(fp), nBlocks, hammingBanding(nBlocks), maxBucketSize)
+      .select(Seq(col("_aid").as("doc_a"), col("_bid").as("doc_b"),
+        pairHamming.as("hamming")) ++ words: _*)
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -882,130 +870,76 @@ object Dedup {
     // non-representative members would not be implied by the pair graph
     require(threshold > 0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    // LAZY FUSED COLLAPSE (r15, verdict-r14 item 3; reshaped r16,
-    // verdict-r15 item 3): on a zero-duplicate corpus [[classReps]]'
-    // dup-class table is EMPTY, AQE turns the rep left-join into a
-    // broadcast of nothing, and the plan degenerates to the plain
-    // chain plus one narrow map-side-combined agg — no eager job, no
-    // window sort. The r15 wiring derived reps with an ANTI-join
-    // against a member list recovered by a second corpus join
-    // (dupClassMembers), and the final output anti-joined docs against
-    // nonRep ∪ droppedReps — since reps = docs ∖ nonRep, that final
-    // union leg re-derived the whole collapse lineage a second time
-    // inside the output job (3 corpus scans, 2 broadcast builds).
-    // ONE anti-join instead: output = reps ∖ droppedReps — identical
-    // rows (docs ∖ (nonRep ∪ droppedRepIds) = (docs ∖ nonRep) ∖
-    // droppedRepIds; dropped ids are rep ids, all present in reps),
-    // one corpus scan and one broadcast build fewer per job that
-    // derives the frame (measured at sf0.1: the r15 +0.32 s lazy-DAG
-    // stage floor on dedup_prune came from exactly these legs).
-    val reps = classReps(docs, idCol, textCol, blockCol)
-    pruneFromUniverse(reps,
+    // ONE anti-join: output = reps ∖ droppedReps, identical to
+    // docs ∖ (nonRep ∪ droppedRepIds) since dropped ids are rep ids —
+    // anti-joining docs against that union re-derived the collapse
+    // lineage a second time inside the output job (measured at sf0.1:
+    // a +0.32 s stage floor on dedup_prune)
+    val reps = classCollapse(docs, idCol, textCol, blockCol)._1
+    pruneByPairs(reps, jaccardPairsFromUniverse(
       guardedUniverse(
         cappedUniverse(reps, idCol, textCol, blockCol, shingleN,
-          maxShingleDocFrac), maxCandidatePairs),
-      idCol, threshold)
+          maxShingleDocFrac), maxCandidatePairs), threshold), idCol)
   }
 
-  /** The prune back half shared by [[pruneNearDups]] and
-    * [[pruneNearDupsAuto]]'s shared-scan exact route (ADVICE r15:
-    * one definition, so the two routes cannot drift): verified pairs
-    * from the universe → keep-one-per-cluster drop list → the ONE
-    * anti-join of the representative corpus against it.
+  /** The prune tail shared by every prune route: verified pairs →
+    * keep-one-per-cluster drop list ([[dropIdsFromPairs]]) → the ONE
+    * anti-join of `corpus` against it.
     */
-  private def pruneFromUniverse(reps: DataFrame, ex: DataFrame,
-                                idCol: String,
-                                threshold: Double): DataFrame =
-    reps.join(
-      dropIdsFromPairs(jaccardPairsFromUniverse(ex, threshold))
-        .select(col("drop_id").as(idCol)),
+  private def pruneByPairs(corpus: DataFrame, pairs: DataFrame,
+                           idCol: String): DataFrame =
+    corpus.join(dropIdsFromPairs(pairs).select(col("drop_id").as(idCol)),
       Seq(idCol), "left_anti")
 
-  /** Members of size->1 identical-content classes — the LAZY core of
-    * the class-collapse shared by [[pruneNearDups]] and
-    * [[blockedJaccardClassed]] (r15; replaces r14's eager
-    * hasDuplicateClasses probe). One narrow aggregate over
-    * (block, sha2(text)) with map-side partial min/count — the
-    * exchange carries (block, hash, partial-agg) triples, never text —
-    * keeps only classes with count > 1, then one equi-join back
-    * against the corpus's row-local (block, sha2) projection to
-    * recover member ids. Output: (_mid, _rep) for every member of
-    * every duplicate class (_rep = the class's smallest id; _rep
-    * itself appears as a member).
+  /** The (block, content) class collapse behind [[pruneNearDups]],
+    * [[pruneNearDupsAuto]], [[pairMassAudit]] and
+    * [[blockedJaccardClassed]]: ONE left join of the corpus against its
+    * dup-class table, from which both outputs are derived —
     *
-    * Scale shape: the dup-class table is sized by DUPLICATED CONTENTS,
-    * not the corpus — empty on a zero-duplicate corpus, thousands of
-    * rows on typical crawl shards — so AQE converts the member join
-    * (and every downstream join the callers do against this frame)
-    * into a broadcast at runtime, and the corpus is never shuffled for
-    * the collapse. On an adversarial corpus where duplicate classes
-    * are a constant fraction of all documents the join falls back to a
-    * shuffle on (block, hash) — still bounded by the corpus, and that
-    * is exactly the regime where the collapse pays for itself
-    * downstream (SCALING.md, "r14: dedup_jaccard class-collapse":
-    * 4.4x wall on a 75%-duplicate corpus). sha2-256 equality is
-    * the dedup_exact content-identity convention (no collision risk at
-    * corpus scale, unlike a 64-bit hash); null-text rows get per-row
-    * synthetic keys so they are always singletons and never surface
-    * here. Everything is lazy: composing callers pay zero jobs at
-    * construction time.
+    *  - `reps`: the corpus reduced to class REPRESENTATIVES (each
+    *    duplicate class's smallest-id member plus every singleton), with
+    *    all of `docs`' columns — decided row-locally as
+    *    `_rep IS NULL OR id = _rep`;
+    *  - `members`: (_mid, _rep) for every member of every duplicate
+    *    class, the rep itself included — the same frame filtered on a
+    *    matched class, which the optimizer runs as an inner join.
+    *
+    * The dup-class table is one narrow aggregate over (block,
+    * sha2(text)) with map-side partial min/count — the exchange carries
+    * (block, hash, partials), never text — keeping classes of more than
+    * one member. It is sized by DUPLICATED CONTENTS, not the corpus:
+    * empty on a zero-duplicate corpus, thousands of rows on typical
+    * crawl shards, so AQE broadcasts every join against it and the
+    * corpus is never shuffled for the collapse. (On an adversarial
+    * corpus where duplicate classes are a constant fraction of all
+    * documents the joins fall back to a shuffle on (block, hash) —
+    * exactly the regime where the collapse pays for itself: SCALING.md,
+    * "r14: dedup_jaccard class-collapse", 4.4x wall on a 75%-duplicate
+    * corpus.) sha2-256 equality is the dedup_exact content-identity
+    * convention (no collision risk at corpus scale, unlike a 64-bit
+    * hash); null-text rows get per-row synthetic keys, and null-block
+    * rows never match the join (null inequality), so both stay
+    * singletons and their own representatives. Lazy: composing callers
+    * pay zero jobs at construction time.
     */
-  private def dupClassMembers(docs: DataFrame, idCol: String,
-                              textCol: String,
-                              blockCol: String): DataFrame = {
-    docs.select(col(blockCol).as("_blk"),
-        classKey(docs, idCol, textCol).as("_ck"), col(idCol).as("_mid"))
-      .join(dupClasses(docs, idCol, textCol, blockCol), Seq("_blk", "_ck"))
-      .select(col("_mid"), col("_rep"))
-  }
-
-  /** The (block, content)-class identity key: sha2-256 of the text
-    * (the dedup_exact convention — no collision risk at corpus scale,
-    * unlike a 64-bit hash); null-text rows get per-row synthetic keys
-    * so they are always singletons and never collapse.
-    */
-  private def classKey(docs: DataFrame, idCol: String,
-                       textCol: String): Column =
-    coalesce(sha2(col(textCol), 256),
-      concat(lit("_null_"), col(idCol)))
-
-  /** One row per size->1 identical-content class: (_blk, _ck, _rep)
-    * with _rep = the class's smallest id. Sized by DUPLICATED
-    * CONTENTS, not the corpus — empty on a zero-duplicate corpus —
-    * and derived from one narrow aggregate with map-side partial
-    * min/count (the exchange carries (block, hash, partials), never
-    * text).
-    */
-  private def dupClasses(docs: DataFrame, idCol: String, textCol: String,
-                         blockCol: String): DataFrame =
-    docs
-      .groupBy(col(blockCol).as("_blk"),
-        classKey(docs, idCol, textCol).as("_ck"))
+  private def classCollapse(docs: DataFrame, idCol: String, textCol: String,
+                            blockCol: String): (DataFrame, DataFrame) = {
+    val key = coalesce(sha2(col(textCol), 256), concat(lit("_null_"), col(idCol)))
+    val dupClasses = docs.groupBy(col(blockCol).as("_blk"), key.as("_ck"))
       .agg(min(col(idCol)).as("_rep"), count(lit(1)).as("_csize"))
-      .filter(col("_csize") > 1)
+      // isNotNull(_rep) is the predicate the optimizer infers for the
+      // members filter below; stating it here keeps the reps and
+      // members joins on ONE reusable broadcast of this table
+      .filter(col("_csize") > 1 && col("_rep").isNotNull)
       .select(col("_blk"), col("_ck"), col("_rep"))
-
-  /** The corpus reduced to class REPRESENTATIVES — each (block,
-    * content) duplicate class's smallest-id member plus every
-    * singleton, with all of `docs`' columns (r16, verdict-r15 item 3).
-    * ONE left join against the (tiny, often empty, AQE-broadcast)
-    * [[dupClasses]] table decides rep-ness row-locally
-    * (`_rep IS NULL OR id = _rep`), replacing the r15 shape that
-    * recovered the non-representative MEMBER list through a second
-    * corpus join (dupClassMembers) and anti-joined the corpus against
-    * it — one corpus scan and one broadcast build fewer in every job
-    * that derives the frame, with the corpus still never shuffled for
-    * the collapse. Null-block rows never match the join (standard
-    * null inequality) and pass through as their own representatives,
-    * exactly as the member-join wiring treated them.
-    */
-  private def classReps(docs: DataFrame, idCol: String, textCol: String,
-                        blockCol: String): DataFrame =
-    docs.withColumn("_ck0", classKey(docs, idCol, textCol))
-      .join(dupClasses(docs, idCol, textCol, blockCol),
+    val classed = docs.withColumn("_ck0", key)
+      .join(dupClasses,
         col(blockCol) === col("_blk") && col("_ck0") === col("_ck"), "left")
-      .filter(col("_rep").isNull || col(idCol) === col("_rep"))
-      .drop("_ck0", "_blk", "_ck", "_rep")
+    (classed.filter(col("_rep").isNull || col(idCol) === col("_rep"))
+      .drop("_ck0", "_blk", "_ck", "_rep"),
+     classed.filter(col("_rep").isNotNull)
+       .select(col(idCol).as("_mid"), col("_rep")))
+  }
 
   /** Pre-flight candidate-mass audit of [[hammingNearDup]] — the
     * Jaccard-family [[pairMassAudit]]'s counterpart for the OTHER
@@ -1027,30 +961,25 @@ object Dedup {
     *    pairs), the other quadratic dimension.
     *
     * Same scale shape as the Jaccard audit: one fingerprint
-    * projection (codegen), two narrow map-side-combined aggregates,
-    * 1-row output (the two scalar sides join as bounded broadcasts).
+    * projection (codegen), the shared [[bandRows]] projection, two
+    * narrow map-side-combined aggregates, 1-row output (the two scalar
+    * sides join as bounded broadcasts).
     */
   def hammingPairMassAudit(docs: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 3): DataFrame = {
     val nBlocks = hammingBlockCount(maxHamming)
-    val fp = fingerprintWords(docs, idCol, textCol)
-    val classes = fp.groupBy(col("_lo"), col("_hi"))
+    val classes = fingerprintWords(docs, idCol, textCol)
+      .groupBy(col("_lo").as("lo"), col("_hi").as("hi"))
       .agg(count(lit(1)).as("_m"))
     val classStats = classes.agg(
       count(lit(1)).as("n_classes"),
       coalesce(max(col("_m")), lit(0L)).as("max_class_size"),
-      coalesce(sum(expr("(_m * (_m - 1)) DIV 2")), lit(0L))
-        .as("intra_class_pairs"))
-    val banded = classes.select(
-      explode(array((0 until nBlocks).map(b =>
-        struct(lit(b).as("blk"),
-          hammingBlock(col("_lo"), col("_hi"), b, nBlocks).as("bv"))): _*))
-        .as("bb"))
-      .select(col("bb.blk").as("blk"), col("bb.bv").as("bv"))
-    val bucketStats = banded.groupBy(col("blk"), col("bv"))
+      coalesce(sum(pairsIn("_m")), lit(0L)).as("intra_class_pairs"))
+    val bucketStats = bandRows(classes.select(col("lo"), col("hi")), nBlocks,
+        hammingBanding(nBlocks), "")
+      .groupBy(col("_blk"), col("_bv"))
       .agg(count(lit(1)).as("_c"))
-      .agg(coalesce(sum(expr("(_c * (_c - 1)) DIV 2")), lit(0L))
-        .as("candidate_class_pairs"),
+      .agg(coalesce(sum(pairsIn("_c")), lit(0L)).as("candidate_class_pairs"),
         coalesce(max(col("_c")), lit(0L)).as("max_bucket_classes"))
     bucketStats.crossJoin(broadcast(classStats))
   }
@@ -1085,161 +1014,84 @@ object Dedup {
                        maxBucketSize: Int = 10000): DataFrame = {
     require(threshold > 0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    docs.join(
-      dropIdsFromPairs(
-        minhashLsh(docs, idCol, textCol, shingleN, numHashes, bands,
-          threshold, maxBucketSize))
-        .withColumnRenamed("drop_id", idCol),
-      Seq(idCol), "left_anti")
+    pruneByPairs(docs, minhashLsh(docs, idCol, textCol, shingleN, numHashes,
+      bands, threshold, maxBucketSize), idCol)
   }
 
-  /** MEASURED ROUTER over the two prune shapes (r15): run the linear
-    * [[pairMassAudit]], then take the exact chain
+  /** Input-size bound (optimizer stats of `docs`) under which
+    * [[pruneNearDupsAuto]] checkpoints the shared universe.
+    */
+  private val SharedScanInputBytes = BigInt(1L << 28)
+
+  /** MEASURED ROUTER over the two prune shapes: the exact chain
     * ([[pruneNearDups]], every true near-dup pair verified) when the
-    * measured Σ df·(df−1)/2 candidate mass fits `maxCandidatePairs`,
-    * else the LSH chain ([[pruneNearDupsLsh]], banded candidates,
-    * exact-verified drops — precision 1.0 against the exact chain,
-    * recall bounded by the banding). This is the decision a 100 TB
-    * operator otherwise makes by hand from the audit number. Two
-    * contract differences between the branches: (a) recall on the
-    * near-dup tail is banding-bounded on the LSH side (exact-duplicate
-    * classes collapse identically on both paths); (b) SCOPE — the
-    * exact chain pairs within `blockCol` only, while the LSH chain
-    * bands globally, so it can additionally drop near-dups that span
-    * blocks (a superset drop surface on blocking, a subset on
-    * banding). If block confinement is a semantic requirement rather
-    * than a pruning optimization, call the branches directly instead
-    * of routing.
+    * class-collapsed, df-capped universe's Σ df·(df−1)/2 candidate mass
+    * (the [[pairMassAudit]] total) fits `maxCandidatePairs`, else the
+    * LSH chain ([[pruneNearDupsLsh]]: 64 hashes, its default bucket
+    * cap, and banding sized FROM THE CALLER'S THRESHOLD by
+    * [[lshBandingForThreshold]] — the 16×4 default has its S-curve
+    * midpoint at 0.5 and would miss most pairs of a 0.3-threshold
+    * query).
     *
-    * EAGER BY DESIGN, unlike every other constructor in this object:
-    * routing requires the measurement, so calling this runs the
-    * audit's one linear Spark job (exploded scan + two narrow aggs)
-    * before returning the routed plan. Lazily-composing callers who
-    * cannot afford a construction-time job should run the audit
-    * themselves and call the branch they choose. The routed exact run
-    * does NOT re-engage the per-row guard — the audit just measured
-    * the same scalar on the same input; callers whose `docs` lineage
-    * is non-deterministic between jobs should pass the budget to
-    * [[pruneNearDups]] directly instead.
+    * Routes: the exact route's output equals [[pruneNearDups]]'s. The
+    * LSH route's drops are exact-verified (precision 1.0 against the
+    * exact chain) with banding-bounded recall on the near-dup tail
+    * (exact-duplicate classes collapse identically on both), and it
+    * bands GLOBALLY where the exact chain pairs within `blockCol` only,
+    * so it can also drop near-dups that span blocks. If block
+    * confinement is semantic rather than a pruning optimization, call
+    * the chains directly.
     *
-    * Default budget 1e9: at the measured 24.1 bytes of verify-join
-    * shuffle write per candidate row (GuardProbe, sg100, SCALING.md
-    * r15 guard section — plus ~30 B/candidate of sort spill when the
-    * stage exceeds executor memory), 1e9 candidates ≈ 24 GB of
-    * quadratic-stage shuffle — comfortably single-node; raise it
-    * proportionally to cluster shuffle capacity.
+    * Budget: the default 1e9 candidates ≈ 24 GB of quadratic-stage
+    * shuffle at the measured 24.1 B of verify-join shuffle write per
+    * candidate row (sg100, SCALING.md r15 guard section; plus
+    * ~30 B/candidate of sort spill past executor memory) — comfortably
+    * single-node; raise it with cluster shuffle capacity.
     *
-    * `lshBands = None` (default) sizes the LSH branch's banding FROM
-    * THE CALLER'S THRESHOLD via [[lshBandingForThreshold]] — the
-    * shipped 16×4 default has its S-curve midpoint at 0.5 and would
-    * silently miss most pairs of a 0.3-threshold query; pass
-    * `Some(b)` to pin it manually.
+    * Shared universe: when the optimizer's size estimate of `docs`
+    * (free; file bytes for a parquet scan, Long.MaxValue when unknown)
+    * is at most 256 MiB, the universe is localCheckpointed once, before
+    * routing, and feeds the mass aggregate, both sides of the verify
+    * self-join and the doc-size aggregate — the checkpoint keeps the
+    * df-cap window's (blk, s) partitioning, so the self-join adds no
+    * exchange. Above the bound the universe is derived twice (mass
+    * job, then chain): the checkpoint is the EXPLODED universe, ~54x
+    * the compressed corpus estimate (sg100: 3.14 GB for 58.5 MB), so
+    * the bound keeps it within ~14 GiB. The gate is calibrated for
+    * scan-rooted inputs; a heavily derived frame's estimate can be far
+    * off. Measured (interleaved min passes): sf0.1 3.42 s shared vs
+    * 4.71 s unshared; sg100 158 s vs 240 s, shuffle write 15.50 vs
+    * 15.81 GB. On the rare LSH route the checkpoint is written for
+    * nothing; checkpointing only on the exact route would make the
+    * common route derive the universe twice.
     *
-    * SHARED-SCAN MODE (r15, backlog item 1): the audit and the exact
-    * chain both start from the SAME class-collapsed capped universe
-    * (one exploded tokenize+xxhash64 scan plus the df-cap window), so
-    * running them as two independent jobs tokenizes the corpus twice.
-    * When the optimizer's size estimate of `docs` fits
-    * `maxSharedScanInputBytes`, the router localCheckpoints that
-    * universe ONCE and feeds the checkpoint to (a) the mass
-    * aggregate, (b) BOTH sides of the verify self-join and (c) the
-    * doc-size aggregate — and because the checkpoint preserves the
-    * df-cap window's hashpartitioning(blk, s) + sort, the self-join
-    * rides it with no new exchange or sort. Output is IDENTICAL
-    * either way (same rows, different physical source; DedupSpec pins
-    * shared == unshared on both routes).
-    *
-    * Why gated by bytes rather than always-on: the checkpointed frame
-    * is the EXPLODED universe — ~24 B per universe row (AbAutoShare,
-    * sg100: 3.14 GB checkpoint ≈ 131 M rows), which is ~54x the
-    * optimizer's size estimate of the parquet-compressed corpus
-    * (58.5 MB) — so at 100 TB sharing trades a second sequential
-    * corpus read for writing AND reading a LARGER intermediate: a
-    * loss. The gate reads
-    * `docs.queryExecution.optimizedPlan.stats.sizeInBytes` (free — no
-    * job; file bytes for a parquet scan, Long.MaxValue when unknown,
-    * which safely disables sharing) against the budget. The gate is
-    * CALIBRATED FOR SCAN-ROOTED INPUTS (ADVICE r15): for a parquet
-    * scan the estimate is the compressed file bytes the ~54x expansion
-    * was measured against; for a derived frame (post-filter/join) the
-    * size-only estimator can underestimate badly and admit a corpus
-    * whose checkpoint exceeds the budget's storage tier — callers
-    * composing on heavily derived inputs should pass their own bound
-    * (or 0 to force the two-scan shape). Default
-    * 256 MiB of input stats ≈ ≤~14 GiB of universe at the measured
-    * expansion — one executor tier's memory-and-disk; set 0 to force
-    * the two-scan shape, raise it only as far as checkpoint storage
-    * allows. Measured (AbAutoShare, interleaved min passes, this
-    * machine): sf0.1 3.42 s shared vs 4.71 s unshared; sg100 158 s vs
-    * 240 s with shuffle write 15.50 vs 15.81 GB (the audit's exchange
-    * folds into the checkpoint's (blk, s) partitioning) — the win is
-    * the dropped recomputation of the universe lineage across the
-    * router's TWO jobs (runtime exchange reuse never spans jobs, so
-    * the audit job re-derived everything the chain job then derived
-    * again; within the chain each consumer also re-evaluates the
-    * df-cap window on top of any reused exchange). Visible in the
-    * metrics as 9.4 GB of cached-block reads — exactly 3 consumers x
-    * the 3.14 GB checkpoint — replacing those recomputes.
+    * EAGER, unlike every other constructor in this object: calling it
+    * runs the mass aggregate as a Spark job (after the checkpoint job
+    * when shared). Callers that cannot afford a construction-time job
+    * should run [[pairMassAudit]] and call a chain themselves. The exact
+    * route does not re-engage the per-row guard; callers whose `docs`
+    * lineage is non-deterministic between jobs should pass the budget
+    * to [[pruneNearDups]] directly.
     */
   def pruneNearDupsAuto(docs: DataFrame, idCol: String, textCol: String,
                         blockCol: String, shingleN: Int = 3,
                         threshold: Double = 0.3,
                         maxShingleDocFrac: Option[Double] = Some(0.5),
-                        maxCandidatePairs: Long = 1000000000L,
-                        lshNumHashes: Int = 64,
-                        lshBands: Option[Int] = None,
-                        lshMaxBucketSize: Int = 10000,
-                        maxSharedScanInputBytes: Long = 1L << 28): DataFrame = {
+                        maxCandidatePairs: Long = 1000000000L): DataFrame = {
     require(threshold > 0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val share = maxSharedScanInputBytes > 0 &&
-      docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(maxSharedScanInputBytes)
-    if (!share) {
-      val mass = pairMassAudit(docs, idCol, textCol, blockCol, shingleN,
-          maxShingleDocFrac)
-        .agg(coalesce(sum(col("candidate_pairs")), lit(0L)))
-        .collect()(0).getLong(0)
-      if (mass <= maxCandidatePairs)
-        pruneNearDups(docs, idCol, textCol, blockCol, shingleN, threshold,
-          maxShingleDocFrac)
-      else
-        pruneNearDupsLsh(docs, idCol, textCol, shingleN, lshNumHashes,
-          lshBands.getOrElse(
-            lshBandingForThreshold(lshNumHashes, threshold)._1),
-          threshold, lshMaxBucketSize)
-    } else {
-      // [[pruneNearDups]]'s body with the capped universe checkpointed:
-      // the mass scalar below is pairMassAudit's Σ df·(df−1)/2 with the
-      // per-block rollup folded into one global sum (blk stays in the
-      // group key, so the df groups are identical).
-      // The checkpoint runs BEFORE the routing decision — a deliberate
-      // trade (ADVICE r15): on the exact route (the overwhelmingly
-      // common one under this gate — the gate admits ≤256 MiB inputs,
-      // the budget refuses ≥1e9 pairs) the mass aggregate then reads
-      // the cached universe blocks instead of re-deriving the whole
-      // tokenize+hash+df-cap lineage for a second time; on the rare
-      // LSH route the checkpoint (≤~14 GiB at the gate's ceiling, the
-      // measured ~54x expansion) was written for nothing and its
-      // blocks linger until the RDD is GC'd. Checkpointing only on
-      // the exact route would invert the cost: the common route would
-      // pay one extra full universe derivation to spare the rare one
-      // a bounded write.
-      val reps = classReps(docs, idCol, textCol, blockCol)
-      val ex = cappedUniverse(reps, idCol, textCol, blockCol, shingleN,
-        maxShingleDocFrac).localCheckpoint()
-      val mass = ex.groupBy(col("blk"), col("s"))
-        .agg(count(lit(1)).as("_df"))
-        .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)))
-        .collect()(0).getLong(0)
-      if (mass <= maxCandidatePairs)
-        pruneFromUniverse(reps, ex, idCol, threshold)
-      else
-        pruneNearDupsLsh(docs, idCol, textCol, shingleN, lshNumHashes,
-          lshBands.getOrElse(
-            lshBandingForThreshold(lshNumHashes, threshold)._1),
-          threshold, lshMaxBucketSize)
-    }
+    val reps = classCollapse(docs, idCol, textCol, blockCol)._1
+    val universe = cappedUniverse(reps, idCol, textCol, blockCol, shingleN,
+      maxShingleDocFrac)
+    val ex =
+      if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <= SharedScanInputBytes)
+        universe.localCheckpoint()
+      else universe
+    if (universeMass(ex).collect()(0).getLong(0) <= maxCandidatePairs)
+      pruneByPairs(reps, jaccardPairsFromUniverse(ex, threshold), idCol)
+    else
+      pruneNearDupsLsh(docs, idCol, textCol, shingleN,
+        bands = lshBandingForThreshold(64, threshold)._1, threshold = threshold)
   }
 
   /** The (bands, rowsPerBand) split of `numHashes` whose LSH S-curve
@@ -1352,20 +1204,6 @@ object Dedup {
         col("n_overlap").cast("double") / col("n_grams"))
   }
 
-  /** Cross-source duplicated-passage overlap matrix: for every pair of
-    * sources, how many DISTINCT duplicated `windowTokens`-token
-    * windows (the [[duplicateSpans]] hot set) occur in both — the
-    * "which sources copy from each other" report that decides whether
-    * per-source dedup blocking is safe or the global pass must run.
-    *
-    * Scale shape: window hashes are the row-local strict-window
-    * projection (8-byte longs, never strings); one distinct + one
-    * groupBy on the hash collapses the corpus to per-window source
-    * sets over a SMALL source domain, and pair enumeration is then
-    * row-local over that bounded array — no hash-side self-join of
-    * corpus-sized tables ever forms, and the final aggregate is
-    * |sources|² rows at most.
-    */
   /** Shared front end of [[sourceOverlap]] and [[duplicateProfile]]:
     * distinct (doc_id[, extra cols], window-hash) rows over STRICT
     * `windowTokens`-token windows — one definition of "a document
@@ -1386,6 +1224,20 @@ object Dedup {
       .distinct()
   }
 
+  /** Cross-source duplicated-passage overlap matrix: for every pair of
+    * sources, how many DISTINCT duplicated `windowTokens`-token
+    * windows (the [[duplicateSpans]] hot set) occur in both — the
+    * "which sources copy from each other" report that decides whether
+    * per-source dedup blocking is safe or the global pass must run.
+    *
+    * Scale shape: window hashes are the row-local strict-window
+    * projection (8-byte longs, never strings); one distinct + one
+    * groupBy on the hash collapses the corpus to per-window source
+    * sets over a SMALL source domain, and pair enumeration is then
+    * row-local over that bounded array — no hash-side self-join of
+    * corpus-sized tables ever forms, and the final aggregate is
+    * |sources|² rows at most.
+    */
   def sourceOverlap(docs: DataFrame, idCol: String, textCol: String,
                     sourceCol: String, windowTokens: Int = 8,
                     minDocs: Int = 2): DataFrame = {
@@ -1429,34 +1281,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_windows"))
   }
 
-  /** [[blockedJaccard]] below — the exact explode-join form: full
-    * (block, shingle) equi-join + per-pair count. A lossless
-    * prefix-filtered candidate stage (AllPairs/PPJoin) was measured
-    * against this form and rejected: it was slower at t = 0.3 and
-    * equal on the hot-key fixture (SCALING.md: the r10 scale-stress
-    * and adversarial hot-key sections, and "r14: blockedJaccardPrefix
-    * as the prune candidate stage").
-    *
-    * VOCAB BOUND of the plain (`None`) form: the equi-join's candidate
-    * mass is Σ df² over all (block, shingle) groups, so on a
-    * vocab-saturated or boilerplate-laden corpus (shingle doc
-    * frequency growing linearly with corpus size) the join mass grows
-    * QUADRATICALLY — the r11 10x-data sweep measured 13x/12x wall
-    * growth for the uncapped jaccard/prune entries. The plain form is
-    * therefore the SMALL-VOCAB variant: use it when shingle df stays
-    * bounded (niche corpora, high-entropy text). For production
-    * corpora pass `maxShingleDocFrac = Some(0.5)` — the df-cap drops
-    * near-universal shingles from the Jaccard universe (exact by
-    * definition over the rare-shingle sets, skew ratio 3.8x→1.5x
-    * measured) — which is what the shipped `dedup_jaccard` /
-    * `dedup_prune` query entries default to since r12.
-    *
-    * Explode-join form: intersection sizes come from an equi-join on
-    * (block, shingle) + count, not from pairwise array_intersect over a
-    * blocked cross product — the join only materializes pairs that
-    * actually share a shingle, and the heavy per-shingle work stays in
-    * codegen instead of interpreted array expressions.
-    */
   /** The over-frequency (block, shingle-hash) BOILERPLATE set of a
     * corpus: shingles present in more than `maxShingleDocFrac` of
     * their block's non-null documents. ONE definition shared by the
@@ -1519,6 +1343,34 @@ object Dedup {
                             maxShingleDocFrac: Double): Column =
     dfCol > lit(maxShingleDocFrac) * ndCol
 
+  /** G4: exact Jaccard pairs (>= threshold) between documents sharing
+    * a `blockCol` value — the explode-join form: full (block, shingle)
+    * equi-join + per-pair count. A lossless prefix-filtered candidate
+    * stage (AllPairs/PPJoin) was measured against this form and rejected: it was slower at t = 0.3 and
+    * equal on the hot-key fixture (SCALING.md: the r10 scale-stress
+    * and adversarial hot-key sections, and "r14: blockedJaccardPrefix
+    * as the prune candidate stage").
+    *
+    * VOCAB BOUND of the plain (`None`) form: the equi-join's candidate
+    * mass is Σ df² over all (block, shingle) groups, so on a
+    * vocab-saturated or boilerplate-laden corpus (shingle doc
+    * frequency growing linearly with corpus size) the join mass grows
+    * QUADRATICALLY — the r11 10x-data sweep measured 13x/12x wall
+    * growth for the uncapped jaccard/prune entries. The plain form is
+    * therefore the SMALL-VOCAB variant: use it when shingle df stays
+    * bounded (niche corpora, high-entropy text). For production
+    * corpora pass `maxShingleDocFrac = Some(0.5)` — the df-cap drops
+    * near-universal shingles from the Jaccard universe (exact by
+    * definition over the rare-shingle sets, skew ratio 3.8x→1.5x
+    * measured) — which is what the shipped `dedup_jaccard` /
+    * `dedup_prune` query entries default to since r12.
+    *
+    * Explode-join form: intersection sizes come from an equi-join on
+    * (block, shingle) + count, not from pairwise array_intersect over a
+    * blocked cross product — the join only materializes pairs that
+    * actually share a shingle, and the heavy per-shingle work stays in
+    * codegen instead of interpreted array expressions.
+    */
   def blockedJaccard(docs: DataFrame, idCol: String,
                      textCol: String, blockCol: String,
                      shingleN: Int = 3,
@@ -1567,17 +1419,26 @@ object Dedup {
                     collapseClasses: Boolean = true): DataFrame = {
     val basis =
       if (!collapseClasses) docs
-      else classReps(docs, idCol, textCol, blockCol)
-    cappedUniverse(basis, idCol, textCol, blockCol, shingleN,
-        maxShingleDocFrac)
-      .groupBy(col("blk"), col("s"))
-      .agg(count(lit(1)).as("_df"))
+      else classCollapse(docs, idCol, textCol, blockCol)._1
+    shingleDocFreqs(cappedUniverse(basis, idCol, textCol, blockCol,
+        shingleN, maxShingleDocFrac))
       .groupBy(col("blk").as(blockCol))
       .agg(sum(col("_df")).as("n_postings"),
         count(lit(1)).as("n_shingles"),
         max(col("_df")).as("max_df"),
-        sum(expr("(_df * (_df - 1)) DIV 2")).as("candidate_pairs"))
+        sum(pairsIn("_df")).as("candidate_pairs"))
   }
+
+  /** (blk, s, _df): the document frequency of every universe shingle. */
+  private def shingleDocFreqs(ex: DataFrame): DataFrame =
+    ex.groupBy(col("blk"), col("s")).agg(count(lit(1)).as("_df"))
+
+  /** One-row `_mass`: the universe's global Σ df·(df−1)/2 — the exact
+    * row count of the verify self-join, asserted by [[guardedUniverse]]
+    * and routed on by [[pruneNearDupsAuto]].
+    */
+  private def universeMass(ex: DataFrame): DataFrame =
+    shingleDocFreqs(ex).agg(coalesce(sum(pairsIn("_df")), lit(0L)).as("_mass"))
 
   /** Opt-in FAIL-FAST guard on the exact chain's quadratic stage
     * (r15, verdict-r14 "weak-at-scale"): when `maxCandidatePairs` is
@@ -1602,11 +1463,7 @@ object Dedup {
     maxCandidatePairs match {
       case None => ex
       case Some(bound) =>
-        val mass = ex.groupBy(col("blk"), col("s"))
-          .agg(count(lit(1)).as("_df"))
-          .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L))
-            .as("_mass"))
-        ex.crossJoin(broadcast(mass))
+        ex.crossJoin(broadcast(universeMass(ex)))
           .where(assert_true(col("_mass") <= lit(bound),
             format_string(
               "blockedJaccard candidate mass %d exceeds maxCandidatePairs " +
@@ -1730,12 +1587,12 @@ object Dedup {
     * distinct-content near-dup Σ df² plus the id-level pair OUTPUT,
     * which is inherently quadratic in cluster size for a pair-emitting
     * operator; [[pruneNearDupsLsh]] is the shape that never
-    * materializes it). Collapse wiring is the LAZY [[dupClassMembers]]
-    * design (r15): the dup-class member table is sized by duplicated
-    * contents — EMPTY on a zero-duplicate corpus, where AQE broadcasts
-    * it and the plan degenerates to the plain form plus one narrow agg
-    * and row-local expansion coalesces; no eager probe job, no window
-    * sort (verdict-r14 item 3 / ADVICE r14).
+    * materializes it). Collapse wiring is the LAZY [[classCollapse]]
+    * shared with the prune: the dup-class member table is sized by
+    * duplicated contents — EMPTY on a zero-duplicate corpus, where AQE
+    * broadcasts it and the plan degenerates to the plain form plus one
+    * narrow agg and row-local expansion coalesces; no eager probe job,
+    * no window sort.
     */
   def blockedJaccardClassed(docs: DataFrame, idCol: String,
                             textCol: String, blockCol: String,
@@ -1745,13 +1602,10 @@ object Dedup {
                             maxCandidatePairs: Option[Long] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    // (_mid, _rep) for members of size->1 classes only — singletons are
-    // their own reps implicitly (coalesce below), so the expansion
-    // joins carry the tiny dup table, never a corpus-wide member map
-    val dup = dupClassMembers(docs, idCol, textCol, blockCol)
-    val nonRep = dup.filter(col("_mid") =!= col("_rep"))
-      .select(col("_mid").as(idCol))
-    val reps = docs.join(nonRep, Seq(idCol), "left_anti")
+    // dup holds (_mid, _rep) for members of size->1 classes only —
+    // singletons are their own reps implicitly (coalesce below), so the
+    // expansion joins carry the tiny dup table, never a corpus-wide map
+    val (reps, dup) = classCollapse(docs, idCol, textCol, blockCol)
     val ex = guardedUniverse(
       cappedUniverse(reps, idCol, textCol, blockCol, shingleN,
         maxShingleDocFrac), maxCandidatePairs)

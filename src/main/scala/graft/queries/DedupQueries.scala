@@ -73,9 +73,13 @@ object DedupQueries extends QueryPack {
     * components with a recursive min-label CTE, and anti-joins — so
     * the hash compare proves the whole pair→cluster→prune chain.
     * Since r12 the entry defaults to the saturation-robust df-capped
-    * ordering (verdict-r11 item 2) — see [[dedupJaccard]]; it now
-    * coincides with [[dedupPruneRobust]], which is retained as the
-    * explicitly-pinned checklist form (G+r).
+    * ordering (verdict-r11 item 2) — see [[dedupJaccard]]: shingles
+    * present in more than half their block's documents leave the
+    * Jaccard universe before pair enumeration (intersection AND union —
+    * exact by definition, not approximate; the r10 skew fixture put a
+    * 12-token line on 60% of docs and the uncapped candidate mass went
+    * 5.1x). The G+r checklist key `dedup_prune_robust` is this same
+    * builder and oracle.
     */
   def dedupPrune(s: SparkSession, dir: String): DataFrame =
     Dedup.pruneNearDups(Tables.documents(s, dir), "doc_id", "text", "source",
@@ -92,23 +96,6 @@ object DedupQueries extends QueryPack {
   def dedupPruneLsh(s: SparkSession, dir: String): DataFrame =
     Dedup.pruneNearDupsLsh(Tables.documents(s, dir), "doc_id", "text",
         shingleN = 3, threshold = 0.7)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-
-  /** G+r `dedup_prune_robust` — [[dedupPrune]] with the boilerplate
-    * guard: shingles present in more than half their block's documents
-    * leave the Jaccard universe before pair enumeration (intersection
-    * AND union — exact by definition, not approximate). This is the
-    * production ordering for boilerplate-laden corpora: the r10 skew
-    * fixture put a 12-token line on 60% of docs and dedup_prune's
-    * candidate mass went 5.1x; the df cap removes exactly those
-    * shingles at the source. Fully oracled: DuckDB recomputes the
-    * per-(block, shingle) doc frequency, the capped universe, the
-    * Jaccard pairs, the recursive min-label components, and the
-    * anti-join.
-    */
-  def dedupPruneRobust(s: SparkSession, dir: String): DataFrame =
-    Dedup.pruneNearDups(Tables.documents(s, dir), "doc_id", "text", "source",
-        shingleN = 3, threshold = 0.3, maxShingleDocFrac = Some(0.5))
       .select(col("doc_id"), col("source"), col("n_chars"))
 
   /** G8+ `dedup_cut` — the passage-level end product: duplicated
@@ -390,7 +377,7 @@ object DedupQueries extends QueryPack {
     "dedup_jaccard" -> dedupJaccard,
     "dedup_hamming" -> dedupHamming,
     "dedup_prune" -> dedupPrune,
-    "dedup_prune_robust" -> dedupPruneRobust,
+    "dedup_prune_robust" -> dedupPrune,
     "dedup_prune_lsh" -> dedupPruneLsh,
     "dedup_cut" -> dedupCut,
     "dedup_embed" -> dedupEmbed,
@@ -776,55 +763,12 @@ object DedupQueries extends QueryPack {
         |JOIN sz ON sz.doc_id = a.rep""".stripMargin,
     // the df-capped dedup_jaccard pair chain + recursive min-label
     // components + keep-smallest-per-cluster anti-join: the full
-    // (since-r12 default-robust) prune chain in SQL — identical to
-    // dedup_prune_robust's, which pins the same wiring explicitly
+    // (since-r12 default-robust) prune chain in SQL. The boilerplate
+    // guard is restated as per-(block, shingle) doc frequency over the
+    // distinct per-doc shingle lists, universe capped at
+    // df <= 0.5 * block doc count (exact on both engines: 0.5 is a
+    // power of two, so the cap comparison has zero float headroom).
     "dedup_prune" ->
-      """WITH RECURSIVE cls AS (SELECT doc_id, source, text,
-        |    CASE WHEN text IS NOT NULL
-        |         THEN min(doc_id) OVER (PARTITION BY source, text)
-        |         ELSE doc_id END AS rep
-        |  FROM documents),
-        |s AS (SELECT doc_id, source,
-        |    list_distinct(list_transform(range(1, greatest(len(ws) - 2, 1) + 1),
-        |      i -> array_to_string(ws[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, source, string_split(text, ' ') AS ws
-        |        FROM cls WHERE doc_id = rep AND text IS NOT NULL)),
-        |bc AS (SELECT source, count(*) AS nd FROM s GROUP BY source),
-        |ex AS (SELECT doc_id, source, unnest(sh) AS g FROM s),
-        |df AS (SELECT source, g, count(*) AS c FROM ex GROUP BY source, g),
-        |kept AS (SELECT ex.doc_id, ex.source, ex.g
-        |  FROM ex JOIN df USING (source, g) JOIN bc USING (source)
-        |  WHERE df.c <= CAST(0.5 AS DOUBLE) * bc.nd),
-        |sz AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
-        |iv AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-        |  FROM kept a JOIN kept b ON a.source = b.source AND a.g = b.g
-        |    AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (SELECT doc_a, doc_b FROM iv
-        |  JOIN sz sa ON sa.doc_id = iv.doc_a
-        |  JOIN sz sb ON sb.doc_id = iv.doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.3),
-        |e AS (SELECT doc_a AS a, doc_b AS b FROM p UNION SELECT doc_b, doc_a FROM p),
-        |reach(node, root) AS (
-        |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-        |  UNION
-        |  SELECT e.b, r.root FROM reach r JOIN e ON e.a = r.node),
-        |comp AS (SELECT node, min(root) AS component FROM reach GROUP BY node),
-        |drops AS (SELECT doc_id FROM cls WHERE doc_id <> rep
-        |  UNION
-        |  SELECT c.doc_id FROM cls c
-        |  JOIN (SELECT node FROM comp WHERE node <> component) dr
-        |    ON c.rep = dr.node)
-        |SELECT d.doc_id, d.source, d.n_chars
-        |FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM drops)""".stripMargin,
-    // the dedup_prune chain with the boilerplate guard restated: per-
-    // (block, shingle) doc frequency over the distinct per-doc shingle
-    // lists, universe capped at df <= 0.5 * block doc count, Jaccard
-    // over the KEPT sets, then the same recursive min-label components
-    // + anti-join. 0.5*nd is exact on both engines (0.5 is a power of
-    // two), so the cap comparison has zero float headroom.
-    "dedup_prune_robust" ->
       """WITH RECURSIVE cls AS (SELECT doc_id, source, text,
         |    CASE WHEN text IS NOT NULL
         |         THEN min(doc_id) OVER (PARTITION BY source, text)
@@ -879,7 +823,8 @@ object DedupQueries extends QueryPack {
   // dedup_prune_auto routes to the exact chain on the driver fixtures
   // (measured mass ≪ default budget), so its oracle IS dedup_prune's —
   // one definition, and a hash mismatch would mean the router switched
-  // branches on data where it must not.
-  val oracles: Map[String, String] =
-    oracles0 + ("dedup_prune_auto" -> oracles0("dedup_prune"))
+  // branches on data where it must not. dedup_prune_robust is
+  // dedup_prune's builder under its checklist name.
+  val oracles: Map[String, String] = oracles0 ++
+    Seq("dedup_prune_auto", "dedup_prune_robust").map(_ -> oracles0("dedup_prune"))
 }

@@ -64,72 +64,50 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
+  /** (id, v, bands): each non-null vector with its hyperplane band
+    * values — the carried payload of [[embeddingNearDup]] and
+    * [[graft.streaming.Streaming.embedCheckStream]], so the batch and
+    * stream gates cannot drift on planes or band layout.
+    */
+  private[graft] def bandedVectors(df: DataFrame, idCol: String, vecCol: String,
+                                   dim: Int, numBits: Int,
+                                   bitsPerBand: Int): DataFrame =
+    df.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"),
+        org.apache.spark.sql.graft.VectorExpressions.hyperplaneBands(col(vecCol),
+          planes(numBits, dim, 42L), bitsPerBand).as("bands"))
+
+  /** Band `k` of a [[bandedVectors]] row: read from its carried array. */
+  private[graft] val vectorBanding: graft.dedup.Dedup.Banding =
+    (k, c) => element_at(c("bands"), k + 1)
+
   /** G5: embedding near-dup pairs — LSH-banded candidates verified by
     * exact cosine >= threshold.
     *
     * r11 shape (the simhash/hamming carried-payload rewrite applied to
-    * vectors): each side of the band equi-join CARRIES its vector and
-    * its full band-value array, so the exactly-once pair dedup
-    * (smallest matching band whose bucket survived the cap, tracked by
-    * a per-doc over-cap bitmask) and the fused-codegen cosine verify
-    * are row-local projections on the single join — no candidate
-    * materialization, no distinct(), no verify join-backs (the old
-    * cappedBucketPairs composition paid all three; its removal cut
-    * dedup_simhash 9x at mult=10). The only corpus-scale exchange is
-    * the banded-row shuffle for the join itself; join OUTPUT rows
-    * stream through the codegen filters without ever shuffling.
-    * Buckets over `maxBucketSize` are dropped before the join
-    * (bounding the quadratic in-bucket mass) — the simhash/hamming cap
-    * contract, replacing the old star-anchor degrade.
+    * vectors): the shared [[graft.dedup.Dedup.bandedSelfJoin]], each
+    * side CARRYING its vector and its full band-value array, so the
+    * exactly-once pair dedup (first shared band whose bucket survived
+    * the cap) and the fused-codegen cosine verify are row-local
+    * projections on the single join — no candidate materialization, no
+    * distinct(), no verify join-backs (the old cappedBucketPairs
+    * composition paid all three; its removal cut dedup_simhash 9x at
+    * mult=10). The only corpus-scale exchange is the banded-row shuffle
+    * for the join itself. Buckets over `maxBucketSize` are dropped
+    * before the join (bounding the quadratic in-bucket mass) — the
+    * simhash/hamming cap contract, replacing the old star-anchor
+    * degrade.
     */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                        threshold: Double, numBits: Int = 64,
                        bitsPerBand: Int = 8,
-                       maxBucketSize: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions
-    val nBands = numBits / bitsPerBand
-    require(nBands <= 63, s"too many bands for the over-cap bitmask: $nBands")
-    val sig = df.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("_id"), col(vecCol).cast("array<double>").as("_v"),
-        VectorExpressions.hyperplaneBands(col(vecCol),
-          planes(numBits, dim, 42L), bitsPerBand).as("_bands"))
-    val masked: DataFrame =
-      if (maxBucketSize == Int.MaxValue) sig.withColumn("_mask", lit(0L))
-      else {
-        val banded0 = sig.select(col("_id"),
-          posexplode(col("_bands")).as(Seq("band", "bv")))
-        val bigKeys = banded0.groupBy(col("band"), col("bv"))
-          .agg(count(lit(1)).as("_bn"))
-          .filter(col("_bn") > maxBucketSize)
-          .select(col("band"), col("bv"))
-        val masks = banded0.join(bigKeys, Seq("band", "bv"))
-          .groupBy(col("_id"))
-          .agg(sum(expr("shiftleft(1L, band)")).as("_mask"))
-        sig.join(masks, Seq("_id"), "left").na.fill(0L, Seq("_mask"))
-      }
-    def side(pre: String): DataFrame =
-      masked.select(col("_id").as(s"${pre}id"), col("_v").as(s"${pre}v"),
-          col("_bands").as(s"${pre}bands"), col("_mask").as(s"${pre}mask"),
-          posexplode(col("_bands")).as(Seq("band", "bv")))
-        .filter(col(s"${pre}mask")
-          .bitwiseAND(expr("shiftleft(1L, band)")) === 0)
-    val a = side("_a")
-    val b = side("_b")
-      .withColumnRenamed("band", "_bband").withColumnRenamed("bv", "_bbv")
-    // for a MATCHING band both docs share the bucket, so one side's
-    // over-cap bit is authoritative (the nearDupFromWords argument)
-    val firstSurviving = coalesce((0 until nBands).map(k =>
-      when(element_at(col("_abands"), k + 1) ===
-        element_at(col("_bbands"), k + 1) &&
-        col("_amask").bitwiseAND(lit(1L << k)) === 0, lit(k))): _*)
-    a.join(b,
-        col("band") === col("_bband") && col("bv") === col("_bbv") &&
-          col("_aid") < col("_bid"))
-      .filter(col("band") === firstSurviving)
+                       maxBucketSize: Int = 10000): DataFrame =
+    graft.dedup.Dedup.bandedSelfJoin(
+        bandedVectors(df, idCol, vecCol, dim, numBits, bitsPerBand),
+        numBits / bitsPerBand, vectorBanding, maxBucketSize)
       .select(col("_aid").as("id_a"), col("_bid").as("id_b"),
         cosineSimilarity(col("_av"), col("_bv")).as("cosine"))
       .filter(col("cosine") >= threshold)
-  }
 
   /** G9: SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding space with k-means, then

@@ -469,25 +469,16 @@ object Streaming {
                          maxHamming: Int = 3): DataFrame = {
     import graft.dedup.Dedup
     val nBlocks = Dedup.hammingBlockCount(maxHamming)
-    // both banding projections and the smallest-matching-block dedup
-    // are THE shared Dedup helpers — the batch operator and this gate
-    // cannot drift on block layout or pair-dedup semantics
-    val histBanded = Dedup.bandedFingerprints(
-        Dedup.fingerprintWords(history, histIdCol, histTextCol), nBlocks, "_h")
-      .withColumnRenamed("_hid", "hist_id")
-    val streamBanded = Dedup.bandedFingerprints(
-        Dedup.fingerprintWords(docs, idCol, textCol), nBlocks, "_s")
-      .withColumnRenamed("_sid", idCol)
-      .withColumnRenamed("blk", "_sblk").withColumnRenamed("bv", "_sbv")
-    val joined = streamBanded.join(histBanded,
-      col("_sblk") === col("blk") && col("_sbv") === col("bv"))
-    joined
-      .filter(col("_sblk") === Dedup.firstMatchingBlock(
-        col("_slo"), col("_shi"), col("_hlo"), col("_hhi"), nBlocks))
-      .select(col(idCol), col("hist_id"),
-        (bit_count(col("_slo").bitwiseXOR(col("_hlo"))) +
-          bit_count(col("_shi").bitwiseXOR(col("_hhi"))))
-          .cast("long").as("hamming"))
+    // the batch operator's banding projection and first-shared-band
+    // join: the two gates cannot drift on block layout or pair dedup
+    val banding = Dedup.hammingBanding(nBlocks)
+    def banded(df: DataFrame, id: String, text: String, pre: String) =
+      Dedup.bandRows(Dedup.wordRows(Dedup.fingerprintWords(df, id, text)),
+        nBlocks, banding, pre)
+    Dedup.sharedBandJoin(banded(docs, idCol, textCol, "_a"),
+        banded(history, histIdCol, histTextCol, "_b"), nBlocks, banding)
+      .select(col("_aid").as(idCol), col("_bid").as("hist_id"),
+        Dedup.pairHamming.as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -512,26 +503,17 @@ object Streaming {
                        histVecCol: String, dim: Int,
                        threshold: Double = 0.9, numBits: Int = 64,
                        bitsPerBand: Int = 8): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions
+    import graft.similarity.Similarity
     val nBands = numBits / bitsPerBand
-    val planes = graft.similarity.Similarity.planes(numBits, dim, 42L)
     def banded(df: DataFrame, id: String, vec: String, pre: String) =
-      df.filter(col(vec).isNotNull)
-        .select(col(id).as(s"${pre}id"),
-          col(vec).cast("array<double>").as(s"${pre}v"),
-          VectorExpressions.hyperplaneBands(col(vec), planes, bitsPerBand)
-            .as(s"${pre}bands"))
-        .select(col(s"${pre}id"), col(s"${pre}v"), col(s"${pre}bands"),
-          posexplode(col(s"${pre}bands")).as(Seq(s"${pre}band", s"${pre}bv")))
-    val s = banded(docs, idCol, vecCol, "_s")
-    val h = banded(history, histIdCol, histVecCol, "_h")
-    val firstMatching = coalesce((0 until nBands).map(k =>
-      when(element_at(col("_sbands"), k + 1) ===
-        element_at(col("_hbands"), k + 1), lit(k))): _*)
-    s.join(h, col("_sband") === col("_hband") && col("_sbv") === col("_hbv"))
-      .filter(col("_sband") === firstMatching)
-      .select(col("_sid").as(idCol), col("_hid").as("hist_id"),
-        graft.functions.cosineSimilarity(col("_sv"), col("_hv")).as("cosine"))
+      graft.dedup.Dedup.bandRows(
+        Similarity.bandedVectors(df, id, vec, dim, numBits, bitsPerBand),
+        nBands, Similarity.vectorBanding, pre)
+    graft.dedup.Dedup.sharedBandJoin(banded(docs, idCol, vecCol, "_a"),
+        banded(history, histIdCol, histVecCol, "_b"), nBands,
+        Similarity.vectorBanding)
+      .select(col("_aid").as(idCol), col("_bid").as("hist_id"),
+        graft.functions.cosineSimilarity(col("_av"), col("_bv")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 

@@ -1201,23 +1201,55 @@ class DedupSpec extends SparkSpec {
       maxCandidatePairs = 0L)
     assert(ids(autoLsh03) === ids(Dedup.pruneNearDupsLsh(docs, "doc_id",
       "text", bands = 32, threshold = 0.3)))
-    // shared-scan mode (tiny LocalRelation stats => the calls above
-    // already took the checkpointed path): maxSharedScanInputBytes = 0
-    // forces the two-scan shape — outputs must match bit-for-bit on
-    // BOTH routes, with the shipped entry's df-cap engaged
-    val sharedExact = Dedup.pruneNearDupsAuto(docs, "doc_id", "text",
+    // with the shipped entry's df-cap engaged (tiny LocalRelation stats
+    // => the router shares the checkpointed universe), each route
+    // equals its direct chain bit-for-bit, full rows. A fourth distinct
+    // s1 doc keeps the base/nearDup shingles (df 2 of 4) under the cap,
+    // so the capped mass is non-zero and budget 0 really routes to LSH.
+    val capDocs = docs.union(Seq((5L, (1 to 60).map(i => s"more$i")
+      .mkString(" "), "s1")).toDF("doc_id", "text", "source"))
+    val sharedExact = Dedup.pruneNearDupsAuto(capDocs, "doc_id", "text",
       "source", threshold = 0.3, maxShingleDocFrac = Some(0.5))
-    val unsharedExact = Dedup.pruneNearDupsAuto(docs, "doc_id", "text",
-      "source", threshold = 0.3, maxShingleDocFrac = Some(0.5),
-      maxSharedScanInputBytes = 0L)
-    assert(sharedExact.collect().toSet === unsharedExact.collect().toSet)
-    val sharedLsh = Dedup.pruneNearDupsAuto(docs, "doc_id", "text",
+    assert(sharedExact.collect().toSet === Dedup.pruneNearDups(capDocs,
+      "doc_id", "text", "source", threshold = 0.3,
+      maxShingleDocFrac = Some(0.5)).collect().toSet)
+    assert(ids(sharedExact) === Set(1L, 3L, 4L, 5L))
+    val sharedLsh = Dedup.pruneNearDupsAuto(capDocs, "doc_id", "text",
       "source", threshold = 0.3, maxShingleDocFrac = Some(0.5),
       maxCandidatePairs = 0L)
-    val unsharedLsh = Dedup.pruneNearDupsAuto(docs, "doc_id", "text",
-      "source", threshold = 0.3, maxShingleDocFrac = Some(0.5),
-      maxCandidatePairs = 0L, maxSharedScanInputBytes = 0L)
-    assert(sharedLsh.collect().toSet === unsharedLsh.collect().toSet)
+    assert(sharedLsh.collect().toSet === Dedup.pruneNearDupsLsh(capDocs,
+      "doc_id", "text", bands = Dedup.lshBandingForThreshold(64, 0.3)._1,
+      threshold = 0.3).collect().toSet)
+    assert(ids(sharedLsh) === Set(1L, 3L, 5L))
+  }
+
+  test("class collapse on degenerate corpora: classed == plain jaccard, router == exact chain, nothing throws") {
+    import org.apache.spark.sql.functions._
+    val ta = (1 to 12).map(i => s"alpha$i").mkString(" ")
+    val corpora = Seq(
+      "zero duplicates" -> Seq((1L, base, "s1"), (2L, nearDup, "s1"),
+        (3L, ta, "s1"), (4L, base, "s2")),
+      "all identical" -> (1L to 5L).map(i => (i, ta, "s1")),
+      "null texts" -> Seq((1L, null, "s1"), (2L, null, "s1"), (3L, ta, "s1"),
+        (4L, ta, "s1"), (5L, null, "s2")),
+      "null block" -> Seq((1L, ta, null), (2L, ta, null), (3L, ta, "s1"),
+        (4L, base, null), (5L, nearDup, null)))
+    corpora.foreach { case (name, rows) =>
+      val df = rows.toDF("doc_id", "text", "source")
+        .withColumn("n_chars", length(col("text")))
+      def pairs(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val classed = pairs(Dedup.blockedJaccardClassed(df, "doc_id", "text",
+        "source", threshold = 0.3))
+      assert(classed === pairs(Dedup.blockedJaccard(df, "doc_id", "text",
+        "source", threshold = 0.3)), name)
+      val exact = Dedup.pruneNearDups(df, "doc_id", "text", "source",
+        threshold = 0.3, maxShingleDocFrac = Some(0.5)).collect().toSet
+      assert(Dedup.pruneNearDupsAuto(df, "doc_id", "text", "source",
+        threshold = 0.3).collect().toSet === exact, name)
+      // null-block rows are never collapsed or paired: all survive
+      if (name == "null block") assert(exact.size === 5, name)
+    }
   }
 
   test("hammingPairMassAudit: class structure by hand, bucket mass cross-checked against the fingerprints") {

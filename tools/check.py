@@ -2,6 +2,7 @@
 """Local self-check: run every oracle SQL in DuckDB against the sf dir's
 parquet tables and compare with the Verify dump (columns sorted by name,
 rows sorted, exact compare with tiny float tolerance reported separately).
+Every query listed in the dump's errors.json counts as a failure.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
@@ -37,7 +38,13 @@ def main(sf_dir, out_dir):
     n_pass = n_fail = 0
     results = {}
     dumped = {os.path.basename(d) for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d)}
-    for name in sorted(dumped):
+    # every query Verify caught throwing is a failure, whether or not it
+    # left a (partial) dump directory behind
+    errors_path = f"{out_dir}/errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
+    for name, msg in errors.items():
+        results[name] = f"VERIFY_ERROR: {msg}"; n_fail += 1
+    for name in sorted(dumped - errors.keys()):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             results[name] = "NO_SPARK_OUTPUT"; n_fail += 1; continue
