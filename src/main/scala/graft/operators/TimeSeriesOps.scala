@@ -17,6 +17,13 @@ object TimeSeriesOps {
   /** Microseconds in one second, as a long. */
   private val UsPerSec = 1000000L
 
+  /** Exact `floor(us / d)` for a positive `d`: the interval bucket
+    * pandas assigns. Integer division truncates toward zero, which
+    * would put a pre-1970 instant in the bucket after its own.
+    */
+  private def floorDiv(us: Column, d: Long): Column =
+    call_function("div", us - pmod(us, lit(d)), lit(d))
+
   /** Centered time-window rolling aggregate (reference utils.py:32-57
     * `c_rolling`).
     *
@@ -523,11 +530,12 @@ object TimeSeriesOps {
     * `merge_asof(direction='forward')`. Same union + single-sort shape
     * as [[asofJoinBackward]], mirrored: right rows sort AFTER left
     * rows on timestamp ties (so the inclusive >= catches a same-ts
-    * right) and a `first(value, ignoreNulls)` over (current row,
-    * unbounded following) carries the next right value back. One
-    * exchange, never broadcasts the big side. Right rows sharing
-    * (key, ts) carry the same value-column tie-break as backward
-    * (forward's running-first picks the SMALLEST value among ties).
+    * right) and `coalesce(value, lead(value, 1, ignoreNulls))` over
+    * the same spec carries the next right value back. One exchange,
+    * never broadcasts the big side; per key one sort plus a linear
+    * sweep. Right rows sharing (key, ts) carry the same value-column
+    * tie-break as backward (forward picks the SMALLEST value among
+    * ties).
     */
   def asofJoinForward(left: DataFrame, right: DataFrame, keys: Seq[String],
                       tsCol: String, rightVals: Seq[String]): DataFrame = {
@@ -545,10 +553,10 @@ object TimeSeriesOps {
     val tie = struct(rightVals.map(col): _*)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol).asc, col("_side").asc, tie.asc_nulls_first)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val filled = lTagged.unionByName(rTagged)
       .select(Seq(col("_side")) ++ leftCols.map(col) ++
-        rightVals.map(v => first(col(v), ignoreNulls = true).over(w).as(v)): _*)
+        rightVals.map(v => coalesce(col(v),
+          lead(col(v), 1, null, ignoreNulls = true).over(w)).as(v)): _*)
     filled.filter(col("_side") === 0).drop("_side")
   }
 
@@ -558,8 +566,9 @@ object TimeSeriesOps {
     * to the EARLIER (backward) match, documented and deterministic.
     *
     * Still ONE exchange: both directions are windows over the same
-    * (key; ts, side, tie) sort — the backward running-last and the
-    * forward running-first each carry ONE struct holding the right
+    * (key; ts, side, tie) sort, so per key one sort plus a linear
+    * sweep — the backward running `last(ignoreNulls)` and the forward
+    * `lead(1, ignoreNulls)` each carry ONE struct holding the right
     * row's timestamp AND its value columns, so the distance decision
     * and the returned values always come from the same right row (a
     * nearest right row whose value is null matches and yields null —
@@ -589,16 +598,20 @@ object TimeSeriesOps {
     val part = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol).asc, col("_side").desc, tie.asc_nulls_first)
     val bwd = part.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = part.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     // one struct per right row: its exact-µs timestamp plus ALL carried
     // values — non-null whenever the row is a right row, even if every
     // value in it is null, so IGNORE NULLS skips sides, never values
     val pt = when(col("_side") === 1,
       struct(unix_micros(col(tsCol)).as("_t") +: rightVals.map(col): _*))
     val us = unix_micros(col(tsCol))
-    val staged = lTagged.unionByName(rTagged)
-      .withColumn("_b", last(pt, ignoreNulls = true).over(bwd))
-      .withColumn("_f", first(pt, ignoreNulls = true).over(fwd))
+    // one select, so both windows share one Window node and the tie
+    // struct is projected once: a single sort serves both directions.
+    // `_pt` is a column so the shuffle carries the struct once, not
+    // once per window function.
+    val staged = lTagged.unionByName(rTagged).withColumn("_pt", pt)
+      .select(col("*"), last(col("_pt"), ignoreNulls = true).over(bwd).as("_b"),
+        coalesce(col("_pt"),
+          lead(col("_pt"), 1, null, ignoreNulls = true).over(part)).as("_f"))
     val pick = when(col("_f").isNull, col("_b"))
       .when(col("_b").isNull, col("_f"))
       .when(us - col("_b").getField("_t") <= col("_f").getField("_t") - us,
@@ -616,17 +629,16 @@ object TimeSeriesOps {
     * nulls are linearly interpolated between the nearest non-null
     * neighbors by timestamp; trailing nulls are filled with the last
     * valid value (pandas forward limit direction); leading nulls stay
-    * null.
+    * null. The neighbours are `lag`/`lead(1, ignoreNulls)` over one
+    * (key; ts) spec: per key one sort plus a linear sweep.
     */
   def interpolateLinear(df: DataFrame, keys: Seq[String], tsCol: String,
                         valCol: String, outCol: String): DataFrame = {
     val part = Window.partitionBy(keys.map(col): _*).orderBy(col(tsCol))
-    val before = part.rowsBetween(Window.unboundedPreceding, -1)
-    val after = part.rowsBetween(1, Window.unboundedFollowing)
     val point = when(col(valCol).isNotNull,
       struct(unix_micros(col(tsCol)).as("t"), col(valCol).as("v")))
-    val prev = last(point, ignoreNulls = true).over(before)
-    val next = first(point, ignoreNulls = true).over(after)
+    val prev = lag(point, 1, null, ignoreNulls = true).over(part)
+    val next = lead(point, 1, null, ignoreNulls = true).over(part)
     df.withColumn("_prev", prev).withColumn("_next", next)
       .withColumn(outCol,
         when(col(valCol).isNotNull, col(valCol))
@@ -640,7 +652,8 @@ object TimeSeriesOps {
   }
 
   /** Downsample to arbitrary fixed intervals (reference resample('6H'),
-    * '15T', ...): epoch-aligned bucket ids, one groupBy shuffle. For
+    * '15T', ...): epoch-aligned bucket ids (floor-divided, so a
+    * pre-1970 row lands in pandas' bucket), one groupBy shuffle. For
     * calendar units prefer [[resample]] (date_trunc handles DST-less
     * UTC calendars directly).
     */
@@ -648,7 +661,7 @@ object TimeSeriesOps {
                        valCol: String, intervalSec: Long,
                        aggs: Seq[(String, Column => Column)]): DataFrame = {
     val iUs = intervalSec * UsPerSec
-    df.withColumn("_bid", (unix_micros(col(tsCol)) / iUs).cast("long"))
+    df.withColumn("_bid", floorDiv(unix_micros(col(tsCol)), iUs))
       .groupBy(keys.map(col) :+ col("_bid"): _*)
       .agg(aggs.head._2(col(valCol)).as(aggs.head._1),
         aggs.tail.map { case (n, f) => f(col(valCol)).as(n) }: _*)
@@ -681,8 +694,11 @@ object TimeSeriesOps {
     * (ties -> the earlier observation, matching pandas reindex).
     *
     * Same union + two-window shape as the as-of join: one shuffle on
-    * the key, no per-point lookups; grid size is bounded by
-    * range/interval per key.
+    * the key, no per-point lookups — a running `last(ignoreNulls)` and
+    * a `lead(1, ignoreNulls)` over one spec, so per key one sort plus
+    * a linear sweep; grid size is bounded by range/interval per key.
+    * Grid buckets are floor-divided, so pre-1970 observations land in
+    * the same bucket pandas gives them.
     */
   def upsampleNearest(df: DataFrame, keys: Seq[String], tsCol: String,
                       valCol: String, intervalSec: Long): DataFrame = {
@@ -690,8 +706,8 @@ object TimeSeriesOps {
     val bounds = df.groupBy(keys.map(col): _*)
       .agg(min(unix_micros(col(tsCol))).as("_lo"), max(unix_micros(col(tsCol))).as("_hi"))
     val grid = bounds.select(keys.map(col) :+
-        explode(sequence((col("_lo") / iUs).cast("long"),
-          (col("_hi") / iUs).cast("long"))).as("_b"): _*)
+        explode(sequence(floorDiv(col("_lo"), iUs),
+          floorDiv(col("_hi"), iUs))).as("_b"): _*)
       .select(keys.map(col) :+ timestamp_micros(col("_b") * iUs).as(tsCol): _*)
     val gridT = grid.withColumn("_side", lit(0))
       .withColumn(valCol, lit(null).cast(df.schema(valCol).dataType))
@@ -700,12 +716,11 @@ object TimeSeriesOps {
     val ord = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol).asc, col("_side").desc)
     val before = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val after = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val point = when(col(valCol).isNotNull,
       struct(unix_micros(col(tsCol)).as("t"), col(valCol).as("v")))
     gridT.unionByName(obsT)
       .withColumn("_prev", last(point, ignoreNulls = true).over(before))
-      .withColumn("_next", first(point, ignoreNulls = true).over(after))
+      .withColumn("_next", coalesce(point, lead(point, 1, null, ignoreNulls = true).over(ord)))
       .filter(col("_side") === 0)
       .withColumn(valCol,
         when(col("_next").isNull, col("_prev.v"))

@@ -62,6 +62,39 @@ class PlanSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(plan).size === 1)
   }
 
+  test("no window frame grows toward UNBOUNDED FOLLOWING; forward-looking ts operators sort once") {
+    // Spark re-aggregates a (CURRENT ROW | n FOLLOWING) .. UNBOUNDED
+    // FOLLOWING frame for every row, so one such frame makes an operator
+    // quadratic in its key's length. The forward-looking operators use
+    // lead(..., ignoreNulls) instead. Whole-partition frames (UNBOUNDED
+    // PRECEDING .. UNBOUNDED FOLLOWING) are computed once per partition.
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame,
+      UnboundedFollowing, UnboundedPreceding, WindowExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val growing = fn(spark, dir).queryExecution.optimizedPlan
+        .collectWithSubqueries { case w: LWindow => w.windowExpressions }
+        .flatten.flatMap(_.collect {
+          case we @ WindowExpression(_, spec) if (spec.frameSpecification match {
+            case SpecifiedWindowFrame(_, lo, UnboundedFollowing) =>
+              lo != UnboundedPreceding
+            case _ => false
+          }) => we
+        })
+      assert(growing.isEmpty,
+        s"$name evaluates a growing-following frame:\n${growing.mkString("\n")}")
+    }
+    // one exchange feeds the single sort all of an operator's windows
+    // share; ts_upsample_nearest also shuffles its per-key grid bounds
+    Seq("ts_interpolate" -> 1, "ts_asof_forward" -> 1, "ts_asof_nearest" -> 1,
+        "ts_upsample_nearest" -> 2).foreach { case (name, exchanges) =>
+      val plan = planOf(SparkEntry.queries(name)(spark, dir))
+      assert("Exchange hashpartitioning".r.findAllIn(plan).size === exchanges,
+        s"$name shuffles more than its series key:\n$plan")
+      assert("Sort \\[".r.findAllIn(plan).size === 1, s"$name sorts twice:\n$plan")
+    }
+  }
+
   test("as-of join is union + window: no join node at all") {
     val plan = planOf(TimeSeriesQueries.tsAsofJoin(spark, dir))
     assert(plan.contains("Union"))

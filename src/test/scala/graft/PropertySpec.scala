@@ -126,6 +126,49 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // ---- nearest upsampling vs the reindex(method='nearest') reference --
+
+  // distinct 7 s stamps straddling the epoch (pre-1970 rows exercise
+  // the floor-divided grid bounds), nulls skipped, ties possible
+  private val genUpsample: Gen[(Long, List[(Int, Long, Option[Double])])] = for {
+    intervalSec <- Gen.oneOf(10L, 30L, 60L)
+    n <- Gen.choose(1, 30)
+    keys <- Gen.listOfN(n, Gen.choose(0, 1))
+    vals <- Gen.listOfN(n, Gen.option(Gen.choose(-50, 50).map(_.toDouble)))
+  } yield (intervalSec, keys.lazyZip(1 to n).lazyZip(vals).toList
+    .map { case (k, t, v) => (k, (t - 12) * 7000L, v) })
+
+  test("upsampleNearest matches the nearest-observation reference on random series") {
+    samples(genUpsample, 8, 4004L).zipWithIndex.foreach { case ((iSec, rows), i) =>
+      val df = rows.map { case (k, ms, v) =>
+        (k, tsOf(ms), v.map(Double.box).orNull.asInstanceOf[java.lang.Double])
+      }.toDF("key", "ts", "v")
+      val got = TimeSeriesOps.upsampleNearest(df, Seq("key"), "ts", "v", iSec)
+        .collect().map(r => (r.getInt(0), r.getTimestamp(1).getTime,
+          Option(r.get(2)).map(_.asInstanceOf[Double]))).toSeq.sorted
+      // per key: grid from floor(min ts) to floor(max ts) in interval
+      // steps; each point takes the closest non-null observation, an
+      // equal distance going to the earlier one
+      val iMs = iSec * 1000L
+      val exp = rows.groupBy(_._1).toSeq.flatMap { case (k, series) =>
+        val obs = series.collect { case (_, ms, Some(v)) => (ms, v) }
+        val lo = math.floorDiv(series.map(_._2).min, iMs)
+        val hi = math.floorDiv(series.map(_._2).max, iMs)
+        (lo to hi).map { b =>
+          val g = b * iMs
+          val prev = obs.filter(_._1 <= g).maxByOption(_._1)
+          val next = obs.filter(_._1 > g).minByOption(_._1)
+          val pick = (prev, next) match {
+            case (Some(p), Some(nx)) => Some(if (g - p._1 <= nx._1 - g) p else nx)
+            case (p, nx) => p.orElse(nx)
+          }
+          (k, g, pick.map(_._2))
+        }
+      }.sorted
+      assert(got === exp, s"case $i interval=$iSec rows=$rows")
+    }
+  }
+
   // ---- connected components vs union-find ----------------------------
 
   private val genEdges: Gen[List[(Long, Long)]] = for {

@@ -246,6 +246,60 @@ class TimeSeriesOpsSpec extends SparkSpec {
       "2024-01-01 01:30:00.0" -> 3.0))
   }
 
+  test("forward-looking operators on degenerate input: empty, all-null, single-row key, no right rows") {
+    def vals(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.orderBy("k", "t").collect().toSeq
+        .map(r => (r.getAs[String]("k"), Option(r.getAs[java.lang.Double](c))))
+    val left = series(("n", "2024-01-01 00:00:00", 1.0), ("n", "2024-01-01 01:00:00", 2.0),
+      ("s", "2024-01-01 01:00:00", 3.0), ("z", "2024-01-01 01:00:00", 4.0))
+      .withColumnRenamed("v", "lv")
+    // key n has no right rows, s has one, z's right values are all null
+    val right = series(("s", "2024-01-01 02:00:00", 5.0),
+      ("z", "2024-01-01 00:30:00", null), ("z", "2024-01-01 02:00:00", null))
+      .withColumnRenamed("v", "rv")
+    val noLeft = left.limit(0)
+    val noRight = right.limit(0)
+    Seq("forward" -> TimeSeriesOps.asofJoinForward _,
+        "nearest" -> TimeSeriesOps.asofJoinNearest _).foreach { case (name, op) =>
+      assert(vals(op(left, right, Seq("k"), "t", Seq("rv")), "rv") === Seq(
+        "n" -> None, "n" -> None, "s" -> Some(5.0), "z" -> None), name)
+      assert(vals(op(left, noRight, Seq("k"), "t", Seq("rv")), "rv") === Seq(
+        "n" -> None, "n" -> None, "s" -> None, "z" -> None), s"$name, empty right")
+      assert(op(noLeft, right, Seq("k"), "t", Seq("rv")).count() === 0,
+        s"$name, empty left")
+    }
+    // key s is a single row, z's values are all null
+    val obs = series(("s", "2024-01-01 01:10:00", 3.0),
+      ("z", "2024-01-01 00:00:00", null), ("z", "2024-01-01 01:00:00", null))
+    assert(vals(TimeSeriesOps.interpolateLinear(obs, Seq("k"), "t", "v", "vi"), "vi") ===
+      Seq("s" -> Some(3.0), "z" -> None, "z" -> None))
+    assert(vals(TimeSeriesOps.upsampleNearest(obs, Seq("k"), "t", "v", 1800), "v") ===
+      Seq("s" -> Some(3.0), "z" -> None, "z" -> None, "z" -> None))
+    assert(TimeSeriesOps.interpolateLinear(obs.limit(0), Seq("k"), "t", "v", "vi")
+      .count() === 0)
+    assert(TimeSeriesOps.upsampleNearest(obs.limit(0), Seq("k"), "t", "v", 1800)
+      .count() === 0)
+  }
+
+  test("interval buckets floor pre-1970 instants like pandas (resampleInterval, upsampleNearest)") {
+    val df = series(
+      ("a", "1969-12-31 23:00:00", 1.0),
+      ("a", "1969-12-31 23:59:59.999999", 3.0), // -1 µs: the 23:00 bucket
+      ("a", "1970-01-01 00:00:00", 5.0))
+    val res = TimeSeriesOps.resampleInterval(df, Seq("k"), "t", "v", 3600,
+        Seq("m" -> (c => avg(c))))
+      .select(unix_micros(col("bucket")), col("m")).orderBy(col("m")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1))
+    assert(res === Array(-3600000000L -> 2.0, 0L -> 5.0))
+    val up = TimeSeriesOps.upsampleNearest(series(
+        ("a", "1969-12-31 23:50:00", 1.0), ("a", "1970-01-01 00:40:00", 2.0)),
+        Seq("k"), "t", "v", 1800)
+      .select(unix_micros(col("t")), col("v")).orderBy(col("t")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1))
+    // grid starts at floor(23:50) = 23:30, not at the truncated 00:00
+    assert(up === Array(-1800000000L -> 1.0, 0L -> 1.0, 1800000000L -> 2.0))
+  }
+
   test("inferSampling picks modal delta in whole seconds, ties to smallest") {
     val df = series(
       ("a", "2024-01-01 00:00:00", 0.0),
