@@ -312,26 +312,17 @@ object Checks {
     checks += Check("q_approx_sketch", "hll_parts_max_rel_err",
       worstRel(1), 0.1, "<=")
 
-    // ---- ts_rolling_median_scalable (r16): the grid sketch's error
-    // CEILING vs the exact frame median. |grid − exact| <= cellWidth/2
-    // = (max−min)/(2·512) by construction (each true middle lies
-    // inside its estimated cell; the estimate is the cell-center
-    // mean); asserted here against ts_rolling_multi's exact roll_med
-    // on the gate fixture, with 2e-6 headroom for the two sides' r6
-    // output rounding. roll_n parity and adversarial fixtures are
-    // spec-pinned (TimeSeriesOpsSpec).
-    val ev = Tables.events(spark, sfDir)
-    val vr = ev.agg(min(col("value").cast("double")),
-      max(col("value").cast("double"))).head
-    val cellBound = (dbl(vr, 1) - dbl(vr, 0)) / (2 * 512.0)
+    // ---- ts_rolling_median_scalable: the same exact rolling median as
+    // ts_rolling_multi's roll_med, row for row (the oracle hash holds
+    // each key; this pins the two keys to each other)
     val exMed = SparkEntry.queries("ts_rolling_multi")(spark, sfDir)
       .select(col("user_id"), col("ts_c"), col("roll_med"))
-    val gridMed = SparkEntry.queries("ts_rolling_median_scalable")(spark, sfDir)
-      .select(col("user_id"), col("ts_c"), col("roll_med_grid"))
-    val worstErr = dbl(exMed.join(gridMed, Seq("user_id", "ts_c"))
-      .agg(max(abs(col("roll_med_grid") - col("roll_med")))).head, 0)
-    checks += Check("ts_rolling_median_scalable", "grid_median_max_abs_err",
-      worstErr, cellBound + 2e-6, "<=")
+    val med = SparkEntry.queries("ts_rolling_median_scalable")(spark, sfDir)
+      .select(col("user_id"), col("ts_c"), col("roll_med").as("roll_med_s"))
+    val worstDiff = dbl(exMed.join(med, Seq("user_id", "ts_c"))
+      .agg(max(abs(col("roll_med_s") - col("roll_med")))).head, 0)
+    checks += Check("ts_rolling_median_scalable", "median_max_abs_diff",
+      worstDiff, 0.0, "<=")
 
     // ---- emit ------------------------------------------------------
     val byQuery = checks.toList.groupBy(_.query).toSeq.sortBy(_._1)

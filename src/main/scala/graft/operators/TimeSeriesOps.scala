@@ -24,6 +24,13 @@ object TimeSeriesOps {
   private def floorDiv(us: Column, d: Long): Column =
     call_function("div", us - pmod(us, lit(d)), lit(d))
 
+  /** Width of [[cRolling]]'s time buckets, in windows (B = 32w): wide
+    * enough that the per-bucket window setup and the halo rows (1/32 of
+    * a uniform series) stay small, narrow enough that a month-long
+    * series splits into a dozen tasks.
+    */
+  private[graft] val BucketWindows = 32L
+
   /** Centered time-window rolling aggregate (reference utils.py:32-57
     * `c_rolling`).
     *
@@ -34,6 +41,20 @@ object TimeSeriesOps {
     * shifted timestamp. `min_periods` defaults to 1 like pandas
     * time-based rolling.
     *
+    * Buckets and halo: each row belongs to time bucket
+    * b = `floorDiv(us, B)` with B = 32w, and a row with
+    * `us > (b+1)·B − w` is also emitted once into bucket b+1 as a halo
+    * row. The RANGE frame runs over (keys, bucket) and halo rows are
+    * dropped after it, so every frame holds exactly the rows of the
+    * per-key frame, and one dense key spreads over (time range / B)
+    * tasks behind a single exchange. Rows with a null timestamp share
+    * one bucket per key, as they share one frame.
+    *
+    * Cost: one exchange and one sort; on uniform data about 1/32 of
+    * the rows are evaluated twice (once as halo). Spark re-aggregates a
+    * sliding frame for every row, so a key still costs
+    * O(rows × frame rows) — spread over its buckets, not in one task.
+    *
     * @param aggs (outputName, aggregating fn over the frame'd column)
     * @param minPeriods observations required in the window for a
     *        non-null result (pandas min_periods; default 1)
@@ -42,17 +63,28 @@ object TimeSeriesOps {
                windowSec: Long, aggs: Seq[(String, Column => Column)],
                minPeriods: Int = 1): DataFrame = {
     val wUs = windowSec * UsPerSec
-    val frame = Window.partitionBy(keys.map(col): _*)
-      .orderBy(unix_micros(col(tsCol)))
+    val bUs = BucketWindows * wUs
+    val k = keys.map(col)
+    val b = floorDiv(col("_us"), bUs)
+    val halo = col("_us") > (b + 1) * bUs - wUs
+    val rows = df
+      .select(k :+ col(valCol).as("_v") :+ unix_micros(col(tsCol)).as("_us"): _*)
+      .select(k ++ Seq(col("_v"), col("_us"),
+        posexplode(when(halo, array(b, b + 1)).otherwise(array(b)))
+          .as(Seq("_halo", "_b"))): _*)
+    val frame = Window.partitionBy(k :+ col("_b"): _*)
+      .orderBy(col("_us"))
       .rangeBetween(-(wUs - 1), 0) // (t-w, t] at microsecond resolution
     val enough =
       if (minPeriods <= 1) lit(true)
-      else count(col(valCol)).over(frame) >= minPeriods
+      else count(col("_v")).over(frame) >= minPeriods
     val aggCols = aggs.map { case (name, f) =>
-      when(enough, f(col(valCol)).over(frame)).as(name)
+      when(enough, f(col("_v")).over(frame)).as(name)
     }
-    val tsCentered = timestamp_micros(unix_micros(col(tsCol)) - wUs / 2).as(tsCol + "_c")
-    df.select(keys.map(col) ++ Seq(tsCentered) ++ aggCols: _*)
+    val tsCentered = timestamp_micros(col("_us") - wUs / 2).as(tsCol + "_c")
+    rows.select(k ++ Seq(col("_halo"), tsCentered) ++ aggCols: _*)
+      .filter(col("_halo") === 0)
+      .drop("_halo")
   }
 
   /** [[cRolling]] with a pandas-style duration window ('6H', '15T',
@@ -131,249 +163,37 @@ object TimeSeriesOps {
       when(enough, sa / na - sb / nb).as("step"): _*)
   }
 
-  /** SKEW-ROBUST [[cRolling]] for the subtractable-and-monoid aggregate
-    * set (min/max/sum/count/mean) — the r15 answer to the measured
-    * hot-key hazard (StragglerProbe, sg10_skew, SCALING.md r15): a
-    * direct sliding RANGE frame is recomputed per row for
-    * non-subtractable aggregates, so per-key work is QUADRATIC in
-    * per-key density — one 30%-hot key turned ts_rolling_multi's
-    * largest stage into a 55.9 s straggler against a 0.46 s median
-    * task (ratio 120).
+  /** Bucketed gap-based session labeling — the boundary-stitch twin of
+    * the q_sessionize window form. The window form sorts each key's
+    * entire history in one task (lag + running sum over (key, ts));
+    * this form bounds a task by one (key, time bucket).
     *
-    * Decomposition: the trailing frame (t-w, t] spans at most two
-    * width-w time buckets, so every frame aggregate is the monoid
-    * combine of (a) a PREFIX aggregate within the row's own bucket
-    * (ascending growing frame — Spark evaluates it incrementally) and
-    * (b) a SUFFIX aggregate of the previous bucket from s = t-w+1µs,
-    * read off a DESCENDING-order growing frame at a probe row injected
-    * at time s (probes carry null values, so they are invisible to the
-    * aggregates). Every window is a growing frame — O(n log n) per
-    * key — and the bucket column joins the partition key, so ONE hot
-    * key spreads over (time-range / w) tasks instead of one.
-    *
-    * Exactness: min/max/count are bit-identical to [[cRolling]]'s
-    * frame form on every input; sum/mean associate the additions
-    * differently (two partials vs one frame scan), which the
-    * query-level r6 grid absorbs — the ts_step convention, and the
-    * shipped oracle keeps the direct sliding-window statement. Exact
-    * rolling MEDIANS are not monoid-decomposable: the frame form (or
-    * [[cRollingQuantileApprox]]'s bounded sketch) remains the honest
-    * tool there.
-    *
-    * Output: keys, `ts_c` (centered timestamp, the [[cRolling]]
-    * contract), `roll_min`, `roll_max`, `roll_sum`, `roll_n`,
-    * `roll_mean`; aggregates null when the frame has fewer than
-    * `minPeriods` observations.
-    */
-  def cRollingScalable(df: DataFrame, keys: Seq[String], tsCol: String,
-                       valCol: String, windowSec: Long,
-                       minPeriods: Int = 1): DataFrame = {
-    val wUs = windowSec * UsPerSec
-    val k = keys.map(col)
-    val base = df.select(k :+ unix_micros(col(tsCol)).as("_us") :+
-      col(valCol).cast("double").as("_v"): _*)
-      .withColumn("_b", floor(col("_us") / wUs))
-    // probe rows: one per distinct (keys, t) whose frame start
-    // s = t-w+1 lands in the PREVIOUS bucket (s at the own-bucket
-    // boundary means the prefix alone IS the frame — no probe)
-    val probes = base.select(k :+ col("_us"): _*).distinct()
-      .withColumn("_orig_us", col("_us"))
-      .withColumn("_us", col("_us") - wUs + 1)
-      .withColumn("_b", floor(col("_us") / wUs))
-      .filter(col("_b") < floor(col("_orig_us") / wUs))
-      .withColumn("_v", lit(null).cast("double"))
-    // suffix aggregates via a DESCENDING growing frame: at a probe row
-    // of time s the frame covers every real row with _us >= s in the
-    // probe's bucket — exactly the frame's previous-bucket part
-    val wDesc = Window.partitionBy(k :+ col("_b"): _*)
-      .orderBy(col("_us").desc)
-      .rangeBetween(Window.unboundedPreceding, 0)
-    val left = base.withColumn("_orig_us", lit(null).cast("long"))
-      .unionByName(probes)
-      .select(k ++ Seq(col("_b"), col("_us"), col("_v"),
-        col("_orig_us")): _*)
-      .withColumn("_lmin", min(col("_v")).over(wDesc))
-      .withColumn("_lmax", max(col("_v")).over(wDesc))
-      .withColumn("_lsum", sum(col("_v")).over(wDesc))
-      .withColumn("_ln", count(col("_v")).over(wDesc))
-      .filter(col("_orig_us").isNotNull)
-      .select(k :+ col("_orig_us").as("_us") :+ col("_lmin") :+
-        col("_lmax") :+ col("_lsum") :+ col("_ln"): _*)
-    // prefix aggregates: ascending growing frame within the own bucket
-    val wAsc = Window.partitionBy(k :+ col("_b"): _*)
-      .orderBy(col("_us"))
-      .rangeBetween(Window.unboundedPreceding, 0)
-    val withPrefix = base
-      .withColumn("_pmin", min(col("_v")).over(wAsc))
-      .withColumn("_pmax", max(col("_v")).over(wAsc))
-      .withColumn("_psum", sum(col("_v")).over(wAsc))
-      .withColumn("_pn", count(col("_v")).over(wAsc))
-    val joined = withPrefix.join(left, keys :+ "_us", "left")
-    val n = coalesce(col("_ln"), lit(0L)) + col("_pn")
-    val enough = n >= math.max(minPeriods, 1)
-    def agg(c: Column): Column = when(enough && n > 0, c)
-    joined.select(k ++ Seq(
-      timestamp_micros(col("_us") - wUs / 2).as(tsCol + "_c"),
-      agg(least(col("_lmin"), col("_pmin"))).as("roll_min"),
-      agg(greatest(col("_lmax"), col("_pmax"))).as("roll_max"),
-      agg(coalesce(col("_lsum"), lit(0.0)) +
-        coalesce(col("_psum"), lit(0.0))).as("roll_sum"),
-      // the frame form wraps EVERY agg (count included) in the
-      // minPeriods gate; with the default minPeriods=1 the count is
-      // unconditional (n=0 prints 0, not null) — mirror both
-      (if (minPeriods <= 1) n else when(enough, n)).as("roll_n"),
-      agg((coalesce(col("_lsum"), lit(0.0)) +
-        coalesce(col("_psum"), lit(0.0))) / n).as("roll_mean")): _*)
-  }
-
-  /** SKEW-ROBUST rolling MEDIAN on a value grid (r16, verdict-r15
-    * item 5) — the missing member of the [[cRollingScalable]] family:
-    * the exact rolling median is not monoid-decomposable (no
-    * subtractable state), so the frame form materializes and sorts
-    * every frame per row (collect_list + [[medianOfArray]]) — O(rows x
-    * frame-rows) per key, the measured sg10_skew straggler shape —
-    * while a MERGE-ABLE quantile sketch decomposes exactly like
-    * min/max: frame sketch = combine(prefix sketch of the own bucket,
-    * suffix sketch of the previous bucket), both growing frames that
-    * Spark evaluates incrementally.
-    *
-    * The sketch is a fixed-universe grid histogram
-    * ([[org.apache.spark.sql.graft.CellCounts]]): one linear pre-pass
-    * reads the column's global [min, max] (a broadcast scalar — the
-    * blockDocCounts pattern), values bucket into `nCells` uniform
-    * cells, and per-row state is one long[nCells] count vector —
-    * update O(1), merge element-wise, per-key work O(rows x nCells)
-    * independent of frame width or key density. Rank arithmetic is
-    * integer-exact on the grid (the ts_mad lower-median convention,
-    * applied to BOTH middles): the lower/upper median cells are the
-    * smallest cells whose cumulative count reaches ceil(n/2) and
-    * floor(n/2)+1, and the estimate is the mean of the two cell
-    * CENTERS — so |estimate − exact frame median| <= cellWidth/2 =
-    * (max−min)/(2·nCells) on every input (each true middle lies inside
-    * its estimated cell), deterministically (no seeds, no float
-    * accumulation in the decision). A constant column degenerates to
-    * cellWidth 0 and the estimate is exact.
-    *
-    * Same frame contract as [[cRolling]]: trailing (t-w, t] at
-    * microsecond resolution, output timestamp centered (`ts_c`),
-    * aggregates null below `minPeriods`. Output: keys, `ts_c`,
-    * `roll_med_grid`, `roll_n`.
-    */
-  def cRollingMedianScalable(df: DataFrame, keys: Seq[String], tsCol: String,
-                             valCol: String, windowSec: Long,
-                             nCells: Int = 512,
-                             minPeriods: Int = 1): DataFrame = {
-    require(nCells > 1, s"nCells must be > 1, got $nCells")
-    val wUs = windowSec * UsPerSec
-    val k = keys.map(col)
-    val range = df.agg(
-      min(col(valCol).cast("double")).as("_gmin"),
-      max(col(valCol).cast("double")).as("_gmax"))
-    val width = when(col("_gmax") > col("_gmin"),
-      (col("_gmax") - col("_gmin")) / nCells).otherwise(lit(0.0))
-    val cell = when(col("_v").isNull, lit(null).cast("int"))
-      .when(col("_gmax") <= col("_gmin"), lit(0))
-      .otherwise(least(lit(nCells - 1), greatest(lit(0),
-        floor((col("_v") - col("_gmin")) /
-          ((col("_gmax") - col("_gmin")) / nCells)).cast("int"))))
-    val base = df
-      .select(k :+ unix_micros(col(tsCol)).as("_us") :+
-        col(valCol).cast("double").as("_v"): _*)
-      .crossJoin(broadcast(range))
-      .withColumn("_cell", cell)
-      .withColumn("_b", floor(col("_us") / wUs))
-      .drop("_v")
-    // probe rows at s = t-w+1 in the PREVIOUS bucket (the
-    // cRollingScalable scaffolding — see its Scaladoc; probes carry a
-    // null cell, so the histogram never sees them)
-    val probes = base
-      .select(k ++ Seq(col("_us"), col("_gmin"), col("_gmax")): _*)
-      .distinct()
-      .withColumn("_orig_us", col("_us"))
-      .withColumn("_us", col("_us") - wUs + 1)
-      .withColumn("_b", floor(col("_us") / wUs))
-      .filter(col("_b") < floor(col("_orig_us") / wUs))
-      .withColumn("_cell", lit(null).cast("int"))
-    val hist = org.apache.spark.sql.graft.VectorAggregates
-      .cellCounts(col("_cell"), nCells)
-    val wDesc = Window.partitionBy(k :+ col("_b"): _*)
-      .orderBy(col("_us").desc)
-      .rangeBetween(Window.unboundedPreceding, 0)
-    val left = base.withColumn("_orig_us", lit(null).cast("long"))
-      .unionByName(probes)
-      .withColumn("_lhist", hist.over(wDesc))
-      .withColumn("_ln", count(col("_cell")).over(wDesc))
-      .filter(col("_orig_us").isNotNull)
-      .select(k :+ col("_orig_us").as("_us") :+ col("_lhist") :+
-        col("_ln"): _*)
-    val wAsc = Window.partitionBy(k :+ col("_b"): _*)
-      .orderBy(col("_us"))
-      .rangeBetween(Window.unboundedPreceding, 0)
-    // foldable zero histogram: coalescing an all-null-cell side against
-    // it keeps the median expression null-free (evaluated once, not
-    // per row)
-    val zeroHist = array_repeat(lit(0L), nCells)
-    val joined = base
-      .withColumn("_phist", hist.over(wAsc))
-      .withColumn("_pn", count(col("_cell")).over(wAsc))
-      .join(left, keys :+ "_us", "left")
-      .withColumn("_n", coalesce(col("_ln"), lit(0L)) + col("_pn"))
-    // lower/upper median cells in ONE compiled pass over the two count
-    // vectors (GridMedianCellSum — guide §4: the zip_with/aggregate
-    // higher-order form is interpreted per element and measured ~10 s
-    // at sf0.1); estimate = mean of the two cell centers
-    //   = gmin + (lo + up + 1) · width / 2
-    val cellSum = org.apache.spark.sql.graft.VectorExpressions
-      .gridMedianCellSum(coalesce(col("_phist"), zeroHist),
-        coalesce(col("_lhist"), zeroHist), col("_n"))
-    val n = col("_n")
-    val enough = n >= math.max(minPeriods, 1)
-    joined.select(k ++ Seq(
-      timestamp_micros(col("_us") - wUs / 2).as(tsCol + "_c"),
-      when(enough && n > 0,
-        col("_gmin") + (cellSum.cast("double") + 1.0) * width / 2.0)
-        .as("roll_med_grid"),
-      (if (minPeriods <= 1) n else when(enough, n)).as("roll_n")): _*)
-  }
-
-  /** SKEW-ROBUST gap-based session labeling — the bucketed
-    * boundary-stitch twin of the q_sessionize window form (r15, the
-    * [[cRollingScalable]] treatment applied to sessions). The window
-    * form sorts each key's ENTIRE history in one task (lag + running
-    * sum over (key, ts)); that is linear, so the sg10_skew fixture
-    * absorbs a 30%-hot key (StragglerProbe: ratio 1.02) — but at true
-    * scale one key with 10⁹ events is a single-task sort that spills
-    * or OOMs, the unbounded-partition hazard, and this form is the
-    * routed shape there.
-    *
-    * Decomposition: events bucket by floor(us / bucketUs); within each
-    * (key, bucket) a local lag + running-sum labels PROVISIONAL
+    * Decomposition: events bucket by `floorDiv(us, B)` with the fixed
+    * width B = 4 × gap (the [[cRolling]] bucket arithmetic); within
+    * each (key, bucket) a local lag + running-sum labels PROVISIONAL
     * sessions (the bucket's first event provisionally opens one); the
     * per-bucket summary table (first/last timestamp, local session
-    * count — one row per non-empty bucket, thousands of rows per key
-    * where the events were billions) is stitched per key in bucket
-    * order: a bucket CONTINUES the previous non-empty bucket's last
-    * session when the boundary gap is within `gapSec`, and the global
-    * session id is base(b) + local_id − cont(b), where base is the
-    * running sum of each prior bucket's (local count − its own cont).
-    * Works for ANY bucketSec (sessions chain across many buckets and
-    * skip empty ones — the stitch reads the previous NON-EMPTY
-    * summary); default 4× the gap. Integer arithmetic end to end:
-    * session ids are IDENTICAL to the window form's 1-based per-key
-    * numbering on every input (spec-pinned), so the two forms share
-    * an oracle.
+    * count — one row per non-empty bucket) is stitched per key in
+    * bucket order: a bucket CONTINUES the previous non-empty bucket's
+    * last session when the boundary gap is within `gapSec`, and the
+    * global session id is base(b) + local_id − cont(b), where base is
+    * the running sum of each prior bucket's (local count − its own
+    * cont). Sessions chain across many buckets and skip empty ones.
+    * Integer arithmetic end to end: session ids are IDENTICAL to the
+    * window form's 1-based per-key numbering on every input
+    * (spec-pinned), so the two forms share an oracle.
     *
     * Output: the input columns plus `session_id`. Non-null timestamps
     * required (the q_sessionize contract).
     */
   def sessionLabelsScalable(df: DataFrame, keys: Seq[String], tsCol: String,
-                            gapSec: Long, bucketSec: Long = 0L): DataFrame = {
+                            gapSec: Long): DataFrame = {
     require(gapSec > 0, "gapSec must be positive")
     val gUs = gapSec * UsPerSec
-    val bUs = (if (bucketSec > 0) bucketSec else 4 * gapSec) * UsPerSec
+    val bUs = 4 * gUs
     val k = keys.map(col)
     val base = df.withColumn("_us", unix_micros(col(tsCol)))
-      .withColumn("_b", floor(col("_us") / bUs))
+      .withColumn("_b", floorDiv(col("_us"), bUs))
     val w1 = Window.partitionBy(k :+ col("_b"): _*).orderBy(col("_us"))
     val run1 = w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val withLocal = base
@@ -430,15 +250,14 @@ object TimeSeriesOps {
     * medians: Spark's median aggregate is not window-frame-capable, but
     * collect_list is — collect the frame with cRolling, then take the
     * sorted middle here (mean of the two middles for even counts,
-    * matching pandas/DuckDB).
+    * matching pandas/DuckDB). An empty or null array (a frame of null
+    * values) has a null median.
     *
     * MEMORY BOUND: the collect_list frame materializes O(window)
     * doubles per row inside WindowExec — fine for sparse series and
     * moderate windows (a 2 h window at 1-min sampling is 120 elements),
     * but a dense 1 Hz series under a multi-hour window builds ~10^4
-    * element arrays per row. For wide windows over dense series use
-    * [[cRollingQuantileApprox]], whose per-row state is a fixed-size
-    * sketch instead of the frame itself.
+    * element arrays per row.
     */
   def medianOfArray(vals: Column): Column = {
     val sorted = sort_array(vals)
@@ -446,35 +265,8 @@ object TimeSeriesOps {
     val mid = ((n + 1) / 2).cast("int") // integer division: n is IntegerType
     val lo = (n / 2).cast("int")
     when(n % 2 === 1, element_at(sorted, mid))
-      .otherwise((element_at(sorted, lo) + element_at(sorted, lo + 1)) / 2.0)
+      .when(n > 0, (element_at(sorted, lo) + element_at(sorted, lo + 1)) / 2.0)
   }
-
-  /** Approximate centered rolling quantile (the wide-window escape
-    * hatch for rolling medians): percentile_approx over the cRolling
-    * range frame. Unlike the exact collect_list + [[medianOfArray]]
-    * path, per-row window state is a bounded sketch (controlled by
-    * `accuracy`), so the memory bound is independent of window width —
-    * the right trade for dense (~1 Hz) series under multi-hour windows
-    * at 100 TB. Error is bounded by 1/accuracy of the frame's rank
-    * range (exact when the frame has fewer than `accuracy` rows, except
-    * that the sketch returns an element, not the even-count midpoint
-    * mean).
-    */
-  def cRollingQuantileApprox(df: DataFrame, keys: Seq[String], tsCol: String,
-                             valCol: String, windowSec: Long,
-                             probability: Double = 0.5,
-                             accuracy: Int = 10000,
-                             outCol: String = "approx_median",
-                             minPeriods: Int = 1): DataFrame =
-    cRolling(df, keys, tsCol, valCol, windowSec,
-      Seq(outCol -> (c => percentile_approx(c, lit(probability), lit(accuracy)))),
-      minPeriods)
-
-  /** [[cRollingQuantileApprox]] with a pandas-style duration window. */
-  def cRollingQuantileApprox(df: DataFrame, keys: Seq[String], tsCol: String,
-                             valCol: String, window: String): DataFrame =
-    cRollingQuantileApprox(df, keys, tsCol, valCol,
-      graft.api.Durations.parseSeconds(window))
 
   /** Downsample to fixed calendar buckets with aggregates (A3;
     * reference gpstools.py:350 `resample('1D').mean()`).

@@ -137,13 +137,12 @@ object RelationalQueries extends QueryPack {
   /** F6s `q_sessionize_scalable` — gap-based sessions through the
     * bucketed boundary-stitch labeler
     * ([[graft.operators.TimeSeriesOps.sessionLabelsScalable]]): the
-    * window form sorts each user's entire history in ONE task, which
-    * the sg fixtures absorb (linear work) but a 10⁹-event key at true
-    * scale cannot — here the hot key spreads over (time-range /
-    * bucket) tasks and the per-bucket summaries stitch in a
-    * rows-per-key = bucket-count window. Session ids are integer-
-    * identical to the window form on every input (spec-pinned), so
-    * this entry reuses q_sessionize's oracle verbatim.
+    * window form sorts each user's entire history in ONE task; here a
+    * hot key spreads over (time-range / 48 h bucket) tasks and the
+    * per-bucket summaries stitch in a rows-per-key = bucket-count
+    * window. Session ids are integer-identical to the window form on
+    * every input (spec-pinned), so this entry reuses q_sessionize's
+    * oracle verbatim.
     */
   def qSessionizeScalable(s: SparkSession, dir: String): DataFrame =
     graft.operators.TimeSeriesOps.sessionLabelsScalable(

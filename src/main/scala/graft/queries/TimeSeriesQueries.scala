@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.operators.TimeSeriesOps
@@ -14,19 +14,21 @@ object TimeSeriesQueries extends QueryPack {
   private def e(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
 
-  /** A1 `ts_rolling_center` — centered 2 h rolling mean (utils.py:32).
-    * Frame form: the uniform-density-optimal shape (one exchange, one
-    * WindowExec; 0.22 s at sf0.1 vs the decomposed twin's ~0.7 s).
-    * On SKEWED/dense series the frame is recomputed per row and one
-    * hot key owns the stage (StragglerProbe sg10_skew: ratio 27, a
-    * 5.9 s straggler) — `ts_rolling_scalable`
-    * ([[TimeSeriesOps.cRollingScalable]]) is the routed shape there
-    * (ratio ~1.01 on the same fixture), the dedup_prune /
-    * dedup_prune_lsh dual-path convention.
-    */
-  def tsRollingCenter(s: SparkSession, dir: String): DataFrame =
+  /** The (t-2h, t] user_id frame every ts_rolling_* key reads. */
+  private def rolling2h(s: SparkSession, dir: String,
+                        aggs: Seq[(String, Column => Column)],
+                        minPeriods: Int = 1): DataFrame =
     TimeSeriesOps.cRolling(e(s, dir), Seq("user_id"), "ts", "value", 7200,
-        Seq("mean_2h" -> (c => avg(c))))
+      aggs, minPeriods)
+
+  private val minMaxSumCountMean: Seq[(String, Column => Column)] =
+    Seq("roll_min" -> (c => min(c)), "roll_max" -> (c => max(c)),
+      "roll_sum" -> (c => sum(c)), "roll_n" -> (c => count(c)),
+      "roll_mean" -> (c => avg(c)))
+
+  /** A1 `ts_rolling_center` — centered 2 h rolling mean (utils.py:32). */
+  def tsRollingCenter(s: SparkSession, dir: String): DataFrame =
+    rolling2h(s, dir, Seq("mean_2h" -> (c => avg(c))))
       .select(col("user_id"), fmtTs(col("ts_c")).as("ts_c"),
         r6(col("mean_2h")).as("mean_2h"))
 
@@ -35,56 +37,32 @@ object TimeSeriesQueries extends QueryPack {
     * aggregate is not frame-capable).
     */
   def tsRollingMulti(s: SparkSession, dir: String): DataFrame =
-    TimeSeriesOps.cRolling(e(s, dir), Seq("user_id"), "ts", "value", 7200,
-        Seq("roll_min" -> (c => min(c)), "roll_max" -> (c => max(c)),
-          "roll_sum" -> (c => sum(c)), "roll_n" -> (c => count(c)),
-          "roll_mean" -> (c => avg(c)),
-          "_frame" -> (c => collect_list(c))))
+    rolling2h(s, dir, minMaxSumCountMean :+
+        ("_frame" -> ((c: Column) => collect_list(c))))
       .select(col("user_id"), fmtTs(col("ts_c")).as("ts_c"),
         col("roll_min"), col("roll_max"), r6(col("roll_sum")).as("roll_sum"),
         col("roll_n"), r6(col("roll_mean")).as("roll_mean"),
         r6(TimeSeriesOps.medianOfArray(col("_frame"))).as("roll_med"))
 
-  /** A2s `ts_rolling_scalable` — the SKEW-ROBUST rolling aggregate
-    * ([[TimeSeriesOps.cRollingScalable]]): min/max/sum/n/mean over the
-    * same (t-2h, t] frame as ts_rolling_multi, decomposed into
-    * bucketed growing-frame prefix/suffix monoid combines so one hot
-    * key spreads across (time-range / window) tasks instead of one
-    * quadratic frame partition (StragglerProbe sg10_skew: the frame
-    * form's 120x straggler vs this shape — SCALING.md r15). min/max/n
-    * are bit-identical to the frame form; sum/mean ride the r6 grid
-    * (two-partial association, the ts_step convention). Exact rolling
-    * median stays with ts_rolling_multi by design (not
-    * monoid-decomposable).
+  /** A2s `ts_rolling_scalable` — min/max/sum/n/mean over the same
+    * (t-2h, t] frame as ts_rolling_multi.
     */
   def tsRollingScalable(s: SparkSession, dir: String): DataFrame =
-    TimeSeriesOps.cRollingScalable(e(s, dir), Seq("user_id"), "ts",
-        "value", 7200)
+    rolling2h(s, dir, minMaxSumCountMean)
       .select(col("user_id"), fmtTs(col("ts_c")).as("ts_c"),
         col("roll_min"), col("roll_max"), r6(col("roll_sum")).as("roll_sum"),
         col("roll_n"), r6(col("roll_mean")).as("roll_mean"))
 
-  /** A2m `ts_rolling_median_scalable` — the SKEW-ROBUST rolling MEDIAN
-    * ([[TimeSeriesOps.cRollingMedianScalable]]): the grid-histogram
-    * merge-able sketch over the same (t-2h, t] frame as
-    * ts_rolling_multi's exact `roll_med`, decomposed into the
-    * cRollingScalable bucketed prefix/suffix combine — per-row state
-    * is one long[512] count vector (update O(1), merge element-wise),
-    * so one hot key spreads across (time-range / window) tasks instead
-    * of sorting every frame in one straggler (exact rolling median is
-    * not monoid-decomposable; this is the routed shape at scale, the
-    * ts_rolling_scalable convention). Deterministic but grid-valued →
-    * rows-only; the CHECKS ceiling pins
-    * |roll_med_grid − exact roll_med| <= (max−min)/(2·512) against
-    * ts_rolling_multi on the gate fixture, and the spec pins the same
-    * bound on adversarial fixtures. roll_n is bit-identical to the
-    * frame form's and is pinned by the spec too.
+  /** A2m `ts_rolling_median_scalable` — the exact rolling median and
+    * count over the same (t-2h, t] frame as ts_rolling_multi, equal
+    * to its `roll_med`/`roll_n`.
     */
   def tsRollingMedianScalable(s: SparkSession, dir: String): DataFrame =
-    TimeSeriesOps.cRollingMedianScalable(e(s, dir), Seq("user_id"), "ts",
-        "value", 7200, nCells = 512)
+    rolling2h(s, dir, Seq("roll_n" -> (c => count(c)),
+        "_frame" -> (c => collect_list(c))))
       .select(col("user_id"), fmtTs(col("ts_c")).as("ts_c"),
-        r6(col("roll_med_grid")).as("roll_med_grid"), col("roll_n"))
+        r6(TimeSeriesOps.medianOfArray(col("_frame"))).as("roll_med"),
+        col("roll_n"))
 
   /** A12 `ts_step` — two-sample step detection: mean over [t, t+72h)
     * minus mean over [t-72h, t) per user, null when either side has
@@ -116,12 +94,10 @@ object TimeSeriesQueries extends QueryPack {
     * of a single observation is null in both engines, and min_periods
     * states it explicitly. Both engines run a numerically-stable
     * central-moments accumulator over the identical RANGE frame;
-    * accumulation-order ulps are absorbed by r6 (the roll_sum
-    * exposure, already green under the same frame).
+    * accumulation-order ulps are absorbed by r6.
     */
   def tsRollingStd(s: SparkSession, dir: String): DataFrame =
-    TimeSeriesOps.cRolling(e(s, dir), Seq("user_id"), "ts", "value", 7200,
-        Seq("roll_std" -> (c => stddev_samp(c))), minPeriods = 2)
+    rolling2h(s, dir, Seq("roll_std" -> (c => stddev_samp(c))), minPeriods = 2)
       .select(col("user_id"), fmtTs(col("ts_c")).as("ts_c"),
         r6(col("roll_std")).as("roll_std"))
 
@@ -434,8 +410,6 @@ object TimeSeriesQueries extends QueryPack {
          |FROM e
          |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
          |  RANGE BETWEEN 7199999999 PRECEDING AND CURRENT ROW)""".stripMargin,
-    // the scalable twin states the DIRECT sliding window (the
-    // decomposition must be invisible to the oracle)
     "ts_rolling_scalable" ->
       s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events)
          |SELECT user_id,
@@ -445,6 +419,15 @@ object TimeSeriesQueries extends QueryPack {
          |  floor((sum(value) OVER w) * 1000000 + 0.5001) / 1000000 AS roll_sum,
          |  count(value) OVER w AS roll_n,
          |  floor((avg(value) OVER w) * 1000000 + 0.5001) / 1000000 AS roll_mean
+         |FROM e
+         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+         |  RANGE BETWEEN 7199999999 PRECEDING AND CURRENT ROW)""".stripMargin,
+    "ts_rolling_median_scalable" ->
+      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events)
+         |SELECT user_id,
+         |  strftime(ts - INTERVAL 3600 SECOND, '$fmt') AS ts_c,
+         |  floor((median(value) OVER w) * 1000000 + 0.5001) / 1000000 AS roll_med,
+         |  count(value) OVER w AS roll_n
          |FROM e
          |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
          |  RANGE BETWEEN 7199999999 PRECEDING AND CURRENT ROW)""".stripMargin,

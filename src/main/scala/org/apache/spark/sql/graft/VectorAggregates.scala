@@ -127,104 +127,6 @@ case class VectorMean(child: Expression,
     copy(child = newChild)
 }
 
-/** Fixed-width histogram counts of a cell-index column — the
-  * MERGE-ABLE quantile-sketch primitive behind the skew-robust rolling
-  * median (r16, verdict-r15 item 5). The buffer is one long[nCells]
-  * vector: update is O(1) (bump one cell), merge is element-wise add —
-  * a monoid, so the [[graft.operators.TimeSeriesOps.cRollingScalable]]
-  * prefix/suffix bucket decomposition applies to quantiles exactly as
-  * it does to min/max/sum. Evaluated over a GROWING window frame Spark
-  * feeds it one row at a time (no per-row frame rescan), so per-key
-  * work is O(rows x nCells) regardless of frame width — where the
-  * exact frame form (collect_list + sort) is O(rows x frame-rows) and
-  * one dense hot key serializes into a straggler task.
-  *
-  * Semantics: null cells are skipped (they carry no order position);
-  * out-of-range cells are the CALLER's bug (clamp before calling);
-  * a group that saw no rows at all evaluates to null. This is a
-  * fixed-universe degenerate of a KLL/t-digest sketch: rank error is
-  * bounded by the grid resolution instead of adapting to the data,
-  * which is the right trade when the value range is known from one
-  * linear pre-pass (the ts_mad grid convention).
-  */
-final class CellCountsBuffer(var counts: Array[Long]) {
-  def ensure(n: Int): Unit =
-    if (counts.length < n) counts = java.util.Arrays.copyOf(counts, n)
-}
-
-case class CellCounts(child: Expression, nCells: Int,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CellCountsBuffer]
-  with ImplicitCastInputTypes with UnaryLike[Expression] {
-  require(nCells > 0, s"nCells must be positive, got $nCells")
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(org.apache.spark.sql.types.IntegerType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "cell_counts"
-
-  override def createAggregationBuffer(): CellCountsBuffer =
-    new CellCountsBuffer(Array.emptyLongArray)
-
-  override def update(buf: CellCountsBuffer, input: InternalRow): CellCountsBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val c = v.asInstanceOf[Int]
-      require(c >= 0 && c < nCells, s"cell $c out of [0, $nCells)")
-      buf.ensure(nCells)
-      buf.counts(c) += 1
-    }
-    buf
-  }
-
-  override def merge(a: CellCountsBuffer, b: CellCountsBuffer): CellCountsBuffer = {
-    a.ensure(b.counts.length)
-    var i = 0
-    while (i < b.counts.length) { a.counts(i) += b.counts(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: CellCountsBuffer): Any = {
-    if (buf.counts.length == 0) return null
-    // pad to the full grid so consumers can zip prefix/suffix blindly;
-    // UnsafeArrayData keeps the longs primitive (a GenericArrayData
-    // would box 512 Longs per row per window — pure GC pressure on
-    // the rolling-median hot path)
-    val out = new Array[Long](nCells)
-    System.arraycopy(buf.counts, 0, out, 0, buf.counts.length)
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-
-  override def serialize(buf: CellCountsBuffer): Array[Byte] = {
-    val n = buf.counts.length
-    val bb = ByteBuffer.allocate(4 + 8 * n)
-    bb.putInt(n)
-    var i = 0
-    while (i < n) { bb.putLong(buf.counts(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): CellCountsBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val counts = new Array[Long](n)
-    var i = 0
-    while (i < n) { counts(i) = bb.getLong; i += 1 }
-    new CellCountsBuffer(counts)
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CellCounts =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CellCounts =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CellCounts =
-    copy(child = newChild)
-}
-
 object VectorAggregates {
   /** Element-wise mean of a double-array column as a single
     * map-side-combining aggregate (null elements skipped per
@@ -233,12 +135,4 @@ object VectorAggregates {
   def vectorMean(c: Column): Column =
     ExpressionUtils.column(
       VectorMean(ExpressionUtils.expression(c)).toAggregateExpression())
-
-  /** long[nCells] histogram of a clamped cell-index column (null cells
-    * skipped; null when the group saw no rows) — the merge-able
-    * rolling-quantile primitive (see [[CellCounts]]).
-    */
-  def cellCounts(c: Column, nCells: Int): Column =
-    ExpressionUtils.column(
-      CellCounts(ExpressionUtils.expression(c), nCells).toAggregateExpression())
 }

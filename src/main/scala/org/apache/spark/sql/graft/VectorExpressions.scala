@@ -199,76 +199,6 @@ case class HyperplaneBandValues(child: Expression,
     copy(child = newChild)
 }
 
-/** lo+up median-cell index sum of a two-part grid histogram — the
-  * row-local back half of the skew-robust rolling median (r16): given
-  * the prefix and suffix count vectors and the frame's non-null count
-  * n, one compiled pass finds the lower/upper median cells (smallest
-  * cells whose cumulative count reaches ceil(n/2) and floor(n/2)+1 —
-  * integer reach arithmetic, the ts_mad convention) and returns
-  * lo + up, from which the caller's estimate is
-  * gmin + (lo + up + 1) · cellWidth / 2.
-  *
-  * Why an expression and not `zip_with` + `aggregate`: higher-order
-  * functions are CodegenFallback and evaluate their lambda
-  * interpreter-style PER ELEMENT — at 512 cells x 3 passes per row
-  * that measured ~10 s on a 10k-row fixture (guide §4); this loop is
-  * one compiled pass with zero allocation. n <= 0 returns 0 (the
-  * caller's minPeriods gate nulls the estimate before it is read).
-  * Histograms shorter than the other's length are read as
-  * zero-padded; both null-intolerant inputs are coalesced upstream.
-  */
-case class GridMedianCellSum(first: Expression, second: Expression,
-                             third: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-  with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType),
-      org.apache.spark.sql.types.LongType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean =
-    first.nullable || second.nullable || third.nullable
-  override def prettyName: String = "grid_median_cell_sum"
-
-  def cellSum(pRaw: Any, sRaw: Any, n: Long): Long = {
-    if (n <= 0) return 0L
-    val p = pRaw.asInstanceOf[ArrayData]
-    val s = sRaw.asInstanceOf[ArrayData]
-    val np = p.numElements()
-    val ns = s.numElements()
-    val len = math.max(np, ns)
-    val rLo = (n + 1) / 2
-    val rUp = n / 2 + 1
-    var cum = 0L
-    var lo = -1L
-    var up = -1L
-    var i = 0
-    while (i < len && up < 0) {
-      cum += (if (i < np) p.getLong(i) else 0L) +
-        (if (i < ns) s.getLong(i) else 0L)
-      if (lo < 0 && cum >= rLo) lo = i
-      if (up < 0 && cum >= rUp) up = i
-      i += 1
-    }
-    lo + up
-  }
-
-  override protected def nullSafeEval(p: Any, s: Any, n: Any): Any =
-    cellSum(p, s, n.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("gridMedianCellSum", this,
-      classOf[GridMedianCellSum].getName)
-    nullSafeCodeGen(ctx, ev,
-      (p, s, n) => s"${ev.value} = $self.cellSum($p, $s, $n);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): GridMedianCellSum =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object VectorExpressions {
   /** Codegen'd dot product of two array<double> columns. */
   def vectorDot(a: Column, b: Column): Column =
@@ -288,13 +218,4 @@ object VectorExpressions {
   def vectorCosine(a: Column, b: Column): Column =
     ExpressionUtils.column(VectorCosineSimilarity(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Codegen'd lo+up median-cell sum of a two-part grid histogram
-    * (see [[GridMedianCellSum]]).
-    */
-  def gridMedianCellSum(prefix: Column, suffix: Column, n: Column): Column =
-    ExpressionUtils.column(GridMedianCellSum(
-      ExpressionUtils.expression(prefix),
-      ExpressionUtils.expression(suffix),
-      ExpressionUtils.expression(n)))
 }

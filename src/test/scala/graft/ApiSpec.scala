@@ -43,10 +43,6 @@ class ApiSpec extends SparkSpec {
       d.orderBy("ts").collect().map(_.toSeq).toSeq
     assert(rows3(TimeSeriesOps.upsampleNearest(df, Seq("k"), "ts", "value", "1D")) ===
       rows3(TimeSeriesOps.upsampleNearest(df, Seq("k"), "ts", "value", 86400L)))
-    val approx = TimeSeriesOps.cRollingQuantileApprox(
-      df, Seq("k"), "ts", "value", "6H")
-    assert(rows(approx) ===
-      rows(TimeSeriesOps.cRollingQuantileApprox(df, Seq("k"), "ts", "value", 21600L)))
   }
 
   test("DiurnalExtrema facade dispatches options like the reference") {

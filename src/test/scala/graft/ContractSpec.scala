@@ -86,13 +86,9 @@ class ContractSpec extends AnyFunSuite {
                              // exact-verified, CHECKS floors vs exact chain
       "dedup_semantic",      // k-means assignment is float-sum-order-defined (r6)
       "dedup_bloom",         // Bloom bit layout is Spark-impl-defined (r7)
-      "q_approx_sketch",     // raw HLL++/percentile-sketch estimates are
+      "q_approx_sketch")     // raw HLL++/percentile-sketch estimates are
                              // impl-defined; accuracy hash-verified via
                              // q_approx's certificate (r12, bench split)
-      "ts_rolling_median_scalable") // grid-sketch rolling median (r16):
-                             // deterministic but grid-valued; CHECKS
-                             // pins the cellWidth/2 error ceiling vs
-                             // ts_rolling_multi's exact roll_med
     assert(rowsOnly === expected,
       s"rows-only drift: extra=${rowsOnly -- expected} missing=${expected -- rowsOnly}")
   }

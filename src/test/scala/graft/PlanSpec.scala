@@ -56,10 +56,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("window operators shuffle once on the series key (single Exchange before Window)") {
-    val plan = planOf(TimeSeriesQueries.tsRollingCenter(spark, dir))
-    assert(plan.contains("Window"))
-    // exactly one shuffle: the hashpartitioning on user_id
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size === 1)
+    // every rolling key is the one halo-bucketed cRolling body: one
+    // hashpartitioning on (user_id, bucket), no broadcast, no join
+    Seq("ts_rolling_center", "ts_rolling_multi", "ts_rolling_std",
+        "ts_rolling_scalable", "ts_rolling_median_scalable").foreach { name =>
+      val plan = planOf(SparkEntry.queries(name)(spark, dir))
+      assert(plan.contains("Window"), s"$name has no Window:\n$plan")
+      assert("Exchange hashpartitioning".r.findAllIn(plan).size === 1,
+        s"$name shuffles more than once:\n$plan")
+      assert(!plan.contains("BroadcastExchange"), s"$name broadcasts:\n$plan")
+      assert(!plan.contains("Join"), s"$name joins:\n$plan")
+    }
   }
 
   test("no window frame grows toward UNBOUNDED FOLLOWING; forward-looking ts operators sort once") {

@@ -26,40 +26,6 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(out.map(_.getAs[Double]("m")) === Array(1.0, 1.5, 2.5))
   }
 
-  test("cRollingQuantileApprox tracks the exact rolling median within sketch error") {
-    // 4 h of minutely data with a noisy sawtooth — frames of ~121 rows
-    val rows = (0 until 240).map { i =>
-      ("a", f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00",
-        java.lang.Double.valueOf((i * 37 % 100).toDouble))
-    }
-    val df = series(rows: _*)
-    val sorted = sort_array(col("_frame"))
-    val exact = TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200,
-        Seq("_frame" -> (c => collect_list(c))))
-      .select(col("k"), col("t_c").as("tc"),
-        TimeSeriesOps.medianOfArray(col("_frame")).as("med"),
-        // what a rank-exact sketch returns at p=0.5: the lower-middle
-        // frame ELEMENT (the exact path averages the two middles on
-        // even counts, which is not an element)
-        element_at(sorted, ((size(sorted) + 1) / 2).cast("int")).as("lower_mid"))
-    val approx = TimeSeriesOps
-      .cRollingQuantileApprox(df, Seq("k"), "t", "v", 7200)
-      .withColumnRenamed("t_c", "tc2").withColumnRenamed("k", "k2")
-    val joined = exact.join(approx,
-      col("k") === col("k2") && col("tc") === col("tc2"))
-      .select(col("med"), col("lower_mid"), col("approx_median")).collect()
-    assert(joined.length === 240)
-    joined.foreach { r =>
-      // frames (<=121 rows) are far below the sketch accuracy: the
-      // sketch is rank-exact, returning precisely the lower-middle
-      assert(r.getDouble(2) === r.getDouble(1),
-        s"approx ${r.getDouble(2)} != lower-middle ${r.getDouble(1)}")
-      // and on odd frames that IS the exact median
-      if (r.getDouble(0) == r.getDouble(1))
-        assert(r.getDouble(2) === r.getDouble(0))
-    }
-  }
-
   test("asof family matches a driver-side brute force on randomized series (all three directions)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -418,120 +384,68 @@ class TimeSeriesOpsSpec extends SparkSpec {
       math.abs(v.asInstanceOf[Double] - (5.0 + 0.5 * 3.0) / 1.5) < 1e-12) === Some(true))
   }
 
-  test("cRollingScalable equals the frame form on hot keys, bucket boundaries, ties, nulls, minPeriods") {
-    // adversarial fixture: a hot key with ~70% of rows at dense
-    // irregular spacing (incl. rows exactly w apart, exactly w-1µs
-    // apart, duplicate timestamps), a sparse key with frame-empty
-    // stretches, and null values
+  test("cRolling halo buckets equal a per-key RANGE frame: edges, pre-1970, nulls") {
+    val wUs = 7200L * 1000000L
+    val bUs = TimeSeriesOps.BucketWindows * wUs
+    val s0 = Math.floorDiv(1704067200000000L, bUs) * bUs + bUs // a 2024 bucket start
     val rnd = new scala.util.Random(7)
-    val hot = (0 until 700).map { i =>
-      val sec = i * 37 + rnd.nextInt(17)
-      ("hot", f"2024-01-01 ${sec / 3600}%02d:${sec % 3600 / 60}%02d:${sec % 60}%02d",
-        if (i % 19 == 0) null.asInstanceOf[java.lang.Double]
-        else java.lang.Double.valueOf((i * 13 % 97).toDouble))
+    // dense irregular key over four buckets, every 19th value null
+    val hot = (0 until 800).map { i =>
+      ("hot", Option(s0 - bUs + i * (bUs / 200) + rnd.nextInt(17) * 1000000L),
+        if (i % 19 == 0) None else Option((i * 13 % 97).toDouble))
     }
-    val boundary = Seq(
-      ("b", "2024-01-01 00:00:00", java.lang.Double.valueOf(1.0)),
-      ("b", "2024-01-01 02:00:00", java.lang.Double.valueOf(2.0)), // exactly w later: frame (00:00, 02:00] drops the first
-      ("b", "2024-01-01 02:00:00", java.lang.Double.valueOf(3.0)), // duplicate ts
-      ("b", "2024-01-01 03:59:59", java.lang.Double.valueOf(4.0)),
-      ("b", "2024-01-01 09:00:00", java.lang.Double.valueOf(5.0))) // isolated
-    val df = series(hot ++ boundary: _*)
+    // bucket start, start - 1µs, start - w, start - w + 1µs, a duplicate
+    // timestamp on the boundary, and the next bucket's edges
+    val edge = Seq(s0 - wUs, s0 - wUs + 1, s0 - 1, s0, s0, s0 + 1,
+        s0 + bUs - wUs, s0 + bUs - wUs + 1, s0 + bUs - 1, s0 + bUs)
+      .zipWithIndex.map { case (us, i) => ("edge", Option(us), Option(i.toDouble)) }
+    // pre-1970 instants straddling the bucket starts -B and 0
+    val pre = Seq(-bUs - wUs, -bUs - wUs + 1, -bUs - 1, -bUs, -bUs + 1,
+        -bUs + wUs - 1, -wUs + 1, -1L, 0L, 1L)
+      .zipWithIndex.map { case (us, i) => ("pre", Option(us), Option(i + 0.5)) }
+    val degenerate = Seq(
+      ("one", Option(s0 + 12345L), Option(4.0)),                  // single-row key
+      ("nul", Option(s0 - 1), None), ("nul", Option(s0), None),  // all-null values
+      ("nul", Option(s0 + 1), None),
+      ("nts", None, Option(1.0)), ("nts", Option(s0), Option(2.0))) // null timestamp
+    val df = (hot ++ edge ++ pre ++ degenerate).toDF("k", "us", "v")
+      .select(col("k"), timestamp_micros(col("us")).as("t"), col("v"))
+    val aggs = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      "roll_min" -> (c => min(c)), "roll_max" -> (c => max(c)),
+      "roll_sum" -> (c => sum(c)), "roll_n" -> (c => count(c)),
+      "roll_mean" -> (c => avg(c)), "_frame" -> (c => collect_list(c)))
+    def show(out: org.apache.spark.sql.DataFrame, med: org.apache.spark.sql.Row => Option[Double]) =
+      out.select(col("k"), unix_micros(col("t_c")).as("tc"), col("roll_min"),
+          col("roll_max"), col("roll_sum"), col("roll_n"), col("roll_mean"),
+          col("_frame"), TimeSeriesOps.medianOfArray(col("_frame")).as("med"))
+        .collect().map { r =>
+          def round(f: String) = Option(r.getAs[Any](f)).map(v =>
+            math.round(v.asInstanceOf[Double] * 1e6))
+          (r.getString(0), Option(r.getAs[Any]("tc")), Option(r.getAs[Any]("roll_min")),
+            Option(r.getAs[Any]("roll_max")), round("roll_sum"),
+            Option(r.getAs[Any]("roll_n")), round("roll_mean"), med(r)).toString
+        }.sorted.toSeq
     for (minPeriods <- Seq(1, 3)) {
-      val frame = TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200,
-          Seq("roll_min" -> (c => min(c)), "roll_max" -> (c => max(c)),
-            "roll_sum" -> (c => sum(c)), "roll_n" -> (c => count(c)),
-            "roll_mean" -> (c => avg(c))), minPeriods)
-        .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime,
-          Option(r.getAs[Any]("roll_min")),
-          Option(r.getAs[Any]("roll_max")),
-          Option(r.getAs[Any]("roll_sum")).map(v =>
-            math.round(v.asInstanceOf[Double] * 1e6)),
-          Option(r.getAs[Any]("roll_n")),
-          Option(r.getAs[Any]("roll_mean")).map(v =>
-            math.round(v.asInstanceOf[Double] * 1e6))))
-        .toSet
-      val scalable = TimeSeriesOps.cRollingScalable(df, Seq("k"), "t", "v",
-          7200, minPeriods)
-        .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime,
-          Option(r.getAs[Any]("roll_min")),
-          Option(r.getAs[Any]("roll_max")),
-          Option(r.getAs[Any]("roll_sum")).map(v =>
-            math.round(v.asInstanceOf[Double] * 1e6)),
-          Option(r.getAs[Any]("roll_n")),
-          Option(r.getAs[Any]("roll_mean")).map(v =>
-            math.round(v.asInstanceOf[Double] * 1e6))))
-        .toSet
-      assert(scalable === frame,
-        s"scalable decomposition diverged at minPeriods=$minPeriods")
+      // reference: one plain RANGE frame per key, median on the driver
+      val frame = org.apache.spark.sql.expressions.Window.partitionBy(col("k"))
+        .orderBy(unix_micros(col("t"))).rangeBetween(-(wUs - 1), 0)
+      val enough =
+        if (minPeriods <= 1) lit(true) else count(col("v")).over(frame) >= minPeriods
+      val reference = df.select(col("k") +:
+        timestamp_micros(unix_micros(col("t")) - wUs / 2).as("t_c") +:
+        aggs.map { case (n, f) => when(enough, f(col("v")).over(frame)).as(n) }: _*)
+      val expected = show(reference, r => Option(r.getSeq[Double](7)).flatMap { f =>
+        val v = f.sorted
+        if (v.isEmpty) None
+        else Some(if (v.size % 2 == 1) v(v.size / 2) else (v(v.size / 2 - 1) + v(v.size / 2)) / 2)
+      })
+      val actual = show(TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200, aggs, minPeriods),
+        r => Option(r.getAs[Any]("med")).map(_.asInstanceOf[Double]))
+      assert(actual.size === df.count())
+      assert(actual === expected, s"halo-bucketed frame diverged at minPeriods=$minPeriods")
     }
-  }
-
-  test("cRollingMedianScalable: grid median within cellWidth/2 of the exact frame median, roll_n bit-identical") {
-    // the cRollingScalable adversarial fixture: hot dense key with
-    // nulls + duplicate timestamps, boundary key with exact-w frames,
-    // an isolated row (frame of one), a constant-value key (cellWidth
-    // degenerates to 0 -> exact)
-    val rnd = new scala.util.Random(7)
-    val hot = (0 until 700).map { i =>
-      val sec = i * 37 + rnd.nextInt(17)
-      ("hot", f"2024-01-01 ${sec / 3600}%02d:${sec % 3600 / 60}%02d:${sec % 60}%02d",
-        if (i % 19 == 0) null.asInstanceOf[java.lang.Double]
-        else java.lang.Double.valueOf((i * 13 % 97).toDouble))
-    }
-    val boundary = Seq(
-      ("b", "2024-01-01 00:00:00", java.lang.Double.valueOf(1.0)),
-      ("b", "2024-01-01 02:00:00", java.lang.Double.valueOf(2.0)),
-      ("b", "2024-01-01 02:00:00", java.lang.Double.valueOf(3.0)),
-      ("b", "2024-01-01 03:59:59", java.lang.Double.valueOf(4.0)),
-      ("b", "2024-01-01 09:00:00", java.lang.Double.valueOf(5.0)),
-      ("c", "2024-01-01 00:00:00", java.lang.Double.valueOf(42.0)),
-      ("c", "2024-01-01 01:00:00", java.lang.Double.valueOf(42.0)))
-    val df = series(hot ++ boundary: _*)
-    val nCells = 64 // coarse on purpose: the bound must hold, not luck
-    val stats = df.agg(min(col("v").cast("double")),
-      max(col("v").cast("double"))).head
-    val cellW = (stats.getDouble(1) - stats.getDouble(0)) / nCells
-    for (minPeriods <- Seq(1, 3)) {
-      val exact = TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200,
-          Seq("roll_n" -> (c => count(c)),
-            "_frame" -> (c => collect_list(c))), minPeriods)
-        .select(col("k"), col("t_c"), col("roll_n"),
-          when(size(col("_frame")) > 0,
-            TimeSeriesOps.medianOfArray(col("_frame"))).as("med"))
-        .collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime) ->
-          (Option(r.getAs[Any]("roll_n")), Option(r.getAs[Any]("med"))))
-        .toMap
-      val grid = TimeSeriesOps.cRollingMedianScalable(df, Seq("k"), "t",
-          "v", 7200, nCells, minPeriods)
-        .collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime) ->
-          (Option(r.getAs[Any]("roll_n")),
-            Option(r.getAs[Any]("roll_med_grid"))))
-      assert(grid.map(_._1).toSet === exact.keySet)
-      grid.foreach { case (key, (n, med)) =>
-        val (en, emed) = exact(key)
-        assert(n === en, s"roll_n diverged at $key, minPeriods=$minPeriods")
-        assert(med.isDefined === emed.isDefined,
-          s"null-ness diverged at $key, minPeriods=$minPeriods")
-        (med, emed) match {
-          case (Some(g), Some(e)) =>
-            val err = math.abs(g.asInstanceOf[Double] - e.asInstanceOf[Double])
-            assert(err <= cellW / 2 + 1e-9,
-              s"grid median off by $err (> ${cellW / 2}) at $key")
-          case _ => ()
-        }
-      }
-    }
-    // whole-column-constant corpus: cellWidth degenerates to 0 and the
-    // estimate is exact
-    val const = series(
-      ("c", "2024-01-01 00:00:00", java.lang.Double.valueOf(42.0)),
-      ("c", "2024-01-01 01:00:00", java.lang.Double.valueOf(42.0)))
-    TimeSeriesOps.cRollingMedianScalable(const, Seq("k"), "t", "v", 7200,
-        nCells).collect()
-      .foreach(r => assert(r.getAs[Double]("roll_med_grid") === 42.0))
+    assert(TimeSeriesOps.cRolling(df.filter(lit(false)), Seq("k"), "t", "v", 7200, aggs)
+      .count() === 0)
   }
 
   test("sessionLabelsScalable matches the window-form session numbering across bucket widths") {
@@ -549,6 +463,9 @@ class TimeSeriesOpsSpec extends SparkSpec {
         ("hot", "2024-01-10 03:00:00", java.lang.Double.valueOf(2.0)), // == gap: continues
         ("hot", "2024-01-10 06:00:01", java.lang.Double.valueOf(3.0)), // > gap: new
         ("hot", "2024-01-10 06:00:01", java.lang.Double.valueOf(4.0)), // dup ts
+        // exact gap straddling the noon bucket boundary: continues
+        ("edge", "2024-01-05 10:30:00", java.lang.Double.valueOf(6.0)),
+        ("edge", "2024-01-05 13:30:00", java.lang.Double.valueOf(7.0)),
         ("sparse", "2024-01-01 00:00:00", java.lang.Double.valueOf(9.0)),
         ("sparse", "2024-02-01 00:00:00", java.lang.Double.valueOf(8.0)))
     val df = series(rows: _*)
@@ -570,17 +487,13 @@ class TimeSeriesOpsSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), min(col("v")).as("mn"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
-    // bucket widths: smaller than, equal to, and larger than the gap —
-    // the stitch must be width-independent
-    for (bucketSec <- Seq(gapSec / 2, gapSec, gapSec * 4, gapSec * 100)) {
-      val scalable = TimeSeriesOps.sessionLabelsScalable(df, Seq("k"), "t",
-          gapSec, bucketSec)
-        .groupBy(col("k"), col("session_id"))
-        .agg(count(lit(1)).as("n"), min(col("v")).as("mn"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      assert(scalable === windowForm,
-        s"session stitch diverged at bucketSec=$bucketSec")
-    }
+    // buckets are the fixed 4 x gap = 12 h
+    val scalable = TimeSeriesOps.sessionLabelsScalable(df, Seq("k"), "t", gapSec)
+      .groupBy(col("k"), col("session_id"))
+      .agg(count(lit(1)).as("n"), min(col("v")).as("mn"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    assert(scalable === windowForm)
+    assert(windowForm.count(_._1 == "edge") === 1)
   }
 }
