@@ -384,8 +384,12 @@ class TimeSeriesOpsSpec extends SparkSpec {
       math.abs(v.asInstanceOf[Double] - (5.0 + 0.5 * 3.0) / 1.5) < 1e-12) === Some(true))
   }
 
-  test("cRolling halo buckets equal a per-key RANGE frame: edges, pre-1970, nulls") {
-    val wUs = 7200L * 1000000L
+  private val haloWUs = 7200L * 1000000L
+
+  /** Rows at every bucket and halo edge, pre-1970 instants and degenerate
+   *  keys, for checking cRolling's halo buckets against a per-key frame. */
+  private def haloFixture() = {
+    val wUs = haloWUs
     val bUs = TimeSeriesOps.BucketWindows * wUs
     val s0 = Math.floorDiv(1704067200000000L, bUs) * bUs + bUs // a 2024 bucket start
     val rnd = new scala.util.Random(7)
@@ -408,44 +412,70 @@ class TimeSeriesOpsSpec extends SparkSpec {
       ("nul", Option(s0 - 1), None), ("nul", Option(s0), None),  // all-null values
       ("nul", Option(s0 + 1), None),
       ("nts", None, Option(1.0)), ("nts", Option(s0), Option(2.0))) // null timestamp
-    val df = (hot ++ edge ++ pre ++ degenerate).toDF("k", "us", "v")
+    (hot ++ edge ++ pre ++ degenerate).toDF("k", "us", "v")
       .select(col("k"), timestamp_micros(col("us")).as("t"), col("v"))
-    val aggs = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
-      "roll_min" -> (c => min(c)), "roll_max" -> (c => max(c)),
-      "roll_sum" -> (c => sum(c)), "roll_n" -> (c => count(c)),
-      "roll_mean" -> (c => avg(c)), "_frame" -> (c => collect_list(c)))
-    def show(out: org.apache.spark.sql.DataFrame, med: org.apache.spark.sql.Row => Option[Double]) =
-      out.select(col("k"), unix_micros(col("t_c")).as("tc"), col("roll_min"),
-          col("roll_max"), col("roll_sum"), col("roll_n"), col("roll_mean"),
-          col("_frame"), TimeSeriesOps.medianOfArray(col("_frame")).as("med"))
+  }
+
+  /** Asserts cRolling(aggs) over the halo fixture equals one plain RANGE
+   *  frame per key at minPeriods 1 and 3, and is empty on empty input;
+   *  `render(out, isReference)` turns each output into sorted row strings. */
+  private def assertHaloEqualsFrame(
+      aggs: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)],
+      render: (org.apache.spark.sql.DataFrame, Boolean) => Seq[String]): Unit = {
+    val df = haloFixture()
+    for (minPeriods <- Seq(1, 3)) {
+      val frame = org.apache.spark.sql.expressions.Window.partitionBy(col("k"))
+        .orderBy(unix_micros(col("t"))).rangeBetween(-(haloWUs - 1), 0)
+      val enough =
+        if (minPeriods <= 1) lit(true) else count(col("v")).over(frame) >= minPeriods
+      val reference = df.select(col("k") +:
+        timestamp_micros(unix_micros(col("t")) - haloWUs / 2).as("t_c") +:
+        aggs.map { case (n, f) => when(enough, f(col("v")).over(frame)).as(n) }: _*)
+      val actual = render(
+        TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200, aggs, minPeriods), false)
+      assert(actual.size === df.count())
+      assert(actual === render(reference, true),
+        s"halo-bucketed frame diverged at minPeriods=$minPeriods")
+    }
+    assert(TimeSeriesOps.cRolling(df.filter(lit(false)), Seq("k"), "t", "v", 7200, aggs)
+      .count() === 0)
+  }
+
+  test("cRolling halo buckets equal a per-key RANGE frame: edges, pre-1970, nulls") {
+    assertHaloEqualsFrame(
+      Seq("roll_min" -> (c => min(c)), "roll_max" -> (c => max(c)),
+        "roll_sum" -> (c => sum(c)), "roll_n" -> (c => count(c)),
+        "roll_mean" -> (c => avg(c))),
+      (out, _) => out.select(col("k"), unix_micros(col("t_c")).as("tc"), col("roll_min"),
+          col("roll_max"), col("roll_sum"), col("roll_n"), col("roll_mean"))
         .collect().map { r =>
           def round(f: String) = Option(r.getAs[Any](f)).map(v =>
             math.round(v.asInstanceOf[Double] * 1e6))
           (r.getString(0), Option(r.getAs[Any]("tc")), Option(r.getAs[Any]("roll_min")),
             Option(r.getAs[Any]("roll_max")), round("roll_sum"),
-            Option(r.getAs[Any]("roll_n")), round("roll_mean"), med(r)).toString
-        }.sorted.toSeq
-    for (minPeriods <- Seq(1, 3)) {
-      // reference: one plain RANGE frame per key, median on the driver
-      val frame = org.apache.spark.sql.expressions.Window.partitionBy(col("k"))
-        .orderBy(unix_micros(col("t"))).rangeBetween(-(wUs - 1), 0)
-      val enough =
-        if (minPeriods <= 1) lit(true) else count(col("v")).over(frame) >= minPeriods
-      val reference = df.select(col("k") +:
-        timestamp_micros(unix_micros(col("t")) - wUs / 2).as("t_c") +:
-        aggs.map { case (n, f) => when(enough, f(col("v")).over(frame)).as(n) }: _*)
-      val expected = show(reference, r => Option(r.getSeq[Double](7)).flatMap { f =>
-        val v = f.sorted
-        if (v.isEmpty) None
-        else Some(if (v.size % 2 == 1) v(v.size / 2) else (v(v.size / 2 - 1) + v(v.size / 2)) / 2)
-      })
-      val actual = show(TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200, aggs, minPeriods),
-        r => Option(r.getAs[Any]("med")).map(_.asInstanceOf[Double]))
-      assert(actual.size === df.count())
-      assert(actual === expected, s"halo-bucketed frame diverged at minPeriods=$minPeriods")
-    }
-    assert(TimeSeriesOps.cRolling(df.filter(lit(false)), Seq("k"), "t", "v", 7200, aggs)
-      .count() === 0)
+            Option(r.getAs[Any]("roll_n")), round("roll_mean")).toString
+        }.sorted.toSeq)
+  }
+
+  test("cRolling median over halo buckets equals the per-key frame median") {
+    assertHaloEqualsFrame(
+      Seq("roll_n" -> (c => count(c)), "_frame" -> (c => collect_list(c))),
+      (out, isReference) => out.select(col("k"), unix_micros(col("t_c")).as("tc"),
+          col("roll_n"), col("_frame"),
+          TimeSeriesOps.medianOfArray(col("_frame")).as("med"))
+        .collect().map { r =>
+          // the reference's median is taken on the driver from its frame
+          val med =
+            if (isReference) Option(r.getSeq[Double](3)).flatMap { f =>
+              val v = f.sorted
+              if (v.isEmpty) None
+              else Some(if (v.size % 2 == 1) v(v.size / 2)
+                else (v(v.size / 2 - 1) + v(v.size / 2)) / 2)
+            }
+            else Option(r.getAs[Any]("med")).map(_.asInstanceOf[Double])
+          (r.getString(0), Option(r.getAs[Any]("tc")), Option(r.getAs[Any]("roll_n")),
+            med).toString
+        }.sorted.toSeq)
   }
 
   test("sessionLabelsScalable matches the window-form session numbering across bucket widths") {
