@@ -246,9 +246,9 @@ object Checks {
       checks += Check(name, "recall_at_10_vs_brute",
         ids.intersect(bruteIds).size / 10.0, recallFloor, ">=")
     }
-    // Floors pinned at 80% of the values the r15 AnnSweep measured on
-    // THIS gate fixture at the shipped defaults (SCALING.md r15 curve
-    // tables): lsh (48,6) measured recall 0.2 / quality 0.75; ivf
+    // Floors pinned at 80% of the values measured on THIS gate fixture
+    // at the shipped defaults (SCALING.md "r15: ANN recall-vs-cost
+    // curves"): lsh (48,6) measured recall 0.2 / quality 0.75; ivf
     // nProbe=4 measured 0.6 / 0.955 (quality floor stays at the
     // pre-existing tighter 0.8); pq kSub=64 measured 0.6 / 0.923;
     // ivf_pq nProbe=4,kSub=64 measured 0.4 / 0.795. A mistuned index
@@ -276,9 +276,9 @@ object Checks {
     val knn = SimilarityQueries.annKnnJoin(spark, sfDir)
       .select(col("query_id"), col("vec_id")).cache()
     val knnHit = knn.join(bruteKnn, Seq("query_id", "vec_id")).count()
-    // 80% of the r16 AnnSweep's measured 0.583 at the shipped
-    // kIvf=64, nProbe=8 (raised from r15's 0.455 = 80% of 0.569 at
-    // kIvf=16, nProbe=4 — the floor only ever tightens)
+    // raised with the shipped kIvf=64, nProbe=8 from 0.455 = 80% of
+    // the 0.569 measured at kIvf=16, nProbe=4 (SCALING.md "r15: ANN
+    // recall-vs-cost curves") — the floor only ever tightens
     checks += Check("ann_knn_join", "mean_recall_at_5_vs_brute",
       knnHit.toDouble / math.max(5 * nQueries, 1), 0.466, ">=")
     val knnMass = dbl(knn

@@ -52,6 +52,15 @@ object GraftSession {
       // data provides the parallelism (CLUSTER.md).
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.files.openCostInBytes", "1m")
+      // List partition directories on the driver: past 32 of them
+      // (Spark's default) every open of a partitioned table runs a
+      // listing job, a 64-task one for the cid= buckets of
+      // ann_knn_join's k64 IVF index, where local listStatus calls take
+      // milliseconds (SCALING.md "Job-free table opens"). The engine's
+      // indexes have at most 64 partitions; on a cluster, where one
+      // table has thousands on remote storage, leave the default
+      // (CLUSTER.md).
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       // Filter INFERENCE off (both rules are optimizations, never
       // semantics): every graft operator already filters its own nulls
       // before joins and explodes (the code-level contract), so the

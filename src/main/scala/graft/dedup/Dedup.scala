@@ -845,8 +845,8 @@ object Dedup {
     * (b) the boilerplate doc-frequency bar counts DISTINCT CONTENTS,
     * not raw copies — a million identical spam pages are one content,
     * so they no longer saturate their own shingles out of the Jaccard
-    * universe. Measured (graft.TaskMetricsProbe, sg100): wall
-    * 514 → 246 s with identical oracle output at both sfs — the
+    * universe. Measured at sg100 (SCALING.md "r13: task-metrics
+    * fingerprints of the expensive tail"): wall 514 → 246 s with identical oracle output at both sfs — the
     * remaining mass is true NEAR-dup (distinct-content) cluster df²,
     * which is the exact operator's honest cost; the bounded-candidate
     * production path is [[pruneNearDupsLsh]].
@@ -989,8 +989,9 @@ object Dedup {
     * keep-one-per-cluster → anti-join. The exact [[pruneNearDups]] is
     * candidate-mass-bound: its (block, shingle) equi-join mass is
     * Σ df², quadratic in near-dup CLUSTER size, and on a fixture whose
-    * planted clusters grow linearly with the corpus the r13
-    * TaskMetricsProbe read 15 GB shuffle / 25 GB spill at mult=100 —
+    * planted clusters grow linearly with the corpus the exact prune
+    * read 15 GB shuffle / 25 GB spill at mult=100 (SCALING.md "r13:
+    * task-metrics fingerprints of the expensive tail") —
     * true candidate mass, not a plan defect, but not a 100 TB shape.
     * Here candidates are bounded per doc by the banding (buckets
     * capped, [[cappedBucketPairs]]), so the join mass tracks the
@@ -1497,11 +1498,7 @@ object Dedup {
     * introduces is exactly the partitioning/ordering the
     * intersection self-join needs, so the a/b sides ride the shared
     * exchange pre-sorted and the cap's only structural addition is
-    * the window evaluation itself. Min-of-4 A/B (AbJaccard): sf0.1
-    * 0.88 s (vs 1.20 s r12 double-explode anti, 1.06 s
-    * shared-exchange broadcast-anti, 0.72 s uncapped); mult=10
-    * 3.47 s (tie with broadcast-anti 3.46, vs 4.74 oldstyle, 4.37
-    * uncapped). The kept-row predicate is the complement of
+    * the window evaluation itself. The kept-row predicate is the complement of
     * [[isBoilerplate]] — one frequency-bar definition with the
     * [[boilerplateShingles]] surface (prune_robust, streaming gate).
     */
@@ -1579,8 +1576,8 @@ object Dedup {
     * copies to Σ df² over distinct contents — quadratic → linear join
     * growth on corpora whose copy mass lives WITHIN blocks (mirrored
     * same-site spam, the common crawl shape; measured in SCALING.md,
-    * "r14: dedup_jaccard class-collapse"). Fixture honesty (r14
-    * TaskMetricsProbe, sg100, SCALING.md): the sg fixtures plant their
+    * "r14: dedup_jaccard class-collapse"). Fixture honesty (same
+    * section, sg100): the sg fixtures plant their
     * exact copies ACROSS sources (1,273 globally-identical docs, only 105
     * same-source), so the blocked entry's sg100 byte metrics match the
     * plain form's (15.1 GB shuffle / 19.2 GB spill — 100%

@@ -326,7 +326,7 @@ object LshIndex {
     require(fs.exists(metaPath),
       s"LshIndex at $path has no meta record — not an index this class " +
         "built (build() always persists meta). Rebuild it with build().")
-    val m = spark.read.parquet(s"$path/meta").head
+    val m = graft.tables.Tables.open(spark, s"$path/meta").head
     val (sn, nh, nb) = (m.getAs[Int]("shingle_n"),
       m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"))
     require(sn == shingleN && nh == numHashes && nb == bands,

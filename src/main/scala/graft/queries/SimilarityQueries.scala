@@ -70,9 +70,10 @@ object SimilarityQueries extends QueryPack {
   }
 
   /** H6 `ann_pq` — product-quantization ANN ([[Similarity.pqTopK]]):
-    * 8 subspaces × 64-codeword spherical codebooks (the r15 AnnSweep
-    * knee — kSub=16 measured quality@10 0.75 at the gate fixture,
-    * 64 measures 0.92, flat through 256), asymmetric
+    * 8 subspaces × 64-codeword spherical codebooks (the knee of
+    * SCALING.md "r15: ANN recall-vs-cost curves" — kSub=16 measured
+    * quality@10 0.75 at the gate fixture, 64 measures 0.92, flat
+    * through 256), asymmetric
     * inner-product ADC top-10 against the vec_id-0 query. Encode +
     * score is ONE fused codegen projection over the scan (the
     * codebooks and the query LUTs ride as literals); codebooks are
@@ -109,13 +110,11 @@ object SimilarityQueries extends QueryPack {
     * rank. Seed/probe-defined -> rows-only; SimilaritySpec pins recall
     * against the brute-force kNN on a fixture.
     *
-    * kIvf=64, nProbe=8 since r16 (verdict-r15 item 4, AnnSweep curves):
-    * the candidate-stage cost of the batch join is
-    * corpus x nProbe/kIvf cosine evaluations, so a FINER coarse
-    * quantizer cuts the pair mass structurally where nProbe only
-    * scales it. Measured: candidates −54% at sg10 (16.8M → 7.7M,
-    * recall@5 1.0 → 0.988) and −50% at the sf0.01 gate fixture with
-    * recall@5 UP 0.569 → 0.583. The batch join keeps its OWN
+    * kIvf=64, nProbe=8 since r16: the candidate-stage cost of the
+    * batch join is corpus x nProbe/kIvf cosine evaluations, so a FINER
+    * coarse quantizer cuts the pair mass structurally where nProbe
+    * only scales it (kIvf=16 at nProbe=8 would scan half the corpus).
+    * The batch join keeps its OWN
     * k=64 index (`_k64` path) — ann_ivf's single-probe shape stays on
     * the shared k=16 index whose nProbe=4 knee the r15 sweep pinned,
     * so its declared output is untouched. The k64 cold build is timed
@@ -123,10 +122,10 @@ object SimilarityQueries extends QueryPack {
     */
   def annKnnJoin(s: SparkSession, dir: String): DataFrame = {
     val san = dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val vecs = corpus(s, dir)
     val idx = graft.similarity.IvfIndex.buildOrRefresh(
-      corpus(s, dir), "vec_id", "embedding",
-      s"spark-warehouse/ivf_${san}_k64", k = 64)
-    idx.topKBatch(corpus(s, dir), "vec_id", 5, nProbe = 8, excludeSelf = true)
+      vecs, "vec_id", "embedding", s"spark-warehouse/ivf_${san}_k64", k = 64)
+    idx.topKBatch(vecs, "vec_id", 5, nProbe = 8, excludeSelf = true)
       .select(col("query_id"), col("vec_id"), r6(col("cosine")).as("cosine"))
   }
 

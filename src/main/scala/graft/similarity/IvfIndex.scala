@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.cosineSimilarity
+import graft.tables.Tables
 
 /** A persisted IVF index (SURVEY §8 #3): the k-means centroid table and
   * the per-vector centroid assignments are computed ONCE at build time
@@ -25,8 +26,9 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
   /** Opt-in append-time maintenance (r14, verdict-r13 item 5): when
     * set, every [[addVectors]] finishes by running
     * [[compactIfFragmented]] with this policy, so an append-heavy
-    * lifecycle can never fragment probes into the r13 IndexSoak
-    * degradation (240→2,146 files, 0.68→3.2 s probes) without the
+    * lifecycle can never fragment probes into the degradation of
+    * SCALING.md "r13: index lifecycle under append-heavy ingest"
+    * (240→2,146 files, 0.68→3.2 s probes) without the
     * valve firing. Off by default — compaction belongs to the
     * single-writer ingest owner, and opting in here keeps it on that
     * same writer thread (no new concurrency). Measured at sg100:
@@ -47,10 +49,10 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
   private def maintainIfDue(): Unit =
     autoPolicy.foreach { case (mf, tr) => compactIfFragmented(mf, tr) }
 
-  def centroids: DataFrame = spark.read.parquet(s"$path/centroids")
+  def centroids: DataFrame = Tables.open(spark, s"$path/centroids")
 
   /** Corpus vectors partitioned by their nearest centroid. */
-  def assignments: DataFrame = spark.read.parquet(s"$path/assignments")
+  def assignments: DataFrame = Tables.open(spark, s"$path/assignments")
 
   /** ANN top-k: rank centroids against the query (k×dim, driver-side),
     * then scan only the nProbe winning partitions and rank exactly.
@@ -151,7 +153,7 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     // two-step write: parquet cannot overwrite the path it is reading
     val tmp = s"$path/centroids_next"
     updated.coalesce(1).write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).coalesce(1)
+    Tables.open(spark, tmp).coalesce(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
     val tp = new org.apache.hadoop.fs.Path(tmp)
     tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
@@ -160,9 +162,10 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
   /** Parquet data files currently holding the assignments. Every
     * [[addVectors]] append lands a file per task per touched cid
     * directory, so an append-heavy lifecycle fragments the bucket scans
-    * probes prune to — measured at the r13 IndexSoak: 8 appends took
-    * the sg100 index from 240 to 2,146 files and topKBatch from 0.8 s
-    * to ~3 s, and [[recenter]] (which rewrites only the k-row centroid
+    * probes prune to — measured in SCALING.md "r13: index lifecycle
+    * under append-heavy ingest": 8 appends took the sg100 index from
+    * 240 to 2,146 files and topKBatch from 0.68 s to ~3.2 s, and
+    * [[recenter]] (which rewrites only the k-row centroid
     * table) cannot recover it. This count is the compaction signal.
     */
   private def hadoopFs =
@@ -312,14 +315,14 @@ object IvfIndex {
     // roundtrip) via the row-local argmax projection — one zero-exchange
     // pass over the corpus
     val stored = Similarity.collectCentroids(
-      spark.read.parquet(s"$path/centroids"), "cid", "centroid")
+      Tables.open(spark, s"$path/centroids"), "cid", "centroid")
     df.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
       .filter(col(vecCol).isNotNull) // null vectors are unindexable
       .select(org.apache.spark.sql.graft.CentroidExpressions
           .nearestCentroidId(col(vecCol), stored).as("cid"),
         col(idCol), col(vecCol))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/assignments")
-    spark.read.parquet(s"$path/assignments")
+    Tables.open(spark, s"$path/assignments")
       .agg(count(lit(1)).as("n_vectors"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     new IvfIndex(spark, path, idCol, vecCol)
@@ -381,7 +384,7 @@ object IvfIndex {
     val fs = metaSuccess.getFileSystem(
       index.spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(metaSuccess)) return true
-    val indexed = index.spark.read.parquet(s"${index.path}/meta")
+    val indexed = Tables.open(index.spark, s"${index.path}/meta")
       .head.getLong(0)
     indexed != corpus.count()
   }

@@ -569,7 +569,8 @@ object Similarity {
     * Output: (idCol, `adc_score` = estimated <q, x>), top `k` by
     * (score desc, id).
     *
-    * `kSub = 64` default (r15, AnnSweep curve): kSub=16 sat at the
+    * `kSub = 64` default (SCALING.md "r15: ANN recall-vs-cost
+    * curves"): kSub=16 sat at the
     * bottom of the measured quality@10 curve (0.75 at the sf0.01 gate
     * fixture, 0.945 at sg10); 64 is the knee (0.92 / 0.973, identical
     * to kSub=256 on both fixtures) and the codebook literal stays

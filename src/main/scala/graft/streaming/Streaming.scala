@@ -20,12 +20,13 @@ object Streaming {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Measured steady-state HDFS-backed state bytes per key row from the
-    * r14 StreamSoak at mult=10 (SCALING.md "state-store backend at 10x
+    * r14 soak at mult=10 (SCALING.md "r14: state-store backend at 10x
     * soak volume"): sessionize 40.6 MB / 126k rows, funnel 55.4 MB /
     * 100k rows, TTL'd funnel 6.3 MB / 12.7k rows. The estimator uses
     * the worst measured family for unknown operators. `pair_mass`
     * (r15): 144.5 MB / 372k rows at the soak's saturated shingle
-    * vocabulary (the `--twins=pairmass` run; state rows plateaued at
+    * vocabulary (SCALING.md "r15 addendum 3 — the audit's STREAMING
+    * twin under soak"; state rows plateaued at
     * 99% of the content bound while doc count doubled — its rows
     * estimate is the corpus's distinct (block, shingle) count, i.e.
     * the batch audit's group count).
@@ -48,7 +49,8 @@ object Streaming {
 
   /** Pick and SET the state-store provider for streams started from
     * this session — the one-call form of the r14 soak's documented
-    * switch condition (SCALING.md): stay on Spark's default in-memory
+    * switch condition (SCALING.md "r14: state-store backend at 10x
+    * soak volume"): stay on Spark's default in-memory
     * HDFS-backed provider while projected state fits comfortably in
     * executor heap (it is 1.3x faster on the state-heaviest twin and
     * 2.1x on TTL churn, output-identical), and switch to RocksDB's
@@ -595,7 +597,8 @@ object Streaming {
     * State: one running doc-frequency long per distinct (block,
     * shingle-hash) — the same vocabulary-bounded state class as the
     * batch audit's group count (content-bounded, not stream-length-
-    * bounded; the r14 StreamSoak bytes/row table applies). When a
+    * bounded; the bytes/row table of SCALING.md "r14: state-store
+    * backend at 10x soak volume" applies). When a
     * (blk, s) group with df existing docs receives k new ones, the
     * group's candidate mass grows by C(df+k,2) − C(df,2) =
     * Σ_{i=0..k−1}(df+i); the operator emits exactly that delta once
@@ -1081,8 +1084,8 @@ object Streaming {
     * watermark horizon PER KEY, but the batch funnel has no horizon
     * across keys (a purchase long after its view still converts), so
     * by default a chain record persists per user EVER seen — measured
-    * at the r13 StreamSoak: peak_state_rows == distinct users,
-    * unbounded in users.
+    * in SCALING.md "r13: streaming state under soak": peak state rows
+    * == distinct users, unbounded in users.
     *
     * `stateTtlMillis` is the production valve for that: a gap of at
     * least the TTL between consecutive folded STEP events resets the

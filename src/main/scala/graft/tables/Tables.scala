@@ -12,8 +12,25 @@ import org.apache.spark.sql.functions._
   * ns->us truncating cast, so oracle comparisons line up).
   */
 object Tables {
+
+  /** Open the parquet table at `path` without running a Spark job.
+    *
+    * Spark's schema inference always launches a job to read one footer.
+    * Here the footer inference would read is
+    * read on the driver ([[org.apache.spark.sql.graft.ParquetFooters]]),
+    * and the table is opened with that schema, which equals the inferred
+    * one. A path that does not exist or holds no data file is opened
+    * with inference, so it fails with Spark's own error. Every parquet
+    * read in the engine goes through here or declares its schema.
+    */
+  def open(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.graft.ParquetFooters.inferredSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    open(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

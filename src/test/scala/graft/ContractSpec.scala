@@ -104,4 +104,31 @@ class ContractSpec extends AnyFunSuite {
       .map(_.getFileName.toString.stripSuffix(".scala")).toSet
     assert(mains === Set("Bench", "Checks", "ScaleGen", "Verify"))
   }
+
+  test("every parquet read declares its schema or goes through Tables.open") {
+    // A schema-inferring read launches a Spark job per open to read one
+    // footer; Tables.open reads that footer on the driver instead. The
+    // one other schema-inferring read is Bench's untimed warm-up.
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val call = """\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)"""
+    val readParquet = ("""\bread(?:Stream)?\b((?:""" + call + """)*?)\s*\.\s*parquet\s*\(""").r
+    val declared = """\.\s*schema\s*\(""".r
+    val enclosingDef = """\bdef\s+(\w+)""".r
+    val found = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .flatMap { p =>
+        val code = Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "")
+          .replaceAll("//[^\n]*", "")
+        readParquet.findAllMatchIn(code)
+          .filter(m => declared.findFirstIn(m.group(1)).isEmpty)
+          .map { m =>
+            val fn = enclosingDef.findAllMatchIn(code.take(m.start)).toSeq
+              .lastOption.map(_.group(1)).getOrElse("")
+            s"${p.getFileName}:$fn"
+          }
+      }
+    assert(found.diff(Seq("Bench.scala:main", "Tables.scala:open")).isEmpty,
+      s"schema-inferring parquet reads outside Tables.open: ${found.mkString(", ")}")
+  }
 }
