@@ -317,22 +317,12 @@ class WeatherStation(data: DataFrame, keys: Seq[String], tsCol: String = "ts",
       "solar_corrected", reflectedCol).calcMelt(thresholdTemp)
   }
 
-  /** The full melt pipeline (melt_model.py:448): smoothed incoming,
-    * daily albedo joined by day, melt where T > threshold, fillna(0).
+  /** The full melt pipeline (melt_model.py:448,
+    * [[graft.operators.Melt.pipeline]]): smoothed incoming, daily
+    * albedo joined by day, melt where T > threshold, fillna(0).
+    * Output: the series' columns plus `albedo` and `melt_rate`.
     */
-  def calcMelt(thresholdTemp: Double = 0.0): DataFrame = {
-    val frame = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(unix_micros(col(tsCol)))
-      .rangeBetween(-(3600L * 1000000 - 1), 3600L * 1000000)
-    val withInc = data.withColumn("_inc_c", avg(col(solarCol)).over(frame))
-    val alb = calcAlbedo().select(
-      keys.map(k => col(k).as(s"_a_$k")) :+ col("day") :+ col("albedo"): _*)
-    val joinCond = keys.map(k => col(k) === col(s"_a_$k")).reduce(_ && _) &&
-      date_trunc("day", col(tsCol)) === col("day")
-    withInc.join(alb, joinCond, "left")
-      .withColumn("melt_rate", coalesce(
-        graft.functions.meltEqu(col(temperatureCol), col("albedo"),
-          col("_inc_c"), thresholdTemp = thresholdTemp), lit(0.0)))
-      .drop((keys.map(k => s"_a_$k") :+ "day" :+ "_inc_c"): _*)
-  }
+  def calcMelt(thresholdTemp: Double = 0.0): DataFrame =
+    Melt.pipeline(data, keys, tsCol, temperatureCol, solarCol, reflectedCol,
+      thresholdTemp)
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Time-series core operators (SURVEY §2 A1-A9).
@@ -24,12 +24,67 @@ object TimeSeriesOps {
   private def floorDiv(us: Column, d: Long): Column =
     call_function("div", us - pmod(us, lit(d)), lit(d))
 
-  /** Width of [[cRolling]]'s time buckets, in windows (B = 32w): wide
-    * enough that the per-bucket window setup and the halo rows (1/32 of
-    * a uniform series) stay small, narrow enough that a month-long
-    * series splits into a dozen tasks.
+  /** Width of [[rollingFrames]]' time buckets, in frame spans (B =
+    * 32 × the widest a + b; 32w for a trailing window w): wide enough
+    * that the per-bucket window setup and the halo rows (1/32 of a
+    * uniform series per unit of span) stay small, narrow enough that a
+    * month-long series splits into a dozen tasks.
     */
   private[graft] val BucketWindows = 32L
+
+  /** One aggregate of [[rollingFrames]]: `agg` applied to the RANGE
+    * frame (t − aUs, t + bUs] around each row's microsecond timestamp t
+    * (`aUs`, `bUs` ≥ 0, not both 0). `agg` receives that frame's window
+    * spec, e.g. `avg(col("v")).over(_)`.
+    */
+  private[graft] final case class RollingFrame(name: String, aUs: Long, bUs: Long,
+                                                agg: WindowSpec => Column)
+
+  /** The one sliding-frame body: every frame evaluated at each row of
+    * `df`, returned as the row's own columns plus one column per frame
+    * and `_b`, the row's time bucket. `usCol` holds the row's timestamp
+    * in epoch microseconds. The output stays hash-partitioned on
+    * (keys, `_b`), so a grouping on keys, `_b` and more columns needs no
+    * further exchange.
+    *
+    * Buckets and halo: each row belongs to time bucket
+    * k = `floorDiv(us, B)` with B = [[BucketWindows]] × the widest
+    * frame span a + b. A row with `us > (k+1)·B − max a` is also emitted
+    * once into bucket k+1, and a row with `us < k·B + max b` once into
+    * bucket k−1 (B ≥ 32 spans keeps the two exclusive). The frames run
+    * over (keys, bucket) and the halo rows are dropped after them, so
+    * every frame holds exactly the rows of the per-key frame, and one
+    * dense key spreads over (time range / B) tasks behind a single
+    * exchange and one sort. Rows with a null timestamp share one bucket
+    * per key, as they share one frame.
+    *
+    * Cost: on uniform data about (max a + max b) / B of the rows are
+    * evaluated twice (once as halo). Spark re-aggregates a sliding frame
+    * for every row, so a key still costs O(rows × frame rows) — spread
+    * over its buckets, not in one task.
+    */
+  private[graft] def rollingFrames(df: DataFrame, keys: Seq[String], usCol: String,
+                                   frames: Seq[RollingFrame]): DataFrame = {
+    require(frames.nonEmpty && frames.forall(f =>
+      f.aUs >= 0 && f.bUs >= 0 && f.aUs + f.bUs > 0),
+      "rolling frames need bounds a, b >= 0 with a + b > 0")
+    val maxA = frames.map(_.aUs).max
+    val maxB = frames.map(_.bUs).max
+    val bUs = BucketWindows * frames.map(f => f.aUs + f.bUs).max
+    val us = col(usCol)
+    val b = floorDiv(us, bUs)
+    val next = when(us > (b + 1) * bUs - maxA, array(b, b + 1))
+    val buckets =
+      if (maxB == 0) next.otherwise(array(b))
+      else next.when(us < b * bUs + maxB, array(b, b - 1)).otherwise(array(b))
+    val spec = Window.partitionBy(keys.map(col) :+ col("_b"): _*).orderBy(us)
+    // (t-a, t+b] at microsecond resolution
+    val aggCols = frames.map(f => f.agg(spec.rangeBetween(-(f.aUs - 1), f.bUs)).as(f.name))
+    df.select(col("*"), posexplode(buckets).as(Seq("_halo", "_b")))
+      .select(col("*") +: aggCols: _*)
+      .filter(col("_halo") === 0)
+      .drop("_halo")
+  }
 
   /** Centered time-window rolling aggregate (reference utils.py:32-57
     * `c_rolling`).
@@ -39,21 +94,8 @@ object TimeSeriesOps {
     * output timestamp is `ts - window/2` and the aggregate covers the
     * trailing window, which is equivalent to a window centered on the
     * shifted timestamp. `min_periods` defaults to 1 like pandas
-    * time-based rolling.
-    *
-    * Buckets and halo: each row belongs to time bucket
-    * b = `floorDiv(us, B)` with B = 32w, and a row with
-    * `us > (b+1)·B − w` is also emitted once into bucket b+1 as a halo
-    * row. The RANGE frame runs over (keys, bucket) and halo rows are
-    * dropped after it, so every frame holds exactly the rows of the
-    * per-key frame, and one dense key spreads over (time range / B)
-    * tasks behind a single exchange. Rows with a null timestamp share
-    * one bucket per key, as they share one frame.
-    *
-    * Cost: one exchange and one sort; on uniform data about 1/32 of
-    * the rows are evaluated twice (once as halo). Spark re-aggregates a
-    * sliding frame for every row, so a key still costs
-    * O(rows × frame rows) — spread over its buckets, not in one task.
+    * time-based rolling. The frame is [[rollingFrames]]' (w, 0): one
+    * exchange on (keys, time bucket of 32w) and one sort.
     *
     * @param aggs (outputName, aggregating fn over the frame'd column)
     * @param minPeriods observations required in the window for a
@@ -63,28 +105,17 @@ object TimeSeriesOps {
                windowSec: Long, aggs: Seq[(String, Column => Column)],
                minPeriods: Int = 1): DataFrame = {
     val wUs = windowSec * UsPerSec
-    val bUs = BucketWindows * wUs
     val k = keys.map(col)
-    val b = floorDiv(col("_us"), bUs)
-    val halo = col("_us") > (b + 1) * bUs - wUs
-    val rows = df
-      .select(k :+ col(valCol).as("_v") :+ unix_micros(col(tsCol)).as("_us"): _*)
-      .select(k ++ Seq(col("_v"), col("_us"),
-        posexplode(when(halo, array(b, b + 1)).otherwise(array(b)))
-          .as(Seq("_halo", "_b"))): _*)
-    val frame = Window.partitionBy(k :+ col("_b"): _*)
-      .orderBy(col("_us"))
-      .rangeBetween(-(wUs - 1), 0) // (t-w, t] at microsecond resolution
-    val enough =
+    def enough(frame: WindowSpec) =
       if (minPeriods <= 1) lit(true)
       else count(col("_v")).over(frame) >= minPeriods
-    val aggCols = aggs.map { case (name, f) =>
-      when(enough, f(col("_v")).over(frame)).as(name)
-    }
-    val tsCentered = timestamp_micros(col("_us") - wUs / 2).as(tsCol + "_c")
-    rows.select(k ++ Seq(col("_halo"), tsCentered) ++ aggCols: _*)
-      .filter(col("_halo") === 0)
-      .drop("_halo")
+    val rows = df
+      .select(k :+ col(valCol).as("_v") :+ unix_micros(col(tsCol)).as("_us"): _*)
+    rollingFrames(rows, keys, "_us", aggs.map { case (name, f) =>
+        RollingFrame(name, wUs, 0L, w => when(enough(w), f(col("_v")).over(w)))
+      })
+      .select(k ++ (timestamp_micros(col("_us") - wUs / 2).as(tsCol + "_c") +:
+        aggs.map(a => col(a._1))): _*)
   }
 
   /** [[cRolling]] with a pandas-style duration window ('6H', '15T',
@@ -601,12 +632,6 @@ object TimeSeriesOps {
     df.filter(windowsPred(col(tsCol), windows))
   }
 
-  /** Droplist QC (gpstools.py:411 `drop_positions` with
-    * `apply_to_instance=True` → gpstools.py:431 `drop_from_instance`):
-    * REMOVE every observation inside the windows — the complement of
-    * [[subsetFromWindows]] over non-null timestamps (null timestamps
-    * are kept: no droplist entry can name them).
-    */
   /** A10: windowed exponential moving average — pandas
     * `ewm(alpha, adjust=True).mean()` truncated to the last `window`
     * observations per key: `Σ_k β^k·x_{i-k} / Σ_k β^k` (β = 1−α,
@@ -724,6 +749,12 @@ object TimeSeriesOps {
       .drop("_ad")
   }
 
+  /** Droplist QC (gpstools.py:411 `drop_positions` with
+    * `apply_to_instance=True` → gpstools.py:431 `drop_from_instance`):
+    * REMOVE every observation inside the windows — the complement of
+    * [[subsetFromWindows]] over non-null timestamps (null timestamps
+    * are kept: no droplist entry can name them).
+    */
   def dropPositions(df: DataFrame, tsCol: String,
                     windows: Seq[(String, String)]): DataFrame = {
     require(windows.nonEmpty, "windows must be non-empty")

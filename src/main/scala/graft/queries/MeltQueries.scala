@@ -40,40 +40,13 @@ object MeltQueries extends QueryPack {
       meltEqu(col("temp"), lit(0.7), col("incoming")).as("melt_rate"))
 
   /** E4 `melt_pipeline` — the full hourly melt pipeline
-    * (melt_model.py:448 calc_melt): centered-2h-smoothed incoming,
-    * daily ffilled albedo joined by day, melt where temp > 0, melt
-    * fillna(0) everywhere else (melt_model.py:541).
+    * (melt_model.py:448 calc_melt) of [[graft.operators.Melt.pipeline]]
+    * over the synthetic AWS series.
     */
-  def meltPipeline(s: SparkSession, dir: String): DataFrame = {
-    val base = aws(s, dir)
-    val frame = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(unix_micros(col("ts")))
-      .rangeBetween(-(3600L * 1000000 - 1), 3600L * 1000000)
-    val withInc = base.withColumn("inc_c", avg(col("incoming")).over(frame))
-    val alb = Melt.dailyAlbedo(base, Seq("user_id"), "ts", "incoming", "reflected")
-      .select(col("user_id").as("a_user"), col("day"), col("albedo"))
-    withInc
-      .join(alb, col("user_id") === col("a_user") &&
-        date_trunc("day", col("ts")) === col("day"), "left")
-      .select(col("event_id"), col("user_id"),
-        r4(coalesce(meltEqu(col("temp"), col("albedo"), col("inc_c")), lit(0.0)))
-          .as("melt_rate"))
-  }
+  def meltPipeline(s: SparkSession, dir: String): DataFrame =
+    Melt.pipeline(aws(s, dir), Seq("user_id"), "ts", "temp", "incoming", "reflected")
+      .select(col("event_id"), col("user_id"), r4(col("melt_rate")).as("melt_rate"))
 
-  /** E4+ `melt_from_hobo` — the reference's ACTUAL entry point run end
-    * to end (VERDICT r10 item 6): raw HOBOware AWS export (title
-    * preamble, '#' column, sensor-label headers, -888.88/-888.9
-    * sentinel nulls — melt_model.py:48 read_hobo_csv) through
-    * [[graft.sources.Sources.readHobo]], then the full melt pipeline
-    * of `melt_pipeline` (2 h-centered smoothed incoming, daily
-    * clipped+ffilled albedo, enhanced temperature-index melt,
-    * fillna 0) on the loader's output columns. Runs on the COMMITTED
-    * fixture `fixtures/hobo_aws.csv` (the raw-format parse is what's
-    * under test; the sf tables carry no preamble formats), and the
-    * DuckDB oracle re-reads the same file with read_csv + the same
-    * sentinel null tokens — loader AND pipeline are hash-verified
-    * together.
-    */
   /** Repo-relative fixture resolution (verdict-r13 item 7): CWD first
     * (sbt forked runs set user.dir to the checkout root), then
     * `GRAFT_REPO_ROOT` for callers running from elsewhere — never a
@@ -85,32 +58,35 @@ object MeltQueries extends QueryPack {
     cands.find(_.exists()).getOrElse(cands.head).getAbsolutePath
   }
 
+  /** E4+ `melt_from_hobo` — the reference's ACTUAL entry point run end
+    * to end (VERDICT r10 item 6): raw HOBOware AWS export (title
+    * preamble, '#' column, sensor-label headers, -888.88/-888.9
+    * sentinel nulls — melt_model.py:48 read_hobo_csv) through
+    * [[graft.sources.Sources.readHobo]], then the melt pipeline of
+    * `melt_pipeline` on the loader's output columns. Runs on the
+    * COMMITTED fixture `fixtures/hobo_aws.csv` (the raw-format parse is
+    * what's under test; the sf tables carry no preamble formats), and
+    * the DuckDB oracle re-reads the same file with read_csv + the same
+    * sentinel null tokens — loader AND pipeline are hash-verified
+    * together.
+    *
+    * The albedo side is broadcast: it is a per-day aggregate of the
+    * fixture (bounded rows); without the hint the planner picks a
+    * SortMergeJoin and pays two sort+exchange pairs on a join whose
+    * build side fits in one block (r15 plan sweep;
+    * plans/r15/melt_from_hobo_{before,after}.txt). It grows as
+    * stations x days, so the hint is sized for sensor-fixture time
+    * spans; a multi-decade many-station deployment should drop it and
+    * let the planner (and AQE) choose from the measured size.
+    */
   def meltFromHobo(s: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath("fixtures/hobo_aws.csv")
-    val base = graft.sources.Sources.readHobo(s, path)
+    val base = graft.sources.Sources.readHobo(s, fixturePath("fixtures/hobo_aws.csv"))
       .select(col("Date Time - GMT").as("ts"), col("Temp").as("temp"),
         col("Solar1").as("incoming"), col("Solar2").as("reflected"))
       .withColumn("stn", lit("aws1"))
-    val frame = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("stn")).orderBy(unix_micros(col("ts")))
-      .rangeBetween(-(3600L * 1000000 - 1), 3600L * 1000000)
-    val withInc = base.withColumn("inc_c", avg(col("incoming")).over(frame))
-    val alb = Melt.dailyAlbedo(base, Seq("stn"), "ts", "incoming", "reflected")
-      .select(col("stn").as("a_stn"), col("day"), col("albedo"))
-    // broadcast: alb is a per-day aggregate of the fixture (bounded rows);
-    // without the hint the planner picks a SortMergeJoin and pays two
-    // sort+exchange pairs on a join whose build side fits in one block
-    // (r15 plan sweep; plans/r15/melt_from_hobo_{before,after}.txt).
-    // Cardinality assumption (ADVICE r15): alb grows as stations x
-    // days, so the hint is sized for sensor-fixture time spans; a
-    // multi-decade many-station deployment should drop the hint and
-    // let the planner (and AQE) choose from the measured size.
-    withInc
-      .join(broadcast(alb), col("stn") === col("a_stn") &&
-        date_trunc("day", col("ts")) === col("day"), "left")
-      .select(fmtTs(col("ts")).as("ts"),
-        r4(coalesce(meltEqu(col("temp"), col("albedo"), col("inc_c")),
-          lit(0.0))).as("melt_rate"))
+    Melt.pipeline(base, Seq("stn"), "ts", "temp", "incoming", "reflected",
+        broadcastAlbedo = true)
+      .select(fmtTs(col("ts")).as("ts"), r4(col("melt_rate")).as("melt_rate"))
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -149,6 +125,22 @@ object MeltQueries extends QueryPack {
       |      OVER (PARTITION BY user_id ORDER BY d
       |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS albedo
       |  FROM pick)""".stripMargin
+
+  /** Centered-smoothed incoming, the albedo joined by day and the melt
+    * equation with fillna 0 (mirrors Melt.pipeline), selecting `cols`
+    * and melt_rate.
+    */
+  private def meltTail(cols: String): String =
+    s"""wi AS (SELECT *, avg(incoming) OVER (
+       |    PARTITION BY user_id ORDER BY epoch_us(ts)
+       |    RANGE BETWEEN 3599999999 PRECEDING AND 3600000000 FOLLOWING) AS inc_c
+       |  FROM aws)
+       |SELECT $cols,
+       |  floor((coalesce(CASE WHEN wi.temp > 0.0
+       |    THEN 0.05 * wi.temp + 0.0094 * (1.0 - alb.albedo) * wi.inc_c
+       |    ELSE 0.0 END, 0.0)) * 10000 + 0.5001) / 10000 AS melt_rate
+       |FROM wi LEFT JOIN alb
+       |  ON wi.user_id = alb.user_id AND date_trunc('day', wi.ts) = alb.d""".stripMargin
 
   val oracles: Map[String, String] = Map(
     "melt_shadow" ->
@@ -196,16 +188,7 @@ object MeltQueries extends QueryPack {
     "melt_pipeline" ->
       s"""$awsCte,
          |$albCte,
-         |wi AS (SELECT *, avg(incoming) OVER (
-         |    PARTITION BY user_id ORDER BY epoch_us(ts)
-         |    RANGE BETWEEN 3599999999 PRECEDING AND 3600000000 FOLLOWING) AS inc_c
-         |  FROM aws)
-         |SELECT wi.event_id, wi.user_id,
-  |  floor((coalesce(CASE WHEN wi.temp > 0.0
-         |    THEN 0.05 * wi.temp + 0.0094 * (1.0 - alb.albedo) * wi.inc_c
-         |    ELSE 0.0 END, 0.0)) * 10000 + 0.5001) / 10000 AS melt_rate
-         |FROM wi LEFT JOIN alb
-         |  ON wi.user_id = alb.user_id AND date_trunc('day', wi.ts) = alb.d""".stripMargin,
+         |${meltTail("wi.event_id, wi.user_id")}""".stripMargin,
     // same pipeline CTEs as melt_pipeline, but `aws` comes from
     // re-reading the committed raw HOBO fixture: skip the title line,
     // header on, the loader's sentinel tokens as nullstr — DuckDB
@@ -219,14 +202,5 @@ object MeltQueries extends QueryPack {
          |  FROM read_csv('${fixturePath("fixtures/hobo_aws.csv")}', skip = 1, header = true,
          |    nullstr = ['-888.88', '-888.9'])),
          |$albCte,
-         |wi AS (SELECT *, avg(incoming) OVER (
-         |    PARTITION BY user_id ORDER BY epoch_us(ts)
-         |    RANGE BETWEEN 3599999999 PRECEDING AND 3600000000 FOLLOWING) AS inc_c
-         |  FROM aws)
-         |SELECT strftime(wi.ts, '$fmt') AS ts,
-         |  floor((coalesce(CASE WHEN wi.temp > 0.0
-         |    THEN 0.05 * wi.temp + 0.0094 * (1.0 - alb.albedo) * wi.inc_c
-         |    ELSE 0.0 END, 0.0)) * 10000 + 0.5001) / 10000 AS melt_rate
-         |FROM wi LEFT JOIN alb
-         |  ON wi.user_id = alb.user_id AND date_trunc('day', wi.ts) = alb.d""".stripMargin)
+         |${meltTail(s"strftime(wi.ts, '$fmt') AS ts")}""".stripMargin)
 }

@@ -223,6 +223,71 @@ class ApiSpec extends SparkSpec {
     assert(melt2.columns.contains("melt_rate"))
   }
 
+  test("melt pipeline on degenerate input: empty, all-null incoming, one row, ratios >= 1") {
+    // temp > 0 everywhere, so a 0.0 melt rate can only come from a null
+    // albedo and the pipeline's fillna(0)
+    val rows = Seq[(String, String, Option[Double], Option[Double])](
+      ("nul", "2024-01-01 10:00:00", None, Some(100.0)),   // all-null incoming
+      ("nul", "2024-01-01 12:00:00", None, Some(100.0)),
+      ("nul", "2024-01-02 12:00:00", None, None),
+      ("one", "2024-01-01 12:00:00", Some(300.0), Some(300.0))) ++ // single row, ratio 1
+      (0 until 48 by 3).map(h =>                          // every daily ratio 2
+        ("hi", f"2024-01-0${1 + h / 24}%d ${h % 24}%02d:00:00", Some(200.0), Some(400.0)))
+    val aws = rows.toDF("k", "ts", "incoming", "reflected")
+      .select(col("k"), col("ts").cast("timestamp").as("ts"), lit(5.0).as("temp"),
+        col("incoming"), col("reflected"))
+    def melts(df: org.apache.spark.sql.DataFrame) = {
+      val ws = new WeatherStation(df, Seq("k"))
+      Seq(ws.calcMelt(), ws.calcMeltShadowCorrected(("11:00", "13:15")))
+    }
+    melts(aws).foreach { out =>
+      val got = out.select("albedo", "melt_rate").collect()
+      assert(got.length === rows.length)
+      assert(got.forall(r => r.isNullAt(0) && r.getDouble(1) === 0.0),
+        got.mkString(", "))
+    }
+    melts(aws.filter(lit(false))).foreach(out => assert(out.collect().isEmpty))
+  }
+
+  test("daily albedo's per-bucket pick equals one row_number pick per (key, day)") {
+    import org.apache.spark.sql.expressions.Window
+    val hourUs = 3600L * 1000000L
+    // bucket width of the 2 h albedo frames, and a bucket start in 2024
+    val bUs = graft.operators.TimeSeriesOps.BucketWindows * 2 * hourUs
+    val s0 = (1704067200L * 1000000L / bUs + 1) * bUs
+    // key a: every 50 min across a bucket start (days straddle it), with
+    // runs of equal incoming (pick ties), ratios >= 1 and null values;
+    // key b: null timestamps beside a few real ones
+    val a = (-40 until 50).map { i =>
+      ("a", Option(s0 + i * 50L * 60 * 1000000),
+        if (i % 11 == 0) None else Option((100 + (i / 4) % 3 * 50).toDouble),
+        Option((40 + i * 7 % 90).toDouble))
+    }
+    val b = Seq(("b", None, Option(300.0), Option(30.0)), ("b", None, Option(100.0), Option(90.0)),
+      ("b", Option(s0 - hourUs), Option(100.0), Option(150.0)),
+      ("b", Option(s0 + 30 * hourUs), Option(100.0), Option(150.0)))
+    val df = (a ++ b).toDF("k", "us", "inc", "refl")
+      .select(col("k"), timestamp_micros(col("us")).as("t"), col("inc"), col("refl"))
+    val frame = Window.partitionBy("k").orderBy(unix_micros(col("t")))
+      .rangeBetween(-(2 * hourUs - 1), 0)
+    val reference = df
+      .withColumn("_inc_s", avg(col("inc")).over(frame))
+      .withColumn("_out_s", avg(col("refl")).over(frame))
+      .withColumn("day", date_trunc("day", col("t") - expr("INTERVAL 1 HOUR")))
+      .withColumn("_rn", row_number().over(Window.partitionBy("k", "day")
+        .orderBy(col("_inc_s").desc, col("t").asc)))
+      .filter(col("_rn") === 1)
+      .withColumn("_r", col("_out_s") / col("_inc_s"))
+      .select(col("k"), col("day"), last(when(col("_r") < 1.0, col("_r")), ignoreNulls = true)
+        .over(Window.partitionBy("k").orderBy("day")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("albedo"))
+    def render(d: org.apache.spark.sql.DataFrame) =
+      d.select("k", "day", "albedo").collect().map(_.toString).sorted.toSeq
+    val got = render(graft.operators.Melt.dailyAlbedo(df, Seq("k"), "t", "inc", "refl"))
+    assert(got.exists(_.startsWith("[b,null,")))
+    assert(got === render(reference))
+  }
+
   test("stationDistancesWithin equals the all-pairs form filtered to the radius") {
     // stations spread over several grid cells of size d=1.0, including
     // adjacent-cell pairs just under/over the radius and a negative-

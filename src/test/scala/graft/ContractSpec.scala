@@ -105,30 +105,50 @@ class ContractSpec extends AnyFunSuite {
     assert(mains === Set("Bench", "Checks", "ScaleGen", "Verify"))
   }
 
+  /** Every `src/main/scala` source as (file, code with comments removed). */
+  private def mainCode(): Seq[(java.nio.file.Path, String)] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .map(p => p -> Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//[^\n]*", ""))
+  }
+
+  /** The name of the last `def` opened before `offset` in `code`. */
+  private def enclosingDef(code: String, offset: Int): String =
+    """\bdef\s+(\w+)""".r.findAllMatchIn(code.take(offset)).toSeq
+      .lastOption.map(_.group(1)).getOrElse("")
+
   test("every parquet read declares its schema or goes through Tables.open") {
     // A schema-inferring read launches a Spark job per open to read one
     // footer; Tables.open reads that footer on the driver instead. The
     // one other schema-inferring read is Bench's untimed warm-up.
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val call = """\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)"""
     val readParquet = ("""\bread(?:Stream)?\b((?:""" + call + """)*?)\s*\.\s*parquet\s*\(""").r
     val declared = """\.\s*schema\s*\(""".r
-    val enclosingDef = """\bdef\s+(\w+)""".r
-    val found = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-      .flatMap { p =>
-        val code = Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "")
-          .replaceAll("//[^\n]*", "")
-        readParquet.findAllMatchIn(code)
-          .filter(m => declared.findFirstIn(m.group(1)).isEmpty)
-          .map { m =>
-            val fn = enclosingDef.findAllMatchIn(code.take(m.start)).toSeq
-              .lastOption.map(_.group(1)).getOrElse("")
-            s"${p.getFileName}:$fn"
-          }
-      }
+    val found = mainCode().flatMap { case (p, code) =>
+      readParquet.findAllMatchIn(code)
+        .filter(m => declared.findFirstIn(m.group(1)).isEmpty)
+        .map(m => s"${p.getFileName}:${enclosingDef(code, m.start)}")
+    }
     assert(found.diff(Seq("Bench.scala:main", "Tables.scala:open")).isEmpty,
       s"schema-inferring parquet reads outside Tables.open: ${found.mkString(", ")}")
+  }
+
+  test("sliding rangeBetween frames live only in TimeSeriesOps") {
+    // Spark re-aggregates a sliding frame for every row; the rolling body
+    // (TimeSeriesOps.rollingFrames) spreads a dense key over halo buckets
+    // and is the one place such a frame is written, so a rangeBetween
+    // with two bounded offsets anywhere else bypasses it. Growing frames
+    // (an unbounded end) and bounded rowsBetween row frames stay allowed.
+    val rangeCall = """\.\s*rangeBetween\s*\(((?:[^()]|\((?:[^()]|\([^()]*\))*\))*)\)""".r
+    val found = mainCode()
+      .filter { case (p, _) => p.getFileName.toString != "TimeSeriesOps.scala" }
+      .flatMap { case (p, code) =>
+        rangeCall.findAllMatchIn(code).filterNot(_.group(1).contains("unbounded"))
+          .map(m => s"${p.getFileName}:${enclosingDef(code, m.start)}")
+      }
+    assert(found.isEmpty, s"sliding rangeBetween outside TimeSeriesOps: ${found.mkString(", ")}")
   }
 }

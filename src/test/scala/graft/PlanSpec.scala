@@ -67,6 +67,33 @@ class PlanSpec extends SparkSpec {
       assert(!plan.contains("BroadcastExchange"), s"$name broadcasts:\n$plan")
       assert(!plan.contains("Join"), s"$name joins:\n$plan")
     }
+    // the melt keys run the same body: their event rows cross only
+    // (user_id, bucket) exchanges. The daily pick aggregates inside those
+    // partitions, so one more shuffle, on user_id for the forward fill,
+    // carries per-(key, bucket, day) rows, and melt_pipeline's albedo
+    // join broadcasts per-day rows. melt_pipeline's albedo side and event
+    // side each read the body, and Spark prunes each read to its own
+    // frames and columns, so their two bucket exchanges differ and are
+    // not reused. AQE off so the physical exchanges are visible before
+    // execution.
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Seq("melt_albedo" -> 1, "melt_pipeline" -> 2).foreach { case (name, reads) =>
+      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
+      val (events, perDay) = plan.collect { case e: Exchange => e }.partition {
+        case s: ShuffleExchangeExec =>
+          s.outputPartitioning.asInstanceOf[Expression].references.exists(_.name == "_b")
+        case _ => false
+      }
+      assert(events.size === reads, s"$name: ${events.size} bucket exchanges:\n$plan")
+      assert(perDay.count(_.isInstanceOf[ShuffleExchangeExec]) === 1,
+        s"$name: the daily pick shuffles apart from the forward fill:\n$plan")
+      perDay.foreach(e => assert(e.collectFirst { case a: BaseAggregateExec => a }.nonEmpty,
+        s"$name ships event rows through a non-bucket exchange:\n$e"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("no window frame grows toward UNBOUNDED FOLLOWING; forward-looking ts operators sort once") {

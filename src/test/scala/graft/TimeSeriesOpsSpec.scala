@@ -399,8 +399,10 @@ class TimeSeriesOpsSpec extends SparkSpec {
         if (i % 19 == 0) None else Option((i * 13 % 97).toDouble))
     }
     // bucket start, start - 1µs, start - w, start - w + 1µs, a duplicate
-    // timestamp on the boundary, and the next bucket's edges
+    // timestamp on the boundary, the backward halo's edges (start + w/2,
+    // start + w) and the next bucket's edges
     val edge = Seq(s0 - wUs, s0 - wUs + 1, s0 - 1, s0, s0, s0 + 1,
+        s0 + wUs / 2 - 1, s0 + wUs / 2, s0 + wUs - 1, s0 + wUs,
         s0 + bUs - wUs, s0 + bUs - wUs + 1, s0 + bUs - 1, s0 + bUs)
       .zipWithIndex.map { case (us, i) => ("edge", Option(us), Option(i.toDouble)) }
     // pre-1970 instants straddling the bucket starts -B and 0
@@ -416,26 +418,37 @@ class TimeSeriesOpsSpec extends SparkSpec {
       .select(col("k"), timestamp_micros(col("us")).as("t"), col("v"))
   }
 
-  /** Asserts cRolling(aggs) over the halo fixture equals one plain RANGE
-   *  frame per key at minPeriods 1 and 3, and is empty on empty input;
-   *  `render(out, isReference)` turns each output into sorted row strings. */
+  /** Asserts that, over the halo fixture, cRolling(aggs) and the rolling
+   *  body's two-sided frames (w/2, w/2) and (0, w) each equal one plain
+   *  RANGE frame (t − a, t + b] per key at minPeriods 1 and 3, and that
+   *  cRolling is empty on empty input; `render(out, isReference)` turns
+   *  each output into sorted row strings. */
   private def assertHaloEqualsFrame(
       aggs: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)],
       render: (org.apache.spark.sql.DataFrame, Boolean) => Seq[String]): Unit = {
+    import org.apache.spark.sql.expressions.WindowSpec
     val df = haloFixture()
-    for (minPeriods <- Seq(1, 3)) {
-      val frame = org.apache.spark.sql.expressions.Window.partitionBy(col("k"))
-        .orderBy(unix_micros(col("t"))).rangeBetween(-(haloWUs - 1), 0)
-      val enough =
-        if (minPeriods <= 1) lit(true) else count(col("v")).over(frame) >= minPeriods
-      val reference = df.select(col("k") +:
-        timestamp_micros(unix_micros(col("t")) - haloWUs / 2).as("t_c") +:
-        aggs.map { case (n, f) => when(enough, f(col("v")).over(frame)).as(n) }: _*)
-      val actual = render(
-        TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200, aggs, minPeriods), false)
-      assert(actual.size === df.count())
-      assert(actual === render(reference, true),
-        s"halo-bucketed frame diverged at minPeriods=$minPeriods")
+    val k = col("k")
+    for (minPeriods <- Seq(1, 3); (a, b) <- Seq((haloWUs, 0L), (haloWUs / 2, haloWUs / 2),
+        (0L, haloWUs))) {
+      def framed(w: WindowSpec) = {
+        val enough = if (minPeriods <= 1) lit(true) else count(col("v")).over(w) >= minPeriods
+        aggs.map { case (n, f) => n -> when(enough, f(col("v")).over(w)) }
+      }
+      val tc = timestamp_micros(col("_us") - haloWUs / 2).as("t_c")
+      val withUs = df.withColumn("_us", unix_micros(col("t")))
+      val frame = org.apache.spark.sql.expressions.Window.partitionBy(k)
+        .orderBy(col("_us")).rangeBetween(-(a - 1), b)
+      val reference = withUs.select(k +: tc +: framed(frame).map { case (n, c) => c.as(n) }: _*)
+      val actual =
+        if (b == 0) TimeSeriesOps.cRolling(df, Seq("k"), "t", "v", 7200, aggs, minPeriods)
+        else TimeSeriesOps.rollingFrames(withUs, Seq("k"), "_us", aggs.map { case (n, _) =>
+            TimeSeriesOps.RollingFrame(n, a, b, w => framed(w).toMap.apply(n))
+          }).select(k +: tc +: aggs.map(x => col(x._1)): _*)
+      val rendered = render(actual, false)
+      assert(rendered.size === df.count())
+      assert(rendered === render(reference, true),
+        s"halo-bucketed frame ($a, $b) diverged at minPeriods=$minPeriods")
     }
     assert(TimeSeriesOps.cRolling(df.filter(lit(false)), Seq("k"), "t", "v", 7200, aggs)
       .count() === 0)
