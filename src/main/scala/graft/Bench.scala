@@ -75,21 +75,24 @@ object Bench {
     require(Set("query", "sweep")(passOrder),
       s"SPARK_GRAFT_PASS_ORDER must be query|sweep, got '$passOrder'")
     // Full untruncated artifact destination. BENCH_LOCAL.json is
-    // reserved for FULL runs on the canonical driver sf dir — a
-    // scale-fixture or SPARK_GRAFT_ONLY run writes a suffixed file
-    // instead, so it can never clobber the committed full-surface
-    // artifact (which happened twice in r10). Path-normalized compare
-    // against the single shared constant, so an equivalent spelling
-    // (trailing slash, ..) cannot silently demote a full canonical run
-    // to a suffixed artifact (review-pass finding).
+    // reserved for FULL runs on the canonical driver sf dir — a full
+    // scale-fixture run writes BENCH_LOCAL_<dir>.json beside it, so it
+    // can never clobber the committed full-surface artifact (which
+    // happened twice in r10). A SPARK_GRAFT_ONLY run writes
+    // target/BENCH_LOCAL_<dir>_subset.json: subsets are checks and
+    // probes, not records, and stay out of the tracked tree.
+    // Path-normalized compare against the single shared constant, so an
+    // equivalent spelling (trailing slash, ..) cannot silently demote a
+    // full canonical run to a suffixed artifact (review-pass finding).
     val fullCanonical = only.isEmpty &&
       java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize ==
         java.nio.file.Paths.get(Bench.CanonicalSfDir).toAbsolutePath.normalize
+    val dirName = java.nio.file.Paths.get(sfDir).getFileName
+      .toString.replaceAll("[^A-Za-z0-9_.-]", "_")
     val outName =
       if (fullCanonical) "BENCH_LOCAL.json"
-      else "BENCH_LOCAL_" + java.nio.file.Paths.get(sfDir).getFileName
-        .toString.replaceAll("[^A-Za-z0-9_.-]", "_") +
-        (if (only.isEmpty) "" else "_subset") + ".json"
+      else if (only.isEmpty) s"BENCH_LOCAL_$dirName.json"
+      else s"target/BENCH_LOCAL_${dirName}_subset.json"
     // Name the artifact FIRST (VERDICT r11 item 8) and again in the
     // JSON line's tail: the driver records only a bounded tail of
     // stdout, and the single summary line outgrows it at 148 queries
@@ -152,16 +155,23 @@ object Bench {
       }
     val namedFns = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    // classes compiled during each query's latest pass: above zero on a
+    // warm pass means codegen cache thrash or per-call churn (a class
+    // whose source text differs between calls)
+    val compiles = scala.collection.mutable.Map.empty[String, Long]
     def onePass(name: String,
                 fn: (org.apache.spark.sql.SparkSession, String) =>
                   org.apache.spark.sql.DataFrame): Double = {
+      val c0 = GraftSession.codegenCompiles()
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
         }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      val s = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      compiles(name) = GraftSession.codegenCompiles() - c0
+      s
     }
     // per-query pass times, ordered per passOrder: "query" runs each
     // query's N passes back-to-back; "sweep" runs N full-surface passes
@@ -253,12 +263,17 @@ object Bench {
     // config provenance: a scale A/B (partitions, warmup depth) is
     // unreadable from the numbers alone — record what this run used
     val shufP = spark.conf.get("spark.sql.shuffle.partitions")
+    val cacheCap = GraftSession.codegenCacheCapacity()
+    val cs = namedFns.map { case (k, _) => "\"" + k + "\":" + compiles(k) }
+      .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"index_builds":$ib,"vs_committed":$vsCommitted,"shuffle_partitions":$shufP,"warmup":${Json.str(warmup)},"repeat":$repeat,"pass_order":${Json.str(passOrder)},"queries":$qs,"artifact":${Json.str(outName)},"sf":${Json.str(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"index_builds":$ib,"vs_committed":$vsCommitted,"shuffle_partitions":$shufP,"codegen_cache_max_entries":$cacheCap,"warmup":${Json.str(warmup)},"repeat":$repeat,"pass_order":${Json.str(passOrder)},"compiles":$cs,"queries":$qs,"artifact":${Json.str(outName)},"sf":${Json.str(sfDir)}}"""
     println(line)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outName),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    try {
+      val out = java.nio.file.Paths.get(outName).toAbsolutePath
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+    } catch { case _: Throwable => () }
     // COMPACT summary as the LAST stdout line (r16, verdict-r15 item
     // 1): the full line above is the per-query contract but at 157
     // queries it is ~5 KB, and the driver records only a bounded tail

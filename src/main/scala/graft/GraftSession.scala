@@ -28,6 +28,21 @@ import org.apache.spark.sql.SparkSession
   *     DuckDB's tz-less TIMESTAMP (epoch_us agrees on every tick).
   *   - timezone pinned to UTC so timestamp<->epoch conversions are
   *     total-order stable across engines.
+  *   - `spark.sql.codegen.cache.maxEntries=4096` (Spark: 100): one sweep
+  *     of every declared query compiles about 1,400 distinct generated
+  *     classes at sf0.01, so a 100-entry cache evicts each before its
+  *     next use and a warm session recompiled nearly every class it ran.
+  *     The cache is static: Spark sizes it once per JVM, when its
+  *     `CodeGenerator` first initializes, from the session conf in
+  *     effect then.
+  *   - `spark.sql.codegen.useIdInClassName=false`: AQE numbers
+  *     whole-stage pipelines in the order their stages complete, and
+  *     that number is part of the generated class name and so of the
+  *     cache key. With the number out of the name a pipeline keeps one
+  *     class across calls, and identical pipelines of different queries
+  *     share one. The only cost is that generated class names in stack
+  *     traces lose their stage-id suffix (SCALING.md "Compile once per
+  *     session").
   */
 object GraftSession {
   def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
@@ -77,7 +92,37 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate," +
           "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
+
+  /** Generated classes the codegen cache holds: ~2.9x the ~1,400 distinct
+    * classes one sweep of every declared query compiles at sf0.01. */
+  val CodegenCacheMaxEntries = 4096
+
+  /** Classes Janino has compiled in this JVM: every compile is a codegen
+    * cache miss, so the count grows only while new or evicted classes
+    * are compiled. */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** The capacity of this JVM's codegen cache, read from the cache
+    * itself: it is fixed when Spark's `CodeGenerator` first initializes,
+    * whatever the session conf says later. */
+  def codegenCacheCapacity(): Long = {
+    // CodeGenerator.cache (Spark's NonFateSharingLoadingCache) wraps a
+    // Guava LocalCache whose maxWeight is the configured maxEntries
+    def field(cls: Class[_], name: String, of: AnyRef): AnyRef = {
+      val f = cls.getDeclaredField(name)
+      f.setAccessible(true)
+      f.get(of)
+    }
+    val generator = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val spark = field(generator.getClass, "cache", generator)
+    val guava = spark.getClass.getMethod("cache").invoke(spark)
+    val local = field(guava.getClass.getSuperclass, "localCache", guava)
+    field(local.getClass, "maxWeight", local).asInstanceOf[Long]
+  }
 
   /** Default shuffle partitions: 32 locally (matches local[32]), but
     * overridable via SPARK_GRAFT_SHUFFLE_PARTITIONS so scale-fixture

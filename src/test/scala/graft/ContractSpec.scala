@@ -136,6 +136,30 @@ class ContractSpec extends AnyFunSuite {
       s"schema-inferring parquet reads outside Tables.open: ${found.mkString(", ")}")
   }
 
+  test("every SparkSession in src/main is built through GraftSession.tuned; only it sets the codegen confs") {
+    // Spark sizes the codegen cache once per JVM, from the session conf in
+    // effect when codegen first runs: an entry point that builds its own
+    // session, or a site that resets either conf, falls back to Spark's
+    // 100-entry cache or to stage ids in the cache key
+    val builder = """SparkSession\s*\.\s*builder\s*\(\s*\)""".r
+    val tunedBuilder =
+      """\btuned\s*\(\s*(?:org\.apache\.spark\.sql\.)?SparkSession\s*\.\s*builder\s*\(\s*\)""".r
+    val untuned = mainCode().flatMap { case (p, code) =>
+      val tuned = tunedBuilder.findAllMatchIn(code).map(_.end).toSet
+      builder.findAllMatchIn(code).filterNot(m => tuned(m.end))
+        .map(m => s"${p.getFileName}:${enclosingDef(code, m.start)}")
+    }
+    assert(untuned.isEmpty, s"sessions built outside GraftSession.tuned: ${untuned.mkString(", ")}")
+    val codegenConf =
+      """codegen\.cache\.maxEntries|codegen\.useIdInClassName|CODEGEN_CACHE_MAX_ENTRIES|USE_ID_IN_CLASS_NAME""".r
+    val confSites = mainCode().flatMap { case (p, code) =>
+      codegenConf.findAllMatchIn(code)
+        .map(m => s"${p.getFileName}:${enclosingDef(code, m.start)}")
+    }
+    assert(confSites === Seq("GraftSession.scala:tuned", "GraftSession.scala:tuned"),
+      s"codegen conf sites: ${confSites.mkString(", ")}")
+  }
+
   test("sliding rangeBetween frames live only in TimeSeriesOps") {
     // Spark re-aggregates a sliding frame for every row; the rolling body
     // (TimeSeriesOps.rollingFrames) spreads a dense key over halo buckets

@@ -3,10 +3,15 @@
 is the bench's bare JSON summary: no sbt `[info]` prefix and no trailing
 `[success]` line after it.
 
+Also checks the per-query `compiles` block (classes compiled during each
+query's last pass) of the subset artifact: it parses and covers exactly the
+--only keys.
+
 With --sf, runs the bench on a SPARK_GRAFT_ONLY subset of keys against
-that testdata dir and checks the captured stdout; the subset artifact the
-bench writes (BENCH_LOCAL_<dir>_subset.json) is restored afterwards. With
---capture, checks a saved stdout capture instead.
+that testdata dir, checks the captured stdout and reads the subset
+artifact the summary names (target/BENCH_LOCAL_<dir>_subset.json). With
+--capture, checks a saved stdout capture instead, taking the artifact's
+content from the full per-query line before the summary.
 
 Usage:
   python3 tools/bench_tail.py --sf <sfDir> [--only q1_agg,ann_ivf]
@@ -23,26 +28,15 @@ SUMMARY_KEYS = {"total", "n_queries", "n_failed", "sf", "cpus", "unit", "artifac
 
 
 def run_bench(sf, only):
-    artifact = os.path.join(ROOT, "BENCH_LOCAL_%s_subset.json" % os.path.basename(
-        os.path.normpath(sf)))
-    saved = open(artifact, "rb").read() if os.path.exists(artifact) else None
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, SPARK_GRAFT_ONLY=only)
-    try:
-        r = subprocess.run(["sbt", "--batch", "runMain graft.Bench"], cwd=ROOT,
-                           env=env, stdout=subprocess.PIPE, text=True)
-    finally:
-        if saved is None:
-            if os.path.exists(artifact):
-                os.remove(artifact)
-        else:
-            with open(artifact, "wb") as fh:
-                fh.write(saved)
+    r = subprocess.run(["sbt", "--batch", "runMain graft.Bench"], cwd=ROOT,
+                       env=env, stdout=subprocess.PIPE, text=True)
     if r.returncode != 0:
         sys.exit("bench exited %d" % r.returncode)
     return r.stdout
 
 
-def check(capture, only):
+def check(capture, only, artifact_from_file):
     lines = [l for l in capture.splitlines() if l.strip()]
     if not lines:
         return "empty capture"
@@ -55,9 +49,26 @@ def check(capture, only):
         return "last line lacks summary keys %s: %r" % (sorted(SUMMARY_KEYS), last[:200])
     if summary["n_failed"] != 0:
         return "%d queries failed" % summary["n_failed"]
-    if summary["n_queries"] != len(only.split(",")):
-        return "summary covers %d queries, expected %d" % (
-            summary["n_queries"], len(only.split(",")))
+    keys = set(only.split(","))
+    if summary["n_queries"] != len(keys):
+        return "summary covers %d queries, expected %d" % (summary["n_queries"], len(keys))
+    if artifact_from_file:
+        try:
+            with open(os.path.join(ROOT, summary["artifact"])) as fh:
+                full = fh.read()
+        except OSError as e:
+            return "cannot read artifact: %s" % e
+    else:
+        full = lines[-2] if len(lines) > 1 else ""
+    try:
+        compiles = json.loads(full)["compiles"]
+    except (ValueError, KeyError, TypeError):
+        return "artifact has no parseable compiles block: %r" % full[:200]
+    if not isinstance(compiles, dict) or not all(
+            isinstance(v, int) and v >= 0 for v in compiles.values()):
+        return "compiles block is not a map of counts: %r" % compiles
+    if set(compiles) != keys:
+        return "compiles block covers %s, expected %s" % (sorted(compiles), sorted(keys))
     return None
 
 
@@ -70,10 +81,10 @@ def main():
                     help="SPARK_GRAFT_ONLY key list (default q1_agg,ann_ivf)")
     a = ap.parse_args()
     capture = run_bench(a.sf, a.only) if a.sf else open(a.capture).read()
-    err = check(capture, a.only)
+    err = check(capture, a.only, artifact_from_file=bool(a.sf))
     if err:
         sys.exit("FAIL: " + err)
-    print("OK: last stdout line is the bench summary")
+    print("OK: last stdout line is the bench summary; compiles cover the --only keys")
 
 
 if __name__ == "__main__":
