@@ -118,12 +118,12 @@ object Dedup {
   }
 
   /** The (band, bh) bucket keys of a signature column, as an
-    * explodable array of structs — THE banding definition, shared by
-    * [[minhashLsh]]'s candidate generation and [[LshIndex]]'s persisted
-    * band table so the two can never drift apart on band layout or
-    * bucket hashing.
+    * explodable array of structs — THE banding definition, exploded by
+    * [[bandRows]] so [[minhashLsh]]'s candidate generation,
+    * [[LshIndex]]'s persisted band table and the streaming gate can
+    * never drift apart on band layout or bucket hashing.
     */
-  private[graft] def bandStructsOf(sigCol: Column, numHashes: Int,
+  private def bandStructsOf(sigCol: Column, numHashes: Int,
                                    bands: Int): Column = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
@@ -133,6 +133,31 @@ object Dedup {
       struct(lit(b).as("band"), xxhash64(hs: _*).as("bh"))
     }: _*)
   }
+
+  /** One (keep..., band, bh) row per band of each signature in
+    * `sigCol`.
+    */
+  private[graft] def bandRows(sigs: DataFrame, sigCol: String, numHashes: Int,
+                              bands: Int, keep: String*): DataFrame =
+    sigs.select(keep.map(col) :+
+        explode(bandStructsOf(col(sigCol), numHashes, bands)).as("_bb"): _*)
+      .select(keep.map(col) ++
+        Seq(col("_bb.band").as("band"), col("_bb.bh").as("bh")): _*)
+
+  /** The standard MinHash Jaccard estimator: the fraction of equal
+    * components of two signatures (unbiased; stderr
+    * sqrt(J(1-J)/numHashes)).
+    */
+  private[graft] def estJaccard(sigA: Column, sigB: Column,
+                                numHashes: Int): Column =
+    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, v) => acc + v).cast("double") / numHashes
+
+  /** The deterministic pseudo-random order in which a bucket's members
+    * become anchors: smallest xxhash64(doc_id) first, ties by doc_id.
+    */
+  private[graft] def anchorOrder: Seq[Column] =
+    Seq(xxhash64(col("doc_id")), col("doc_id"))
 
   /** Shared banding for minhashLsh and its audit companion: row-local
     * signature expression, one (doc_id, band, bh) row per band. Null
@@ -147,9 +172,7 @@ object Dedup {
       .select(col(idCol).as("doc_id"),
         org.apache.spark.sql.graft.TextExpressions
           .minhashSignature(col(textCol), shingleN, numHashes).as("_sig"))
-    sig.select(col("doc_id"),
-        explode(bandStructsOf(col("_sig"), numHashes, bands)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+    bandRows(sig, "_sig", numHashes, bands, "doc_id")
   }
 
   /** Degenerate-bucket guard shared by the LSH candidate generators:
@@ -192,8 +215,7 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
     val big = stats.filter(col("_bn") > maxBucketSize)
     val anchors = big
-      .withColumn("_ar", row_number().over(
-        bw.orderBy(xxhash64(col("doc_id")), col("doc_id"))))
+      .withColumn("_ar", row_number().over(bw.orderBy(anchorOrder: _*)))
       .filter(col("_ar") <= numAnchors)
       .select(bucketCols.map(col) :+ col("doc_id").as("_anchor"): _*)
     val starPairs = big.join(anchors, bucketCols)
@@ -218,48 +240,26 @@ object Dedup {
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
                  threshold: Double = 0.7,
-                 maxBucketSize: Int = 10000): DataFrame =
-    lshVerifiedPairs(docs, idCol, textCol, shingleN, threshold,
-      lshCandidates(docs, idCol, textCol, shingleN, numHashes, bands,
-        maxBucketSize))
-
-  /** Candidate-pair stage of [[minhashLsh]], exposed for stage-level
-    * probing (r15, verdict-r14 item 1): banded signatures →
-    * capped-bucket pairs, eagerly checkpointed.
-    *
-    * Deliberately NOT the r11 carried-band shape the rest of the
-    * near-dup family uses: an r11 A/B (SCALING.md "carried-payload
-    * minhashLsh REJECTED") measured every carried variant 1.4-13x
-    * slower at sg_uni/sg10 — the variable ~1-2 KB shingle sets are
-    * too heavy to carry or join back per pair, while this shape's one
-    * window exchange is reused by every downstream branch.
-    *
-    * The candidate pairs materialize ONCE (eager localCheckpoint):
-    * three consumers (candDocs' two branches + the verify join) would
-    * otherwise each recompute the banded window + self-join lineage —
-    * measured as shuffle READ 8x shuffle write at sg1000 (r14 probe).
-    * Bounded by the operator's own contract: banding + the bucket cap
-    * keep candidates O(corpus) rows of two ids, which is exactly what
-    * a checkpoint may hold; downstream also gains exact stats (AQE
-    * can broadcast candDocs into the semi-join).
-    */
-  private[graft] def lshCandidates(docs: DataFrame, idCol: String,
-                                   textCol: String, shingleN: Int,
-                                   numHashes: Int, bands: Int,
-                                   maxBucketSize: Int): DataFrame = {
-    val banded = minhashBanded(docs, idCol, textCol, shingleN, numHashes,
-      bands)
-    cappedBucketPairs(banded, Seq("band", "bh"), maxBucketSize)
+                 maxBucketSize: Int = 10000): DataFrame = {
+    // Deliberately NOT the r11 carried-band shape the rest of the
+    // near-dup family uses: an r11 A/B (SCALING.md "carried-payload
+    // minhashLsh REJECTED") measured every carried variant 1.4-13x
+    // slower at sg_uni/sg10 — the variable ~1-2 KB shingle sets are
+    // too heavy to carry or join back per pair, while this shape's one
+    // window exchange is reused by every downstream branch.
+    //
+    // The candidate pairs materialize ONCE (eager localCheckpoint):
+    // three consumers (candDocs' two branches + the verify join) would
+    // otherwise each recompute the banded window + self-join lineage —
+    // measured as shuffle READ 8x shuffle write at sg1000 (r14 probe).
+    // Bounded by the operator's own contract: banding + the bucket cap
+    // keep candidates O(corpus) rows of two ids, which is exactly what
+    // a checkpoint may hold; downstream also gains exact stats (AQE
+    // can broadcast candDocs into the semi-join).
+    val cand = cappedBucketPairs(
+        minhashBanded(docs, idCol, textCol, shingleN, numHashes, bands),
+        Seq("band", "bh"), maxBucketSize)
       .localCheckpoint(true)
-  }
-
-  /** Exact-Jaccard verify stage of [[minhashLsh]] over a candidate
-    * pair list, exposed for stage-level probing (r15).
-    */
-  private[graft] def lshVerifiedPairs(docs: DataFrame, idCol: String,
-                                      textCol: String, shingleN: Int,
-                                      threshold: Double,
-                                      cand: DataFrame): DataFrame = {
     // exact-Jaccard verify over CANDIDATE DOCUMENTS ONLY: with
     // signatures row-local, shingle rows are needed solely here, so
     // explode just the docs that appear in a candidate pair (a

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *   - `sigs/`   (doc_id, sig: array<long>[numHashes]) — the row-local
   *     MinHash signatures ([[org.apache.spark.sql.graft.MinHashSignature]]);
   *   - `banded/` (doc_id, band, bh), partitioned BY BAND — the LSH
-  *     bucket keys, derived through the SAME [[Dedup.bandStructsOf]]
+  *     bucket keys, derived through the SAME [[Dedup.bandRows]]
   *     the batch operator uses;
   *   - `meta/`   one row recording (shingleN, numHashes, bands) — so
   *     [[LshIndex.load]] FAILS FAST on parameter mismatch instead of
@@ -51,28 +51,9 @@ import org.apache.spark.sql.functions._
   */
 final class LshIndex private[dedup] (val spark: SparkSession, val path: String,
                                      val shingleN: Int, val numHashes: Int,
-                                     val bands: Int) {
+                                     val bands: Int)
+    extends graft.PersistedIndex[LshIndex] {
   require(numHashes % bands == 0, "bands must divide numHashes")
-
-  /** Opt-in append-time maintenance (r14, verdict-r13 item 5): when
-    * set, every append ([[add]]/[[checkAndAdd]]) finishes by running
-    * [[compactIfFragmented]] with this policy — fragmentation can
-    * never outrun the valve. Off by default; the trigger runs on the
-    * same single-writer ingest owner as the append itself, so the
-    * class's concurrency contract is unchanged.
-    */
-  @volatile private var autoPolicy: Option[(Int, Long)] = None
-
-  def withAutoMaintenance(maxFiles: Int = 64,
-                          targetFileRows: Long = 4000000L): LshIndex = {
-    require(maxFiles > 0 && targetFileRows > 0,
-      "auto-maintenance thresholds must be positive")
-    autoPolicy = Some((maxFiles, targetFileRows))
-    this
-  }
-
-  private def maintainIfDue(): Unit =
-    autoPolicy.foreach { case (mf, tr) => compactIfFragmented(mf, tr) }
 
   // explicit schemas: an index built over an EMPTY corpus (a pipeline
   // bootstrapping from no history) writes zero parquet data files, and
@@ -107,9 +88,7 @@ final class LshIndex private[dedup] (val spark: SparkSession, val path: String,
   }
 
   private[dedup] def bandRows(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"),
-        explode(Dedup.bandStructsOf(col("sig"), numHashes, bands)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+    Dedup.bandRows(sig, "sig", numHashes, bands, "doc_id")
 
   /** [[check]] then [[add]]: the ingest step that both reports a
     * batch's near-dups and admits the batch to the index.
@@ -148,70 +127,24 @@ final class LshIndex private[dedup] (val spark: SparkSession, val path: String,
       .join(sigs.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .localCheckpoint(true))
 
-  /** Parquet data files currently holding the index (sigs + banded).
-    * Every [[add]]/[[checkAndAdd]] append lands a new file per task, so
-    * a year of small increments degrades the banded history scan into
-    * thousands of tiny reads — this count is the fragmentation signal.
+  /** Compaction writes (the lifecycle around them is
+    * [[graft.PersistedIndex]]'s): sigs/ coalesced into right-sized
+    * files; banded/ keeps its BY-BAND partition layout with one file per
+    * band directory, so candidate joins and partition pruning behave
+    * identically.
     */
-  private def hadoopFs =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def hp(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
+  protected def dataTables: Seq[String] = Seq("sigs", "banded")
 
-  def dataFileCount(): Int =
-    graft.IndexMaintenance.parquetFileCount(hadoopFs,
-      Seq(hp("sigs"), hp("banded")))
-
-  /** Size-triggered maintenance: when accumulated appends exceed
-    * `maxFiles` data files, rewrite both tables into right-sized files
-    * (content-preserving — same rows, same band partition layout, so
-    * candidate joins and partition pruning behave identically). Returns
-    * true when a compaction ran. Recovery of an interrupted prior
-    * compaction runs FIRST, before the file count reads the live
-    * directories (review finding r13: counting first crashed the
-    * maintenance entry point in exactly the window compact() documents
-    * as recoverable).
-    */
-  def compactIfFragmented(maxFiles: Int = 64,
-                          targetFileRows: Long = 4000000L): Boolean = {
-    Seq("sigs", "banded").foreach(t =>
-      graft.IndexMaintenance.finishStagedSwap(hadoopFs, hp(t), hp(s"${t}_next")))
-    val fragmented = dataFileCount() > maxFiles
-    if (fragmented) compact(targetFileRows)
-    fragmented
-  }
-
-  /** Rewrite sigs/ and banded/ into right-sized files (content
-    * identical; banded keeps its BY-BAND partition layout with one file
-    * per band directory). Each table stages fully to `<table>_next`
-    * BEFORE either live table is touched, then swaps by directory
-    * RENAME (delete live, rename staged) — no second rewrite of the
-    * data, and every crash window is recoverable: a crash between
-    * delete and rename leaves the complete staged copy on disk, and
-    * the next compact() (or load-time caller running it) finishes the
-    * swap before doing anything else. Compaction belongs to the same
-    * single-writer ingest owner as appends — an append racing a
-    * compaction would be dropped by the rewrite.
-    */
-  def compact(targetFileRows: Long = 4000000L): Unit = {
-    require(targetFileRows > 0, "targetFileRows must be positive")
-    val fs = hadoopFs
-    def p(s: String) = hp(s)
-    // recovery: a previous compact crashed after deleting a live table
-    // but before renaming its staged replacement — finish that swap
-    Seq("sigs", "banded").foreach(t =>
-      graft.IndexMaintenance.finishStagedSwap(fs, p(t), p(s"${t}_next")))
-    val nSigs = sigs.count()
-    val sigFiles = math.max(1, (nSigs / targetFileRows).toInt)
-    // stage both tables fully before swapping either
-    sigs.coalesce(sigFiles).write.mode("overwrite").parquet(s"$path/sigs_next")
-    // repartition ON band -> exactly one task, and so one file, per
-    // band directory
-    banded
-      .repartition(bands, col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/banded_next")
-    Seq("sigs", "banded").foreach(t =>
-      graft.IndexMaintenance.swapStaged(fs, p(t), p(s"${t}_next")))
+  protected def writeCompacted(table: String, dest: String,
+                               targetFileRows: Long): Unit = table match {
+    case "sigs" =>
+      val files = math.max(1, (sigs.count() / targetFileRows).toInt)
+      sigs.coalesce(files).write.mode("overwrite").parquet(dest)
+    case "banded" =>
+      // repartition ON band -> exactly one task, and so one file, per
+      // band directory
+      banded.repartition(bands, col("band"))
+        .write.mode("overwrite").partitionBy("band").parquet(dest)
   }
 
   private def appendSigs(newSigs: DataFrame): Unit = {
@@ -219,7 +152,7 @@ final class LshIndex private[dedup] (val spark: SparkSession, val path: String,
     bandRows(newSigs).write.mode("append")
       .partitionBy("band").parquet(s"$path/banded")
     newSigs.write.mode("append").parquet(s"$path/sigs")
-    maintainIfDue()
+    appended()
   }
 
   private def checkInternal(newDocs: DataFrame, idCol: String, textCol: String,
@@ -234,8 +167,7 @@ final class LshIndex private[dedup] (val spark: SparkSession, val path: String,
     // anchors per (band, bh) — the batch is small, so this window is
     // cheap, and it bounds the history join's per-bucket fan-out
     val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bh"))
-      .orderBy(xxhash64(col("doc_id")), col("doc_id"))
+      .partitionBy(col("band"), col("bh")).orderBy(Dedup.anchorOrder: _*)
     val cappedBatch = newBanded
       .withColumn("_r", row_number().over(bw))
       .filter(col("_r") <= maxBatchBucket).drop("_r")
@@ -251,14 +183,12 @@ final class LshIndex private[dedup] (val spark: SparkSession, val path: String,
       maxBucketSize = maxBatchBucket)
     val cand = cross.union(within).distinct()
     val allSigs = sigs.union(newSigs)
-    // fraction of equal components, row-local on candidate pairs only
-    val matches = expr("aggregate(zip_with(_sig_a, _sig_b, (x, y) -> " +
-      "CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, v) -> acc + v)")
     val out = cand
       .join(allSigs.select(col("doc_id").as("doc_a"), col("sig").as("_sig_a")), "doc_a")
       .join(allSigs.select(col("doc_id").as("doc_b"), col("sig").as("_sig_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (matches.cast("double") / numHashes).as("est_jaccard"))
+      .select(col("doc_a"), col("doc_b"), // row-local, candidate pairs only
+        Dedup.estJaccard(col("_sig_a"), col("_sig_b"), numHashes)
+          .as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
       .localCheckpoint(true) // materialize BEFORE any append: the pair
                              // frame reads sigs/ and banded/, and an
@@ -293,10 +223,8 @@ object LshIndex {
     * table's _SUCCESS marker, which build() writes last, so a build
     * that crashed mid-way reads as absent and is rebuilt.
     */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(spark: SparkSession, path: String): Boolean =
+    graft.IndexMaintenance.isComplete(spark, path)
 
   /** Load if a completed index exists at `path`, else build — the
     * ingest-once/check-many lifecycle (same path-keyed contract as
@@ -321,9 +249,7 @@ object LshIndex {
     */
   def load(spark: SparkSession, path: String, shingleN: Int = 3,
            numHashes: Int = 64, bands: Int = 16): LshIndex = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta/_SUCCESS")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
+    require(exists(spark, path),
       s"LshIndex at $path has no meta record — not an index this class " +
         "built (build() always persists meta). Rebuild it with build().")
     val m = graft.tables.Tables.open(spark, s"$path/meta").head

@@ -21,33 +21,8 @@ import graft.tables.Tables
   *     as kmeansCentroids).
   */
 final class IvfIndex private (val spark: SparkSession, val path: String,
-                              val idCol: String, val vecCol: String) {
-
-  /** Opt-in append-time maintenance (r14, verdict-r13 item 5): when
-    * set, every [[addVectors]] finishes by running
-    * [[compactIfFragmented]] with this policy, so an append-heavy
-    * lifecycle can never fragment probes into the degradation of
-    * SCALING.md "r13: index lifecycle under append-heavy ingest"
-    * (240→2,146 files, 0.68→3.2 s probes) without the
-    * valve firing. Off by default — compaction belongs to the
-    * single-writer ingest owner, and opting in here keeps it on that
-    * same writer thread (no new concurrency). Measured at sg100:
-    * probe latency stays flat across 8 appends with NO manual compact
-    * call (SCALING.md, "r14: append-time auto-maintenance for the
-    * persisted indexes").
-    */
-  @volatile private var autoPolicy: Option[(Int, Long)] = None
-
-  def withAutoMaintenance(maxFiles: Int = 64,
-                          targetFileRows: Long = 4000000L): IvfIndex = {
-    require(maxFiles > 0 && targetFileRows > 0,
-      "auto-maintenance thresholds must be positive")
-    autoPolicy = Some((maxFiles, targetFileRows))
-    this
-  }
-
-  private def maintainIfDue(): Unit =
-    autoPolicy.foreach { case (mf, tr) => compactIfFragmented(mf, tr) }
+                              val idCol: String, val vecCol: String)
+    extends graft.PersistedIndex[IvfIndex] {
 
   def centroids: DataFrame = Tables.open(spark, s"$path/centroids")
 
@@ -102,7 +77,7 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
       .write.mode("append").partitionBy("cid").parquet(s"$path/assignments")
     assignments.agg(count(lit(1)).as("n_vectors"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    maintainIfDue()
+    appended()
   }
 
   /** Centroid drift after incremental [[addVectors]] appends: per
@@ -141,6 +116,7 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     * honest fix; re-centering cannot move a vector.
     */
   def recenter(): Unit = {
+    recover() // a recenter that crashed mid-swap left centroids_next
     val memberMeans = assignments
       .groupBy(col("cid"))
       .agg(org.apache.spark.sql.graft.VectorAggregates
@@ -150,68 +126,28 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     val updated = centroids.select(col("cid"), col("centroid").as("_old"))
       .join(memberMeans, Seq("cid"), "left")
       .select(col("cid"), coalesce(col("centroid"), col("_old")).as("centroid"))
-    // two-step write: parquet cannot overwrite the path it is reading
-    val tmp = s"$path/centroids_next"
-    updated.coalesce(1).write.mode("overwrite").parquet(tmp)
-    Tables.open(spark, tmp).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    val tp = new org.apache.hadoop.fs.Path(tmp)
-    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
+    // staged: parquet cannot overwrite the path it is reading
+    replace("centroids")(updated.coalesce(1).write.mode("overwrite").parquet(_))
   }
 
-  /** Parquet data files currently holding the assignments. Every
-    * [[addVectors]] append lands a file per task per touched cid
-    * directory, so an append-heavy lifecycle fragments the bucket scans
-    * probes prune to — measured in SCALING.md "r13: index lifecycle
-    * under append-heavy ingest": 8 appends took the sg100 index from
-    * 240 to 2,146 files and topKBatch from 0.68 s to ~3.2 s, and
-    * [[recenter]] (which rewrites only the k-row centroid
-    * table) cannot recover it. This count is the compaction signal.
-    */
-  private def hadoopFs =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def hp(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-
-  def dataFileCount(): Int =
-    graft.IndexMaintenance.parquetFileCount(hadoopFs, Seq(hp("assignments")))
-
-  /** Size-triggered maintenance: when accumulated appends exceed
-    * `maxFiles` data files, rewrite the assignments into right-sized
-    * files (content-preserving — same rows, same by-cid partition
-    * layout, so probes prune identically). Returns true when a
-    * compaction ran. Same single-writer contract as appends. Recovery
-    * of an interrupted prior compaction runs FIRST, before the file
-    * count reads the live directory.
-    */
-  def compactIfFragmented(maxFiles: Int = 64,
-                          targetFileRows: Long = 4000000L): Boolean = {
-    graft.IndexMaintenance.finishStagedSwap(hadoopFs,
-      hp("assignments"), hp("assignments_next"))
-    val fragmented = dataFileCount() > maxFiles
-    if (fragmented) compact(targetFileRows)
-    fragmented
-  }
-
-  /** Rewrite assignments/ into right-sized files, keeping the BY-CID
+  /** The compaction write (the lifecycle around it is
+    * [[graft.PersistedIndex]]'s). Every [[addVectors]] append lands a
+    * file per task per touched cid directory, so an append-heavy
+    * lifecycle fragments the bucket scans probes prune to — measured in
+    * SCALING.md "r13: index lifecycle under append-heavy ingest": 8
+    * appends took the sg100 index from 240 to 2,146 files and topKBatch
+    * from 0.68 s to ~3.2 s, and [[recenter]] (which rewrites only the
+    * k-row centroid table) cannot recover it. Compaction keeps the BY-CID
     * partition layout probes prune with: rows are hash-salted into
-    * `ceil(bucketRows / targetFileRows)` sub-files per bucket (one
-    * task per (cid, salt) ⇒ bounded, right-sized files at any corpus
-    * scale — a 100 TB index with k buckets of 25M vectors compacts to
-    * ~targetFileRows-row files, never one monolith per bucket). Stages
-    * fully to `assignments_next` BEFORE the live table is touched,
-    * then swaps by directory rename; a crash between delete and rename
-    * leaves the complete staged copy, and the next compact() finishes
-    * the swap first — the [[graft.dedup.LshIndex.compact]] contract.
+    * `ceil(bucketRows / targetFileRows)` sub-files per bucket (one task
+    * per (cid, salt) ⇒ bounded, right-sized files at any corpus scale —
+    * a 100 TB index with k buckets of 25M vectors compacts to
+    * ~targetFileRows-row files, never one monolith per bucket).
     */
-  def compact(targetFileRows: Long = 4000000L): Unit = {
-    require(targetFileRows > 0, "targetFileRows must be positive")
-    val fs = hadoopFs
-    def p(s: String) = hp(s)
-    // recovery: a previous compact crashed after deleting the live
-    // table but before renaming its staged replacement
-    graft.IndexMaintenance.finishStagedSwap(fs,
-      p("assignments"), p("assignments_next"))
+  protected def dataTables: Seq[String] = Seq("assignments")
+
+  protected def writeCompacted(table: String, dest: String,
+                               targetFileRows: Long): Unit = {
     val n = assignments.count()
     val nCids = math.max(1L, centroids.count())
     // sub-files per bucket sized from the MEAN bucket (k-means buckets
@@ -223,10 +159,7 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     assignments
       .repartition((nCids * filesPerCid).toInt, col("cid"),
         pmod(xxhash64(col(idCol)), lit(filesPerCid.toLong)))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$path/assignments_next")
-    graft.IndexMaintenance.swapStaged(fs, p("assignments"),
-      p("assignments_next"))
+      .write.mode("overwrite").partitionBy("cid").parquet(dest)
   }
 
   /** Drift-triggered maintenance policy (SURVEY §9 #4): re-center when
@@ -333,14 +266,12 @@ object IvfIndex {
            vecCol: String): IvfIndex =
     new IvfIndex(spark, path, idCol, vecCol)
 
-  /** True when a completed index exists at `path` — checked through the
-    * Hadoop filesystem of the path, so it works on HDFS/S3/etc., not
-    * just the local disk.
+  /** True when a COMPLETED index exists at `path` — keyed on the meta
+    * table, which build() writes last, so a build that crashed mid-way
+    * reads as absent and is rebuilt.
     */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/assignments/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(spark: SparkSession, path: String): Boolean =
+    graft.IndexMaintenance.isComplete(spark, path)
 
   /** Load if the index exists, else build and persist — the
     * ingest-once/query-many lifecycle. NOTE the contract: the index is
@@ -380,10 +311,7 @@ object IvfIndex {
   def isStale(index: IvfIndex, corpus: DataFrame): Boolean = {
     // an index with no meta record (pre-meta build, partial write)
     // cannot prove freshness — report stale rather than crash
-    val metaSuccess = new org.apache.hadoop.fs.Path(s"${index.path}/meta/_SUCCESS")
-    val fs = metaSuccess.getFileSystem(
-      index.spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaSuccess)) return true
+    if (!exists(index.spark, index.path)) return true
     val indexed = Tables.open(index.spark, s"${index.path}/meta")
       .head.getLong(0)
     indexed != corpus.count()

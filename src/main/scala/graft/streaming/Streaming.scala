@@ -417,30 +417,26 @@ object Streaming {
                          textCol: String, index: graft.dedup.LshIndex,
                          threshold: Double = 0.7,
                          watermarkDelay: String = "10 minutes"): DataFrame = {
-    val banded = docs
+    val sigs = docs
       .filter(col(textCol).isNotNull)
       .withWatermark(tsCol, watermarkDelay)
       .select(col(idCol), col(tsCol),
         org.apache.spark.sql.graft.TextExpressions
           .minhashSignature(col(textCol), index.shingleN, index.numHashes)
           .as("_sig"))
-      .select(col(idCol), col(tsCol), col("_sig"),
-        explode(graft.dedup.Dedup
-          .bandStructsOf(col("_sig"), index.numHashes, index.bands)).as("_bb"))
-      .select(col(idCol), col(tsCol), col("_sig"),
-        col("_bb.band").as("band"), col("_bb.bh").as("bh"))
+    val banded = graft.dedup.Dedup.bandRows(sigs, "_sig", index.numHashes,
+      index.bands, idCol, tsCol, "_sig")
     val hist = index.banded
       .select(col("doc_id").as("doc_b"), col("band"), col("bh"))
     val cand = banded.join(hist, Seq("band", "bh"))
       .filter(col("doc_b") =!= col(idCol))
       .dropDuplicatesWithinWatermark(idCol, "doc_b")
-    val matches = expr("aggregate(zip_with(_sig, _sig_b, (x, y) -> " +
-      "CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, v) -> acc + v)")
     cand
       .join(index.sigs.select(col("doc_id").as("doc_b"), col("sig").as("_sig_b")),
         Seq("doc_b"))
       .select(col(idCol), col("doc_b"),
-        (matches.cast("double") / index.numHashes).as("est_jaccard"))
+        graft.dedup.Dedup.estJaccard(col("_sig"), col("_sig_b"),
+          index.numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 

@@ -160,6 +160,22 @@ class ContractSpec extends AnyFunSuite {
       s"codegen conf sites: ${confSites.mkString(", ")}")
   }
 
+  test("Hadoop filesystem calls live only in IndexMaintenance and ParquetFooters") {
+    // a persisted index's on-disk lifecycle (completion marker, file
+    // counts, staged swaps, crash recovery) is written once, in
+    // IndexMaintenance.scala; an index class reaching for the filesystem
+    // itself grows a second copy of a crash window
+    val allowed = Set("IndexMaintenance.scala", "ParquetFooters.scala")
+    val found = mainCode()
+      .filterNot { case (p, _) => allowed(p.getFileName.toString) }
+      .flatMap { case (p, code) =>
+        """\bgetFileSystem\b""".r.findAllMatchIn(code)
+          .map(m => s"${p.getFileName}:${enclosingDef(code, m.start)}")
+      }
+    assert(found.isEmpty,
+      s"filesystem calls outside IndexMaintenance: ${found.mkString(", ")}")
+  }
+
   test("sliding rangeBetween frames live only in TimeSeriesOps") {
     // Spark re-aggregates a sliding frame for every row; the rolling body
     // (TimeSeriesOps.rollingFrames) spreads a dense key over halo buckets

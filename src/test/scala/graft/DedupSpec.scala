@@ -1034,6 +1034,46 @@ class DedupSpec extends SparkSpec {
       .sortBy(_._1).toSeq === sigsBefore)
   }
 
+  test("LshIndex.withAutoMaintenance compacts on the append that crosses maxFiles, content unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("lshauto").toString
+    val initial = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again tonight"),
+      (2L, "completely different content about spark plans and shuffles at scale"))
+      .toDF("doc_id", "text")
+    val built = LshIndex.build(initial, "doc_id", "text", dir)
+    val maxFiles = built.dataFileCount()
+    val idx: LshIndex = built.withAutoMaintenance(maxFiles = maxFiles)
+    def sigRows = idx.sigs.collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
+    def bandRows = idx.banded.select("doc_id", "band", "bh").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val sigsBefore = sigRows
+    val bandedBefore = bandRows
+    val added = 10L to 12L
+    added.foreach { i =>
+      idx.add(Seq((i, s"fresh unique content number $i never indexed before in this corpus"))
+        .toDF("doc_id", "text"), "doc_id", "text")
+      // every append lands new files in both tables, so only the
+      // compaction the append itself ran brings the count back under
+      assert(idx.dataFileCount() <= maxFiles,
+        s"append of $i left ${idx.dataFileCount()} files over the cap $maxFiles")
+    }
+    // history rows bit for bit, and each appended doc exactly once
+    val sigsAfter = sigRows
+    assert(sigsAfter.filterNot(r => added.contains(r._1)) === sigsBefore)
+    assert(sigsAfter.map(_._1) === (sigsBefore.map(_._1) ++ added).sorted)
+    val bandedAfter = bandRows
+    assert(bandedAfter.filterNot(r => added.contains(r._1)) === bandedBefore)
+    assert(bandedAfter.count(r => added.contains(r._1)) === added.size * 16)
+    assert(new java.io.File(s"$dir/banded").listFiles()
+      .count(_.getName.startsWith("band=")) === 16)
+    val probe = Seq(
+      (99L, "the quick brown fox jumps over the lazy dog again and again tonight"))
+      .toDF("doc_id", "text")
+    assert(idx.check(probe, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 99L)))
+  }
+
   test("contaminatedIds flags docs sharing >= minOverlap distinct shingles with the benchmark") {
     val docs = Seq(
       (1L, "a b c d e f g h"),   // 4 of its 5-grams appear in the benchmark

@@ -427,6 +427,87 @@ class SimilaritySpec extends SparkSpec {
       === rowsBefore)
   }
 
+  test("IvfIndex.withAutoMaintenance compacts on the append that crosses maxFiles, content unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfauto").toString
+    val built = graft.similarity.IvfIndex.buildOrLoad(
+      corpus, "vec_id", "embedding", dir, k = 2, iterations = 2)
+    val maxFiles = built.dataFileCount()
+    val idx: graft.similarity.IvfIndex = built.withAutoMaintenance(maxFiles = maxFiles)
+    def rows = idx.assignments.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Number]("cid").longValue)).toSet
+    val rowsBefore = rows
+    val added = 200L to 202L
+    added.foreach { i =>
+      idx.addVectors(Seq((i, Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f)))
+        .toDF("vec_id", "embedding"))
+      // every append lands a new file, so only the compaction the
+      // append itself ran brings the count back under the cap
+      assert(idx.dataFileCount() <= maxFiles,
+        s"append of $i left ${idx.dataFileCount()} files over the cap $maxFiles")
+    }
+    // history memberships unchanged, each appended vector exactly once,
+    // and the by-cid layout intact
+    val rowsAfter = rows
+    assert(rowsAfter.filterNot(r => added.contains(r._1)) === rowsBefore)
+    assert(idx.assignments.count() === rowsBefore.size + added.size)
+    assert(rowsAfter.map(_._1).filter(added.contains) === added.toSet)
+    assert(new java.io.File(s"$dir/assignments").listFiles()
+      .count(_.getName.startsWith("cid=")) === 2)
+    assert(!graft.similarity.IvfIndex.isStale(idx,
+      corpus.union(added.map(i => (i, Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f)))
+        .toDF("vec_id", "embedding"))))
+  }
+
+  test("IvfIndex.recenter swaps centroids in by rename; its crash window recovers") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfrecenter").toString
+    val idx = graft.similarity.IvfIndex.buildOrLoad(
+      corpus, "vec_id", "embedding", dir, k = 2, iterations = 2)
+    idx.addVectors(Seq((50L, Array(1f, 0f, 1f, 0f, 1f, 0f, 0f, 0f)))
+      .toDF("vec_id", "embedding"))
+    idx.recenter()
+    def cents = idx.centroids.collect()
+      .map(r => (r.getAs[Number]("cid").longValue,
+        r.getSeq[Double](r.fieldIndex("centroid")).toVector))
+      .sortBy(_._1).toSeq
+    val recentered = cents
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
+    assert(fs.exists(p("centroids")) && !fs.exists(p("centroids_next")))
+    // a recenter that died between deleting centroids/ and renaming its
+    // staged copy: a maintenance entry point finishes the swap
+    assert(fs.rename(p("centroids"), p("centroids_next")))
+    assert(!idx.compactIfFragmented(maxFiles = 10000))
+    assert(fs.exists(p("centroids")) && !fs.exists(p("centroids_next")))
+    assert(cents === recentered)
+    // and so does recenter itself, before it reads the centroids
+    assert(fs.rename(p("centroids"), p("centroids_next")))
+    idx.recenter()
+    assert(fs.exists(p("centroids")) && !fs.exists(p("centroids_next")))
+    assert(cents.map(_._1) === recentered.map(_._1))
+    cents.zip(recentered).foreach { case ((_, a), (_, b)) =>
+      assert(a.zip(b).forall { case (x, y) => math.abs(x - y) < 1e-12 })
+    }
+  }
+
+  test("IvfIndex completion keys on meta/: an index without it reads absent and is rebuilt") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfmeta").toString
+    graft.similarity.IvfIndex.buildOrLoad(
+      corpus, "vec_id", "embedding", dir, k = 2, iterations = 2)
+    assert(graft.similarity.IvfIndex.exists(spark, dir))
+    // a build that crashed after writing assignments/ but before meta/
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/meta"), true))
+    assert(!graft.similarity.IvfIndex.exists(spark, dir))
+    // buildOrLoad rebuilds (a load writes no meta record)
+    val idx = graft.similarity.IvfIndex.buildOrLoad(
+      corpus, "vec_id", "embedding", dir, k = 2, iterations = 2)
+    assert(graft.similarity.IvfIndex.exists(spark, dir))
+    assert(!graft.similarity.IvfIndex.isStale(idx, corpus))
+    assert(idx.assignments.count() === corpus.count())
+  }
+
   test("IvfIndex.buildOrRefresh rebuilds when the corpus changed under the path") {
     val dir = java.nio.file.Files.createTempDirectory("ivfrefresh").toString
     graft.similarity.IvfIndex.buildOrRefresh(
