@@ -34,7 +34,8 @@ object Durations {
 
 /** diurnal.py:176 `DiurnalExtrema` — one min + one max per 24 h period.
   *
-  * @param minFirst require the minimum to precede the maximum
+  * @param minFirst require the minimum to precede the maximum: the max
+  *        is searched from the day's minimum to the end of that day
   * @param maxNextDay with minFirst: search the max in an 18 h window
   *        after the minimum, crossing midnight
   * @param predictTiming calibrate mean occurrence-hours on the window
@@ -59,6 +60,8 @@ class DiurnalExtrema(timeseries: DataFrame, keys: Seq[String],
           minFirst = minFirst)
       else if (minFirst && maxNextDay)
         Diurnal.extremaMinFirst(timeseries, keys, tsCol, valCol)
+      else if (minFirst)
+        Diurnal.extremaMinFirstInDay(timeseries, keys, tsCol, valCol)
       else
         Diurnal.extrema(timeseries, keys, tsCol, valCol)
     threshold.fold(base)(Diurnal.applyThreshold(base, _))
@@ -135,14 +138,9 @@ class DiurnalExtrema(timeseries: DataFrame, keys: Seq[String],
         val lo = Diurnal.dhrsToTimestamp(dayLit, lit(h0))
         val hi = Diurnal.dhrsToTimestamp(dayLit, lit(h1))
         val in = timeseries.filter(col(tsCol) >= lo && col(tsCol) <= hi)
-        val pick =
-          if (which == "min")
-            in.groupBy(keys.map(col): _*)
-              .agg(min(struct(col(valCol).as("v"), col(tsCol).as("t"))).as("_p"))
-          else
-            in.groupBy(keys.map(col): _*)
-              .agg(max(struct(col(valCol).as("v"),
-                (-unix_micros(col(tsCol))).as("nu"), col(tsCol).as("t"))).as("_p"))
+        val pick = in.groupBy(keys.map(col): _*).agg(
+          (if (which == "min") Diurnal.minPick(col(valCol), col(tsCol))
+           else Diurnal.maxPick(col(valCol), col(tsCol))).as("_p"))
         val corr = pick.select(keys.map(col) ++ Seq(
           dayLit.as("day"), lit(which).as("which"),
           col("_p.v").as("new_val"), col("_p.t").as("new_time")): _*)

@@ -9,41 +9,96 @@ import org.apache.spark.sql.functions._
   *
   * Picks exactly one minimum and one maximum per 24 h period of a noisy
   * diurnally-varying series. Ties break to the earliest observation,
-  * matching pandas `idxmin`/`idxmax` first-occurrence semantics.
+  * matching pandas `idxmin`/`idxmax` first-occurrence semantics, and a
+  * null value never wins a pick: every pick is [[minPick]] or
+  * [[maxPick]].
   *
-  * Scale design: everything is windows over (key, day) plus one
-  * group-by — a single hash shuffle. The cross-midnight max-next-day
-  * variant never does an unbounded range join: each observation can
-  * only serve the 18 h window anchored in its own day or the previous
-  * one, so candidates are duplicated at most 2x (bounded explode) and
-  * joined on (key, day) equality.
+  * Scale design: plain [[extrema]] is one partial-aggregating groupBy.
+  * The windowed forms (min-first with the max searched in the 18 h
+  * after the min, and the predicted-timing windows) are configurations
+  * of one body, `windowedPicks`: each observation is exploded once
+  * into the 2-3 candidate days its windows can reach (never an
+  * unbounded range join), a max window that starts at the day's min
+  * pick reads that pick from a partition-only window over (key, day),
+  * and one groupBy on the same (key, day) exchange yields both picks.
   */
 object Diurnal {
+
+  /** The earliest minimum: struct(v, t) of the smallest non-null `v`,
+    * tied to the earliest `t` (pandas idxmin). An aggregate; null when
+    * no row has a non-null `v`, so a window condition folds into the
+    * value (`when(inWindow, v)`).
+    */
+  private[graft] def minPick(v: Column, t: Column): Column =
+    min(when(v.isNotNull, struct(v.as("v"), t.as("t"))))
+
+  /** The earliest maximum: struct(v, nu, t) of the largest non-null
+    * `v`, tied to the earliest `t` through nu = -micros(t) (pandas
+    * idxmax). Null when no row has a non-null `v`.
+    */
+  private[graft] def maxPick(v: Column, t: Column): Column =
+    max(when(v.isNotNull, struct(v.as("v"), (-unix_micros(t)).as("nu"), t.as("t"))))
 
   /** Per-key-per-day min/max values with first-occurrence timestamps
     * (B1; diurnal.py:301).
     * Output: keys..., day (timestamp at midnight), min_val, min_time,
     * max_val, max_time.
     *
-    * ONE hash aggregation, no window: min(struct(v, ts)) is (min value,
-    * earliest ts of it) — pandas idxmin — and the max twin ties to the
-    * earliest via (v, -us, ts). The previous window+groupBy formulation
-    * computed the same thing but WindowExec sorts the full observation
-    * set within the exchange and defeats partial aggregation; the
-    * struct-agg form map-side-combines observations down to one row per
-    * (key, day) BEFORE the shuffle — at 100 TB that is the difference
-    * between shuffling the corpus and shuffling a row per series-day.
-    * Null observations are excluded via when(): a struct with a null
-    * field would otherwise participate in the comparison.
+    * ONE hash aggregation, no window. The previous window+groupBy
+    * formulation computed the same thing but WindowExec sorts the full
+    * observation set within the exchange and defeats partial
+    * aggregation; the struct-agg form map-side-combines observations
+    * down to one row per (key, day) BEFORE the shuffle — at 100 TB that
+    * is the difference between shuffling the corpus and shuffling a row
+    * per series-day.
     */
-  def extrema(df: DataFrame, keys: Seq[String], tsCol: String, valCol: String): DataFrame = {
-    val negUs = -unix_micros(col(tsCol))
-    val v = col(valCol).isNotNull
+  def extrema(df: DataFrame, keys: Seq[String], tsCol: String, valCol: String): DataFrame =
     df.groupBy(keys.map(col) :+ date_trunc("day", col(tsCol)).as("day"): _*)
-      .agg(
-        min(when(v, struct(col(valCol).as("v"), col(tsCol).as("t")))).as("_mn"),
-        max(when(v, struct(col(valCol).as("v"), negUs.as("nu"),
-          col(tsCol).as("t")))).as("_mx"))
+      .agg(minPick(col(valCol), col(tsCol)).as("_mn"),
+        maxPick(col(valCol), col(tsCol)).as("_mx"))
+      .select(keys.map(col) ++ Seq(col("day"),
+        col("_mn.v").as("min_val"), col("_mn.t").as("min_time"),
+        col("_mx.v").as("max_val"), col("_mx.t").as("max_time")): _*)
+
+  /** The one body behind the windowed picks. Four steps:
+    *  1. explode each observation once into the candidate days it can
+    *     serve (`dayOffsets`, own day first), flagged `_own` on its own
+    *     day;
+    *  1. join the per-key calibration `occ`, if any, as a broadcast dim
+    *     on the keys;
+    *  1. if the max window starts at the min pick (`minAnchored`), read
+    *     that pick from a partition-only window over (keys, day), which
+    *     rides the exchange the groupBy needs;
+    *  1. one groupBy(keys, day) yields both picks and `max(_own)`; a
+    *     candidate day with no own-day observation is dropped.
+    *
+    * `inMin` is the min window on a candidate row; `inMax` the max
+    * window given the min pick's micros (null without a min pick).
+    * Rows with a null key are dropped. Output: keys..., day, min_val,
+    * min_time, max_val, max_time.
+    */
+  private def windowedPicks(df: DataFrame, keys: Seq[String], tsCol: String,
+                            valCol: String, dayOffsets: Seq[Int],
+                            occ: Option[DataFrame], inMin: Column,
+                            inMax: Column => Column,
+                            minAnchored: Boolean): DataFrame = {
+    val dayCol = date_trunc("day", col(tsCol))
+    val obs = df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .select(keys.map(col) ++ Seq(col(tsCol), col(valCol)): _*)
+    val cand = occ.fold(obs)(o => obs.join(broadcast(o), keys))
+      .select(col("*"), posexplode(array(dayOffsets.map(d =>
+        dayCol + expr(s"INTERVAL $d DAY")): _*)).as(Seq("_pos", "day")))
+      .withColumn("_own", col("_pos") === 0)
+    val minIn = when(inMin, col(valCol))
+    val anchored =
+      if (!minAnchored) cand
+      else cand.withColumn("_min_us", unix_micros(minPick(minIn, col(tsCol))
+        .over(Window.partitionBy(keys.map(col) :+ col("day"): _*)).getField("t")))
+    anchored.groupBy(keys.map(col) :+ col("day"): _*)
+      .agg(minPick(minIn, col(tsCol)).as("_mn"),
+        maxPick(when(inMax(col("_min_us")), col(valCol)), col(tsCol)).as("_mx"),
+        max(col("_own")).as("_own"))
+      .filter(col("_own"))
       .select(keys.map(col) ++ Seq(col("day"),
         col("_mn.v").as("min_val"), col("_mn.t").as("min_time"),
         col("_mx.v").as("max_val"), col("_mx.t").as("max_time")): _*)
@@ -52,45 +107,29 @@ object Diurnal {
   /** Min-first + max-next-day variant (B2; diurnal.py:325-330): the
     * day's minimum is found in the calendar day; the maximum is then
     * searched in the 18 h window after the minimum, crossing midnight.
-    * Days where the picked max < min are dropped (diurnal.py:335).
+    * An observation can serve that window only for its own day or the
+    * previous one (2x candidates). Days where the picked max < min, and
+    * days without a non-null value, are dropped (diurnal.py:335).
     */
   def extremaMinFirst(df: DataFrame, keys: Seq[String], tsCol: String,
                       valCol: String, maxWindowHours: Int = 18): DataFrame = {
-    val dayCol = date_trunc("day", col(tsCol))
-    // same struct-min shape as [[extrema]]: one partial-aggregating
-    // groupBy, no window sort of the observations
-    val mins = df
-      .groupBy(keys.map(col) :+ dayCol.as("day"): _*)
-      .agg(min(when(col(valCol).isNotNull,
-        struct(col(valCol).as("v"), col(tsCol).as("t")))).as("_mn"))
-      .select(keys.map(col) ++ Seq(col("day"),
-        col("_mn.v").as("min_val"), col("_mn.t").as("min_time")): _*)
-
-    // Bounded candidate duplication: an observation at ts can fall in the
-    // [min_time, min_time+18h] window only for day(ts) or day(ts)-1.
-    // The mins side renames its key columns to avoid self-join ambiguity.
+    val us = unix_micros(col(tsCol))
     val wUs = maxWindowHours.toLong * 3600 * 1000000
-    val minsR = keys.foldLeft(mins)((d, k) => d.withColumnRenamed(k, "_k_" + k))
-    val cand = df
-      .withColumn("_cday", explode(array(date_trunc("day", col(tsCol)),
-        date_trunc("day", col(tsCol)) - expr("INTERVAL 1 DAY"))))
-      .join(minsR, keys.map(k => col(k) === col("_k_" + k)).reduce(_ && _) &&
-        col("_cday") === col("day"))
-      .filter(unix_micros(col(tsCol)) >= unix_micros(col("min_time")) &&
-        unix_micros(col(tsCol)) <= unix_micros(col("min_time")) + wUs)
-      .select(keys.map(col) ++
-        Seq(col("day"), col("min_val"), col("min_time"), col(tsCol), col(valCol)): _*)
-
-    val negUs = -unix_micros(col(tsCol))
-    cand.groupBy(keys.map(col) :+ col("day"): _*)
-      .agg(first(col("min_val")).as("min_val"),
-        first(col("min_time")).as("min_time"),
-        max(when(col(valCol).isNotNull, struct(col(valCol).as("v"),
-          negUs.as("nu"), col(tsCol).as("t")))).as("_mx"))
-      .select(keys.map(col) ++ Seq(col("day"), col("min_val"), col("min_time"),
-        col("_mx.v").as("max_val"), col("_mx.t").as("max_time")): _*)
+    windowedPicks(df, keys, tsCol, valCol, Seq(0, -1), None, col("_own"),
+      minUs => us >= minUs && us <= minUs + wUs, minAnchored = true)
       .filter(!(col("min_val") > col("max_val")))
   }
+
+  /** Min-first without max-next-day (diurnal.py:313-316, "min must
+    * precede max"): the day's minimum, then the maximum from that
+    * minimum to the end of the same day. Days without a non-null value
+    * are dropped, like [[extremaMinFirst]].
+    */
+  private[graft] def extremaMinFirstInDay(df: DataFrame, keys: Seq[String],
+                                          tsCol: String, valCol: String): DataFrame =
+    windowedPicks(df, keys, tsCol, valCol, Seq(0), None, lit(true),
+      minUs => unix_micros(col(tsCol)) >= minUs, minAnchored = true)
+      .filter(!(col("min_val") > col("max_val")))
 
   /** Per-day extrema with the reference's boundary-artifact rejection
     * (diurnal.py:654-714 on_boundary/bool_check_around_bound): a pick
@@ -117,56 +156,38 @@ object Diurnal {
     val nb = keyW.rowsBetween(-5, 4)
     val dayCol = date_trunc("day", col(tsCol))
     val dayPart = Window.partitionBy(keys.map(col) :+ dayCol: _*)
-    // min(struct(v, ts)) ties to the earliest ts like pandas idxmin;
-    // for the max side, tie to the earliest via (v, -us, ts) ordering.
-    val negUs = -unix_micros(col(tsCol))
     val obs = df
       // neighborhood stats first: the ROWS frame needs (keys) partitioning,
       // the day stats need (keys, day) — this order lets the (keys, day)
       // exchange feed both the day windows and the final groupBy.
       .withColumn("_nb_n", count(col(valCol)).over(nb))
       .withColumn("_nb_min", min(col(valCol)).over(nb))
-      .withColumn("_nb_min_ts",
-        min(struct(col(valCol).as("v"), col(tsCol).as("t"))).over(nb).getField("t"))
       .withColumn("_nb_max", max(col(valCol)).over(nb))
-      .withColumn("_nb_max_ts",
-        max(struct(col(valCol).as("v"), negUs.as("nu"), col(tsCol).as("t")))
-          .over(nb).getField("t"))
       .withColumn("_day", dayCol)
       .withColumn("_first_ts", min(col(tsCol)).over(dayPart))
       .withColumn("_last_ts", max(col(tsCol)).over(dayPart))
-      .withColumn("_minv", min(col(valCol)).over(dayPart))
-      .withColumn("_maxv", max(col(valCol)).over(dayPart))
-      .withColumn("_min_ts",
-        min(when(col(valCol) === col("_minv"), col(tsCol))).over(dayPart))
-      .withColumn("_max_ts",
-        min(when(col(valCol) === col("_maxv"), col(tsCol))).over(dayPart))
+      .withColumn("_min", minPick(col(valCol), col(tsCol)).over(dayPart))
+      .withColumn("_max", maxPick(col(valCol), col(tsCol)).over(dayPart))
 
     // evaluated ON the pick's own observation row (ts == pick time)
     def goodHere(which: String): Column = {
-      val pickTs = col(s"_${which}_ts")
-      val pickVal = if (which == "min") col("_minv") else col("_maxv")
+      val pickTs = col(s"_$which.t")
       !(pickTs === col("_first_ts") || pickTs === col("_last_ts")) ||
-        (col("_nb_n") >= 3 &&
-          (col(s"_nb_${which}_ts") === pickTs || col(s"_nb_$which") === pickVal))
+        (col("_nb_n") >= 3 && col(s"_nb_$which") === col(s"_$which.v"))
     }
     val flagged = obs
-      .withColumn("_min_good",
-        when(col(tsCol) === col("_min_ts"), goodHere("min")))
-      .withColumn("_max_good",
-        when(col(tsCol) === col("_max_ts"), goodHere("max")))
+      .withColumn("_min_good", when(col(tsCol) === col("_min.t"), goodHere("min")))
+      .withColumn("_max_good", when(col(tsCol) === col("_max.t"), goodHere("max")))
     flagged
       .groupBy(keys.map(col) :+ col("_day").as("day"): _*)
       .agg(
-        first(col("_minv")).as("_v_min"), first(col("_min_ts")).as("_t_min"),
-        max(col("_min_good")).as("_g_min"),
-        first(col("_maxv")).as("_v_max"), first(col("_max_ts")).as("_t_max"),
-        max(col("_max_good")).as("_g_max"))
+        first(col("_min")).as("_p_min"), max(col("_min_good")).as("_g_min"),
+        first(col("_max")).as("_p_max"), max(col("_max_good")).as("_g_max"))
       .select(keys.map(col) ++ Seq(col("day"),
-        when(col("_g_min"), col("_v_min")).otherwise(lit(null).cast("double")).as("min_val"),
-        when(col("_g_min"), col("_t_min")).as("min_time"),
-        when(col("_g_max"), col("_v_max")).otherwise(lit(null).cast("double")).as("max_val"),
-        when(col("_g_max"), col("_t_max")).as("max_time")): _*)
+        when(col("_g_min"), col("_p_min.v")).otherwise(lit(null).cast("double")).as("min_val"),
+        when(col("_g_min"), col("_p_min.t")).as("min_time"),
+        when(col("_g_max"), col("_p_max.v")).otherwise(lit(null).cast("double")).as("max_val"),
+        when(col("_g_max"), col("_p_max.t")).as("max_time")): _*)
   }
 
   /** Daily amplitude (B3; diurnal.py:296-299). */
@@ -291,34 +312,19 @@ object Diurnal {
     * picked only inside +/- `halfWindowHours` around the predicted hour
     * of each day. Days with no observation in a window keep a null pick
     * (the reference appends None rows); rows where both picks exist and
-    * min > max are dropped.
+    * min > max are dropped. Keys without calibration data have no
+    * predicted hours and no picks. With `minFirst` the max window may
+    * not start before the day's min pick.
     */
   def extremaPredicted(df: DataFrame, keys: Seq[String], tsCol: String,
                        valCol: String, calibEndExclusive: String,
                        halfWindowHours: Int = 8,
                        minFirst: Boolean = false): DataFrame = {
     val occ = predictedOccurrences(df, keys, tsCol, valCol, calibEndExclusive)
-
-    val dayCol = date_trunc("day", col(tsCol))
-    val days = df.select(keys.map(col) :+ dayCol.as("day"): _*).distinct()
-      .join(occ, keys, "inner")
-    val obs = df.select(keys.map(col) ++ Seq(col(tsCol), col(valCol)) :+
-      dayCol.as("_oday"): _*)
-
-    // window is 2*half <= 24h anchored around an in-day hour: candidates
-    // come from the observation's own day or its neighbors -> bounded 3x
-    // duplication, joined on (key, day) equality.
-    val candDays = explode(array(col("_oday"),
-      col("_oday") - expr("INTERVAL 1 DAY"), col("_oday") + expr("INTERVAL 1 DAY")))
-    val cand = obs.withColumn("day", candDays).drop("_oday")
-      .join(days, keys :+ "day")
+    // the window is 2*half <= 24h anchored around an in-day hour, so an
+    // observation's candidate days are its own and both neighbours.
     // floor (not cast-truncation) so negative sub-integer bounds round
-    // the same way as the oracle's floor(). Window membership is a
-    // per-row predicate, so BOTH picks come from one conditional
-    // aggregation over the candidates: min(when(inWin, struct(v, ts)))
-    // is (min value, earliest ts of it) — pandas idxmin — and the max
-    // twin ties to the earliest via (v, -us, ts). One groupBy, no
-    // per-side window+join passes.
+    // the same way as the oracle's floor().
     def bounds(occCol: String): (Column, Column) = (
       unix_micros(col("day")) +
         floor((col(occCol) - lit(halfWindowHours.toDouble)) * 3600e6),
@@ -326,43 +332,15 @@ object Diurnal {
         floor((col(occCol) + lit(halfWindowHours.toDouble)) * 3600e6))
     val us = unix_micros(col(tsCol))
     val (minLo, minHi) = bounds("min_occ")
-    val inMin = us >= minLo && us <= minHi
-    def maxCond(lo: Column): Column = {
-      val (maxLo, maxHi) = bounds("max_occ")
-      us >= greatest(maxLo, lo) && us <= maxHi
-    }
-    def agged(base: DataFrame, maxIn: Column): DataFrame =
-      base.groupBy(keys.map(col) :+ col("day"): _*)
-        .agg(
-          min(when(inMin, struct(col(valCol).as("v"), col(tsCol).as("t")))).as("_mn"),
-          max(when(maxIn, struct(col(valCol).as("v"),
-            (-us).as("nu"), col(tsCol).as("t")))).as("_mx"))
-        .select(keys.map(col) ++ Seq(col("day"),
-          col("_mn.v").as("min_val"), col("_mn.t").as("min_time"),
-          col("_mx.v").as("max_val"), col("_mx.t").as("max_time")): _*)
-    val picks =
-      if (!minFirst) agged(cand, maxCond(lit(Long.MinValue)))
-      else {
-        // min_first interplay (diurnal.py:313-316): the max window may
-        // not start before the found minimum of the same day. The min
-        // pick is an aggregate of the SAME (key, day) group the final
-        // aggregation runs over, so it is a full-partition window over
-        // the candidates — NOT a separate groupBy pass joined back
-        // (the r12 shape): that join recomputed the whole
-        // scan+explode+days-join lineage a second time and re-shuffled
-        // the 3x-exploded corpus through it. The window's
-        // (keys, day) exchange is the exact partitioning the final
-        // groupBy needs, so min-pick and both final picks ride ONE
-        // exchange of one exploded scan.
-        val w = Window.partitionBy(keys.map(col) :+ col("day"): _*)
-        val withMin = cand.withColumn("_m_min_time",
-          min(when(inMin, struct(col(valCol).as("v"), col(tsCol).as("t"))))
-            .over(w).getField("t"))
-        agged(withMin,
-          maxCond(coalesce(unix_micros(col("_m_min_time")), lit(Long.MinValue))))
-      }
-    days.select(keys.map(col) :+ col("day"): _*)
-      .join(picks, keys :+ "day", "left")
+    val (maxLo, maxHi) = bounds("max_occ")
+    // min_first interplay (diurnal.py:313-316): the max window may not
+    // start before the found minimum of the same day; without a min
+    // pick it stays unclamped
+    def inMax(minUs: Column): Column =
+      us >= (if (minFirst) greatest(maxLo, coalesce(minUs, lit(Long.MinValue))) else maxLo) &&
+        us <= maxHi
+    windowedPicks(df, keys, tsCol, valCol, Seq(0, -1, 1), Some(occ),
+      us >= minLo && us <= minHi, inMax, minAnchored = minFirst)
       .filter(col("min_val").isNull || col("max_val").isNull ||
         !(col("min_val") > col("max_val")))
   }

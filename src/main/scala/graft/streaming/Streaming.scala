@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.Diurnal
 
 /** Structured Streaming operators (SURVEY §2 K): watermarked windowed
   * aggregation and stateful gap-based sessionization — the streaming
@@ -114,22 +115,21 @@ object Streaming {
 
   /** Streaming twin of the diurnal extrema pick (B1): per key and
     * event-time day, the min/max value with first-occurrence timestamps
-    * — the same struct-encoded tie-breaks as the batch operator
-    * (min(struct(v, ts)) / max(struct(v, -us, ts))), running as a
-    * watermarked tumbling-day aggregation. Late data within the
-    * watermark refines the day's picks; beyond it the day is final.
+    * — the batch operator's pick columns ([[Diurnal.minPick]] /
+    * [[Diurnal.maxPick]]: first-occurrence tie-breaks, null values never
+    * win), running as a watermarked tumbling-day aggregation. Late data
+    * within the watermark refines the day's picks; beyond it the day is
+    * final.
     */
   def diurnalExtremaStream(events: DataFrame, tsCol: String, keyCol: String,
                            valCol: String,
                            watermarkDelay: String = "1 day"): DataFrame = {
-    val negUs = -unix_micros(col(tsCol))
     events
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), "1 day"), col(keyCol))
       .agg(
-        min(struct(col(valCol).as("v"), col(tsCol).as("t"))).as("_mn"),
-        max(struct(col(valCol).as("v"), negUs.as("nu"), col(tsCol).as("t")))
-          .as("_mx"))
+        Diurnal.minPick(col(valCol), col(tsCol)).as("_mn"),
+        Diurnal.maxPick(col(valCol), col(tsCol)).as("_mx"))
       .select(col("window.start").as("day"), col(keyCol),
         col("_mn.v").as("min_val"), col("_mn.t").as("min_time"),
         col("_mx.v").as("max_val"), col("_mx.t").as("max_time"))

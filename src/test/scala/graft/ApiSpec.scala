@@ -63,6 +63,39 @@ class ApiSpec extends SparkSpec {
     assert(thresholded.df.count() === 1) // day2 amplitude 1 < 5 dropped
   }
 
+  test("DiurnalExtrema minFirst without maxNextDay searches the max after the min, within the day") {
+    val df = series(
+      ("a", "2024-01-01 02:00:00", 8.0), // the day's max, before its min
+      ("a", "2024-01-01 10:00:00", 1.0),
+      ("a", "2024-01-01 15:00:00", 6.0),
+      ("a", "2024-01-02 05:00:00", 7.0),
+      ("a", "2024-01-02 22:00:00", 2.0), // min on the day's last row
+      ("a", "2024-01-03 01:00:00", 9.0)) // next day: only maxNextDay reaches it
+    val out = new DiurnalExtrema(df, Seq("k"), minFirst = true).df
+      .orderBy("day").collect()
+    assert(out(0).getAs[Double]("min_val") === 1.0)
+    assert(out(0).getAs[Double]("max_val") === 6.0)
+    assert(out(0).getAs[java.sql.Timestamp]("max_time") === ts("2024-01-01 15:00:00"))
+    assert(out(1).getAs[Double]("max_val") === 2.0)
+    assert(out(1).getAs[java.sql.Timestamp]("max_time") === ts("2024-01-02 22:00:00"))
+    val nextDay = new DiurnalExtrema(df, Seq("k"), minFirst = true, maxNextDay = true)
+      .df.orderBy("day").collect()
+    assert(nextDay(1).getAs[Double]("max_val") === 9.0)
+  }
+
+  test("changeExtremaPicks findBetween never re-picks a null-valued observation") {
+    val df = Seq(
+      ("a", "2024-01-01 01:00:00", Some(1.0)), ("a", "2024-01-01 06:00:00", None),
+      ("a", "2024-01-01 08:00:00", Some(4.0)), ("a", "2024-01-01 12:00:00", Some(9.0)))
+      .toDF("k", "ts", "value")
+      .select(col("k"), col("ts").cast("timestamp").as("ts"), col("value"))
+    val fixed = new DiurnalExtrema(df, Seq("k"))
+      .changeExtremaPicks("2024-01-01", "min", findBetween = Some((5.0, 9.0)))
+      .df.collect().head
+    assert(fixed.getAs[Double]("min_val") === 4.0)
+    assert(fixed.getAs[java.sql.Timestamp]("min_time") === ts("2024-01-01 08:00:00"))
+  }
+
   test("OnIce facade wires flow angle, velocity, smoothing") {
     val pos = (0 until 48).map { h =>
       ("s1", f"2024-01-0${1 + h / 24}%d ${h % 24}%02d:00:00", 0.5 * h, 0.25 * h)

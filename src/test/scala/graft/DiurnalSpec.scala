@@ -58,6 +58,77 @@ class DiurnalSpec extends SparkSpec {
     assert(out(1).getAs[java.lang.Double]("max_val") === 5.0)
   }
 
+  private def nullable(rows: (Option[String], String, Option[Double])*) =
+    rows.toDF("k", "t", "v").select(col("k"),
+      col("t").cast("timestamp").as("t"), col("v"))
+
+  test("extremaPredicted never picks a null-valued observation") {
+    // calibrated on days 1-2: min at 06:00, max at 14:00; day 3's null
+    // row sits inside its min window, ahead of the real minimum
+    val df = nullable(
+      (Some("a"), "2024-01-01 02:00:00", Some(5.0)), (Some("a"), "2024-01-01 06:00:00", Some(1.0)),
+      (Some("a"), "2024-01-01 14:00:00", Some(9.0)),
+      (Some("a"), "2024-01-02 02:00:00", Some(5.0)), (Some("a"), "2024-01-02 06:00:00", Some(1.0)),
+      (Some("a"), "2024-01-02 14:00:00", Some(9.0)),
+      (Some("a"), "2024-01-03 06:00:00", None), (Some("a"), "2024-01-03 14:00:00", Some(3.0)),
+      (Some("a"), "2024-01-03 16:00:00", Some(7.0)))
+    Seq(false, true).foreach { minFirst =>
+      val day3 = Diurnal.extremaPredicted(df, Seq("k"), "t", "v", "2024-01-03",
+          minFirst = minFirst)
+        .filter(col("day") === lit("2024-01-03").cast("timestamp")).collect().head
+      assert(day3.getAs[java.lang.Double]("min_val") === 3.0, s"minFirst=$minFirst")
+      assert(day3.getAs[java.sql.Timestamp]("min_time") === ts("2024-01-03 14:00:00"))
+      assert(day3.getAs[java.lang.Double]("max_val") === 7.0)
+      assert(day3.getAs[java.sql.Timestamp]("max_time") === ts("2024-01-03 16:00:00"))
+    }
+  }
+
+  test("windowed forms on degenerate input: empty, all-null, single row, gaps, null key, duplicate timestamps, uncalibrated key") {
+    type Pick = (String, java.sql.Timestamp, Option[Double],
+      Option[java.sql.Timestamp], Option[Double], Option[java.sql.Timestamp])
+    def picks(df: org.apache.spark.sql.DataFrame): Set[Pick] =
+      df.collect().map(r => (r.getString(0), r.getTimestamp(1),
+        Option(r.get(2)).map(_.asInstanceOf[Double]), Option(r.getTimestamp(3)),
+        Option(r.get(4)).map(_.asInstanceOf[Double]), Option(r.getTimestamp(5)))).toSet
+    val d1 = "2024-01-01"; val d3 = "2024-01-03"
+    val df = nullable(
+      (Some("allnull"), s"$d1 03:00:00", None), (Some("allnull"), s"$d1 12:00:00", None),
+      (Some("single"), s"$d1 10:00:00", Some(5.0)),
+      // day 2 is a candidate day of both neighbours, with no own row
+      (Some("gap"), s"$d1 04:00:00", Some(3.0)), (Some("gap"), s"$d1 16:00:00", Some(8.0)),
+      (Some("gap"), s"$d3 04:00:00", Some(2.0)), (Some("gap"), s"$d3 16:00:00", Some(6.0)),
+      (None, s"$d1 05:00:00", Some(1.0)),
+      (Some("dup"), s"$d1 06:00:00", Some(2.0)), (Some("dup"), s"$d1 06:00:00", Some(2.0)),
+      (Some("dup"), s"$d1 06:00:00", Some(7.0)), (Some("dup"), s"$d1 12:00:00", Some(7.0)),
+      // no row before the calibration end
+      (Some("late"), s"$d3 09:00:00", Some(4.0)), (Some("late"), s"$d3 15:00:00", Some(5.0)))
+    def p(k: String, day: String, mn: Option[(Double, String)],
+          mx: Option[(Double, String)]): Pick =
+      (k, ts(s"$day 00:00:00"), mn.map(_._1), mn.map(m => ts(s"$day ${m._2}")),
+        mx.map(_._1), mx.map(m => ts(s"$day ${m._2}")))
+    val common = Set(
+      p("single", d1, Some(5.0 -> "10:00:00"), Some(5.0 -> "10:00:00")),
+      p("gap", d1, Some(3.0 -> "04:00:00"), Some(8.0 -> "16:00:00")),
+      p("gap", d3, Some(2.0 -> "04:00:00"), Some(6.0 -> "16:00:00")),
+      p("dup", d1, Some(2.0 -> "06:00:00"), Some(7.0 -> "06:00:00")))
+    // min-first forms drop days without a non-null value; predicted keeps
+    // the calibrated all-null day with null picks and has no picks for
+    // the uncalibrated key
+    val minFirst = common + p("late", d3, Some(4.0 -> "09:00:00"), Some(5.0 -> "15:00:00"))
+    val predicted = common + p("allnull", d1, None, None)
+    val forms = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, Set[Pick])](
+      ("minFirst", Diurnal.extremaMinFirst(_, Seq("k"), "t", "v"), minFirst),
+      ("minFirstInDay", Diurnal.extremaMinFirstInDay(_, Seq("k"), "t", "v"), minFirst),
+      ("predicted", Diurnal.extremaPredicted(_, Seq("k"), "t", "v", "2024-01-02"), predicted),
+      ("predictedMinFirst", Diurnal.extremaPredicted(_, Seq("k"), "t", "v", "2024-01-02",
+        minFirst = true), predicted))
+    forms.foreach { case (name, form, expected) =>
+      assert(form(df.filter(lit(false))).count() === 0, s"$name on an empty frame")
+      val got = picks(form(df))
+      assert(got === expected, s"$name: extra=${got -- expected} missing=${expected -- got}")
+    }
+  }
+
   test("applyThreshold drops days with amplitude below threshold") {
     val df = series(
       ("a", "2024-01-01 01:00:00", 1.0), ("a", "2024-01-01 12:00:00", 9.0), // amp 8

@@ -156,6 +156,32 @@ class PlanSpec extends SparkSpec {
       s"boundary check re-shuffles:\n$plan")
   }
 
+  test("windowed diurnal picks: one exploded events scan, no join but the calibration broadcast") {
+    // min-first and predicted are one body: each observation explodes
+    // once into its candidate days, and one (user_id, day) exchange
+    // carries both the min-pick window and the final groupBy. The
+    // predicted forms also scan the events for the calibration and join
+    // it as a broadcast dim on user_id; that side adds the plain-extrema
+    // exchange and a per-key one. AQE off so the physical plan is final
+    // before execution.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try for (sf <- Seq(dir, dir.replace("sf0.001", "sf0.1"));
+             (name, (scans, joins, exchanges)) <- Seq("diurnal_minfirst" -> (1, 0, 1),
+               "diurnal_predict" -> (2, 1, 3), "diurnal_predict_minfirst" -> (2, 1, 3))) {
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+      val eventScans = plan.collect { case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.getName == "events.parquet") => s }
+      assert(eventScans.size === scans, s"$name scans the events ${eventScans.size}x:\n$plan")
+      assert(plan.collect { case j: BaseJoinExec => j }.size === joins,
+        s"$name joins more than the calibration:\n$plan")
+      assert("Exchange hashpartitioning".r.findAllIn(plan.toString).size === exchanges,
+        s"$name re-shuffles:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("ds_sample / ds_budget / ds_mix never shuffle the corpus rows") {
     // L-family filters are scan + (broadcast join +) row-local predicate;
     // the only exchanges allowed are the tiny dim/totals aggregations

@@ -1056,6 +1056,93 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("batch windowed diurnal picks equal the in-memory windowed-pick reference, with ties and null values") {
+    import graft.operators.Diurnal
+    // every form of the one windowed body against the documented
+    // contract: per OBSERVED (key, day), the earliest min of the non-null
+    // values in the min window, then the earliest max in the max window
+    // (starting at the min pick for the min-first forms). Hourly slots
+    // and values 1-5 force duplicate timestamps and value ties; about
+    // one value in six is null. The predicted forms take their per-key
+    // hours from predictedOccurrences, the shared calibration step.
+    val dayUsL = 86400000000L
+    val gen = for {
+      n <- Gen.choose(10, 40)
+      evs <- Gen.listOfN(n, for {
+        k <- Gen.choose(1, 2)
+        d <- Gen.choose(0, 3)
+        h <- Gen.choose(0, 23)
+        v <- Gen.choose(0, 5)
+      } yield (k.toLong, d, h, if (v == 0) None else Some(v.toDouble)))
+      half <- Gen.oneOf(2, 4, 8)
+    } yield (evs, half)
+    val baseUs = ts("2024-01-01 00:00:00").getTime * 1000L
+    type Ev = (Long, Long, Option[Double]) // key, us, value
+    type Out = (Long, Long, Option[Double], Option[Long], Option[Double], Option[Long])
+    def earliest(es: Seq[Ev], byMax: Boolean): Option[Ev] = {
+      val c = es.filter(_._3.isDefined)
+      if (c.isEmpty) None
+      else Some(c.minBy(e => (if (byMax) -e._3.get else e._3.get, e._2)))
+    }
+    def reference(events: Seq[Ev], minWin: (Long, Long) => Seq[Ev],
+                  maxWin: (Long, Long, Option[Ev]) => Seq[Ev],
+                  keep: (Option[Ev], Option[Ev]) => Boolean): Set[Out] =
+      (for {
+        (k, es) <- events.groupBy(_._1).toSeq
+        day <- es.map(e => e._2 - java.lang.Math.floorMod(e._2, dayUsL)).distinct
+        mn = earliest(minWin(k, day), byMax = false)
+        mx = earliest(maxWin(k, day, mn), byMax = true)
+        if keep(mn, mx)
+      } yield (k, day / 1000L, mn.map(_._3.get), mn.map(_._2),
+        mx.map(_._3.get), mx.map(_._2))).toSet
+    def run(df: org.apache.spark.sql.DataFrame): Set[Out] =
+      df.collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime,
+        Option(r.get(2)).map(_.asInstanceOf[Double]),
+        Option(r.getTimestamp(3)).map(_.getTime * 1000L),
+        Option(r.get(4)).map(_.asInstanceOf[Double]),
+        Option(r.getTimestamp(5)).map(_.getTime * 1000L))).toSet
+    samples(gen, 6, 41017L).zipWithIndex.foreach { case ((evs, half), i) =>
+      val events: Seq[Ev] = evs.map { case (k, d, h, v) =>
+        (k, baseUs + d * dayUsL + h * 3600000000L, v) }
+      val df = events.map { case (k, us, v) => (k, new java.sql.Timestamp(us / 1000L), v) }
+        .toDF("k", "t", "v")
+      def in(k: Long, lo: Long, hi: Long) =
+        events.filter(e => e._1 == k && e._2 >= lo && e._2 <= hi)
+      def ownDay(k: Long, day: Long) = in(k, day, day + dayUsL - 1)
+      val minFirstKeep = (mn: Option[Ev], mx: Option[Ev]) =>
+        mn.isDefined && !(mn.get._3.get > mx.get._3.get)
+      val nextDay = reference(events, ownDay,
+        (k, _, mn) => mn.toSeq.flatMap(m => in(k, m._2, m._2 + 18 * 3600000000L)),
+        minFirstKeep)
+      assert(run(Diurnal.extremaMinFirst(df, Seq("k"), "t", "v")) === nextDay,
+        s"case $i minFirst")
+      val inDay = reference(events, ownDay,
+        (k, day, mn) => mn.toSeq.flatMap(m => in(k, m._2, day + dayUsL - 1)),
+        minFirstKeep)
+      assert(run(Diurnal.extremaMinFirstInDay(df, Seq("k"), "t", "v")) === inDay,
+        s"case $i minFirstInDay")
+      val calibEnd = "2024-01-03"
+      val occ = Diurnal.predictedOccurrences(df, Seq("k"), "t", "v", calibEnd)
+        .collect().map(r => r.getLong(0) ->
+          ((Option(r.get(1)).map(_.asInstanceOf[Double]),
+            Option(r.get(2)).map(_.asInstanceOf[Double])))).toMap
+      def win(day: Long, occH: Option[Double]) = occH.map(h => (
+        day + math.floor((h - half) * 3600e6).toLong,
+        day + math.floor((h + half) * 3600e6).toLong))
+      Seq(false, true).foreach { minFirst =>
+        val exp = reference(events.filter(e => occ.contains(e._1)),
+          (k, day) => win(day, occ(k)._1).toSeq.flatMap { case (lo, hi) => in(k, lo, hi) },
+          (k, day, mn) => win(day, occ(k)._2).toSeq.flatMap { case (lo, hi) =>
+            in(k, if (minFirst) mn.fold(lo)(m => math.max(lo, m._2)) else lo, hi) },
+          (mn, mx) => !(mn.isDefined && mx.isDefined && mn.get._3.get > mx.get._3.get))
+        val got = run(Diurnal.extremaPredicted(df, Seq("k"), "t", "v", calibEnd,
+          halfWindowHours = half, minFirst = minFirst))
+        assert(got === exp, s"case $i half=$half minFirst=$minFirst: " +
+          s"extra=${got -- exp} missing=${exp -- got}")
+      }
+    }
+  }
+
   test("minhashLsh finds every planted exact duplicate; every emitted jaccard is the true shingle jaccard") {
     samples(genCorpus, 6, 4004L).zipWithIndex.foreach { case ((texts, dupOf), i) =>
       val n = texts.size

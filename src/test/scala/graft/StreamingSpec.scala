@@ -380,6 +380,28 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("diurnalExtremaStream never picks a null-valued observation") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(java.sql.Timestamp, Long, Option[Double])]
+    val df = input.toDF().toDF("ts", "user_id", "value")
+    val q = Streaming.diurnalExtremaStream(df, "ts", "user_id", "value")
+      .writeStream.format("memory").queryName("diurnal_stream_nulls")
+      .outputMode(OutputMode.Complete()).start()
+    try {
+      input.addData(
+        (ts("2024-01-01 02:00:00"), 1L, None),
+        (ts("2024-01-01 06:00:00"), 1L, Some(4.0)),
+        (ts("2024-01-01 09:00:00"), 1L, Some(2.0)),
+        (ts("2024-01-01 15:00:00"), 1L, Some(8.0)))
+      q.processAllAvailable()
+      val r = spark.table("diurnal_stream_nulls").collect().head
+      assert(r.getAs[java.lang.Double]("min_val") === 2.0)
+      assert(r.getAs[java.sql.Timestamp]("min_time") === ts("2024-01-01 09:00:00"))
+      assert(r.getAs[java.lang.Double]("max_val") === 8.0)
+      assert(r.getAs[java.sql.Timestamp]("max_time") === ts("2024-01-01 15:00:00"))
+    } finally q.stop()
+  }
+
   test("diurnalExtremaStream picks per-day extrema with batch tie-breaks") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, Long, Double)]
