@@ -25,6 +25,12 @@ object IndexMaintenance {
     fileSystem(spark, path).exists(new Path(s"$path/meta/_SUCCESS"))
 }
 
+object PersistedIndex {
+
+  /** Rows per data file that builds and compactions aim for. */
+  val TargetFileRows: Long = 4000000L
+}
+
 /** A persisted index: parquet tables under one directory, appended to
   * by a single-writer ingest owner, and compacted by that same owner.
   * The subclass supplies its appended-to data tables and how each is
@@ -68,7 +74,7 @@ abstract class PersistedIndex[Self <: PersistedIndex[Self]] { this: Self =>
   @volatile private var autoPolicy: Option[(Int, Long)] = None
 
   def withAutoMaintenance(maxFiles: Int = 64,
-                          targetFileRows: Long = 4000000L): Self = {
+                          targetFileRows: Long = PersistedIndex.TargetFileRows): Self = {
     require(maxFiles > 0 && targetFileRows > 0,
       "auto-maintenance thresholds must be positive")
     autoPolicy = Some((maxFiles, targetFileRows))
@@ -110,7 +116,7 @@ abstract class PersistedIndex[Self <: PersistedIndex[Self]] { this: Self =>
     * as recoverable).
     */
   def compactIfFragmented(maxFiles: Int = 64,
-                          targetFileRows: Long = 4000000L): Boolean = {
+                          targetFileRows: Long = PersistedIndex.TargetFileRows): Boolean = {
     recover()
     val fragmented = dataFileCount() > maxFiles
     if (fragmented) compact(targetFileRows)
@@ -123,7 +129,7 @@ abstract class PersistedIndex[Self <: PersistedIndex[Self]] { this: Self =>
     * as appends — an append racing a compaction would be dropped by the
     * rewrite.
     */
-  def compact(targetFileRows: Long = 4000000L): Unit = {
+  def compact(targetFileRows: Long = PersistedIndex.TargetFileRows): Unit = {
     require(targetFileRows > 0, "targetFileRows must be positive")
     recover()
     dataTables.foreach(t => writeCompacted(t, s"$path/${t}_next", targetFileRows))

@@ -238,7 +238,8 @@ object LshIndex {
       load(docs.sparkSession, path, shingleN, numHashes, bands)
     else build(docs, idCol, textCol, path, shingleN, numHashes, bands)
 
-  /** Open an existing index. The persisted parameter record must match
+  /** Open an existing index, reading its parameter record on the driver
+    * (no Spark job). The persisted parameter record must match
     * the requested parameters — a mismatch would silently collapse
     * buckets (element_at past the stored signature length) and
     * mis-scale every estimate, so it throws instead. Every index this
@@ -252,7 +253,7 @@ object LshIndex {
     require(exists(spark, path),
       s"LshIndex at $path has no meta record — not an index this class " +
         "built (build() always persists meta). Rebuild it with build().")
-    val m = graft.tables.Tables.open(spark, s"$path/meta").head
+    val m = graft.tables.Tables.rows(spark, s"$path/meta").head
     val (sn, nh, nb) = (m.getAs[Int]("shingle_n"),
       m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"))
     require(sn == shingleN && nh == numHashes && nb == bands,

@@ -57,8 +57,10 @@ object SimilarityQueries extends QueryPack {
     * probe-only cost: rank 16 centroids, partition-pruned scan of 4 of
     * 16 buckets, exact top-k within (SURVEY §8 #3). buildOrRefresh (not
     * buildOrLoad): a dataset regenerated in place at the same sf dir
-    * must not be served from the stale index, and the count probe it
-    * costs is trivial at harness scale.
+    * must not be served from the stale index. That staleness check
+    * costs one count of the corpus's non-null vectors per call (its
+    * meta read is job-free); the probe itself is one job, the query
+    * vector's collect, before the pruned scan.
     */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
     val san = dir.replaceAll("[^A-Za-z0-9.]+", "_")

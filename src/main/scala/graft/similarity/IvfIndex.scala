@@ -18,7 +18,9 @@ import graft.tables.Tables
   *     shows up as PartitionFilters in the scan, not a post-read filter.
   *   - the only driver-side materialization is k×dim centroids and the
   *     nProbe probed centroid ids (both bounded by k, same convention
-  *     as kmeansCentroids).
+  *     as kmeansCentroids); the driver reads the small `meta/` and
+  *     `centroids/` tables itself ([[graft.tables.Tables.rows]]), with
+  *     no Spark job.
   */
 final class IvfIndex private (val spark: SparkSession, val path: String,
                               val idCol: String, val vecCol: String)
@@ -29,22 +31,31 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
   /** Corpus vectors partitioned by their nearest centroid. */
   def assignments: DataFrame = Tables.open(spark, s"$path/assignments")
 
+  /** The stored centroid table as the driver-side (cid, vector) array the
+    * assignment and probe rankings take, read with no Spark job.
+    */
+  private def storedCentroids(): Array[(Long, Array[Double])] =
+    Tables.rows(spark, s"$path/centroids")
+      .map(r => (r.getAs[Long]("cid"), r.getAs[Seq[Double]]("centroid").toArray))
+
   /** ANN top-k: rank centroids against the query (k×dim, driver-side),
     * then scan only the nProbe winning partitions and rank exactly.
     */
   def topK(query: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val qv = query.select(col(vecCol).cast("array<double>").as("_qv"))
-    // probed cids: |centroids| is k (small by construction) — ranking it
-    // against the 1-row query on the driver is bounded work and yields
-    // LITERAL partition predicates the parquet scan can prune with.
-    val probed = centroids.crossJoin(broadcast(qv))
-      .select(col("cid"),
-        cosineSimilarity(col("centroid"), col("_qv")).as("_csim"))
-      .orderBy(col("_csim").desc, col("cid"))
-      .limit(nProbe)
-      .collect().map(_.getLong(0))
-    val cand = assignments.filter(col("cid").isin(probed.map(Long.box): _*))
+    // LITERAL partition predicates the parquet scan can prune with
+    val cand = assignments.filter(col("cid").isin(probedCids(query, nProbe).map(Long.box): _*))
     Similarity.bruteForceTopK(cand, idCol, vecCol, query, k)
+  }
+
+  /** The buckets [[topK]] scans: the query vectors, collected (one job),
+    * ranked on the driver against the k driver-held centroids — every
+    * (query, centroid) pair by cosine, the first nProbe pairs' cids.
+    */
+  private[graft] def probedCids(query: DataFrame, nProbe: Int): Array[Long] = {
+    val qvs = query.select(col(vecCol).cast("array<double>")).collect()
+      .map(r => if (r.isNullAt(0)) null else r.getSeq[Double](0).toArray)
+    org.apache.spark.sql.graft.CentroidExpressions
+      .probedCids(qvs.toSeq, storedCentroids(), nProbe)
   }
 
   /** Incremental maintenance: assign NEW vectors to the existing
@@ -63,7 +74,7 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     * a row in place).
     */
   def addVectors(newVectors: DataFrame): Unit = {
-    val cents = Similarity.collectCentroids(centroids, "cid", "centroid")
+    val cents = storedCentroids()
     newVectors
       .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
       // a NULL vector has no nearest centroid: skip it (writing it
@@ -137,30 +148,17 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     * SCALING.md "r13: index lifecycle under append-heavy ingest": 8
     * appends took the sg100 index from 240 to 2,146 files and topKBatch
     * from 0.68 s to ~3.2 s, and [[recenter]] (which rewrites only the
-    * k-row centroid table) cannot recover it. Compaction keeps the BY-CID
-    * partition layout probes prune with: rows are hash-salted into
-    * `ceil(bucketRows / targetFileRows)` sub-files per bucket (one task
-    * per (cid, salt) ⇒ bounded, right-sized files at any corpus scale —
-    * a 100 TB index with k buckets of 25M vectors compacts to
-    * ~targetFileRows-row files, never one monolith per bucket).
+    * k-row centroid table) cannot recover it. Compaction rewrites the
+    * table in the layout [[IvfIndex.build]] writes
+    * (`IvfIndex.writeBuckets`), keeping the BY-CID partitions probes
+    * prune with.
     */
   protected def dataTables: Seq[String] = Seq("assignments")
 
   protected def writeCompacted(table: String, dest: String,
-                               targetFileRows: Long): Unit = {
-    val n = assignments.count()
-    val nCids = math.max(1L, centroids.count())
-    // sub-files per bucket sized from the MEAN bucket (k-means buckets
-    // are ~n/k by construction; a pathologically skewed bucket writes
-    // proportionally more rows per file, which is the rebuild-k signal,
-    // not a compaction failure)
-    val filesPerCid = math.max(1L,
-      (n / nCids + targetFileRows - 1) / targetFileRows).toInt
-    assignments
-      .repartition((nCids * filesPerCid).toInt, col("cid"),
-        pmod(xxhash64(col(idCol)), lit(filesPerCid.toLong)))
-      .write.mode("overwrite").partitionBy("cid").parquet(dest)
-  }
+                               targetFileRows: Long): Unit =
+    IvfIndex.writeBuckets(assignments, idCol, assignments.count(),
+      storedCentroids().length, targetFileRows, dest)
 
   /** Drift-triggered maintenance policy (SURVEY §9 #4): re-center when
     * any non-empty bucket's stored centroid has drifted below
@@ -205,7 +203,7 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     */
   def topKBatch(queries: DataFrame, queryIdCol: String, k: Int,
                 nProbe: Int, excludeSelf: Boolean = false): DataFrame = {
-    val cents = Similarity.collectCentroids(centroids, "cid", "centroid")
+    val cents = storedCentroids()
     val probes = queries
       .select(col(queryIdCol).as("query_id"),
         col(vecCol).cast("array<double>").as("_qv"))
@@ -232,10 +230,14 @@ object IvfIndex {
 
   /** Build the index: k-means centroids (Lloyd's, deterministic seeds),
     * assign every vector to its nearest centroid, write both tables
-    * plus a one-row meta table recording the indexed corpus size (the
-    * staleness handle for [[IvfIndex.isStale]]). One pass over the
-    * corpus beyond the k-means iterations; the assignment join
-    * broadcasts the centroid table.
+    * plus a one-row meta table recording the indexed vector count (the
+    * staleness handle for [[IvfIndex.isStale]]). Beyond the k-means
+    * iterations, two passes over the corpus: a count of its non-null
+    * vectors, which sizes the bucket files, and the assignment write,
+    * whose argmax is a row-local projection and whose one exchange
+    * groups rows into [[writeBuckets]]'s (cid, salt) files — the layout
+    * compaction leaves, so a fresh index holds right-sized files per
+    * bucket instead of one file per input split per bucket.
     */
   def build(df: DataFrame, idCol: String, vecCol: String, path: String,
             k: Int = 16, iterations: Int = 2,
@@ -245,20 +247,42 @@ object IvfIndex {
       fitSampleRate)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     // assign from the PERSISTED table (exact doubles survive the parquet
-    // roundtrip) via the row-local argmax projection — one zero-exchange
-    // pass over the corpus
-    val stored = Similarity.collectCentroids(
-      Tables.open(spark, s"$path/centroids"), "cid", "centroid")
-    df.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
+    // roundtrip)
+    val idx = new IvfIndex(spark, path, idCol, vecCol)
+    val stored = idx.storedCentroids()
+    val vecs = df.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
       .filter(col(vecCol).isNotNull) // null vectors are unindexable
-      .select(org.apache.spark.sql.graft.CentroidExpressions
+    val n = vecs.count()
+    writeBuckets(vecs.select(org.apache.spark.sql.graft.CentroidExpressions
           .nearestCentroidId(col(vecCol), stored).as("cid"),
-        col(idCol), col(vecCol))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$path/assignments")
-    Tables.open(spark, s"$path/assignments")
-      .agg(count(lit(1)).as("n_vectors"))
+        col(idCol), col(vecCol)),
+      idCol, n, stored.length, graft.PersistedIndex.TargetFileRows,
+      s"$path/assignments")
+    import spark.implicits._
+    Seq(n).toDF("n_vectors")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    new IvfIndex(spark, path, idCol, vecCol)
+    idx
+  }
+
+  /** The assignment layout build and compaction both write: partitioned
+    * by cid, rows hash-salted into `ceil(meanBucket / targetFileRows)`
+    * sub-files per bucket, one task per (cid, salt) ⇒ bounded,
+    * right-sized files at any corpus scale (a 100 TB index with k
+    * buckets of 25M vectors holds ~targetFileRows-row files, never one
+    * monolith per bucket). Sub-files are sized from the MEAN bucket of
+    * `n` rows over `nCids` buckets: k-means buckets are ~n/k by
+    * construction, and a pathologically skewed bucket writes
+    * proportionally more rows per file, which is the rebuild-k signal,
+    * not a layout failure.
+    */
+  private def writeBuckets(rows: DataFrame, idCol: String, n: Long, nCids: Int,
+                           targetFileRows: Long, dest: String): Unit = {
+    val buckets = math.max(1L, nCids.toLong)
+    val filesPerCid = math.max(1L,
+      (n / buckets + targetFileRows - 1) / targetFileRows).toInt
+    rows.repartition((buckets * filesPerCid).toInt, col("cid"),
+        pmod(xxhash64(col(idCol)), lit(filesPerCid.toLong)))
+      .write.mode("overwrite").partitionBy("cid").parquet(dest)
   }
 
   /** Open an already-built index. */
@@ -303,17 +327,18 @@ object IvfIndex {
     } else build(df, idCol, vecCol, path, k, iterations)
 
   /** Cheap-but-not-free staleness probe: compares the indexed vector
-    * count recorded at build time with the current corpus count (one
-    * count scan of each). A matching count does not PROVE freshness —
-    * an equal-size rewrite slips through — but it catches the common
-    * regenerated/filtered-dataset case the path-only contract misses.
+    * count recorded at build time (read on the driver, no Spark job) with
+    * the corpus's current count of non-null vectors — the rows
+    * [[IvfIndex.build]] indexes — in one count scan. A matching count
+    * does not PROVE freshness — an equal-size rewrite slips through — but
+    * it catches the common regenerated/filtered-dataset case the
+    * path-only contract misses.
     */
   def isStale(index: IvfIndex, corpus: DataFrame): Boolean = {
     // an index with no meta record (pre-meta build, partial write)
     // cannot prove freshness — report stale rather than crash
     if (!exists(index.spark, index.path)) return true
-    val indexed = Tables.open(index.spark, s"${index.path}/meta")
-      .head.getLong(0)
-    indexed != corpus.count()
+    val indexed = Tables.rows(index.spark, s"${index.path}/meta").head.getLong(0)
+    indexed != corpus.filter(col(index.vecCol).isNotNull).count()
   }
 }

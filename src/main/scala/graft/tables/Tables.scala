@@ -1,6 +1,6 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Canonical loaders for the driver-generated test tables.
@@ -28,6 +28,16 @@ object Tables {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
+
+  /** Every row of a small persisted table (a persisted index's meta or
+    * centroid table), read on the driver with no Spark job
+    * ([[org.apache.spark.sql.graft.ParquetFooters.rows]]); equal to
+    * `open(spark, path).collect()`, which it falls back to where [[open]]
+    * falls back to inference, so a missing table fails as [[open]] does.
+    */
+  def rows(spark: SparkSession, path: String): Array[Row] =
+    org.apache.spark.sql.graft.ParquetFooters.rows(spark, path)
+      .getOrElse(open(spark, path).collect())
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     open(spark, s"$dir/$name.parquet")

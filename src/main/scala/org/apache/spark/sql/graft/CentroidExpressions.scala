@@ -59,40 +59,17 @@ case class NearestCentroidIds(child: Expression, cids: Seq[Long],
   @transient private lazy val centArr: Array[Array[Double]] =
     centroids.map(_.toArray).toArray
   @transient private lazy val centNorm: Array[Double] =
-    centArr.map { cv =>
-      var s = 0.0; var j = 0
-      while (j < cv.length) { s += cv(j) * cv(j); j += 1 }
-      math.sqrt(s)
-    }
+    NearestCentroidIds.norms(centArr)
 
   /** Rank all k centroids against one vector, return the top-n cids.
     * Called per row from both interpreted eval and the generated code.
     */
   def select(v: ArrayData): ArrayData = {
-    val dim = v.numElements()
-    var vn = 0.0
-    var j = 0
-    while (j < dim) { val x = v.getDouble(j); vn += x * x; j += 1 }
-    val vnorm = math.sqrt(vn)
-    val k = cidArr.length
-    val sims = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val cv = centArr(c)
-      if (cv.length != dim) sims(c) = Double.NegativeInfinity
-      else {
-        var dot = 0.0
-        var i = 0
-        while (i < dim) { dot += v.getDouble(i) * cv(i); i += 1 }
-        val denom = vnorm * centNorm(c)
-        sims(c) =
-          if (denom == 0.0) Double.NegativeInfinity else dot / denom
-      }
-      c += 1
-    }
+    val sims = NearestCentroidIds.similarities(v, centArr, centNorm)
     // partial selection sort: n is small (1 for argmax, nProbe for IVF
     // probes), k is bounded by the centroid table — O(n*k), no alloc
     // beyond the output
+    val k = cidArr.length
     val keep = math.min(n, k)
     val idx = new Array[Int](k)
     var t = 0
@@ -103,8 +80,8 @@ case class NearestCentroidIds(child: Expression, cids: Seq[Long],
       var best = r
       var s = r + 1
       while (s < k) {
-        val cmp = java.lang.Double.compare(sims(idx(s)), sims(idx(best)))
-        if (cmp > 0 || (cmp == 0 && cidArr(idx(s)) < cidArr(idx(best)))) best = s
+        if (NearestCentroidIds.ahead(sims(idx(s)), cidArr(idx(s)),
+              sims(idx(best)), cidArr(idx(best)))) best = s
         s += 1
       }
       val tmp = idx(r); idx(r) = idx(best); idx(best) = tmp
@@ -130,6 +107,53 @@ case class NearestCentroidIds(child: Expression, cids: Seq[Long],
     copy(child = newChild)
 }
 
+object NearestCentroidIds {
+
+  private[graft] def norms(cents: Array[Array[Double]]): Array[Double] =
+    cents.map { cv =>
+      var s = 0.0; var j = 0
+      while (j < cv.length) { s += cv(j) * cv(j); j += 1 }
+      math.sqrt(s)
+    }
+
+  /** The cosine of `v` against every centroid, in table order, with a
+    * null similarity as -Infinity (the ranking contract above).
+    */
+  private[graft] def similarities(v: ArrayData, cents: Array[Array[Double]],
+                                  norms: Array[Double]): Array[Double] = {
+    val dim = v.numElements()
+    var vn = 0.0
+    var j = 0
+    while (j < dim) { val x = v.getDouble(j); vn += x * x; j += 1 }
+    val vnorm = math.sqrt(vn)
+    val sims = new Array[Double](cents.length)
+    var c = 0
+    while (c < cents.length) {
+      val cv = cents(c)
+      if (cv.length != dim) sims(c) = Double.NegativeInfinity
+      else {
+        var dot = 0.0
+        var i = 0
+        while (i < dim) { dot += v.getDouble(i) * cv(i); i += 1 }
+        val denom = vnorm * norms(c)
+        sims(c) =
+          if (denom == 0.0) Double.NegativeInfinity else dot / denom
+      }
+      c += 1
+    }
+    sims
+  }
+
+  /** True when (similarity `sa`, cid `ca`) ranks strictly before
+    * (`sb`, `cb`): higher similarity first, NaN above every value, ties
+    * to the smaller cid.
+    */
+  private[graft] def ahead(sa: Double, ca: Long, sb: Double, cb: Long): Boolean = {
+    val cmp = java.lang.Double.compare(sa, sb)
+    cmp > 0 || (cmp == 0 && ca < cb)
+  }
+}
+
 object CentroidExpressions {
 
   /** Top-`n` nearest centroid ids (cosine desc, cid asc) of a
@@ -141,6 +165,26 @@ object CentroidExpressions {
     ExpressionUtils.column(NearestCentroidIds(
       ExpressionUtils.expression(v.cast(ArrayType(DoubleType))),
       cents.map(_._1).toSeq, cents.map(_._2.toSeq).toSeq, n))
+
+  /** The distinct cids among the first `n` (query, centroid) pairs, all
+    * pairs ranked under [[NearestCentroidIds]]'s contract — the probe set
+    * `cents.crossJoin(queries).orderBy(cosine.desc, cid).limit(n)`
+    * selects, computed on the driver. A null query vector pairs every
+    * centroid at a null similarity; no queries or no centroids probe
+    * nothing.
+    */
+  def probedCids(queries: Seq[Array[Double]], cents: Array[(Long, Array[Double])],
+                 n: Int): Array[Long] = {
+    val centArr = cents.map(_._2)
+    val norms = NearestCentroidIds.norms(centArr)
+    queries.flatMap { q =>
+      val sims =
+        if (q == null) Array.fill(cents.length)(Double.NegativeInfinity)
+        else NearestCentroidIds.similarities(new GenericArrayData(q), centArr, norms)
+      sims.indices.map(c => (sims(c), cents(c)._1))
+    }.sortWith { case ((sa, ca), (sb, cb)) => NearestCentroidIds.ahead(sa, ca, sb, cb) }
+      .take(n).map(_._2).distinct.toArray
+  }
 
   /** The single nearest centroid id (argmax) — the k-means / IVF /
     * SemDeDup assignment projection.

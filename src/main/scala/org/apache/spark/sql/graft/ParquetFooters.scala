@@ -1,10 +1,14 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -23,6 +27,11 @@ import org.apache.spark.util.HadoopFSUtils
   * `readSchemaFromFooter` (the `org.apache.spark.sql.parquet.row.metadata`
   * key first, else `ParquetToSparkSchemaConverter` built from the session
   * conf the way the merge job builds it), so the result equals inference.
+  *
+  * [[rows]] reads a whole small table the same way: the driver lists its
+  * files and runs Spark's own `ParquetFileFormat` reader over each, so a
+  * persisted index's one-row meta table or k-row centroid table costs no
+  * Spark job to read.
   */
 object ParquetFooters {
 
@@ -31,7 +40,57 @@ object ParquetFooters {
     * reads with inference and gets Spark's own errors), or when the
     * session merges schemas across all files.
     */
-  def inferredSchema(spark: SparkSession, path: String): Option[StructType] = {
+  def inferredSchema(spark: SparkSession, path: String): Option[StructType] =
+    listed(spark, path).flatMap(_.schema(spark))
+
+  /** Every row of the small, unpartitioned parquet table at `path`, read
+    * on the driver with no Spark job: the rows
+    * `spark.read.parquet(path).collect()` returns, in its order for a
+    * one-file table (each index's meta and centroid table is one file).
+    * The schema is [[inferredSchema]]'s, the values come from
+    * `ParquetFileFormat`'s reader under the session conf, and files are
+    * read largest first, as a scan packs them. None exactly when
+    * [[inferredSchema]] is None. Every row is held in driver memory, so
+    * this is for tables bounded by construction, never a corpus.
+    */
+  def rows(spark: SparkSession, path: String): Option[Array[Row]] =
+    listed(spark, path).flatMap { table =>
+      table.schema(spark).map { schema =>
+        val files = table.files.filterNot(f => isSummary(f.getPath.getName))
+        require(!table.root.isDirectory ||
+            files.forall(_.getPath.getParent == table.root.getPath),
+          s"$path is partitioned; rows reads unpartitioned tables only")
+        val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+          schema, new StructType(), schema, Nil,
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), table.hadoopConf)
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        files.sortBy(f => (-f.getLen, f.getPath.toString))
+          .flatMap { f =>
+            read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath),
+              0L, f.getLen, Array.empty[String], f.getModificationTime, f.getLen))
+              .map(r => toRow(r).asInstanceOf[Row])
+          }.toArray
+      }
+    }
+
+  /** A table's root and the leaf files the file index would list, sorted
+    * by path; None when the path does not exist or the session merges
+    * schemas.
+    */
+  private case class Listed(hadoopConf: Configuration, root: FileStatus,
+                            files: Seq[FileStatus]) {
+    /** The schema inference reads from one footer: the first
+      * `_common_metadata`, else `_metadata`, else data file.
+      */
+    def schema(spark: SparkSession): Option[StructType] = {
+      def named(n: String) = files.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(files.find(f => !isSummary(f.getPath.getName)))
+        .map(f => schemaOf(spark, hadoopConf, f))
+    }
+  }
+
+  private def listed(spark: SparkSession, path: String): Option[Listed] = {
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled) return None
     val p = new Path(path)
     val hadoopConf = spark.sessionState.newHadoopConf()
@@ -39,11 +98,7 @@ object ParquetFooters {
     val root = try fs.getFileStatus(p) catch {
       case _: java.io.FileNotFoundException => return None
     }
-    val files = leafFiles(fs, root).sortBy(_.getPath.toString)
-    def named(n: String) = files.find(_.getPath.getName == n)
-    named("_common_metadata").orElse(named("_metadata"))
-      .orElse(files.find(f => !isSummary(f.getPath.getName)))
-      .map(f => schemaOf(spark, hadoopConf, f))
+    Some(Listed(hadoopConf, root, leafFiles(fs, root).sortBy(_.getPath.toString)))
   }
 
   private def isSummary(name: String): Boolean =
@@ -62,8 +117,7 @@ object ParquetFooters {
         else Nil
       }
 
-  private def schemaOf(spark: SparkSession,
-                       hadoopConf: org.apache.hadoop.conf.Configuration,
+  private def schemaOf(spark: SparkSession, hadoopConf: Configuration,
                        file: FileStatus): StructType = {
     val conf = spark.sessionState.conf
     val converter = new ParquetToSparkSchemaConverter(

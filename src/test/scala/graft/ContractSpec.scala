@@ -176,6 +176,37 @@ class ContractSpec extends AnyFunSuite {
       s"filesystem calls outside IndexMaintenance: ${found.mkString(", ")}")
   }
 
+  /** Driver reads of a persisted index's small tables that launch a Spark
+    * job: `Similarity.collectCentroids`, or `.head` / `.collect()` applied
+    * to an open of `meta` or `centroids` (the `centroids` member is one).
+    */
+  private def jobReadsOfIndexTables(code: String): Seq[String] = {
+    val openOfSmallTable =
+      """(?:\bopen\s*\([^()]*\b(?:meta|centroids)\b[^()]*\)|\bcentroids\b)\s*\.\s*(?:head|collect)\b"""
+    ("""\bcollectCentroids\b""".r.findAllMatchIn(code) ++
+      openOfSmallTable.r.findAllMatchIn(code)).map(m => enclosingDef(code, m.start)).toSeq
+  }
+
+  test("the persisted indexes read meta and centroids on the driver, never through a job") {
+    // every probe reads these tables; a job per read is the fixed cost a
+    // probe waits for (SCALING.md "Job-free index probes")
+    val found = mainCode()
+      .filter { case (p, _) => Set("IvfIndex.scala", "LshIndex.scala")(p.getFileName.toString) }
+      .flatMap { case (p, code) => jobReadsOfIndexTables(code).map(d => s"${p.getFileName}:$d") }
+    assert(found.isEmpty, s"job-launching reads of index tables: ${found.mkString(", ")}")
+    // the guard sees each form it forbids
+    Seq(
+      "def a = Similarity.collectCentroids(centroids, \"cid\", \"centroid\")",
+      "def b = Tables.open(spark, s\"$path/meta\").head.getLong(0)",
+      "def c = graft.tables.Tables.open(spark, s\"${index.path}/meta\")\n  .head",
+      "def d = Tables.open(spark, s\"$path/centroids\").collect()",
+      "def e = centroids.collect().map(_.getLong(0))",
+      "def f = centroids .head")
+      .foreach(planted => assert(jobReadsOfIndexTables(planted).nonEmpty, planted))
+    assert(jobReadsOfIndexTables(
+      "def ok = Tables.rows(spark, s\"$path/meta\").head; centroids.join(x)").isEmpty)
+  }
+
   test("sliding rangeBetween frames live only in TimeSeriesOps") {
     // Spark re-aggregates a sliding frame for every row; the rolling body
     // (TimeSeriesOps.rollingFrames) spreads a dense key over halo buckets

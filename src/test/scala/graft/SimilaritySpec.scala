@@ -525,6 +525,79 @@ class SimilaritySpec extends SparkSpec {
     assert(!graft.similarity.IvfIndex.isStale(idx, shrunk))
   }
 
+  test("IvfIndex.buildOrRefresh serves a corpus holding a null vector without rebuilding") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfnullvec").toString
+    val withNull = corpus.union(Seq((9L, null: Array[Float])).toDF("vec_id", "embedding"))
+    val idx = graft.similarity.IvfIndex.buildOrRefresh(
+      withNull, "vec_id", "embedding", dir, k = 2, iterations = 2)
+    assert(idx.assignments.count() === corpus.count()) // the null vector is unindexable
+    val before = new java.io.File(s"$dir/assignments/_SUCCESS").lastModified()
+    Thread.sleep(20) // a rebuild's marker must land at a later millisecond
+    graft.similarity.IvfIndex.buildOrRefresh(
+      withNull, "vec_id", "embedding", dir, k = 2, iterations = 2)
+    assert(new java.io.File(s"$dir/assignments/_SUCCESS").lastModified() === before)
+    assert(!graft.similarity.IvfIndex.isStale(idx, withNull))
+  }
+
+  test("IvfIndex.build writes the bucket files compaction would leave") {
+    val dir = java.nio.file.Files.createTempDirectory("ivflayout").toString
+    // four input partitions: a per-split write would land up to 4 x k files
+    val spread = (1 to 64).map(i => (i.toLong,
+        Array.tabulate(8)(d => if (d == i % 4) 1f else 0.01f * ((i + d) % 7))))
+      .toDF("vec_id", "embedding").repartition(4)
+    val idx = graft.similarity.IvfIndex.build(spread, "vec_id", "embedding", dir,
+      k = 4, iterations = 2)
+    val fresh = idx.dataFileCount()
+    assert(fresh === new java.io.File(s"$dir/assignments").list()
+      .count(_.startsWith("cid=")), "one file per bucket at this size")
+    val rows = idx.assignments.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Number]("cid").longValue)).toSet
+    idx.compact()
+    assert(idx.dataFileCount() === fresh)
+    assert(idx.assignments.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Number]("cid").longValue)).toSet === rows)
+    assert(rows.size === 64)
+  }
+
+  test("IvfIndex.topK probes the cids the cross-join rank selects, on degenerate queries too") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfprobe").toString
+    val idx = graft.similarity.IvfIndex.build(corpus, "vec_id", "embedding", dir,
+      k = 3, iterations = 2)
+    // the probe rank topK ran before it ranked on the driver
+    def reference(q: org.apache.spark.sql.DataFrame, nProbe: Int): Set[Long] =
+      idx.centroids
+        .crossJoin(broadcast(q.select(col("embedding").cast("array<double>").as("_qv"))))
+        .select(col("cid"),
+          graft.functions.cosineSimilarity(col("centroid"), col("_qv")).as("_csim"))
+        .orderBy(col("_csim").desc, col("cid"))
+        .limit(nProbe)
+        .collect().map(_.getLong(0)).toSet
+    def q(vs: Array[Float]*) = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    val cases = Seq(
+      "empty query" -> (query.filter(lit(false)), 2),
+      "null vector" -> (q(null), 2),
+      "zero-norm vector" -> (q(Array.fill(8)(0f)), 2),
+      "NaN component" -> (q(Array(1f, Float.NaN, 0f, 0f, 1f, 0f, 0f, 0f)), 2),
+      "two-row query" -> (q(Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f),
+        Array(0f, 0f, 1f, 0f, 0f, 1f, 0f, 0f)), 2),
+      "two-row query, one null" -> (q(null, Array(0f, 1f, 0f, 1f, 0f, 0f, 1f, 0f)), 4),
+      "nProbe > k" -> (query, 5),
+      "one probe" -> (query, 1))
+    cases.foreach { case (name, (qdf, nProbe)) =>
+      val expected = reference(qdf, nProbe)
+      assert(idx.probedCids(qdf, nProbe).toSet === expected, name)
+      // and topK scans exactly those buckets
+      val exact = Similarity.bruteForceTopK(
+          idx.assignments.filter(col("cid").isin(expected.toSeq.map(Long.box): _*)),
+          "vec_id", "embedding", qdf, 3)
+        .collect().map(_.getAs[Long]("vec_id")).toSeq
+      assert(idx.topK(qdf, 3, nProbe).collect().map(_.getAs[Long]("vec_id")).toSeq ===
+        exact, name)
+    }
+    assert(reference(query, 5).size === 3 && reference(query.filter(lit(false)), 2).isEmpty)
+  }
+
   test("IvfIndex drift probe flags append-skewed buckets; recenter restores centroid means") {
     val dir = java.nio.file.Files.createTempDirectory("ivfdrift").toString
     val idx = graft.similarity.IvfIndex.buildOrLoad(

@@ -90,6 +90,41 @@ class TablesOpenSpec extends SparkSpec {
     assert(jobsDuring(spark.read.parquet(s"$sf/region.parquet")) >= 1)
   }
 
+  test("index meta and centroid reads run no Spark job; a topK probe runs one") {
+    val (lsh, _) = (lshPath, ivf64.path) // both built before counting
+    val corpus = Tables.embeddings(spark, sf)
+    val query = corpus.filter(col("vec_id") === 0)
+    assert(jobsDuring(graft.dedup.LshIndex.load(spark, lsh)) === 0)
+    assert(jobsDuring(ivf64.topKBatch(corpus, "vec_id", 5, nProbe = 8)) === 0)
+    val countJobs = jobsDuring(corpus.count())
+    assert(countJobs >= 1)
+    assert(jobsDuring(graft.similarity.IvfIndex.isStale(ivf64, corpus)) === countJobs)
+    assert(jobsDuring(ivf64.topK(query, 10, nProbe = 4)) === 1)
+  }
+
+  test("Tables.rows equals a collect of the table, row for row") {
+    def sameRows(path: String): Unit = {
+      val expected = spark.read.parquet(path).collect().toSeq
+      assert(expected.nonEmpty, s"fixture: $path is empty")
+      assert(Tables.rows(spark, path).toSeq === expected, path)
+    }
+    def sameIndexRows(p: String): Unit = Seq("meta", "centroids").foreach(t => sameRows(s"$p/$t"))
+    sameRows(s"$lshPath/meta")
+    sameIndexRows(ivf64.path)
+    val corpus = Tables.embeddings(spark, sf)
+    Seq(2, 64).foreach { k =>
+      val idx = graft.similarity.IvfIndex.build(corpus.filter(col("vec_id") < 400),
+        "vec_id", "embedding", s"$work/rows-k$k", k = k)
+      sameIndexRows(idx.path)
+      idx.addVectors(corpus.filter(col("vec_id") >= 400))
+      sameIndexRows(idx.path)
+      idx.recenter()
+      sameIndexRows(idx.path)
+    }
+    // a partitioned table is refused, not read without its partition column
+    intercept[IllegalArgumentException](Tables.rows(spark, s"${ivf64.path}/assignments"))
+  }
+
   test("a missing path or a directory without data files fails as inference does") {
     def errorOf(f: => Any): String =
       intercept[AnalysisException](f).getCondition
