@@ -47,16 +47,11 @@ final class IvfIndex private (val spark: SparkSession, val path: String,
     Similarity.bruteForceTopK(cand, idCol, vecCol, query, k)
   }
 
-  /** The buckets [[topK]] scans: the query vectors, collected (one job),
-    * ranked on the driver against the k driver-held centroids — every
-    * (query, centroid) pair by cosine, the first nProbe pairs' cids.
+  /** The buckets [[topK]] scans: [[Similarity.probedCids]] of the query
+    * against the k driver-held centroids.
     */
-  private[graft] def probedCids(query: DataFrame, nProbe: Int): Array[Long] = {
-    val qvs = query.select(col(vecCol).cast("array<double>")).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getSeq[Double](0).toArray)
-    org.apache.spark.sql.graft.CentroidExpressions
-      .probedCids(qvs.toSeq, storedCentroids(), nProbe)
-  }
+  private[graft] def probedCids(query: DataFrame, nProbe: Int): Array[Long] =
+    Similarity.probedCids(query, vecCol, storedCentroids(), nProbe)
 
   /** Incremental maintenance: assign NEW vectors to the existing
     * centroids and append them to the cid-partitioned assignments (no

@@ -48,22 +48,6 @@ object Similarity {
         .hyperplaneBands(col(vecCol), planes(numBits, dim, seed), bitsPerBand))
         .as(Seq("band", "bv")))
 
-  /** Exact-cosine verification of a candidate pair list: two equi-joins
-    * pull each side's vector, one fused codegen cosine per pair, filter
-    * at the threshold. Shared by every candidate generator (LSH bands,
-    * k-means clusters) — candidates in, verified pairs out, never
-    * all-pairs.
-    */
-  private def verifyCosine(cand: DataFrame, df: DataFrame, idCol: String,
-                           vecCol: String, threshold: Double): DataFrame = {
-    val va = df.select(col(idCol).as("id_a"), col(vecCol).cast("array<double>").as("v_a"))
-    val vb = df.select(col(idCol).as("id_b"), col(vecCol).cast("array<double>").as("v_b"))
-    cand.join(va, "id_a").join(vb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        cosineSimilarity(col("v_a"), col("v_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-  }
-
   /** (id, v, bands): each non-null vector with its hyperplane band
     * values — the carried payload of [[embeddingNearDup]] and
     * [[graft.streaming.Streaming.embedCheckStream]], so the batch and
@@ -343,12 +327,12 @@ object Similarity {
   }
 
   /** Lloyd's k-means over an embedding column, as DataFrame ops:
-    * seeds = the first k vectors by id (deterministic), then
+    * seeds = the first k non-null vectors by id (deterministic), then
     * `iterations` rounds of assign (row-local argmax projection —
-    * zero joins, zero exchanges) + per-centroid mean (posexplode + avg
-    * by dimension). Only the k x dim centroid table ever reaches the
-    * driver — that is the table the assignment projection embeds
-    * anyway. Returns (cid, vector).
+    * zero joins, zero exchanges) + per-centroid VectorMean — the
+    * one-subspace case of [[lloydFit]]. Only the k x dim centroid table
+    * ever reaches the driver — that is the table the assignment
+    * projection embeds anyway. Returns (cid, vector), cids = seed ids.
     *
     * `fitSampleRate` < 1 runs the whole fit — seeding and every Lloyd
     * iteration — on a reproducible [[graft.mix.Mix.sampleByHash]]
@@ -374,41 +358,78 @@ object Similarity {
   private[graft] def kmeansCentroidArray(df: DataFrame, idCol: String,
                                          vecCol: String, k: Int,
                                          iterations: Int,
-                                         fitSampleRate: Double = 1.0): Array[(Long, Array[Double])] = {
+                                         fitSampleRate: Double = 1.0): Array[(Long, Array[Double])] =
+    lloydFit(df, idCol, vecCol, k, iterations, fitSampleRate).head
+
+  /** The one Lloyd's body of the vector-search family: spherical k-means
+    * fit TOGETHER over the `m` equal subspaces of an embedding column.
+    * `m` = 1 fits whole vectors, whatever their length
+    * ([[kmeansCentroidArray]]: IVF, SemDeDup, `IvfIndex.build`); `m` > 1
+    * fits their `subDim`-long slices ([[pqCodebooks]]).
+    *
+    *   - rows with a null vector are excluded (unfittable: they would
+    *     null the seed collect);
+    *   - seeds are the first `k` vectors by id, sliced per subspace;
+    *     cids are the seeds' ids;
+    *   - an iteration is ONE pass: the row-local cosine argmax assigns
+    *     each (sub)vector — for `m` > 1 after a posexplode by subspace,
+    *     through a per-subspace argmax CASE — and one map-side-combining
+    *     VectorMean grouped by (subspace, cid) gives the new centroids
+    *     (m separate fits paid m × iterations scheduler round-trips;
+    *     6.7 s → sub-second at sf0.1). No corpus x dim posexplode ever
+    *     reaches an exchange;
+    *   - empty clusters keep their previous centroid.
+    *
+    * The fit set is cached for the iterations and released on every
+    * exit, failures included. Returns the m (cid, centroid) tables.
+    */
+  private def lloydFit(df: DataFrame, idCol: String, vecCol: String, k: Int,
+                       iterations: Int, fitSampleRate: Double, m: Int = 1,
+                       subDim: Int = 0): IndexedSeq[Array[(Long, Array[Double])]] = {
     require(fitSampleRate > 0.0 && fitSampleRate <= 1.0,
       s"fitSampleRate must be in (0, 1], got $fitSampleRate")
     val fit = if (fitSampleRate >= 1.0) df
               else graft.mix.Mix.sampleByHash(df, idCol, fitSampleRate)
-    // null vectors are unindexable and would NPE the seed collect —
-    // exclude them from the fit entirely
     val vecs = fit.filter(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol).cast("array<double>").as("_v"))
       .persist() // re-scanned every Lloyd iteration
     try {
-      var centroids = vecs.orderBy(col(idCol)).limit(k)
+      val seeds = vecs.orderBy(col(idCol)).limit(k)
         .select(col(idCol).cast("long").as("_cid"), col("_v").as("_cv"))
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      require(centroids.nonEmpty,
+      require(seeds.nonEmpty,
         "k-means fit needs at least one non-null vector (empty corpus / " +
           "all-null vector column / sample rate too low for this corpus)")
+      def sub(v: Array[Double], j: Int) =
+        if (m == 1) v else v.slice(j * subDim, (j + 1) * subDim)
+      var books = (0 until m).map(j => seeds.map { case (cid, v) => (cid, sub(v, j)) })
       for (_ <- 0 until iterations) {
-        val assigned = vecs.select(
-          CentroidExpressions.nearestCentroidId(col("_v"), centroids).as("_cid"),
-          col("_v"))
-        // per-centroid mean: ONE map-side-combining VectorMean aggregate
-        // (dim-length partial state per cid) — never a corpus x dim
-        // posexplode through an exchange
-        val means = assigned
-          .groupBy(col("_cid"))
-          .agg(org.apache.spark.sql.graft.VectorAggregates
-            .vectorMean(col("_v")).as("_cv"))
+        def nci(j: Int, v: Column) = CentroidExpressions.nearestCentroidId(v, books(j))
+        val assigned =
+          if (m == 1) vecs.select(nci(0, col("_v")).as("_cid"), col("_v").as("_sv"))
+          else {
+            val bySubspace = (1 until m).foldLeft(when(col("_j") === 0, nci(0, col("_sv")))) {
+              (acc, j) => acc.when(col("_j") === j, nci(j, col("_sv")))
+            }
+            val slices = (0 until m).map(j => slice(col("_v"), j * subDim + 1, subDim))
+            vecs.select(posexplode(array(slices: _*)).as(Seq("_j", "_sv")))
+              .select(col("_j"), bySubspace.as("_cid"), col("_sv"))
+          }
+        // one subspace groups by cid alone: no explode, no extra shuffle key
+        val keys = if (m == 1) Seq("_cid") else Seq("_j", "_cid")
+        val updated = assigned.groupBy(keys.map(col): _*)
+          .agg(org.apache.spark.sql.graft.VectorAggregates.vectorMean(col("_sv")).as("_cv"))
           .filter(col("_cv").isNotNull)
-          .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+          .collect().map { r =>
+            (if (m == 1) 0 else r.getAs[Int]("_j"), r.getAs[Long]("_cid")) ->
+              r.getAs[Seq[Double]]("_cv").toArray
+          }.toMap
         // empty clusters keep their previous centroid
-        val updated = means.toMap
-        centroids = centroids.map { case (cid, v) => (cid, updated.getOrElse(cid, v)) }
+        books = books.indices.map(j => books(j).map { case (cid, prev) =>
+          (cid, updated.getOrElse((j, cid), prev))
+        })
       }
-      centroids
+      books
     } finally vecs.unpersist()
   }
 
@@ -580,7 +601,6 @@ object Similarity {
   def pqTopK(df: DataFrame, idCol: String, vecCol: String, dim: Int,
              query: DataFrame, k: Int, m: Int = 8, kSub: Int = 64,
              iterations: Int = 2, fitSampleRate: Double = 1.0): DataFrame = {
-    require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val books = pqCodebooks(df, idCol, vecCol, dim, m, kSub, iterations,
       fitSampleRate)
     pqTopKWithBooks(df, idCol, vecCol, dim, query, k, m, books)
@@ -596,27 +616,57 @@ object Similarity {
                                      vecCol: String, dim: Int,
                                      query: DataFrame, k: Int, m: Int,
                                      books: IndexedSeq[Array[(Long, Array[Double])]])
-      : DataFrame = {
-    val subDim = dim / m
-    val vecD = col(vecCol).cast("array<double>")
-    val q = query.select(vecD.as("_qv")).head.getSeq[Double](0).toArray
+      : DataFrame =
+    df.select(col(idCol), adcScore(col(vecCol).cast("array<double>"),
+        queryVector(query, vecCol, dim), m, books).as("adc_score"))
+      .orderBy(col("adc_score").desc, col(idCol))
+      .limit(k)
+
+  /** The subvector length of `m` equal subspaces of a `dim`-long vector;
+    * a `dim` that does not divide into `m` is an error, never a silent
+    * drop of the trailing dimensions.
+    */
+  private def subspaceDim(dim: Int, m: Int): Int = {
+    require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
+    dim / m
+  }
+
+  /** The one query vector of a PQ query frame. The frame must hold
+    * exactly one non-null vector, of length `dim` — a driver-side
+    * head(2) states it (the [[hammingTopK]] contract), so an empty
+    * frame, a null vector or a multi-row frame is a named error, not a
+    * NoSuchElementException, an NPE or an arbitrary row.
+    */
+  private def queryVector(query: DataFrame, vecCol: String, dim: Int): Array[Double] = {
+    val rows = query.filter(col(vecCol).isNotNull)
+      .select(col(vecCol).cast("array<double>")).head(2)
+    require(rows.length == 1,
+      s"PQ query frame must contain exactly one non-null $vecCol row (got ${rows.length})")
+    val q = rows.head.getSeq[Double](0).toArray
     require(q.length == dim, s"query dim ${q.length} != $dim")
-    val luts: IndexedSeq[Array[Double]] = (0 until m).map { j =>
+    q
+  }
+
+  /** Asymmetric distance computation (ADC) of the vector column `v`
+    * against the query `q`: per subspace j the driver-side look-up table
+    * `lut_j[c] = <q_j, c_jc>` and the row's code, the cosine argmax
+    * against codebook j; the score `Σ_j lut_j[code_j]`, summed left to
+    * right. Codes are 0..kSub-1, so a code is its LUT index.
+    */
+  private def adcScore(v: Column, q: Array[Double], m: Int,
+                       books: IndexedSeq[Array[(Long, Array[Double])]]): Column = {
+    val subDim = subspaceDim(q.length, m)
+    (0 until m).map { j =>
       val qj = q.slice(j * subDim, (j + 1) * subDim)
-      books(j).map { case (_, cv) =>
+      val lut = books(j).map { case (_, cv) =>
         var s = 0.0; var i = 0
         while (i < subDim) { s += qj(i) * cv(i); i += 1 }
         s
       }
-    }
-    val adc = (0 until m).map { j =>
       val code = CentroidExpressions.nearestCentroidId(
-        slice(vecD, j * subDim + 1, subDim), books(j))
-      element_at(lit(luts(j)), code.cast("int") + 1)
+        slice(v, j * subDim + 1, subDim), books(j))
+      element_at(lit(lut), code.cast("int") + 1)
     }.reduce(_ + _)
-    df.select(col(idCol), adc.as("adc_score"))
-      .orderBy(col("adc_score").desc, col(idCol))
-      .limit(k)
   }
 
   /** H7: IVF-PQ — the standard billion-scale ANN composition (FAISS
@@ -630,8 +680,8 @@ object Similarity {
     *   scan → argmax(cid) → filter(cid ∈ probed)  [row-local prune]
     *        → ADC projection → TakeOrdered(k)
     *
-    * Probe selection ranks the kIvf×dim centroid table against the
-    * query on the driver (bounded, the IvfIndex convention). This
+    * The probed buckets are [[CentroidExpressions.probedCids]] of the
+    * query, the rank [[IvfIndex.topK]] and [[ivfTopK]] probe with. This
     * variant quantizes RAW vectors (not residuals — the spherical/
     * cosine analogue of FAISS's IP mode); the persisted-index
     * counterpart of the same plan is [[IvfIndex.topK]] with ADC in
@@ -670,113 +720,62 @@ object Similarity {
                                              books: IndexedSeq[Array[(Long, Array[Double])]])
       : DataFrame = {
     val vecD = col(vecCol).cast("array<double>")
-    val q = query.select(vecD.as("_qv")).head.getSeq[Double](0).toArray
-    require(q.length == dim, s"query dim ${q.length} != $dim")
-    // probe selection: cosine-rank the bounded centroid table driver-side
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      val den = math.sqrt(na) * math.sqrt(nb)
-      if (den == 0.0) Double.NegativeInfinity else d / den
-    }
-    val probed = cents.map { case (cid, cv) => (cid, cos(cv, q)) }
-      .sortBy { case (cid, s) => (-s, cid) }.take(nProbe).map(_._1)
-    val subDim = dim / m
-    val luts: IndexedSeq[Array[Double]] = (0 until m).map { j =>
-      val qj = q.slice(j * subDim, (j + 1) * subDim)
-      books(j).map { case (_, cv) =>
-        var s = 0.0; var i = 0
-        while (i < subDim) { s += qj(i) * cv(i); i += 1 }
-        s
-      }
-    }
+    val q = queryVector(query, vecCol, dim)
+    val probed = CentroidExpressions.probedCids(Seq(q), cents, nProbe)
     // the prune filter sits BETWEEN assignment and scoring: ADC is
     // projected over the post-filter vector column, so only survivors
     // pay the m argmax lookups
-    def adcOf(v: Column): Column = (0 until m).map { j =>
-      val code = CentroidExpressions.nearestCentroidId(
-        slice(v, j * subDim + 1, subDim), books(j))
-      element_at(lit(luts(j)), code.cast("int") + 1)
-    }.reduce(_ + _)
     df.select(col(idCol),
         CentroidExpressions.nearestCentroidId(vecD, cents).as("cid"),
         vecD.as("_v"))
       .filter(col("cid").isin(probed.map(Long.box): _*))
-      .select(col(idCol), col("cid"), adcOf(col("_v")).as("adc_score"))
+      .select(col(idCol), col("cid"), adcScore(col("_v"), q, m, books).as("adc_score"))
       .orderBy(col("adc_score").desc, col(idCol))
       .limit(k)
   }
 
-  /** The m per-subspace PQ codebooks, fit TOGETHER: all m spherical
-    * Lloyd's runs share one seed collect and ONE exploded
-    * assign-and-mean pass per iteration (posexplode by subspace, a
-    * per-subspace argmax CASE, one grouped VectorMean) — instead of m
-    * independent fits each paying its own persist + per-iteration jobs
-    * (m×iterations scheduler round-trips; 6.7 s → sub-second at
-    * sf0.1). Semantically identical to the per-subspace fits: seeds
-    * are the first kSub subvectors by id, assignments are the same
-    * cosine argmax, empty clusters keep their previous centroid.
-    * Returns per subspace the codebook renumbered 0..kSub-1 so the
-    * code doubles as the ADC LUT index (k-means cids are corpus ids —
-    * arbitrary longs).
+  /** The m per-subspace PQ codebooks: the m-subspace case of
+    * [[lloydFit]], so each subspace's codebook is exactly the
+    * one-subspace fit of its slice, while all m share one seed collect
+    * and ONE exploded assign-and-mean pass per iteration. Returns per
+    * subspace the codebook renumbered 0..kSub-1 so the code doubles as
+    * the ADC LUT index (k-means cids are corpus ids — arbitrary longs).
     */
   private[graft] def pqCodebooks(df: DataFrame, idCol: String, vecCol: String,
                                  dim: Int, m: Int, kSub: Int, iterations: Int,
                                  fitSampleRate: Double)
-      : IndexedSeq[Array[(Long, Array[Double])]] = {
-    require(fitSampleRate > 0.0 && fitSampleRate <= 1.0,
-      s"fitSampleRate must be in (0, 1], got $fitSampleRate")
-    val subDim = dim / m
-    val fit = if (fitSampleRate >= 1.0) df
-              else graft.mix.Mix.sampleByHash(df, idCol, fitSampleRate)
-    val vecs = fit.select(col(idCol),
-      col(vecCol).cast("array<double>").as("_v")).persist()
-    val seeds = vecs.orderBy(col(idCol)).limit(kSub)
-      .select(col("_v")).collect().map(_.getSeq[Double](0).toArray)
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(j => seeds.map(_.slice(j * subDim, (j + 1) * subDim)))
-    for (_ <- 0 until iterations) {
-      val subCols = array((0 until m).map(j =>
-        slice(col("_v"), j * subDim + 1, subDim)): _*)
-      def nci(j: Int) = CentroidExpressions.nearestCentroidId(col("_sv"),
-        books(j).zipWithIndex.map { case (cv, i) => (i.toLong, cv) })
-      val cidExpr = (1 until m).foldLeft(when(col("_j") === 0, nci(0))) {
-        (acc, j) => acc.when(col("_j") === j, nci(j))
-      }
-      val means = vecs
-        .select(posexplode(subCols).as(Seq("_j", "_sv")))
-        .select(col("_j"), cidExpr.as("_cid"), col("_sv"))
-        .groupBy(col("_j"), col("_cid"))
-        .agg(org.apache.spark.sql.graft.VectorAggregates
-          .vectorMean(col("_sv")).as("_cv"))
-        .filter(col("_cv").isNotNull)
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      val updated = means.map { case (j, c, v) => (j, c) -> v }.toMap
-      books = Array.tabulate(m)(j => books(j).zipWithIndex.map {
-        case (prev, c) => updated.getOrElse((j, c.toLong), prev)
-      })
-    }
-    vecs.unpersist()
-    (0 until m).map(j =>
-      books(j).zipWithIndex.map { case (cv, i) => (i.toLong, cv) })
+      : IndexedSeq[Array[(Long, Array[Double])]] =
+    lloydFit(df, idCol, vecCol, kSub, iterations, fitSampleRate, m,
+        subspaceDim(dim, m))
+      .map(_.zipWithIndex.map { case ((_, cv), i) => (i.toLong, cv) })
+
+  /** The buckets a probe of `query`'s vectors scans: the query vectors,
+    * collected (one job), and every (query, centroid) pair ranked on the
+    * driver by [[CentroidExpressions.probedCids]] — the first `nProbe`
+    * pairs' cids. A null query vector ranks every centroid at a null
+    * similarity; an empty query probes nothing.
+    */
+  private[graft] def probedCids(query: DataFrame, vecCol: String,
+                                cents: Array[(Long, Array[Double])],
+                                nProbe: Int): Array[Long] = {
+    val qvs = query.select(col(vecCol).cast("array<double>")).collect()
+      .map(r => if (r.isNullAt(0)) null else r.getSeq[Double](0).toArray)
+    CentroidExpressions.probedCids(qvs.toSeq, cents, nProbe)
   }
 
-  /** H3: IVF-style ANN — vectors are assigned to their nearest centroid
-    * by the row-local argmax projection (zero joins, zero exchanges);
-    * the query probes the `nProbe` nearest centroids and ranks only
-    * those vectors.
+  /** H3: IVF-style ANN over a given centroid table — the
+    * [[IvfIndex.topK]] probe without the persisted index. The probed
+    * buckets are [[probedCids]] of the query; the corpus keeps the rows
+    * whose row-local argmax assignment (zero joins, zero exchanges) is
+    * one of them, as a literal `isin` filter, and ranks only those
+    * exactly.
     */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               centroids: DataFrame, cidCol: String,
               query: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val cents = collectCentroids(centroids, cidCol, vecCol)
-    val assigned = df.select(col(idCol),
-      CentroidExpressions.nearestCentroidId(col(vecCol), cents).as("_cid"))
-    val probed = query.select(explode(CentroidExpressions
-        .nearestCentroidIds(col(vecCol), cents, nProbe)).as("_cid"))
-      .distinct()
-    val candIds = assigned.join(broadcast(probed), "_cid").select(col(idCol))
-    bruteForceTopK(df.join(candIds, idCol), idCol, vecCol, query, k)
+    val probed = probedCids(query, vecCol, cents, nProbe)
+    bruteForceTopK(df.filter(CentroidExpressions.nearestCentroidId(col(vecCol), cents)
+        .isin(probed.map(Long.box): _*)), idCol, vecCol, query, k)
   }
 }

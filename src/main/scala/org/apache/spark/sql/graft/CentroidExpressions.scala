@@ -171,7 +171,8 @@ object CentroidExpressions {
     * `cents.crossJoin(queries).orderBy(cosine.desc, cid).limit(n)`
     * selects, computed on the driver. A null query vector pairs every
     * centroid at a null similarity; no queries or no centroids probe
-    * nothing.
+    * nothing. It is the one driver-side centroid rank: `IvfIndex.topK`,
+    * `Similarity.ivfTopK` and `Similarity.ivfPqTopK` all probe with it.
     */
   def probedCids(queries: Seq[Array[Double]], cents: Array[(Long, Array[Double])],
                  n: Int): Array[Long] = {

@@ -207,6 +207,30 @@ class ContractSpec extends AnyFunSuite {
       "def ok = Tables.rows(spark, s\"$path/meta\").head; centroids.join(x)").isEmpty)
   }
 
+  /** Second copies, in `Similarity.scala`, of the vector-search family's
+    * single definitions: a Lloyd mean beside `lloydFit`'s one
+    * `vectorMean(` call, or a local cosine (`def cos`) ranking centroids
+    * beside `CentroidExpressions.probedCids`.
+    */
+  private def vectorSearchTwins(code: String): Seq[String] = {
+    val means = """\bvectorMean\s*\(""".r.findAllMatchIn(code).size
+    (if (means == 1) Nil else Seq(s"$means vectorMean( calls")) ++
+      """\bdef\s+cos\w*""".r.findAllMatchIn(code)
+        .map(m => s"local cosine in ${enclosingDef(code, m.start)}")
+  }
+
+  test("Similarity.scala has one Lloyd mean and no local cosine") {
+    // the Lloyd fit, the PQ ADC and the centroid probe rank each have
+    // one definition; a twin grows back as a second mean or a cosine
+    val code = mainCode()
+      .collectFirst { case (p, c) if p.getFileName.toString == "Similarity.scala" => c }.get
+    assert(vectorSearchTwins(code).isEmpty, vectorSearchTwins(code).mkString(", "))
+    // the guard sees each form it forbids
+    Seq(code + "\n  def m(d: DataFrame) = d.agg(VectorAggregates.vectorMean(col(\"v\")))",
+        code + "\n  def cos(a: Array[Double], b: Array[Double]): Double = 0.0")
+      .foreach(planted => assert(vectorSearchTwins(planted).nonEmpty, planted.takeRight(80)))
+  }
+
   test("sliding rangeBetween frames live only in TimeSeriesOps") {
     // Spark re-aggregates a sliding frame for every row; the rolling body
     // (TimeSeriesOps.rollingFrames) spreads a dense key over halo buckets

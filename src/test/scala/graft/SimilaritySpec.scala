@@ -559,6 +559,24 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.size === 64)
   }
 
+  /** Probe queries over the 8-dim `corpus`, with the nProbe to run each
+    * at: empty, null, zero-norm, NaN, multi-row and nProbe > k.
+    */
+  private def degenerateQueries = {
+    def q(vs: Array[Float]*) = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    Seq(
+      "empty query" -> (query.filter(lit(false)), 2),
+      "null vector" -> (q(null), 2),
+      "zero-norm vector" -> (q(Array.fill(8)(0f)), 2),
+      "NaN component" -> (q(Array(1f, Float.NaN, 0f, 0f, 1f, 0f, 0f, 0f)), 2),
+      "two-row query" -> (q(Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f),
+        Array(0f, 0f, 1f, 0f, 0f, 1f, 0f, 0f)), 2),
+      "two-row query, one null" -> (q(null, Array(0f, 1f, 0f, 1f, 0f, 0f, 1f, 0f)), 4),
+      "nProbe > k" -> (query, 5),
+      "one probe" -> (query, 1))
+  }
+
   test("IvfIndex.topK probes the cids the cross-join rank selects, on degenerate queries too") {
     val dir = java.nio.file.Files.createTempDirectory("ivfprobe").toString
     val idx = graft.similarity.IvfIndex.build(corpus, "vec_id", "embedding", dir,
@@ -572,19 +590,7 @@ class SimilaritySpec extends SparkSpec {
         .orderBy(col("_csim").desc, col("cid"))
         .limit(nProbe)
         .collect().map(_.getLong(0)).toSet
-    def q(vs: Array[Float]*) = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      .toDF("vec_id", "embedding")
-    val cases = Seq(
-      "empty query" -> (query.filter(lit(false)), 2),
-      "null vector" -> (q(null), 2),
-      "zero-norm vector" -> (q(Array.fill(8)(0f)), 2),
-      "NaN component" -> (q(Array(1f, Float.NaN, 0f, 0f, 1f, 0f, 0f, 0f)), 2),
-      "two-row query" -> (q(Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f),
-        Array(0f, 0f, 1f, 0f, 0f, 1f, 0f, 0f)), 2),
-      "two-row query, one null" -> (q(null, Array(0f, 1f, 0f, 1f, 0f, 0f, 1f, 0f)), 4),
-      "nProbe > k" -> (query, 5),
-      "one probe" -> (query, 1))
-    cases.foreach { case (name, (qdf, nProbe)) =>
+    degenerateQueries.foreach { case (name, (qdf, nProbe)) =>
       val expected = reference(qdf, nProbe)
       assert(idx.probedCids(qdf, nProbe).toSet === expected, name)
       // and topK scans exactly those buckets
@@ -596,6 +602,21 @@ class SimilaritySpec extends SparkSpec {
         exact, name)
     }
     assert(reference(query, 5).size === 3 && reference(query.filter(lit(false)), 2).isEmpty)
+  }
+
+  test("ivfTopK over an index's centroids returns the index's topK rows, on degenerate queries too") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfshared").toString
+    val idx = graft.similarity.IvfIndex.build(corpus, "vec_id", "embedding", dir,
+      k = 3, iterations = 2)
+    val literal = idx.centroids.collect()
+      .map(r => (r.getAs[Long]("cid"), r.getAs[Seq[Double]]("centroid").toArray))
+      .toSeq.toDF("cid", "embedding")
+    degenerateQueries.foreach { case (name, (qdf, nProbe)) =>
+      val viaIndex = idx.topK(qdf, 3, nProbe).collect().toSeq
+      val viaTable = Similarity.ivfTopK(corpus, "vec_id", "embedding", literal, "cid",
+        qdf, 3, nProbe).collect().toSeq
+      assert(viaTable === viaIndex, name)
+    }
   }
 
   test("IvfIndex drift probe flags append-skewed buckets; recenter restores centroid means") {
@@ -809,5 +830,118 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.8, s"IVF-PQ recall $recall below 0.8")
     // pruning is real: at most nProbe of kIvf buckets survive
     assert(out.map(_.getAs[Long]("cid")).toSet.size <= 2)
+  }
+
+  /** 4 direction clusters x 10 members over 8 dims, ids interleaving the
+    * clusters (the pqTopK / ivfPqTopK fixture).
+    */
+  private def clustered = (for (axis <- 0 until 4; i <- 0 until 10) yield {
+    val a = Array.fill(8)(0.05f * ((axis * 31 + i * 7) % 5))
+    a(axis * 2) = 2.0f + 0.01f * i
+    (i * 4 + axis + 1).toLong -> a
+  }).toDF("vec_id", "embedding")
+  private val axisQuery = Seq(0L -> Array(2.0f, 0f, 0f, 0f, 0f, 0f, 0f, 0f))
+    .toDF("vec_id", "embedding")
+
+  test("pqCodebooks subspace j is the one-subspace k-means fit of slice j, renumbered") {
+    for (rate <- Seq(1.0, 0.6)) {
+      val books = Similarity.pqCodebooks(clustered, "vec_id", "embedding", dim = 8,
+        m = 4, kSub = 8, iterations = 2, fitSampleRate = rate)
+      (0 until 4).foreach { j =>
+        val slice = clustered.select(col("vec_id"),
+          org.apache.spark.sql.functions.slice(col("embedding"), 2 * j + 1, 2).as("embedding"))
+        val fit = Similarity.kmeansCentroidArray(slice, "vec_id", "embedding", 8, 2, rate)
+        assert(books(j).map { case (c, v) => (c, v.toSeq) }.toSeq ===
+          fit.zipWithIndex.map { case ((_, v), i) => (i.toLong, v.toSeq) }.toSeq,
+          s"subspace $j at rate $rate")
+      }
+    }
+  }
+
+  test("the PQ fit skips null vectors; a fit with no usable vector fails by name") {
+    // null vectors among the first kSub ids used to NPE the seed collect
+    val withNulls = clustered.filter(col("vec_id") =!= 2L)
+      .union(Seq((0L, null: Array[Float]), (2L, null: Array[Float])).toDF("vec_id", "embedding"))
+    val clean = clustered.filter(col("vec_id") =!= 2L)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    assert(rows(Similarity.pqTopK(withNulls, "vec_id", "embedding", dim = 8, axisQuery,
+        k = 10, m = 4, kSub = 8)) ===
+      rows(Similarity.pqTopK(clean, "vec_id", "embedding", dim = 8, axisQuery,
+        k = 10, m = 4, kSub = 8)))
+    assert(rows(Similarity.ivfPqTopK(withNulls, "vec_id", "embedding", dim = 8, axisQuery,
+        k = 10, kIvf = 4, nProbe = 2, m = 4, kSub = 8)) ===
+      rows(Similarity.ivfPqTopK(clean, "vec_id", "embedding", dim = 8, axisQuery,
+        k = 10, kIvf = 4, nProbe = 2, m = 4, kSub = 8)))
+    allNullFits.foreach { fit =>
+      val e = intercept[IllegalArgumentException](fit())
+      assert(e.getMessage.contains("at least one non-null vector"), e.getMessage)
+    }
+  }
+
+  /** The Lloyd fits over a corpus with no usable vector. */
+  private def allNullFits: Seq[() => Any] = {
+    val allNull = Seq((1L, null: Array[Float]), (2L, null: Array[Float]))
+      .toDF("vec_id", "embedding")
+    Seq(
+      () => Similarity.pqTopK(allNull, "vec_id", "embedding", dim = 8, axisQuery, 10,
+        m = 4, kSub = 8),
+      () => Similarity.ivfPqTopK(allNull, "vec_id", "embedding", dim = 8, axisQuery, 10,
+        kIvf = 2, nProbe = 1, m = 4, kSub = 8),
+      () => Similarity.kmeansCentroids(allNull, "vec_id", "embedding", k = 2, iterations = 1))
+  }
+
+  test("a failing Lloyd fit leaves no cached dataset behind") {
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    allNullFits.foreach(fit => intercept[Exception](fit()))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached)
+  }
+
+  test("the PQ paths reject a dim that does not divide into m") {
+    val dim64 = (id: Long) =>
+      (id, Array.tabulate(64)(d => if (d == id % 64) 1f else 0.01f * ((d + id) % 5)))
+    val corpus64 = (1L to 40L).map(dim64).toDF("vec_id", "embedding")
+    val query64 = Seq(dim64(0L)).toDF("vec_id", "embedding")
+    val cents = graft.queries.SimilarityQueries.detCentroids
+      .map { case (cid, v) => (cid, v.toArray) }.toArray
+    Seq[() => Any](
+      () => Similarity.ivfPqTopK(corpus64, "vec_id", "embedding", dim = 64, query64, 10,
+        kIvf = 4, nProbe = 2, m = 7, kSub = 4),
+      () => Similarity.pqTopK(corpus64, "vec_id", "embedding", dim = 64, query64, 10,
+        m = 7, kSub = 4),
+      () => Similarity.ivfPqTopKWithQuantizers(corpus64, "vec_id", "embedding", 64,
+        query64, 10, nProbe = 4, m = 7, cents, graft.queries.SimilarityQueries.detBooks))
+      .foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("must divide into m=7"), e.getMessage)
+      }
+  }
+
+  test("the PQ query frame must hold exactly one non-null vector of the corpus dim") {
+    val books = Similarity.pqCodebooks(clustered, "vec_id", "embedding", dim = 8,
+      m = 4, kSub = 8, iterations = 1, fitSampleRate = 1.0)
+    val cents = Similarity.kmeansCentroidArray(clustered, "vec_id", "embedding", 4, 1)
+    val frames = Seq(
+      "empty" -> axisQuery.filter(lit(false)),
+      "null vector" -> Seq((0L, null: Array[Float])).toDF("vec_id", "embedding"),
+      "two rows" -> axisQuery.union(axisQuery))
+    frames.foreach { case (name, qdf) =>
+      Seq[() => Any](
+        () => Similarity.pqTopKWithBooks(clustered, "vec_id", "embedding", 8, qdf, 10, 4, books),
+        () => Similarity.ivfPqTopKWithQuantizers(clustered, "vec_id", "embedding", 8, qdf,
+          10, nProbe = 2, m = 4, cents, books))
+        .foreach { call =>
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains("exactly one non-null embedding row"), s"$name: ${e.getMessage}")
+        }
+    }
+    // a null row beside the one real vector is not a second query
+    val withNull = axisQuery.union(Seq((1L, null: Array[Float])).toDF("vec_id", "embedding"))
+    assert(Similarity.pqTopKWithBooks(clustered, "vec_id", "embedding", 8, withNull, 10, 4,
+        books).collect().toSeq ===
+      Similarity.pqTopKWithBooks(clustered, "vec_id", "embedding", 8, axisQuery, 10, 4,
+        books).collect().toSeq)
+    val short = Seq((0L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException](
+      Similarity.pqTopKWithBooks(clustered, "vec_id", "embedding", 8, short, 10, 4, books))
   }
 }
