@@ -308,161 +308,131 @@ object TimeSeriesOps {
       .agg(aggs.head._2(col(valCol)).as(aggs.head._1),
         aggs.tail.map { case (n, f) => f(col(valCol)).as(n) }: _*)
 
-  /** As-of (backward) join: for each left row, the latest right value
-    * with right.ts <= left.ts, per key (A4; the pattern behind
-    * hydrotools.py:545's atmospheric-pressure alignment).
+  /** The neighbour reads every ordered-neighbour operator shares: over
+    * `spec`, the last non-null `point` at or before each row and the
+    * first non-null `point` at or after it — a running `last` and
+    * `coalesce(point, lead)`, so per key one sort plus a linear sweep
+    * and never a growing-following frame. Pass `point` as a column
+    * reference: an expression that two window functions read is
+    * projected, and shuffled, once per function.
+    */
+  private def neighbours(point: Column, spec: WindowSpec): (Column, Column) =
+    (last(point, ignoreNulls = true)
+      .over(spec.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+      coalesce(point, lead(point, 1, null, ignoreNulls = true).over(spec)))
+
+  /** The right row an as-of sweep returns for each left row. */
+  private sealed trait AsofDirection
+  private case object Backward extends AsofDirection
+  private case object Forward extends AsofDirection
+  private case object Nearest extends AsofDirection
+
+  /** The one as-of body, the union + window sweep (Leis et al., VLDB
+    * 2015): left and right rows are tagged and unioned once, then one
+    * hash exchange on the keys and one sort by (ts, side, value tie)
+    * per key feed a linear sweep — no join, and the big side is never
+    * broadcast.
     *
-    * Implemented as union + last-non-null window: both sides are tagged
-    * and unioned, one hash shuffle on the key, sort by (ts, side), and
-    * a running `last(value, ignoreNulls)` carries the right value
-    * forward. O(n log n) per key and never broadcasts the big side —
-    * this beats a per-row range lookup at scale. Right rows sort before
-    * left rows on timestamp ties (asof is inclusive). Right rows that
-    * share (key, ts) are ordered by their value columns (nulls first)
-    * so the carried value is deterministic, not partition-order-defined:
-    * backward's running-last picks the LARGEST value among exact ties.
+    * Each right row carries ONE struct `_pt` of its `rightVals` (and,
+    * for the nearest pick only, its exact-µs timestamp `_t`). The
+    * struct is non-null even when every value in it is null, so
+    * IGNORE NULLS skips left rows, never values: all returned values
+    * come from one right row, and a matched row whose value is null
+    * yields null (pandas `merge_asof` row semantics). The struct is
+    * also the value tie: right rows sharing (key, ts) sort by their
+    * values ascending, nulls first, so backward returns the largest
+    * and forward the smallest of them.
+    *
+    * Right rows sort before left rows on timestamp ties for backward
+    * and nearest and after them for forward, so each direction is
+    * inclusive of a same-ts right row. Nearest compares exact integer
+    * µs distances (a double epoch loses sub-µs exactness and could
+    * flip near-ties); equal distances go to the backward row.
+    */
+  private def asofSweep(left: DataFrame, right: DataFrame, keys: Seq[String],
+                        tsCol: String, rightVals: Seq[String],
+                        direction: AsofDirection): DataFrame = {
+    val carried = rightVals.map(col)
+    val pt = struct(
+      (if (direction == Nearest) unix_micros(col(tsCol)).as("_t") +: carried else carried): _*)
+    val tagged = left.withColumn("_side", lit(0)).unionByName(
+      right.select(keys.map(col) ++ Seq(col(tsCol), lit(1).as("_side"), pt.as("_pt")): _*),
+      allowMissingColumns = true)
+    val side = if (direction == Forward) col("_side").asc else col("_side").desc
+    val spec = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(tsCol).asc, side, col("_pt").asc_nulls_first)
+    val (prev, next) = neighbours(col("_pt"), spec)
+    val swept = direction match {
+      case Backward => tagged.withColumn("_pick", prev)
+      case Forward => tagged.withColumn("_pick", next)
+      case Nearest =>
+        val us = unix_micros(col(tsCol))
+        // one select, so both windows share one Window node and one sort
+        tagged.select(col("*"), prev.as("_b"), next.as("_f")).withColumn("_pick",
+          when(col("_f").isNull, col("_b"))
+            .when(col("_b").isNull, col("_f"))
+            .when(us - col("_b._t") <= col("_f._t") - us, col("_b"))
+            .otherwise(col("_f")))
+    }
+    swept.filter(col("_side") === 0)
+      .select(left.columns.toSeq.map(col) ++ rightVals.map(v => col("_pick").getField(v).as(v)): _*)
+  }
+
+  /** As-of (backward) join: for each left row, the latest right row
+    * with right.ts <= left.ts, per key — pandas
+    * `merge_asof(direction='backward')`, the pattern behind
+    * hydrotools.py:545's atmospheric-pressure alignment (A4). All
+    * `rightVals` come from that one row; among right rows sharing
+    * (key, ts) it is the one with the LARGEST values. [[asofSweep]]'s
+    * running `last`.
     *
     * @param rightVals right-side value columns to carry (left must not
     *                  already contain columns with these names)
     */
   def asofJoinBackward(left: DataFrame, right: DataFrame, keys: Seq[String],
-                       tsCol: String, rightVals: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val lTagged = left
-      .withColumn("_side", lit(0))
-      .select(Seq(col("_side")) ++ leftCols.map(col) ++
-        rightVals.map(v => lit(null).cast(right.schema(v).dataType).as(v)): _*)
-    val rTagged = right
-      .withColumn("_side", lit(1))
-      .select(Seq(col("_side")) ++ leftCols.map(c =>
-        if (keys.contains(c) || c == tsCol) col(c)
-        else lit(null).cast(left.schema(c).dataType).as(c)) ++
-        rightVals.map(col): _*)
-    val tie = struct(rightVals.map(col): _*)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(tsCol).asc, col("_side").desc, tie.asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = lTagged.unionByName(rTagged)
-      .select(Seq(col("_side")) ++ leftCols.map(col) ++
-        rightVals.map(v => last(col(v), ignoreNulls = true).over(w).as(v)): _*)
-    filled.filter(col("_side") === 0).drop("_side")
-  }
+                       tsCol: String, rightVals: Seq[String]): DataFrame =
+    asofSweep(left, right, keys, tsCol, rightVals, Backward)
 
-  /** As-of FORWARD join: for each left row, the EARLIEST right value
-    * with right.ts >= left.ts, per key — pandas
-    * `merge_asof(direction='forward')`. Same union + single-sort shape
-    * as [[asofJoinBackward]], mirrored: right rows sort AFTER left
-    * rows on timestamp ties (so the inclusive >= catches a same-ts
-    * right) and `coalesce(value, lead(value, 1, ignoreNulls))` over
-    * the same spec carries the next right value back. One exchange,
-    * never broadcasts the big side; per key one sort plus a linear
-    * sweep. Right rows sharing (key, ts) carry the same value-column
-    * tie-break as backward (forward picks the SMALLEST value among
-    * ties).
+  /** As-of FORWARD join: for each left row, the earliest right row with
+    * right.ts >= left.ts, per key — pandas
+    * `merge_asof(direction='forward')`. All `rightVals` come from that
+    * one row; among right rows sharing (key, ts) it is the one with
+    * the SMALLEST values. [[asofSweep]]'s `coalesce(point, lead)`.
     */
   def asofJoinForward(left: DataFrame, right: DataFrame, keys: Seq[String],
-                      tsCol: String, rightVals: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val lTagged = left
-      .withColumn("_side", lit(0))
-      .select(Seq(col("_side")) ++ leftCols.map(col) ++
-        rightVals.map(v => lit(null).cast(right.schema(v).dataType).as(v)): _*)
-    val rTagged = right
-      .withColumn("_side", lit(1))
-      .select(Seq(col("_side")) ++ leftCols.map(c =>
-        if (keys.contains(c) || c == tsCol) col(c)
-        else lit(null).cast(left.schema(c).dataType).as(c)) ++
-        rightVals.map(col): _*)
-    val tie = struct(rightVals.map(col): _*)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(tsCol).asc, col("_side").asc, tie.asc_nulls_first)
-    val filled = lTagged.unionByName(rTagged)
-      .select(Seq(col("_side")) ++ leftCols.map(col) ++
-        rightVals.map(v => coalesce(col(v),
-          lead(col(v), 1, null, ignoreNulls = true).over(w)).as(v)): _*)
-    filled.filter(col("_side") === 0).drop("_side")
-  }
+                      tsCol: String, rightVals: Seq[String]): DataFrame =
+    asofSweep(left, right, keys, tsCol, rightVals, Forward)
 
-  /** As-of NEAREST join: for each left row, the right value whose
+  /** As-of NEAREST join: for each left row, the right row whose
     * timestamp is closest in absolute distance, per key — pandas
     * `merge_asof(direction='nearest')`, with equal-distance ties going
-    * to the EARLIER (backward) match, documented and deterministic.
-    *
-    * Still ONE exchange: both directions are windows over the same
-    * (key; ts, side, tie) sort, so per key one sort plus a linear
-    * sweep — the backward running `last(ignoreNulls)` and the forward
-    * `lead(1, ignoreNulls)` each carry ONE struct holding the right
-    * row's timestamp AND its value columns, so the distance decision
-    * and the returned values always come from the same right row (a
-    * nearest right row whose value is null matches and yields null —
-    * pandas row semantics — rather than silently skipping to a
-    * farther row). The pick is a row-local comparison of exact
-    * integer microsecond distances (no float timestamp arithmetic — a
-    * double cast of an epoch loses sub-µs exactness and could flip
-    * near-ties). Right rows sort before left on timestamp ties, so a
-    * same-ts right lands in the backward frame at distance 0 and wins
-    * every tie; right rows sharing (key, ts) are ordered by their
-    * value columns (nulls first) so the carried row is deterministic.
+    * to the EARLIER (backward) match. Both directions of [[asofSweep]]
+    * run over its one sort; the distance decision and the returned
+    * values come from the same right row.
     */
   def asofJoinNearest(left: DataFrame, right: DataFrame, keys: Seq[String],
-                      tsCol: String, rightVals: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val lTagged = left
-      .withColumn("_side", lit(0))
-      .select(Seq(col("_side")) ++ leftCols.map(col) ++
-        rightVals.map(v => lit(null).cast(right.schema(v).dataType).as(v)): _*)
-    val rTagged = right
-      .withColumn("_side", lit(1))
-      .select(Seq(col("_side")) ++ leftCols.map(c =>
-        if (keys.contains(c) || c == tsCol) col(c)
-        else lit(null).cast(left.schema(c).dataType).as(c)) ++
-        rightVals.map(col): _*)
-    val tie = struct(rightVals.map(col): _*)
-    val part = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(tsCol).asc, col("_side").desc, tie.asc_nulls_first)
-    val bwd = part.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // one struct per right row: its exact-µs timestamp plus ALL carried
-    // values — non-null whenever the row is a right row, even if every
-    // value in it is null, so IGNORE NULLS skips sides, never values
-    val pt = when(col("_side") === 1,
-      struct(unix_micros(col(tsCol)).as("_t") +: rightVals.map(col): _*))
-    val us = unix_micros(col(tsCol))
-    // one select, so both windows share one Window node and the tie
-    // struct is projected once: a single sort serves both directions.
-    // `_pt` is a column so the shuffle carries the struct once, not
-    // once per window function.
-    val staged = lTagged.unionByName(rTagged).withColumn("_pt", pt)
-      .select(col("*"), last(col("_pt"), ignoreNulls = true).over(bwd).as("_b"),
-        coalesce(col("_pt"),
-          lead(col("_pt"), 1, null, ignoreNulls = true).over(part)).as("_f"))
-    val pick = when(col("_f").isNull, col("_b"))
-      .when(col("_b").isNull, col("_f"))
-      .when(us - col("_b").getField("_t") <= col("_f").getField("_t") - us,
-        col("_b"))
-      .otherwise(col("_f"))
-    staged
-      .withColumn("_pick", pick)
-      .select(Seq(col("_side")) ++ leftCols.map(col) ++
-        rightVals.map(v => col("_pick").getField(v).as(v)): _*)
-      .filter(col("_side") === 0).drop("_side")
-  }
+                      tsCol: String, rightVals: Seq[String]): DataFrame =
+    asofSweep(left, right, keys, tsCol, rightVals, Nearest)
 
   /** Linear gap interpolation per key (A5; reference melt_model.py:403
     * `interpolate(method='linear')` with pandas defaults): interior
     * nulls are linearly interpolated between the nearest non-null
     * neighbors by timestamp; trailing nulls are filled with the last
     * valid value (pandas forward limit direction); leading nulls stay
-    * null. The neighbours are `lag`/`lead(1, ignoreNulls)` over one
-    * (key; ts) spec: per key one sort plus a linear sweep.
+    * null. The neighbours come from [[neighbours]] over one (key; ts,
+    * value) sort: per key one sort plus a linear sweep. Rows sharing a
+    * timestamp order by value ascending, nulls first, so a null row
+    * never sits between two same-ts values and its result does not
+    * depend on partition order.
     */
   def interpolateLinear(df: DataFrame, keys: Seq[String], tsCol: String,
                         valCol: String, outCol: String): DataFrame = {
-    val part = Window.partitionBy(keys.map(col): _*).orderBy(col(tsCol))
-    val point = when(col(valCol).isNotNull,
-      struct(unix_micros(col(tsCol)).as("t"), col(valCol).as("v")))
-    val prev = lag(point, 1, null, ignoreNulls = true).over(part)
-    val next = lead(point, 1, null, ignoreNulls = true).over(part)
-    df.withColumn("_prev", prev).withColumn("_next", next)
+    val spec = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(tsCol), col(valCol).asc_nulls_first)
+    val (prev, next) = neighbours(col("_pt"), spec)
+    df.withColumn("_pt", when(col(valCol).isNotNull,
+        struct(unix_micros(col(tsCol)).as("t"), col(valCol).as("v"))))
+      .select(col("*"), prev.as("_prev"), next.as("_next"))
       .withColumn(outCol,
         when(col(valCol).isNotNull, col(valCol))
           .when(col("_prev").isNotNull && col("_next").isNotNull,
@@ -471,7 +441,7 @@ object TimeSeriesOps {
               (col("_next.t") - col("_prev.t")))
           .when(col("_prev").isNotNull, col("_prev.v"))
           .otherwise(lit(null).cast("double")))
-      .drop("_prev", "_next")
+      .drop("_pt", "_prev", "_next")
   }
 
   /** Downsample to arbitrary fixed intervals (reference resample('6H'),
@@ -516,12 +486,15 @@ object TimeSeriesOps {
     * and pick the temporally closest observation's value for each
     * (ties -> the earlier observation, matching pandas reindex).
     *
-    * Same union + two-window shape as the as-of join: one shuffle on
-    * the key, no per-point lookups — a running `last(ignoreNulls)` and
-    * a `lead(1, ignoreNulls)` over one spec, so per key one sort plus
-    * a linear sweep; grid size is bounded by range/interval per key.
-    * Grid buckets are floor-divided, so pre-1970 observations land in
-    * the same bucket pandas gives them.
+    * The grid is the left side of [[asofSweep]]'s nearest sweep and the
+    * non-null observations its right side: one shuffle for the grid
+    * bounds, one for the sweep, no per-point lookups; grid size is
+    * bounded by range/interval per key. Observations sharing a
+    * timestamp order by value, so the backward pick is the largest of
+    * them and the forward pick the smallest. The bounds come from
+    * every observation, null values included, and grid buckets are
+    * floor-divided, so pre-1970 observations land in the same bucket
+    * pandas gives them.
     */
   def upsampleNearest(df: DataFrame, keys: Seq[String], tsCol: String,
                       valCol: String, intervalSec: Long): DataFrame = {
@@ -532,26 +505,9 @@ object TimeSeriesOps {
         explode(sequence(floorDiv(col("_lo"), iUs),
           floorDiv(col("_hi"), iUs))).as("_b"): _*)
       .select(keys.map(col) :+ timestamp_micros(col("_b") * iUs).as(tsCol): _*)
-    val gridT = grid.withColumn("_side", lit(0))
-      .withColumn(valCol, lit(null).cast(df.schema(valCol).dataType))
-    val obsT = df.select(keys.map(col) ++ Seq(col(tsCol), col(valCol)): _*)
-      .withColumn("_side", lit(1))
-    val ord = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(tsCol).asc, col("_side").desc)
-    val before = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val point = when(col(valCol).isNotNull,
-      struct(unix_micros(col(tsCol)).as("t"), col(valCol).as("v")))
-    gridT.unionByName(obsT)
-      .withColumn("_prev", last(point, ignoreNulls = true).over(before))
-      .withColumn("_next", coalesce(point, lead(point, 1, null, ignoreNulls = true).over(ord)))
-      .filter(col("_side") === 0)
-      .withColumn(valCol,
-        when(col("_next").isNull, col("_prev.v"))
-          .when(col("_prev").isNull, col("_next.v"))
-          .when(unix_micros(col(tsCol)) - col("_prev.t") <=
-            col("_next.t") - unix_micros(col(tsCol)), col("_prev.v"))
-          .otherwise(col("_next.v")))
+    val obs = df.filter(col(valCol).isNotNull)
       .select(keys.map(col) ++ Seq(col(tsCol), col(valCol)): _*)
+    asofSweep(grid, obs, keys, tsCol, Seq(valCol), Nearest)
   }
 
   /** [[upsampleNearest]] with a pandas-style duration string — the

@@ -109,50 +109,43 @@ object TimeSeriesQueries extends QueryPack {
       .select(col("user_id"), fmtDay(col("bucket")).as("day"),
         r6(col("mean_v")).as("mean_v"), col("min_v"), col("max_v"), col("n"))
 
-  /** A4 `ts_asof_join` — backward as-of join of purchase values onto
-    * click/view events (hydrotools.py:204 pattern).
+  /** The click/view events as-of joined by `join` with the purchase
+    * values per user — the three `ts_asof_*` keys differ only in the
+    * join's direction.
     */
-  def tsAsofJoin(s: SparkSession, dir: String): DataFrame = {
+  private def asofPurchases(s: SparkSession, dir: String,
+                            join: (DataFrame, DataFrame, Seq[String], String, Seq[String]) =>
+                              DataFrame): DataFrame = {
     val ev = e(s, dir)
     val left = ev.filter(col("event_type").isin("click", "view"))
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
     val right = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("value").as("ref_value"))
-    TimeSeriesOps.asofJoinBackward(left, right, Seq("user_id"), "ts", Seq("ref_value"))
+    join(left, right, Seq("user_id"), "ts", Seq("ref_value"))
       .select(col("event_id"), col("user_id"), fmtTs(col("ts")).as("ts"),
         col("value"), col("ref_value"))
   }
+
+  /** A4 `ts_asof_join` — backward as-of join of purchase values onto
+    * click/view events (hydrotools.py:204 pattern).
+    */
+  def tsAsofJoin(s: SparkSession, dir: String): DataFrame =
+    asofPurchases(s, dir, TimeSeriesOps.asofJoinBackward)
 
   /** A4f `ts_asof_forward` — the forward direction of the same join:
     * each click/view gets the NEXT purchase value at-or-after it
     * (pandas `merge_asof(direction='forward')`).
     */
-  def tsAsofForward(s: SparkSession, dir: String): DataFrame = {
-    val ev = e(s, dir)
-    val left = ev.filter(col("event_type").isin("click", "view"))
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-    val right = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("value").as("ref_value"))
-    TimeSeriesOps.asofJoinForward(left, right, Seq("user_id"), "ts", Seq("ref_value"))
-      .select(col("event_id"), col("user_id"), fmtTs(col("ts")).as("ts"),
-        col("value"), col("ref_value"))
-  }
+  def tsAsofForward(s: SparkSession, dir: String): DataFrame =
+    asofPurchases(s, dir, TimeSeriesOps.asofJoinForward)
 
   /** A4n `ts_asof_nearest` — the nearest direction: each click/view
     * gets the purchase value closest in absolute time (ties to the
     * earlier match), `merge_asof(direction='nearest')`. The pick runs
     * on exact integer microsecond distances on both engines.
     */
-  def tsAsofNearest(s: SparkSession, dir: String): DataFrame = {
-    val ev = e(s, dir)
-    val left = ev.filter(col("event_type").isin("click", "view"))
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-    val right = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("value").as("ref_value"))
-    TimeSeriesOps.asofJoinNearest(left, right, Seq("user_id"), "ts", Seq("ref_value"))
-      .select(col("event_id"), col("user_id"), fmtTs(col("ts")).as("ts"),
-        col("value"), col("ref_value"))
-  }
+  def tsAsofNearest(s: SparkSession, dir: String): DataFrame =
+    asofPurchases(s, dir, TimeSeriesOps.asofJoinNearest)
 
   /** A5 `ts_interpolate` — linear gap fill (melt_model.py:403); gaps are
     * synthesized deterministically (every 10th event).
@@ -269,6 +262,26 @@ object TimeSeriesQueries extends QueryPack {
 
   private val fmt = "%Y-%m-%d %H:%M:%S.%f"
 
+  /** The `ts_asof_*` oracles' shared CTEs: click/view events (side 0)
+    * and purchases (side 1) unioned per user, each purchase carrying
+    * ONE row struct `pt` of its exact-µs timestamp and value, so every
+    * direction returns the value of the one row it matched.
+    */
+  private val asofUnionSql =
+    """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
+      |             event_type, value FROM events),
+      |l AS (SELECT event_id, user_id, ts, value FROM e
+      |      WHERE event_type IN ('click', 'view')),
+      |r AS (SELECT user_id, ts, value AS ref_value FROM e
+      |      WHERE event_type = 'purchase'),
+      |u AS (
+      |  SELECT 0 AS side, event_id, user_id, ts, value,
+      |         CAST(NULL AS DOUBLE) AS ref_value,
+      |         NULL::STRUCT(t BIGINT, v DOUBLE) AS pt FROM l
+      |  UNION ALL
+      |  SELECT 1, NULL, user_id, ts, NULL, ref_value,
+      |         struct_pack(t := epoch_us(ts), v := ref_value) FROM r)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // both medians via the histogramQuantiles reach arithmetic on the
     // r4 grid; |sv-med|, 3.5*mad, and the comparison are the same IEEE
@@ -368,10 +381,10 @@ object TimeSeriesQueries extends QueryPack {
          |  SELECT user_id, ts, value, 1 FROM e),
          |w AS (SELECT *,
          |  last_value(CASE WHEN v IS NOT NULL THEN struct_pack(t := epoch_us(ts), v := v) END IGNORE NULLS)
-         |    OVER (PARTITION BY user_id ORDER BY ts ASC, side DESC
+         |    OVER (PARTITION BY user_id ORDER BY ts ASC, side DESC, v ASC NULLS FIRST
          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pr,
          |  first_value(CASE WHEN v IS NOT NULL THEN struct_pack(t := epoch_us(ts), v := v) END IGNORE NULLS)
-         |    OVER (PARTITION BY user_id ORDER BY ts ASC, side DESC
+         |    OVER (PARTITION BY user_id ORDER BY ts ASC, side DESC, v ASC NULLS FIRST
          |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nx
          |  FROM u)
          |SELECT user_id, strftime(ts, '$fmt') AS ts,
@@ -438,65 +451,33 @@ object TimeSeriesQueries extends QueryPack {
         |  max(value) AS max_v, count(value) AS n
         |FROM e GROUP BY user_id, date_trunc('day', ts)""".stripMargin,
     "ts_asof_join" ->
-      s"""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-         |             event_type, value FROM events),
-         |l AS (SELECT event_id, user_id, ts, value FROM e
-         |      WHERE event_type IN ('click', 'view')),
-         |r AS (SELECT user_id, ts, value AS ref_value FROM e
-         |      WHERE event_type = 'purchase'),
-         |u AS (
-         |  SELECT 0 AS side, event_id, user_id, ts, value,
-         |         CAST(NULL AS DOUBLE) AS ref_value FROM l
-         |  UNION ALL
-         |  SELECT 1, NULL, user_id, ts, NULL, ref_value FROM r),
-         |f AS (SELECT *, last_value(ref_value IGNORE NULLS) OVER (
+      s"""$asofUnionSql,
+         |f AS (SELECT *, last_value(pt IGNORE NULLS) OVER (
          |        PARTITION BY user_id
          |        ORDER BY ts ASC, side DESC, ref_value ASC NULLS FIRST
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rv
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pr
          |      FROM u)
          |SELECT event_id, user_id, strftime(ts, '$fmt') AS ts, value,
-         |       rv AS ref_value
+         |       pr.v AS ref_value
          |FROM f WHERE side = 0""".stripMargin,
     "ts_asof_forward" ->
-      s"""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-         |             event_type, value FROM events),
-         |l AS (SELECT event_id, user_id, ts, value FROM e
-         |      WHERE event_type IN ('click', 'view')),
-         |r AS (SELECT user_id, ts, value AS ref_value FROM e
-         |      WHERE event_type = 'purchase'),
-         |u AS (
-         |  SELECT 0 AS side, event_id, user_id, ts, value,
-         |         CAST(NULL AS DOUBLE) AS ref_value FROM l
-         |  UNION ALL
-         |  SELECT 1, NULL, user_id, ts, NULL, ref_value FROM r),
-         |f AS (SELECT *, first_value(ref_value IGNORE NULLS) OVER (
+      s"""$asofUnionSql,
+         |f AS (SELECT *, first_value(pt IGNORE NULLS) OVER (
          |        PARTITION BY user_id
          |        ORDER BY ts ASC, side ASC, ref_value ASC NULLS FIRST
-         |        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS rv
+         |        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nx
          |      FROM u)
          |SELECT event_id, user_id, strftime(ts, '$fmt') AS ts, value,
-         |       rv AS ref_value
+         |       nx.v AS ref_value
          |FROM f WHERE side = 0""".stripMargin,
     "ts_asof_nearest" ->
-      s"""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-         |             event_type, value FROM events),
-         |l AS (SELECT event_id, user_id, ts, value FROM e
-         |      WHERE event_type IN ('click', 'view')),
-         |r AS (SELECT user_id, ts, value AS ref_value FROM e
-         |      WHERE event_type = 'purchase'),
-         |u AS (
-         |  SELECT 0 AS side, event_id, user_id, ts, value,
-         |         CAST(NULL AS DOUBLE) AS ref_value FROM l
-         |  UNION ALL
-         |  SELECT 1, NULL, user_id, ts, NULL, ref_value FROM r),
+      s"""$asofUnionSql,
          |w AS (SELECT *,
-         |  last_value(CASE WHEN side = 1
-         |      THEN struct_pack(t := epoch_us(ts), v := ref_value) END IGNORE NULLS)
+         |  last_value(pt IGNORE NULLS)
          |    OVER (PARTITION BY user_id
          |          ORDER BY ts ASC, side DESC, ref_value ASC NULLS FIRST
          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pr,
-         |  first_value(CASE WHEN side = 1
-         |      THEN struct_pack(t := epoch_us(ts), v := ref_value) END IGNORE NULLS)
+         |  first_value(pt IGNORE NULLS)
          |    OVER (PARTITION BY user_id
          |          ORDER BY ts ASC, side DESC, ref_value ASC NULLS FIRST
          |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nx
@@ -513,10 +494,10 @@ object TimeSeriesQueries extends QueryPack {
          |        CASE WHEN event_id % 10 = 0 THEN NULL ELSE value END AS v FROM e),
          |w AS (SELECT *,
          |  last_value(CASE WHEN v IS NOT NULL THEN struct_pack(t := eu, v := v) END IGNORE NULLS)
-         |    OVER (PARTITION BY user_id ORDER BY ts
+         |    OVER (PARTITION BY user_id ORDER BY ts, v ASC NULLS FIRST
          |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pr,
          |  first_value(CASE WHEN v IS NOT NULL THEN struct_pack(t := eu, v := v) END IGNORE NULLS)
-         |    OVER (PARTITION BY user_id ORDER BY ts
+         |    OVER (PARTITION BY user_id ORDER BY ts, v ASC NULLS FIRST
          |          ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nx
          |  FROM b)
          |SELECT event_id, user_id, strftime(ts, '$fmt') AS ts,

@@ -1011,7 +1011,7 @@ object Streaming {
 
   case class AsofEvent(key: Long, ts: java.sql.Timestamp, side: Int,
                        value: Double)
-  case class AsofState(rightTs: Long, rightVal: Double)
+  case class AsofState(rightUs: Long, rightVal: Double)
   case class AsofOut(key: Long, ts: java.sql.Timestamp, value: Double,
                      right_value: Option[Double])
 
@@ -1019,11 +1019,17 @@ object Streaming {
     * union of both sides keyed by series — right events (side=1) update
     * O(1) per-key state (latest right ts/value), left events (side=0)
     * emit with the latest right value at-or-before them. Within a
-    * micro-batch events process in timestamp order (right before left
-    * on ties, matching the batch operator's inclusive as-of); disorder
-    * ACROSS batches is bounded by the source's watermark, the same
-    * contract as any event-time streaming join. State never grows with
-    * data volume — one (ts, value) pair per key.
+    * micro-batch events process in microsecond timestamp order (right
+    * before left on ties, matching the batch operator's inclusive
+    * as-of); right events sharing (key, ts) keep the LARGEST value, the
+    * batch operator's tie, whatever their arrival order or micro-batch.
+    * Disorder ACROSS batches is bounded by the source's watermark, the
+    * same contract as any event-time streaming join. State never grows
+    * with data volume — one (ts, value) pair per key.
+    *
+    * Checkpoint note: [[AsofState]] holds microseconds (`rightUs`); it
+    * held milliseconds before, so restart a query checkpointed by an
+    * older build from a fresh checkpoint.
     */
   def asofJoinBackwardStream(spark: SparkSession, events: Dataset[AsofEvent])
       : Dataset[AsofOut] = {
@@ -1033,17 +1039,17 @@ object Streaming {
       .flatMapGroupsWithState[AsofState, AsofOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key, batch, state: GroupState[AsofState]) =>
-          val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, -e.side))
+          val sorted = batch.toSeq.sortBy(e => (micros(e.ts), -e.side))
           val out = Seq.newBuilder[AsofOut]
           var cur = state.getOption
           sorted.foreach { e =>
+            val us = micros(e.ts)
             if (e.side == 1) {
-              if (cur.forall(_.rightTs <= e.ts.getTime))
-                cur = Some(AsofState(e.ts.getTime, e.value))
+              if (cur.forall(s => s.rightUs < us ||
+                  s.rightUs == us && java.lang.Double.compare(s.rightVal, e.value) <= 0))
+                cur = Some(AsofState(us, e.value))
             } else {
-              val rv = cur.collect {
-                case s if s.rightTs <= e.ts.getTime => s.rightVal
-              }
+              val rv = cur.collect { case s if s.rightUs <= us => s.rightVal }
               out += AsofOut(key, e.ts, e.value, rv)
             }
           }

@@ -246,4 +246,36 @@ class ContractSpec extends AnyFunSuite {
       }
     assert(found.isEmpty, s"sliding rangeBetween outside TimeSeriesOps: ${found.mkString(", ")}")
   }
+
+  /** Second copies, in `TimeSeriesOps.scala`, of the ordered-neighbour
+    * operators' single definitions: a `unionByName(` beside the as-of
+    * sweep's one, or an `ignoreNulls = true` read outside the neighbour
+    * helper and `ffill`.
+    */
+  private def neighbourTwins(code: String): Seq[String] = {
+    val unions = """\bunionByName\s*\(""".r.findAllMatchIn(code).size
+    (if (unions == 1) Nil else Seq(s"$unions unionByName( calls")) ++
+      """\bignoreNulls\s*=\s*true""".r.findAllMatchIn(code)
+        .map(m => enclosingDef(code, m.start))
+        .filterNot(Set("neighbours", "ffill"))
+        .map(d => s"ignoreNulls = true in $d")
+  }
+
+  test("TimeSeriesOps.scala has one as-of sweep and one neighbour helper") {
+    // backward, forward, nearest and upsampling are one union + window
+    // sweep and interpolation reads the same neighbours; a twin grows
+    // back as a second union or a second ignore-nulls read
+    val code = mainCode()
+      .collectFirst { case (p, c) if p.getFileName.toString == "TimeSeriesOps.scala" => c }.get
+    assert(neighbourTwins(code).isEmpty, neighbourTwins(code).mkString(", "))
+    // the guard sees each form it forbids
+    Seq(code + """
+      |  def asofJoinBackward2(left: DataFrame, right: DataFrame, w: WindowSpec) =
+      |    left.unionByName(right).select(col("*"),
+      |      last(col("rv"), ignoreNulls = true).over(w).as("rv"))""".stripMargin,
+        code + """
+      |  def nextValue(v: Column, w: WindowSpec) =
+      |    lead(v, 1, null, ignoreNulls = true).over(w)""".stripMargin)
+      .foreach(planted => assert(neighbourTwins(planted).nonEmpty, planted.takeRight(80)))
+  }
 }

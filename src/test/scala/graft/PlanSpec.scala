@@ -120,8 +120,8 @@ class PlanSpec extends SparkSpec {
     }
     // one exchange feeds the single sort all of an operator's windows
     // share; ts_upsample_nearest also shuffles its per-key grid bounds
-    Seq("ts_interpolate" -> 1, "ts_asof_forward" -> 1, "ts_asof_nearest" -> 1,
-        "ts_upsample_nearest" -> 2).foreach { case (name, exchanges) =>
+    Seq("ts_interpolate" -> 1, "ts_asof_join" -> 1, "ts_asof_forward" -> 1,
+        "ts_asof_nearest" -> 1, "ts_upsample_nearest" -> 2).foreach { case (name, exchanges) =>
       val plan = planOf(SparkEntry.queries(name)(spark, dir))
       assert("Exchange hashpartitioning".r.findAllIn(plan).size === exchanges,
         s"$name shuffles more than its series key:\n$plan")

@@ -18,30 +18,9 @@ import graft.similarity.Similarity
   */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
-
-  /** n deterministic samples of g (seeded; no filters → total). */
-  private def samples[A](g: Gen[A], n: Int, seed0: Long): Seq[A] =
-    (0 until n).map(i => g.pureApply(Gen.Parameters.default, Seed(seed0 + i)))
+  import PropertySpec._
 
   // ---- as-of joins vs the pandas merge_asof contract -----------------
-
-  private case class Row3(key: Int, tsMs: Long, v: Double)
-
-  // small ranges on purpose: collisions in (key, ts) exercise the
-  // documented tie-breaks, sparse keys exercise the no-match path
-  private val genSeries: Gen[(List[Row3], List[Row3])] = for {
-    nL <- Gen.choose(1, 40)
-    nR <- Gen.choose(0, 40)
-    mkRow = for {
-      k <- Gen.choose(0, 2)
-      t <- Gen.choose(0L, 30L)
-      v <- Gen.choose(1, 9)
-    } yield Row3(k, t * 1000L, v.toDouble)
-    l <- Gen.listOfN(nL, mkRow)
-    r <- Gen.listOfN(nR, mkRow)
-  } yield (l, r)
-
-  private def tsOf(ms: Long) = new java.sql.Timestamp(ms)
 
   test("asof joins match the merge_asof reference on random keyed series") {
     samples(genSeries, 8, 1001L).zipWithIndex.foreach { case ((l, r), i) =>
@@ -85,10 +64,10 @@ class PropertySpec extends SparkSpec {
   private val genGappy: Gen[List[(Int, Long, Option[Double])]] = for {
     n <- Gen.choose(2, 30)
     keys <- Gen.listOfN(n, Gen.choose(0, 1))
-    // distinct timestamps per (key pool) — interpolation's window
-    // orders by ts alone, so duplicate stamps would be order-defined
+    // n draws from n stamps: duplicate timestamps, the tie path
+    stamps <- Gen.listOfN(n, Gen.choose(1, n))
     vals <- Gen.listOfN(n, Gen.option(Gen.choose(-50, 50).map(_.toDouble)))
-  } yield keys.lazyZip(1 to n).lazyZip(vals).toList
+  } yield keys.lazyZip(stamps).lazyZip(vals).toList
     .map { case (k, t, v) => (k, t * 7000L, v) }
 
   test("interpolateLinear matches the prev/next reference on random gappy series") {
@@ -96,12 +75,17 @@ class PropertySpec extends SparkSpec {
       val df = rows.map { case (k, ms, v) =>
         (k, tsOf(ms), v.map(Double.box).orNull.asInstanceOf[java.lang.Double])
       }.toDF("key", "ts", "v")
+      // rows sharing (key, ts, v) interpolate alike, so the output is
+      // compared as a multiset sorted like the reference
       val got = TimeSeriesOps
         .interpolateLinear(df, Seq("key"), "ts", "v", "vi")
-        .collect().map(r => ((r.getInt(0), r.getTimestamp(1).getTime),
-          Option(r.get(3)).map(_.asInstanceOf[Double]))).toMap
-      rows.groupBy(_._1).foreach { case (_, series) =>
-        val s = series.sortBy(_._2)
+        .collect().map(r => (r.getInt(0), r.getTimestamp(1).getTime,
+          Option(r.get(2)).map(_.asInstanceOf[Double]),
+          Option(r.get(3)).map(_.asInstanceOf[Double]))).toSeq
+        .sortBy(r => (r._1, r._2, r._3)).iterator
+      rows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, series) =>
+        // the operator's order: ts, then value ascending, nulls first
+        val s = series.sortBy(r => (r._2, r._3))
         s.indices.foreach { j =>
           val (k, ms, v) = s(j)
           val exp: Option[Double] = v.orElse {
@@ -116,7 +100,8 @@ class PropertySpec extends SparkSpec {
               case _ => None                               // leading stays null
             }
           }
-          val g = got((k, ms))
+          val (gk, gms, gv, g) = got.next()
+          assert((gk, gms, gv) === ((k, ms, v)), s"case $i rows=$rows")
           assert(g.isDefined === exp.isDefined, s"case $i rows=$rows at $ms")
           g.zip(exp).foreach { case (a, b) =>
             assert(math.abs(a - b) < 1e-9, s"case $i rows=$rows at $ms: $a vs $b")
@@ -128,14 +113,16 @@ class PropertySpec extends SparkSpec {
 
   // ---- nearest upsampling vs the reindex(method='nearest') reference --
 
-  // distinct 7 s stamps straddling the epoch (pre-1970 rows exercise
-  // the floor-divided grid bounds), nulls skipped, ties possible
+  // 7 s stamps straddling the epoch (pre-1970 rows exercise the
+  // floor-divided grid bounds), duplicate stamps, nulls skipped, ties
+  // possible
   private val genUpsample: Gen[(Long, List[(Int, Long, Option[Double])])] = for {
     intervalSec <- Gen.oneOf(10L, 30L, 60L)
     n <- Gen.choose(1, 30)
     keys <- Gen.listOfN(n, Gen.choose(0, 1))
+    stamps <- Gen.listOfN(n, Gen.choose(1, n))
     vals <- Gen.listOfN(n, Gen.option(Gen.choose(-50, 50).map(_.toDouble)))
-  } yield (intervalSec, keys.lazyZip(1 to n).lazyZip(vals).toList
+  } yield (intervalSec, keys.lazyZip(stamps).lazyZip(vals).toList
     .map { case (k, t, v) => (k, (t - 12) * 7000L, v) })
 
   test("upsampleNearest matches the nearest-observation reference on random series") {
@@ -148,7 +135,9 @@ class PropertySpec extends SparkSpec {
           Option(r.get(2)).map(_.asInstanceOf[Double]))).toSeq.sorted
       // per key: grid from floor(min ts) to floor(max ts) in interval
       // steps; each point takes the closest non-null observation, an
-      // equal distance going to the earlier one
+      // equal distance going to the earlier one; among observations
+      // sharing a stamp, the earlier side's is the largest value and
+      // the later side's the smallest
       val iMs = iSec * 1000L
       val exp = rows.groupBy(_._1).toSeq.flatMap { case (k, series) =>
         val obs = series.collect { case (_, ms, Some(v)) => (ms, v) }
@@ -156,8 +145,8 @@ class PropertySpec extends SparkSpec {
         val hi = math.floorDiv(series.map(_._2).max, iMs)
         (lo to hi).map { b =>
           val g = b * iMs
-          val prev = obs.filter(_._1 <= g).maxByOption(_._1)
-          val next = obs.filter(_._1 > g).minByOption(_._1)
+          val prev = obs.filter(_._1 <= g).maxByOption(identity)
+          val next = obs.filter(_._1 > g).minByOption(identity)
           val pick = (prev, next) match {
             case (Some(p), Some(nx)) => Some(if (g - p._1 <= nx._1 - g) p else nx)
             case (p, nx) => p.orElse(nx)
@@ -1326,4 +1315,28 @@ class PropertySpec extends SparkSpec {
       assert(got.keySet === bySrc.keySet, s"c$ci sources")
     }
   }
+}
+
+object PropertySpec {
+  case class Row3(key: Int, tsMs: Long, v: Double)
+
+  // small ranges on purpose: collisions in (key, ts) exercise the
+  // documented tie-breaks, sparse keys exercise the no-match path
+  val genSeries: Gen[(List[Row3], List[Row3])] = for {
+    nL <- Gen.choose(1, 40)
+    nR <- Gen.choose(0, 40)
+    mkRow = for {
+      k <- Gen.choose(0, 2)
+      t <- Gen.choose(0L, 30L)
+      v <- Gen.choose(1, 9)
+    } yield Row3(k, t * 1000L, v.toDouble)
+    l <- Gen.listOfN(nL, mkRow)
+    r <- Gen.listOfN(nR, mkRow)
+  } yield (l, r)
+
+  /** n deterministic samples of g (seeded; no filters → total). */
+  def samples[A](g: Gen[A], n: Int, seed0: Long): Seq[A] =
+    (0 until n).map(i => g.pureApply(Gen.Parameters.default, Seed(seed0 + i)))
+
+  def tsOf(ms: Long) = new java.sql.Timestamp(ms)
 }

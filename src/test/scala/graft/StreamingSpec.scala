@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.Streaming
-import graft.streaming.Streaming.{FunnelEvent, SessionEvent}
+import graft.streaming.Streaming.{AsofEvent, FunnelEvent, SessionEvent}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -581,31 +581,82 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("asofJoinBackwardStream carries the latest right value at-or-before each left event") {
-    import graft.streaming.Streaming.AsofEvent
+  /** `events` through [[Streaming.asofJoinBackwardStream]], one
+    * micro-batch per group, as sorted (key, µs, left value, right value).
+    */
+  private def asofStream(name: String, batches: Seq[AsofEvent]*)
+      : Seq[(Long, Long, Double, Option[Double])] = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[AsofEvent]
-    val out = Streaming.asofJoinBackwardStream(spark, input.toDS())
-    val q = out.writeStream.format("memory").queryName("asof_stream")
+    val q = Streaming.asofJoinBackwardStream(spark, input.toDS())
+      .writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append()).start()
     try {
-      input.addData(
-        AsofEvent(1L, ts("2024-01-01 00:05:00"), 0, 10.0), // left before any right
-        AsofEvent(1L, ts("2024-01-01 00:10:00"), 1, 100.0), // right
-        AsofEvent(1L, ts("2024-01-01 00:20:00"), 0, 20.0)) // left after right
-      q.processAllAvailable()
-      // right state persists across micro-batches
-      input.addData(AsofEvent(1L, ts("2024-01-01 03:00:00"), 0, 30.0))
-      q.processAllAvailable()
-      val rows = spark.table("asof_stream").collect()
-        .map(r => (r.getAs[java.sql.Timestamp]("ts"), r.getAs[Double]("value"),
-          Option(r.getAs[java.lang.Double]("right_value")).map(_.doubleValue)))
-        .sortBy(_._1.getTime)
-      assert(rows.toSeq === Seq(
-        (ts("2024-01-01 00:05:00"), 10.0, None), // nothing at-or-before
-        (ts("2024-01-01 00:20:00"), 20.0, Some(100.0)),
-        (ts("2024-01-01 03:00:00"), 30.0, Some(100.0))))
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      spark.table(name).selectExpr("key", "unix_micros(ts)", "value", "right_value")
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          Option(r.get(3)).map(_.asInstanceOf[Double])))
+        .sorted
     } finally q.stop()
+  }
+
+  test("asofJoinBackwardStream carries the latest right value at-or-before each left event") {
+    val got = asofStream("asof_stream",
+      Seq(AsofEvent(1L, ts("2024-01-01 00:05:00"), 0, 10.0), // left before any right
+        AsofEvent(1L, ts("2024-01-01 00:10:00"), 1, 100.0), // right
+        AsofEvent(1L, ts("2024-01-01 00:20:00"), 0, 20.0)), // left after right
+      // right state persists across micro-batches
+      Seq(AsofEvent(1L, ts("2024-01-01 03:00:00"), 0, 30.0)))
+    def us(s: String) = ts(s).getTime * 1000L
+    assert(got.map(r => (r._2, r._3, r._4)) === Seq(
+      (us("2024-01-01 00:05:00"), 10.0, None), // nothing at-or-before
+      (us("2024-01-01 00:20:00"), 20.0, Some(100.0)),
+      (us("2024-01-01 03:00:00"), 30.0, Some(100.0))))
+  }
+
+  test("asofJoinBackwardStream compares microseconds, not milliseconds") {
+    // the right event is 400 µs AFTER the left one, in the same millisecond
+    val got = asofStream("asof_us", Seq(
+      AsofEvent(1L, ts("2024-01-01 00:00:00.0007"), 1, 100.0),
+      AsofEvent(1L, ts("2024-01-01 00:00:00.0003"), 0, 10.0)))
+    assert(got.map(r => (r._1, r._3, r._4)) === Seq((1L, 10.0, None)))
+  }
+
+  test("asofJoinBackwardStream keeps the largest of same-ts right values, like the batch join") {
+    val t = ts("2024-01-01 00:10:00")
+    val later = ts("2024-01-01 00:20:00")
+    // key 1: both rights in one micro-batch; key 2: across two batches;
+    // both arrive as [9.0, 3.0]
+    val got = asofStream("asof_tie",
+      Seq(AsofEvent(1L, t, 1, 9.0), AsofEvent(1L, t, 1, 3.0), AsofEvent(1L, later, 0, 1.0),
+        AsofEvent(2L, t, 1, 9.0)),
+      Seq(AsofEvent(2L, t, 1, 3.0), AsofEvent(2L, later, 0, 2.0)))
+    assert(got.map(r => (r._1, r._4)) === Seq((1L, Some(9.0)), (2L, Some(9.0))))
+  }
+
+  test("asofJoinBackwardStream matches batch asofJoinBackward on random keyed series") {
+    import graft.operators.TimeSeriesOps
+    import PropertySpec.{genSeries, samples, tsOf}
+    // every sample in one micro-batch, its keys offset so samples stay apart
+    val cases = samples(genSeries, 8, 1001L).zipWithIndex.map { case ((l, r), i) =>
+      (l.map(e => (i * 10L + e.key, e.tsMs, e.v)), r.map(e => (i * 10L + e.key, e.tsMs, e.v)))
+    }
+    val left = cases.flatMap(_._1)
+    val right = cases.flatMap(_._2)
+    val got = asofStream("asof_parity",
+      left.map { case (k, ms, v) => AsofEvent(k, tsOf(ms), 0, v) } ++
+        right.map { case (k, ms, v) => AsofEvent(k, tsOf(ms), 1, v) })
+    val batch = TimeSeriesOps.asofJoinBackward(
+        left.map { case (k, ms, v) => (k, tsOf(ms), v) }.toDF("key", "ts", "value"),
+        right.map { case (k, ms, v) => (k, tsOf(ms), v) }.toDF("key", "ts", "rv"),
+        Seq("key"), "ts", Seq("rv"))
+      .selectExpr("key", "unix_micros(ts)", "value", "rv").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        Option(r.get(3)).map(_.asInstanceOf[Double])))
+      .sorted
+    assert(got.size === left.size)
+    assert(got === batch)
   }
 
   test("qualityGateStream normalizes, redacts, and filters rows statelessly") {

@@ -164,6 +164,46 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(Option(out(0).getAs[java.lang.Double]("rv")) === None)
   }
 
+  test("asofJoinBackward and asofJoinForward return every value from ONE right row") {
+    def rows(r: (String, Integer, java.lang.Double)*) =
+      r.toDF("t", "a", "b").select(lit("k").as("k"), col("t").cast("timestamp").as("t"),
+        col("a"), col("b"))
+    def pick(out: org.apache.spark.sql.DataFrame) = out.collect().toSeq
+      .map(r => (Option(r.getAs[Integer]("a")), Option(r.getAs[java.lang.Double]("b"))))
+    def left(t: String) = series(("k", t, 1.0)).withColumnRenamed("v", "lv")
+    // backward: the latest right row before 03:00 is 02:00 (a=1, b=null);
+    // its null b is returned, not the 01:00 row's b=5
+    val bwdRight = rows(("2024-01-01 01:00:00", 0, 5.0), ("2024-01-01 02:00:00", 1, null))
+    assert(pick(TimeSeriesOps.asofJoinBackward(left("2024-01-01 03:00:00"), bwdRight,
+      Seq("k"), "t", Seq("a", "b"))) === Seq((Some(1), None)))
+    // forward, mirrored: the earliest right row after 00:00 is 01:00
+    // (a=1, b=null), not a mix with the 02:00 row's b=5
+    val fwdRight = rows(("2024-01-01 01:00:00", 1, null), ("2024-01-01 02:00:00", 0, 5.0))
+    assert(pick(TimeSeriesOps.asofJoinForward(left("2024-01-01 00:00:00"), fwdRight,
+      Seq("k"), "t", Seq("a", "b"))) === Seq((Some(1), None)))
+  }
+
+  test("interpolateLinear and upsampleNearest order same-ts rows by value, nulls first") {
+    val df = series(
+      ("a", "2024-01-01 00:00:00", 10.0),
+      ("a", "2024-01-01 01:00:00", 30.0),
+      ("a", "2024-01-01 01:00:00", null),
+      ("a", "2024-01-01 01:00:00", 20.0),
+      ("a", "2024-01-01 02:00:00", 50.0),
+      ("a", "2024-01-01 02:00:00", 40.0))
+    // the null row sorts before both 01:00 values: it interpolates from
+    // 00:00 (10) to the smaller 01:00 value (20), never 0/0 between them
+    val vi = TimeSeriesOps.interpolateLinear(df, Seq("k"), "t", "v", "vi")
+      .filter(col("v").isNull).collect().map(_.getAs[Double]("vi"))
+    assert(vi === Array(20.0))
+    // grid 00:30 ties 00:00 and 01:00 -> backward (10); 01:00 hits the
+    // 01:00 rows -> the largest (30); 01:30 ties 01:00 (largest, 30)
+    // and 02:00 (smallest, 40) -> backward; 02:00 -> the largest (50)
+    val up = TimeSeriesOps.upsampleNearest(df, Seq("k"), "t", "v", 1800)
+      .orderBy("t").collect().map(_.getAs[Double]("v"))
+    assert(up === Array(10.0, 10.0, 30.0, 30.0, 50.0))
+  }
+
   test("interpolateLinear: interior linear by time, trailing ffill, leading stays null") {
     val df = series(
       ("a", "2024-01-01 00:00:00", null), // leading
