@@ -1,11 +1,10 @@
 package graft.api
 
-/** Station-metadata plumbing from the reference's gpstools
-  * (gpstools.py:84-201, 520, 870): base-station coordinates, station
-  * naming from file conventions, component-letter labels, and the small
-  * duration helpers the velocity plumbing uses. Pure driver-side
-  * metadata — none of this touches data-plane DataFrames.
-  */
+// Station-metadata plumbing from the reference's gpstools
+// (gpstools.py:84-201, 520, 870): base-station coordinates, station
+// naming from file conventions, component-letter labels, and the small
+// duration helpers the velocity plumbing uses. Pure driver-side
+// metadata — none of this touches data-plane DataFrames.
 
 /** gpstools.py:84 `BaseStn` — static base-station info for reference
   * position determination.

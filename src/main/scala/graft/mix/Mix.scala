@@ -687,34 +687,21 @@ object Mix {
     * `in_range`, null value → null tag) so the clipped-mass accounting
     * ships with the clipped column.
     *
-    * Cutpoints are exact LOWER quantiles from [[histogramQuantiles]]
-    * (integer reach arithmetic, engine-portable) coming back as a
-    * broadcast dim; the clip itself is one row-local comparison chain.
-    * Requires an integer-or-gridded value column (the histogram
-    * groupBy keys must compare exactly across engines).
+    * The stream gate's two halves on one corpus: the cutpoints of
+    * [[graft.streaming.Streaming.winsorizeCutpoints]] (exact LOWER
+    * quantiles from [[histogramQuantiles]], coming back as a broadcast
+    * dim) and the row-local clip of
+    * [[graft.streaming.Streaming.winsorizeStream]], so batch and stream
+    * label identically. Requires an integer-or-gridded value column
+    * (the histogram groupBy keys must compare exactly across engines).
     */
   def winsorize(df: DataFrame, keyCol: String, valCol: String,
                 loNum: Int, loDen: Int, hiNum: Int, hiDen: Int): DataFrame = {
     require(loNum * hiDen < hiNum * loDen,
       s"lo quantile $loNum/$loDen must be below hi $hiNum/$hiDen")
-    val cuts = histogramQuantiles(df, keyCol, valCol,
-        Seq((loNum, loDen), (hiNum, hiDen)))
-      .select(col(keyCol), col(s"q_${loNum}_$loDen").as("_lo"),
-        col(s"q_${hiNum}_$hiDen").as("_hi"))
-    // left join: a key whose values are ALL null has no cuts row — it
-    // must surface with null clipped/clip_tag, never silently drop
-    df.join(broadcast(cuts), Seq(keyCol), "left")
-      // explicit null guard: Spark's greatest/least SKIP nulls (a null
-      // value would silently clip to _lo), so a null value must stay null
-      .withColumn("clipped",
-        when(col(valCol).isNull, lit(null))
-          .otherwise(least(greatest(col(valCol), col("_lo")), col("_hi"))))
-      .withColumn("clip_tag",
-        when(col(valCol).isNull, lit(null).cast("string"))
-          .when(col(valCol) < col("_lo"), lit("low"))
-          .when(col(valCol) > col("_hi"), lit("high"))
-          .otherwise(lit("in_range")))
-      .drop("_lo", "_hi")
+    graft.streaming.Streaming.winsorizeStream(df, keyCol, valCol,
+      graft.streaming.Streaming.winsorizeCutpoints(df, keyCol, valCol,
+        loNum, loDen, hiNum, hiDen))
   }
 
   /** Corpus-distribution drift between two dataset versions: exact
@@ -797,47 +784,6 @@ object Mix {
         col("min_tokens"), col("p50_tokens"), col("max_tokens"))
   }
 
-  /** Context-window chunking: split each document's whitespace tokens
-    * into fixed-size windows of `chunkTokens` advancing by `stride`
-    * (stride < chunkTokens gives overlapping windows) — the step that
-    * turns curated documents into trainer-ready sequences. Row-local:
-    * one split + one bounded explode per document, no shuffle; the
-    * trailing window keeps whatever tokens remain (the trainer's
-    * packer absorbs short tails — see [[packSequences]]).
-    *
-    * Output: idCol + `chunk_idx` (0-based), `chunk_start` (0-based
-    * token offset), `n_chunk_tokens`, `chunk_text`.
-    */
-  /** L16: DSIR importance weights (Xie et al. 2023, arXiv:2302.03169
-    * "Data Selection for Language Models via Importance Resampling"):
-    * score every document by how much more likely its hashed-bigram
-    * features are under a TARGET distribution (a curated subset
-    * standing in for "high-quality text") than under the raw corpus —
-    * `log w(doc) = Σ_grams [log p̂_target(bucket) − log p̂_corpus(bucket)]`
-    * with add-one smoothing over `numBuckets` hashed buckets. The
-    * selection policy (top-k, weight-proportional resample) is the
-    * caller's; this emits the per-doc evidence.
-    *
-    * Feature hashing is md5-based (`int(md5(gram)[0:8]) mod buckets`)
-    * — engine-portable, so the DuckDB oracle restates the identical
-    * bucketing (the text_fingerprint convention) and the whole score
-    * is hash-checked end-to-end. Docs with fewer than 2 tokens have no
-    * features and emit no row (the text_lm_score convention).
-    *
-    * Scale shape: bigram→bucket is a row-local projection + explode
-    * carrying (doc_id, bucket, is_target) — 8-byte longs, never gram
-    * strings; BOTH models fit in ONE `numBuckets`-bounded aggregation
-    * (conditional count for the target side — the target is a subset
-    * of the corpus, not a second scan); totals are a 1-row broadcast;
-    * the log-ratio table is `numBuckets` rows broadcast back; the only
-    * corpus-scale exchange is the per-doc weight sum. The gram
-    * projection is referenced twice (model fit + scoring) — both are
-    * the same cheap projection over the scan, no shuffle (the
-    * semanticNearDup recompute note).
-    *
-    * Output: (idCol, n_bigrams, logw) — logw UNROUNDED; callers on the
-    * oracle surface round once at output.
-    */
   /** The (idCol, _tgt, bucket) hashed-bigram projection shared by the
     * model fit and the scoring pass — row-local + explode, 8-byte
     * longs only past this point.
@@ -878,6 +824,36 @@ object Mix {
           log((col("_cq") + 1.0) / (col("_nq") + numBuckets))).as("lr"))
   }
 
+  /** L16: DSIR importance weights (Xie et al. 2023, arXiv:2302.03169
+    * "Data Selection for Language Models via Importance Resampling"):
+    * score every document by how much more likely its hashed-bigram
+    * features are under a TARGET distribution (a curated subset
+    * standing in for "high-quality text") than under the raw corpus —
+    * `log w(doc) = Σ_grams [log p̂_target(bucket) − log p̂_corpus(bucket)]`
+    * with add-one smoothing over `numBuckets` hashed buckets. The
+    * selection policy (top-k, weight-proportional resample) is the
+    * caller's; this emits the per-doc evidence.
+    *
+    * Feature hashing is md5-based (`int(md5(gram)[0:8]) mod buckets`)
+    * — engine-portable, so the DuckDB oracle restates the identical
+    * bucketing (the text_fingerprint convention) and the whole score
+    * is hash-checked end-to-end. Docs with fewer than 2 tokens have no
+    * features and emit no row (the text_lm_score convention).
+    *
+    * Scale shape: bigram→bucket is a row-local projection + explode
+    * carrying (doc_id, bucket, is_target) — 8-byte longs, never gram
+    * strings; BOTH models fit in ONE `numBuckets`-bounded aggregation
+    * (conditional count for the target side — the target is a subset
+    * of the corpus, not a second scan); totals are a 1-row broadcast;
+    * the log-ratio table is `numBuckets` rows broadcast back; the only
+    * corpus-scale exchange is the per-doc weight sum. The gram
+    * projection is referenced twice (model fit + scoring) — both are
+    * the same cheap projection over the scan, no shuffle (the
+    * semanticNearDup recompute note).
+    *
+    * Output: (idCol, n_bigrams, logw) — logw UNROUNDED; callers on the
+    * oracle surface round once at output.
+    */
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
                   isTarget: Column, numBuckets: Int = 1024): DataFrame = {
     require(numBuckets > 0, "numBuckets must be positive")
@@ -1095,6 +1071,17 @@ object Mix {
           .as("n_packs"))
   }
 
+  /** Context-window chunking: split each document's whitespace tokens
+    * into fixed-size windows of `chunkTokens` advancing by `stride`
+    * (stride < chunkTokens gives overlapping windows) — the step that
+    * turns curated documents into trainer-ready sequences. Row-local:
+    * one split + one bounded explode per document, no shuffle; the
+    * trailing window keeps whatever tokens remain (the trainer's
+    * packer absorbs short tails — see [[packSequences]]).
+    *
+    * Output: idCol + `chunk_idx` (0-based), `chunk_start` (0-based
+    * token offset), `n_chunk_tokens`, `chunk_text`.
+    */
   def chunkByTokens(df: DataFrame, idCol: String, textCol: String,
                     chunkTokens: Int, stride: Int): DataFrame = {
     require(chunkTokens > 0, "chunkTokens must be positive")

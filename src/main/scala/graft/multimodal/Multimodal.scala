@@ -1,7 +1,10 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.awt.image.BufferedImage
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
 
 /** Multimodal column plumbing (SURVEY §2 J1-J2).
   *
@@ -26,91 +29,111 @@ object Multimodal {
                            decoded: Boolean, img_width: Int, img_height: Int,
                            channels: Int, features: Array[Double])
 
+  /** The one payload + typed metadata builder behind every schema
+    * attacher and rendered corpus: `idCol` as the long `doc_id`,
+    * `payloadCol` as the binary `payload`, and `meta` as the `meta`
+    * struct.
+    */
+  private def withMeta(docs: DataFrame, idCol: String, payloadCol: String,
+                       meta: Column*): DataFrame =
+    docs.select(
+      col(idCol).cast("long").as("doc_id"),
+      col(payloadCol).cast("binary").as("payload"),
+      struct(meta: _*).as("meta"))
+
   /** J1: attach a binary payload + typed metadata to a text corpus
     * (payload = utf-8 bytes standing in for image bytes).
     */
   def withMediaSchema(docs: DataFrame, idCol: String, textCol: String,
                       sizeCol: String): DataFrame =
-    docs.select(
-      col(idCol).cast("long").as("doc_id"),
-      col(textCol).cast("binary").as("payload"),
-      struct(
-        (col(sizeCol) % 640 + 1).cast("int").as("width"),
-        (col(sizeCol) * 7 % 480 + 1).cast("int").as("height"),
-        lit("png").as("format")).as("meta"))
+    withMeta(docs, idCol, textCol,
+      (col(sizeCol) % 640 + 1).cast("int").as("width"),
+      (col(sizeCol) * 7 % 480 + 1).cast("int").as("height"),
+      lit("png").as("format"))
 
-  /** Batched decode: javax.imageio (pure-JVM PNG/BMP/GIF codecs) per
-    * payload — a valid image yields its true dimensions, band count,
-    * and EXACT per-channel pixel means in [0,1] (integer pixel sums
-    * accumulated in a double, so the means reproduce bit-for-bit and
-    * can be oracled against the synthesis formula). A payload ImageIO
-    * cannot read falls back to the deterministic 8-bin byte histogram
-    * with `decoded = false` — one corrupt blob must not kill a 100 TB
-    * job, and must not silently pose as an image either.
-    */
   // per-row byte-array streams must not route through ImageIO's default
   // DISK cache (a temp file created and deleted per image)
   javax.imageio.ImageIO.setUseCache(false)
 
-  private def decodeBatch(batch: Seq[MediaRecord]): Seq[MediaFeatures] =
-    batch.map { r =>
-      val img =
-        // malformed payloads throw unchecked exceptions from some JDK
-        // readers (not just IOException) — ANY decode failure must
-        // degrade to the fallback row, never abort the job
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-        catch { case scala.util.control.NonFatal(_) => null }
-      if (img == null) {
-        val hist = new Array[Double](8)
-        r.payload.foreach(b => hist((b & 0xff) >> 5) += 1.0)
-        val n = math.max(r.payload.length, 1)
-        MediaFeatures(r.doc_id, r.payload.length, batch.size, decoded = false,
-          0, 0, 0, hist.map(_ / n))
-      } else {
-        val w = img.getWidth; val h = img.getHeight
-        val indexed =
-          img.getColorModel.isInstanceOf[java.awt.image.IndexColorModel]
-        val raster = img.getRaster
-        val ch = if (indexed) 3 else raster.getNumBands
-        val sums = new Array[Double](ch)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            if (indexed) {
-              // palette PNG/GIF: the raster holds colormap INDICES, not
-              // intensities — resolve through the color model so the
-              // means are real pixel statistics
-              val rgb = img.getRGB(x, y)
-              sums(0) += (rgb >> 16) & 0xff
-              sums(1) += (rgb >> 8) & 0xff
-              sums(2) += rgb & 0xff
-            } else {
-              var c = 0
-              while (c < ch) { sums(c) += raster.getSample(x, y, c); c += 1 }
-            }
-            x += 1
-          }
-          y += 1
-        }
-        MediaFeatures(r.doc_id, r.payload.length, batch.size, decoded = true,
-          w, h, ch, sums.map(s => s / (w.toLong * h) / 255.0))
-      }
-    }
+  /** The one batched decode body behind every decoder (the Scala
+    * analogue of mapInPandas' batch shape): each partition's
+    * (`doc_id`, `payload`) records are pulled through in `batchSize`
+    * chunks, the boundary a real decoder would amortize model/codec
+    * setup over, and `decode` runs on each record under ONE guard.
+    * Malformed payloads throw unchecked exceptions from some JDK
+    * readers (not just IOException), so ANY failure in the per-record
+    * decode degrades to that record's `failed` row: one corrupt blob
+    * must not kill a 100 TB job, and must not silently pose as decoded
+    * media either. Both functions get the record's id, its payload and
+    * the size of its batch. Row-local: zero shuffle.
+    */
+  private def batchDecode[T <: Product : TypeTag](spark: SparkSession,
+      media: DataFrame, batchSize: Int)(
+      decode: (Long, Array[Byte], Int) => Seq[T],
+      failed: (Long, Array[Byte], Int) => T): Dataset[T] = {
+    import spark.implicits._
+    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
+      .mapPartitions(_.grouped(batchSize).flatMap(batch => batch.flatMap {
+        case (id, bytes) =>
+          try decode(id, bytes, batch.size)
+          catch { case NonFatal(_) => Seq(failed(id, bytes, batch.size)) }
+      }))
+  }
 
-  /** J2: batched feature extraction. Partition-parallel, with rows
-    * grouped into `batchSize` chunks inside each partition — the batch
-    * boundary a real decoder would amortize over.
+  /** `payload` decoded by javax.imageio (pure-JVM PNG/BMP/GIF codecs);
+    * throws when no reader claims it.
+    */
+  private def readImage(payload: Array[Byte]): BufferedImage =
+    Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload)))
+      .getOrElse(throw new java.io.IOException("no ImageIO reader claims the payload"))
+
+  /** Channel `c` (0 = R, 1 = G, 2 = B) of a packed `getRGB` pixel. */
+  private def channel(rgb: Int, c: Int): Int = (rgb >> (16 - 8 * c)) & 0xff
+
+  /** J2: batched feature extraction ([[batchDecode]]). A valid image
+    * yields its true dimensions, band count, and EXACT per-channel
+    * pixel means in [0,1] (integer pixel sums accumulated in a double,
+    * so the means reproduce bit-for-bit and can be oracled against the
+    * synthesis formula). A payload ImageIO cannot read falls back to
+    * the deterministic 8-bin byte histogram with `decoded = false`.
     */
   def extractFeatures(spark: SparkSession, media: DataFrame,
-                      batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"),
-        col("meta.width").as("width"), col("meta.height").as("height"),
-        col("meta.format").as("format"))
-      .as[MediaRecord]
-      .mapPartitions(_.grouped(batchSize).flatMap(decodeBatch))
-  }
+                      batchSize: Int = 64): Dataset[MediaFeatures] =
+    batchDecode(spark, media, batchSize)({ (id, bytes, n) =>
+      val img = readImage(bytes)
+      val w = img.getWidth; val h = img.getHeight
+      val indexed =
+        img.getColorModel.isInstanceOf[java.awt.image.IndexColorModel]
+      val raster = img.getRaster
+      val ch = if (indexed) 3 else raster.getNumBands
+      val sums = new Array[Double](ch)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          if (indexed) {
+            // palette PNG/GIF: the raster holds colormap INDICES, not
+            // intensities — resolve through the color model so the
+            // means are real pixel statistics
+            val rgb = img.getRGB(x, y)
+            var c = 0
+            while (c < 3) { sums(c) += channel(rgb, c); c += 1 }
+          } else {
+            var c = 0
+            while (c < ch) { sums(c) += raster.getSample(x, y, c); c += 1 }
+          }
+          x += 1
+        }
+        y += 1
+      }
+      Seq(MediaFeatures(id, bytes.length, n, decoded = true,
+        w, h, ch, sums.map(s => s / (w.toLong * h) / 255.0)))
+    }, { (id, bytes, n) =>
+      val hist = new Array[Double](8)
+      bytes.foreach(b => hist((b & 0xff) >> 5) += 1.0)
+      MediaFeatures(id, bytes.length, n, decoded = false,
+        0, 0, 0, hist.map(_ / math.max(bytes.length, 1)))
+    })
 
   /** Deterministic pixel formula shared by the PNG synthesis and the
     * DuckDB oracle: channel c of pixel k (row-major) of image `id` is
@@ -154,23 +177,37 @@ object Multimodal {
     out.toByteArray
   }
 
+  /** [[pngPayload]] with its dims and format. */
+  private def pngRecord(id: Long): MediaRecord = {
+    val (w, h) = synthDims(id)
+    MediaRecord(id, pngPayload(id), w, h, "png")
+  }
+
+  /** The one renderer of the synthesized corpora: each id of `docs`
+    * becomes one `record`, row-locally (encode is per row, no shuffle).
+    */
+  private def rendered[T <: Product : TypeTag](docs: DataFrame, idCol: String)(
+      record: Long => T): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col(idCol).cast("long")).as[Long].map(record).toDF()
+  }
+
+  /** [[rendered]] image records, their dims and format as `meta`. */
+  private def renderedImages(docs: DataFrame, idCol: String)(
+      record: Long => MediaRecord): DataFrame =
+    withMeta(rendered(docs, idCol)(record), "doc_id", "payload",
+      col("width"), col("height"), col("format"))
+
   /** J2: real-PNG payload synthesis — the container ships no image
     * corpus, so the corpus' ids are rendered into tiny deterministic
     * PNGs (one per doc, bounded 7x6 px). The payloads are REAL encoded
     * PNG bytes: everything downstream (ImageIO decode, channel stats)
     * exercises the true codec path, standing in for
-    * `spark.read.format("binaryFile")` over an image corpus. Runs in
-    * the Dataset layer per row — encode is row-local, no shuffle.
+    * `spark.read.format("binaryFile")` over an image corpus.
     */
-  def withPngPayloads(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long")).as[Long].map { id =>
-      val (w, h) = synthDims(id)
-      MediaRecord(id, pngPayload(id), w, h, "png")
-    }.select(col("doc_id"), col("payload"),
-      struct(col("width"), col("height"), col("format")).as("meta"))
-  }
+  def withPngPayloads(docs: DataFrame, idCol: String): DataFrame =
+    renderedImages(docs, idCol)(pngRecord)
 
   /** Deterministic NON-image byte string for `id`: first byte 0x01 so
     * no ImageIO reader claims it (WBMP requires type 0; PNG/GIF/BMP/
@@ -194,77 +231,64 @@ object Multimodal {
     * DuckDB oracle (the r10 upgrade that moved mm_features off the
     * rows-only list).
     */
-  def withMixedPayloads(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long")).as[Long].map { id =>
-      if (id % 2 == 0) {
-        val (w, h) = synthDims(id)
-        MediaRecord(id, pngPayload(id), w, h, "png")
-      } else MediaRecord(id, corruptPayload(id), 0, 0, "bin")
-    }.select(col("doc_id"), col("payload"),
-      struct(col("width"), col("height"), col("format")).as("meta"))
-  }
+  def withMixedPayloads(docs: DataFrame, idCol: String): DataFrame =
+    renderedImages(docs, idCol)(id =>
+      if (id % 2 == 0) pngRecord(id)
+      else MediaRecord(id, corruptPayload(id), 0, 0, "bin"))
 
   case class ResizedFeatures(doc_id: Long, decoded: Boolean,
                              src_width: Int, src_height: Int,
                              out_width: Int, out_height: Int,
                              means: Array[Double])
 
+  /** The `getRGB` pixels of the `outW`×`outH` nearest-neighbour grid
+    * over `img`, row-major: cell (tx, ty) reads source pixel
+    * (`tx*w / outW`, `ty*h / outH`) by INTEGER floor division — exact,
+    * engine-reproducible, no center-offset float.
+    */
+  private def gridPixels(img: BufferedImage, outW: Int, outH: Int): Array[Int] = {
+    val w = img.getWidth; val h = img.getHeight
+    Array.tabulate(outH, outW)((ty, tx) =>
+      img.getRGB(tx * w / outW, ty * h / outH)).flatten
+  }
+
+  /** Both resizes: [[batchDecode]] of each payload to its source dims
+    * and the per-channel `means` of its `outW`×`outH` resize; a payload
+    * ImageIO cannot read yields `decoded = false` and no means.
+    */
+  private def resized(spark: SparkSession, media: DataFrame, outW: Int,
+                      outH: Int, batchSize: Int)(
+      means: BufferedImage => Array[Double]): Dataset[ResizedFeatures] = {
+    require(outW > 0 && outH > 0, "output dims must be positive")
+    batchDecode(spark, media, batchSize)({ (id, bytes, _) =>
+      val img = readImage(bytes)
+      Seq(ResizedFeatures(id, decoded = true, img.getWidth, img.getHeight,
+        outW, outH, means(img)))
+    }, (id, _, _) => ResizedFeatures(id, decoded = false, 0, 0, outW, outH,
+      Array.empty[Double]))
+  }
+
   /** J2+: batched nearest-neighbor resize — the "make every image the
     * model's input size" step of a vision-data pipeline. Decodes each
     * payload (same javax.imageio path and corrupt-payload fallback as
-    * [[extractFeatures]]), samples the `outW`×`outH` grid with the
-    * standard floor mapping `sx = tx*w / outW` (INTEGER division —
-    * exact, engine-reproducible, no center-offset float), and emits
+    * [[extractFeatures]]), samples the [[gridPixels]] grid, and emits
     * the resized per-channel means. The pixel sums are integers
-    * accumulated in a double and divided by the sample count then by
-    * 255 (the [[extractFeatures]] order, matching the oracle's
-    * `list_avg(...)/255`), so the means are bit-exact against an
-    * oracle that re-derives the sampled pixels analytically — the
-    * resize has to hit the exact source pixel the floor mapping
-    * names, or the hash breaks. Row-local and batched like the
-    * decode — at 100 TB this is a zero-shuffle projection whose only
-    * cost is the codec itself.
+    * divided by the sample count then by 255 (the [[extractFeatures]]
+    * order, matching the oracle's `list_avg(...)/255`), so the means
+    * are bit-exact against an oracle that re-derives the sampled
+    * pixels analytically — the resize has to hit the exact source
+    * pixel the floor mapping names, or the hash breaks. Row-local and
+    * batched like the decode — at 100 TB this is a zero-shuffle
+    * projection whose only cost is the codec itself.
     */
   def resizeFeatures(spark: SparkSession, media: DataFrame,
                      outW: Int, outH: Int,
-                     batchSize: Int = 64): Dataset[ResizedFeatures] = {
-    require(outW > 0 && outH > 0, "output dims must be positive")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"),
-        col("meta.width").as("width"), col("meta.height").as("height"),
-        col("meta.format").as("format"))
-      .as[MediaRecord]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { r =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null)
-          ResizedFeatures(r.doc_id, decoded = false, 0, 0, outW, outH,
-            Array.empty[Double])
-        else {
-          val w = img.getWidth; val h = img.getHeight
-          val sums = new Array[Double](3)
-          var ty = 0
-          while (ty < outH) {
-            val sy = ty * h / outH
-            var tx = 0
-            while (tx < outW) {
-              val sx = tx * w / outW
-              val rgb = img.getRGB(sx, sy)
-              sums(0) += (rgb >> 16) & 0xff
-              sums(1) += (rgb >> 8) & 0xff
-              sums(2) += rgb & 0xff
-              tx += 1
-            }
-            ty += 1
-          }
-          ResizedFeatures(r.doc_id, decoded = true, w, h, outW, outH,
-            sums.map(_ / (outW.toLong * outH) / 255.0))
-        }
-      }))
-  }
+                     batchSize: Int = 64): Dataset[ResizedFeatures] =
+    resized(spark, media, outW, outH, batchSize) { img =>
+      val px = gridPixels(img, outW, outH)
+      Array.tabulate(3)(c =>
+        px.map(channel(_, c).toLong).sum.toDouble / px.length / 255.0)
+    }
 
   /** J2s+: batched BILINEAR resize — the quality step up from the
     * nearest-neighbor floor mapping (the interpolation vision
@@ -285,65 +309,48 @@ object Multimodal {
     */
   def resizeBilinearFeatures(spark: SparkSession, media: DataFrame,
                              outW: Int, outH: Int,
-                             batchSize: Int = 64): Dataset[ResizedFeatures] = {
-    require(outW > 0 && outH > 0, "output dims must be positive")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"),
-        col("meta.width").as("width"), col("meta.height").as("height"),
-        col("meta.format").as("format"))
-      .as[MediaRecord]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { r =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null)
-          ResizedFeatures(r.doc_id, decoded = false, 0, 0, outW, outH,
-            Array.empty[Double])
-        else {
-          val w = img.getWidth; val h = img.getHeight
-          val sums = new Array[Long](3)
-          var ty = 0
-          while (ty < outH) {
-            val yn = ty * h
-            val y0 = yn / outH; val ry = yn % outH
-            val y1 = math.min(y0 + 1, h - 1)
-            var tx = 0
-            while (tx < outW) {
-              val xn = tx * w
-              val x0 = xn / outW; val rx = xn % outW
-              val x1 = math.min(x0 + 1, w - 1)
-              val p00 = img.getRGB(x0, y0); val p01 = img.getRGB(x1, y0)
-              val p10 = img.getRGB(x0, y1); val p11 = img.getRGB(x1, y1)
-              val w00 = (outW - rx).toLong * (outH - ry)
-              val w01 = rx.toLong * (outH - ry)
-              val w10 = (outW - rx).toLong * ry
-              val w11 = rx.toLong * ry
-              var c = 0
-              while (c < 3) {
-                val s = 16 - 8 * c
-                sums(c) += ((p00 >> s) & 0xff) * w00 + ((p01 >> s) & 0xff) * w01 +
-                  ((p10 >> s) & 0xff) * w10 + ((p11 >> s) & 0xff) * w11
-                c += 1
-              }
-              tx += 1
-            }
-            ty += 1
+                             batchSize: Int = 64): Dataset[ResizedFeatures] =
+    resized(spark, media, outW, outH, batchSize) { img =>
+      val w = img.getWidth; val h = img.getHeight
+      val sums = new Array[Long](3)
+      var ty = 0
+      while (ty < outH) {
+        val yn = ty * h
+        val y0 = yn / outH; val ry = yn % outH
+        val y1 = math.min(y0 + 1, h - 1)
+        var tx = 0
+        while (tx < outW) {
+          val xn = tx * w
+          val x0 = xn / outW; val rx = xn % outW
+          val x1 = math.min(x0 + 1, w - 1)
+          val p00 = img.getRGB(x0, y0); val p01 = img.getRGB(x1, y0)
+          val p10 = img.getRGB(x0, y1); val p11 = img.getRGB(x1, y1)
+          val w00 = (outW - rx).toLong * (outH - ry)
+          val w01 = rx.toLong * (outH - ry)
+          val w10 = (outW - rx).toLong * ry
+          val w11 = rx.toLong * ry
+          var c = 0
+          while (c < 3) {
+            sums(c) += channel(p00, c) * w00 + channel(p01, c) * w01 +
+              channel(p10, c) * w10 + channel(p11, c) * w11
+            c += 1
           }
-          // numerators carry the (outW·outH)² denominator: one division
-          // by pixel weight, one by pixel count, one by 255 — the
-          // sequence the oracle mirrors verbatim
-          ResizedFeatures(r.doc_id, decoded = true, w, h, outW, outH,
-            sums.map(_.toDouble / (outW * outH) / (outW * outH) / 255.0))
+          tx += 1
         }
-      }))
-  }
+        ty += 1
+      }
+      // numerators carry the (outW·outH)² denominator: one division
+      // by pixel weight, one by pixel count, one by 255 — the
+      // sequence the oracle mirrors verbatim
+      sums.map(_.toDouble / (outW * outH) / (outW * outH) / 255.0)
+    }
 
   case class PhashResult(doc_id: Long, decoded: Boolean,
                          phash_bits: String, n_set: Long)
 
   /** J4: average-hash perceptual image fingerprint (aHash) — the
-    * image-dedup primitive: decode, floor-map NN-downsample to a
-    * `gridW`×`gridH` luminance grid (the [[resizeFeatures]] mapping),
+    * image-dedup primitive: decode, NN-downsample to a `gridW`×`gridH`
+    * luminance grid ([[gridPixels]], the [[resizeFeatures]] mapping),
     * and emit one bit per cell (1 = brighter than the grid mean).
     * Near-identical images agree on most bits, so exact-matching or
     * low-Hamming-distance fingerprints bucket duplicate images the way
@@ -365,47 +372,14 @@ object Multimodal {
                     gridW: Int = 8, gridH: Int = 8,
                     batchSize: Int = 64): Dataset[PhashResult] = {
     require(gridW > 0 && gridH > 0, "grid dims must be positive")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"),
-        col("meta.width").as("width"), col("meta.height").as("height"),
-        col("meta.format").as("format"))
-      .as[MediaRecord]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { r =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) PhashResult(r.doc_id, decoded = false, "", 0L)
-        else {
-          val w = img.getWidth; val h = img.getHeight
-          val cells = gridW * gridH
-          val lums = new Array[Long](cells)
-          var sum = 0L
-          var ty = 0
-          while (ty < gridH) {
-            val sy = ty * h / gridH
-            var tx = 0
-            while (tx < gridW) {
-              val rgb = img.getRGB(tx * w / gridW, sy)
-              val lum = 299L * ((rgb >> 16) & 0xff) +
-                587L * ((rgb >> 8) & 0xff) + 114L * (rgb & 0xff)
-              lums(ty * gridW + tx) = lum
-              sum += lum
-              tx += 1
-            }
-            ty += 1
-          }
-          val sb = new java.lang.StringBuilder(cells)
-          var nSet = 0L
-          var i = 0
-          while (i < cells) {
-            val bit = lums(i) * cells > sum
-            sb.append(if (bit) '1' else '0')
-            if (bit) nSet += 1
-            i += 1
-          }
-          PhashResult(r.doc_id, decoded = true, sb.toString, nSet)
-        }
-      }))
+    batchDecode(spark, media, batchSize)({ (id, bytes, _) =>
+      val lums = gridPixels(readImage(bytes), gridW, gridH).map(p =>
+        299L * channel(p, 0) + 587L * channel(p, 1) + 114L * channel(p, 2))
+      val sum = lums.sum
+      val bits = lums.map(lum => if (lum * lums.length > sum) '1' else '0')
+      Seq(PhashResult(id, decoded = true, new String(bits),
+        bits.count(_ == '1').toLong))
+    }, (id, _, _) => PhashResult(id, decoded = false, "", 0L))
   }
 
   /** J2+: attach video-container metadata (duration, fps) to a binary
@@ -413,13 +387,10 @@ object Multimodal {
     */
   def withVideoSchema(docs: DataFrame, idCol: String, textCol: String,
                       sizeCol: String): DataFrame =
-    docs.select(
-      col(idCol).cast("long").as("doc_id"),
-      col(textCol).cast("binary").as("payload"),
-      struct(
-        (col(sizeCol) % 30000 + 1000).cast("int").as("duration_ms"),
-        (col(sizeCol) % 3 * 5 + 20).cast("double").as("fps"),
-        lit("mp4").as("format")).as("meta"))
+    withMeta(docs, idCol, textCol,
+      (col(sizeCol) % 30000 + 1000).cast("int").as("duration_ms"),
+      (col(sizeCol) % 3 * 5 + 20).cast("double").as("fps"),
+      lit("mp4").as("format"))
 
   /** J2+: attach audio-container metadata (sample rate, sample count,
     * PCM format) to a binary payload — the audio twin of
@@ -428,13 +399,10 @@ object Multimodal {
     */
   def withAudioSchema(docs: DataFrame, idCol: String, textCol: String,
                       sizeCol: String): DataFrame =
-    docs.select(
-      col(idCol).cast("long").as("doc_id"),
-      col(textCol).cast("binary").as("payload"),
-      struct(
-        (col(sizeCol) % 3 * 8000 + 16000).cast("int").as("sample_rate"),
-        (col(sizeCol) * 317 % 480000 + 16000).cast("long").as("n_samples"),
-        lit("pcm_s16le").as("format")).as("meta"))
+    withMeta(docs, idCol, textCol,
+      (col(sizeCol) % 3 * 8000 + 16000).cast("int").as("sample_rate"),
+      (col(sizeCol) * 317 % 480000 + 16000).cast("long").as("n_samples"),
+      lit("pcm_s16le").as("format"))
 
   /** J2+: fixed-length audio windowing with hop — the chunking step of
     * ASR / audio-embedding pipelines: one row per `windowMs` window
@@ -508,15 +476,10 @@ object Multimodal {
   /** J3: real-WAV payload synthesis — the audio twin of
     * [[withPngPayloads]]: the container ships no audio corpus, so each
     * doc id renders to a tiny deterministic WAV clip (real RIFF
-    * encoder, 40..159 samples). Row-local, no shuffle.
+    * encoder, 40..159 samples) by [[rendered]].
     */
-  def withWavPayloads(docs: DataFrame, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long")).as[Long]
-      .map(id => AudioRecord(id, wavPayload(id)))
-      .select(col("doc_id"), col("payload"))
-  }
+  def withWavPayloads(docs: DataFrame, idCol: String): DataFrame =
+    rendered(docs, idCol)(id => AudioRecord(id, wavPayload(id)))
 
   case class AudioWindowMeans(doc_id: Long, decoded: Boolean,
                               sample_rate: Int, n_samples: Long,
@@ -540,41 +503,33 @@ object Multimodal {
                          batchSize: Int = 64): Dataset[AudioWindowMeans] = {
     require(windowSamples > 0 && hopSamples > 0,
       "windowSamples and hopSamples must be positive")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.flatMap { r =>
-        val ais =
-          try javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.payload))
-          catch { case scala.util.control.NonFatal(_) => null }
-        val fmt = if (ais == null) null else ais.getFormat
-        if (fmt == null ||
-          fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-          fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
-          fmt.isBigEndian)
-          Seq(AudioWindowMeans(r.doc_id, decoded = false, 0, 0L, 0L, 0L, 0.0))
-        else {
-          val bytes = ais.readAllBytes()
-          val n = bytes.length / 2
-          val sr = fmt.getSampleRate.toInt
-          val out = Seq.newBuilder[AudioWindowMeans]
-          var start = 0
-          while (start < n) {
-            val end = math.min(start + windowSamples, n)
-            var sum = 0L
-            var k = start
-            while (k < end) {
-              // s16le: low byte unsigned, high byte signed
-              sum += ((bytes(2 * k) & 0xff) | (bytes(2 * k + 1) << 8))
-              k += 1
-            }
-            out += AudioWindowMeans(r.doc_id, decoded = true, sr, n.toLong,
-              start.toLong, end.toLong, sum.toDouble / (end - start))
-            start += hopSamples
-          }
-          out.result()
+    batchDecode(spark, media, batchSize)({ (id, bytes, _) =>
+      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      val fmt = ais.getFormat
+      require(fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
+        fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 && !fmt.isBigEndian,
+        s"not 16-bit signed little-endian mono PCM: $fmt")
+      val pcm = ais.readAllBytes()
+      val n = pcm.length / 2
+      val sr = fmt.getSampleRate.toInt
+      val out = Seq.newBuilder[AudioWindowMeans]
+      var start = 0
+      while (start < n) {
+        val end = math.min(start + windowSamples, n)
+        var sum = 0L
+        var k = start
+        while (k < end) {
+          // s16le: low byte unsigned, high byte signed
+          sum += ((pcm(2 * k) & 0xff) | (pcm(2 * k + 1) << 8))
+          k += 1
         }
-      }))
+        out += AudioWindowMeans(id, decoded = true, sr, n.toLong,
+          start.toLong, end.toLong, sum.toDouble / (end - start))
+        start += hopSamples
+      }
+      out.result()
+    }, (id, _, _) => AudioWindowMeans(id, decoded = false, 0, 0L, 0L, 0L, 0.0))
   }
 
   /** J2+: frame sampling — one output row per sampled frame, every

@@ -92,12 +92,14 @@ object Gps {
     * median position per fixed time bucket, velocity between
     * consecutive buckets divided by the bucket length as a fraction of
     * a day (vel_equ, gpstools.py:955). Buckets with no successor drop.
+    * Bucket ids are floor-divided epoch µs, so a pre-1970 instant lands
+    * in the bucket that starts at or before it, as in pandas.
     */
   def velocity(df: DataFrame, keys: Seq[String], tsCol: String,
                posCol: String, bucketSec: Long): DataFrame = {
     val bUs = bucketSec * 1000000L
     val binned = df
-      .withColumn("_bid", (unix_micros(col(tsCol)) / bUs).cast("long"))
+      .withColumn("_bid", TimeSeriesOps.floorDiv(unix_micros(col(tsCol)), bUs))
       .groupBy(keys.map(col) :+ col("_bid"): _*)
       .agg(median(col(posCol)).as("_med"))
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col("_bid"))

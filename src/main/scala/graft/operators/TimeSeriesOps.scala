@@ -21,7 +21,7 @@ object TimeSeriesOps {
     * pandas assigns. Integer division truncates toward zero, which
     * would put a pre-1970 instant in the bucket after its own.
     */
-  private def floorDiv(us: Column, d: Long): Column =
+  private[graft] def floorDiv(us: Column, d: Long): Column =
     call_function("div", us - pmod(us, lit(d)), lit(d))
 
   /** Width of [[rollingFrames]]' time buckets, in frame spans (B =
@@ -348,6 +348,10 @@ object TimeSeriesOps {
     * inclusive of a same-ts right row. Nearest compares exact integer
     * µs distances (a double epoch loses sub-µs exactness and could
     * flip near-ties); equal distances go to the backward row.
+    *
+    * A null timestamp matches nothing, as pandas `merge_asof` admits no
+    * null key: right rows with a null `tsCol` are dropped, and left rows
+    * with one keep null right values in every direction.
     */
   private def asofSweep(left: DataFrame, right: DataFrame, keys: Seq[String],
                         tsCol: String, rightVals: Seq[String],
@@ -356,7 +360,8 @@ object TimeSeriesOps {
     val pt = struct(
       (if (direction == Nearest) unix_micros(col(tsCol)).as("_t") +: carried else carried): _*)
     val tagged = left.withColumn("_side", lit(0)).unionByName(
-      right.select(keys.map(col) ++ Seq(col(tsCol), lit(1).as("_side"), pt.as("_pt")): _*),
+      right.filter(col(tsCol).isNotNull)
+        .select(keys.map(col) ++ Seq(col(tsCol), lit(1).as("_side"), pt.as("_pt")): _*),
       allowMissingColumns = true)
     val side = if (direction == Forward) col("_side").asc else col("_side").desc
     val spec = Window.partitionBy(keys.map(col): _*)
@@ -375,7 +380,8 @@ object TimeSeriesOps {
             .otherwise(col("_f")))
     }
     swept.filter(col("_side") === 0)
-      .select(left.columns.toSeq.map(col) ++ rightVals.map(v => col("_pick").getField(v).as(v)): _*)
+      .select(left.columns.toSeq.map(col) ++ rightVals.map(v =>
+        when(col(tsCol).isNotNull, col("_pick").getField(v)).as(v)): _*)
   }
 
   /** As-of (backward) join: for each left row, the latest right row
@@ -637,73 +643,20 @@ object TimeSeriesOps {
     * on identical doubles — the whole flag column is cross-engine
     * deterministic with no rounding at the output edge.
     *
-    * Scale shape (reworked r13): the median comes out of the
-    * groupBy(key, value) histogram's reach arithmetic, and the MAD's
-    * |x − median| distribution is a RE-GROUPING of that histogram
-    * weighted by its counts
-    * ([[graft.mix.Mix.histogramQuantilesFromHist]]) — never the old
-    * wiring's corpus-scale groupBy over a corpus JOINED with the
-    * median dim, so every post-histogram pass is histogram-sized.
-    * Both quantile dims come back as broadcast joins; the flag
-    * arithmetic is row-local; the corpus never sorts. Measured with a
-    * task-metrics listener at mult=100 (deterministic, unlike sg1000
-    * wall clocks which ranged 33-101 s across quiet/loaded runs for
-    * IDENTICAL code): input records 30M → 20M — THREE corpus scans
-    * down to TWO (AQE reuses the histogram exchange across the
-    * broadcast subtrees at runtime even though the static plan prints
-    * both) — at equal shuffle volume. On a remote-storage corpus the
-    * scan is the dominant cost, which is what the rework removes; the
-    * alternatives that looked better on paper measured worse — see
-    * the in-body note.
+    * The stream gate's two halves on one corpus: the (median, MAD) fit
+    * of [[graft.streaming.Streaming.madCutpoints]] and the flag of
+    * [[graft.streaming.Streaming.madStream]], so batch and stream flag
+    * identically. Scale shape: the fit is histogram-sized work after
+    * one corpus groupBy, its centers come back as a broadcast join, and
+    * the flag arithmetic is row-local; the corpus never sorts.
     *
-    * Output: input row + `snapped`, `med`, `mad`, `is_outlier` (null
-    * value → null flag, never a silent pass).
+    * Output: input row (key first) + `snapped`, `med`, `mad`,
+    * `is_outlier` (null value → null flag, never a silent pass).
     */
   def madOutliers(df: DataFrame, keyCol: String, valCol: String,
-                  k: Double = 3.5, gridScale: Int = 4): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val p = math.pow(10.0, gridScale)
-    val snapExpr = when(col(valCol).isNull, lit(null))
-      .otherwise(floor(col(valCol) * p + 0.5001) / p)
-    val snapped = df.withColumn("_sv", snapExpr)
-    // the corpus-scale aggregate; the MAD's |x − median| distribution
-    // is then a RE-GROUPING of this histogram weighted by its counts
-    // (equal deviations merge with summed counts; abs() is the same
-    // IEEE op on the same grid doubles) — histogram-sized work, never
-    // a second corpus-wide groupBy over a joined corpus stream like
-    // the old wiring (task metrics: 3 corpus scans -> 2, equal shuffle
-    // bytes; AQE reuses the hist exchange across the med/mad broadcast
-    // subtrees at runtime). Two alternatives were MEASURED at
-    // mult=1000 and rejected: (a) eager localCheckpoint of the
-    // histogram — 89.7 s vs ~42 s, block-storage serialization of a
-    // ~100M-row histogram costs more than the reused exchange;
-    // (b) fusing med+mad into one window chain over the histogram
-    // (one exchange, zero recompute) — 53.0 s, two full re-sorts plus
-    // whole-partition window buffering of a histogram that is nearly
-    // corpus-sized at this fixture.
-    val hist = snapped.filter(col("_sv").isNotNull)
-      .groupBy(col(keyCol), col("_sv"))
-      .agg(count(lit(1)).as("_n"))
-    val med = graft.mix.Mix
-      .histogramQuantilesFromHist(hist, keyCol, "_sv", "_n", Seq((1, 2)))
-      .select(col(keyCol), col("q_1_2").as("med"))
-    val adHist = hist.join(broadcast(med), Seq(keyCol))
-      .groupBy(col(keyCol), abs(col("_sv") - col("med")).as("_ad"))
-      .agg(sum(col("_n")).as("_n"))
-    val mad = graft.mix.Mix
-      .histogramQuantilesFromHist(adHist, keyCol, "_ad", "_n", Seq((1, 2)))
-      .select(col(keyCol), col("q_1_2").as("mad"))
-    // left joins: a key whose values are ALL null has no quantile row —
-    // it must surface with null med/mad/flag, never silently drop
-    snapped.join(broadcast(med), Seq(keyCol), "left")
-      .join(broadcast(mad), Seq(keyCol), "left")
-      .withColumn("_ad", abs(col("_sv") - col("med")))
-      .withColumn("is_outlier",
-        when(col("_ad").isNull, lit(null).cast("boolean"))
-          .otherwise(col("_ad") > lit(k) * col("mad")))
-      .withColumnRenamed("_sv", "snapped")
-      .drop("_ad")
-  }
+                  k: Double = 3.5, gridScale: Int = 4): DataFrame =
+    graft.streaming.Streaming.madStream(df, keyCol, valCol,
+      graft.streaming.Streaming.madCutpoints(df, keyCol, valCol, gridScale), k, gridScale)
 
   /** Droplist QC (gpstools.py:411 `drop_positions` with
     * `apply_to_instance=True` → gpstools.py:431 `drop_from_instance`):

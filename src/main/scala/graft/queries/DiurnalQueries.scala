@@ -89,8 +89,6 @@ object DiurnalQueries extends QueryPack {
     "diurnal_dechours" -> diurnalDecHours,
     "diurnal_predict" -> diurnalPredict)
 
-  private val fmt = "%Y-%m-%d %H:%M:%S.%f"
-
   /** Shared oracle CTE prefix: per-user-per-day extrema with
     * first-occurrence tie-break, mirroring Diurnal.extrema.
     */

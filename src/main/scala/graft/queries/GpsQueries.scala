@@ -127,8 +127,6 @@ object GpsQueries extends QueryPack {
     "gps_displacement" -> gpsDisplacement,
     "gps_normalize" -> gpsNormalize)
 
-  private val fmt = "%Y-%m-%d %H:%M:%S.%f"
-
   private val alphaCte =
     s"""$posCte,
        |daily AS (SELECT user_id, date_trunc('day', ts) AS d,
@@ -215,10 +213,13 @@ object GpsQueries extends QueryPack {
          |SELECT p2.event_id, p2.user_id,
          |  floor((p2.dnorth - fit.icept - fit.slope * p2.doy) * 10000 + 0.5001) / 10000 AS detrended
          |FROM p2 JOIN fit ON p2.user_id = fit.user_id""".stripMargin,
+    // floor-divided 6 h buckets: DuckDB's `//` truncates toward zero,
+    // so the µs are first lowered to a multiple of the bucket
     "gps_velocity" ->
       s"""$posCte,
          |binned AS (SELECT user_id,
-         |    CAST(epoch_us(ts) // 21600000000 AS BIGINT) AS bid,
+         |    CAST((epoch_us(ts) - ((epoch_us(ts) % 21600000000) + 21600000000)
+         |      % 21600000000) // 21600000000 AS BIGINT) AS bid,
          |    median(dnorth) AS med
          |  FROM pos GROUP BY 1, 2),
          |led AS (SELECT *,

@@ -149,8 +149,6 @@ object HydroQueries extends QueryPack {
     "hydro_wlb_pira" -> hydroWlbPira,
     "hydro_stage_jeme" -> hydroStageJeme)
 
-  private val fmt = "%Y-%m-%d %H:%M:%S.%f"
-
   val oracles: Map[String, String] = Map(
     "hydro_units" ->
       """SELECT event_id, value,

@@ -96,8 +96,6 @@ object MeltQueries extends QueryPack {
     "melt_pipeline" -> meltPipeline,
     "melt_from_hobo" -> meltFromHobo)
 
-  private val fmt = "%Y-%m-%d %H:%M:%S.%f"
-
   /** Shared synthetic-AWS CTE. */
   private val awsCte =
     """WITH aws AS (

@@ -395,7 +395,7 @@ object MixQueries extends QueryPack {
         |SELECT t.doc_id, t.source, t.n_chars,
         |  CASE WHEN t.n_chars IS NULL THEN NULL
         |       ELSE least(greatest(t.n_chars, q.lo), q.hi) END AS clipped,
-        |  CASE WHEN t.n_chars IS NULL THEN NULL
+        |  CASE WHEN t.n_chars IS NULL OR q.lo IS NULL THEN NULL
         |       WHEN t.n_chars < q.lo THEN 'low'
         |       WHEN t.n_chars > q.hi THEN 'high'
         |       ELSE 'in_range' END AS clip_tag

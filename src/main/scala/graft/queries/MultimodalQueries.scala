@@ -1,17 +1,32 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.multimodal.Multimodal
 
-/** J1-J2 — multimodal binary-column plumbing (rows-only checks; the
-  * batching semantics are pinned by MultimodalSpec).
+/** J1-J4 — multimodal binary-column plumbing, every key hash-oracled
+  * (the batching semantics are pinned by TextAndMultimodalSpec).
   */
 object MultimodalQueries extends QueryPack {
 
   private def media(s: SparkSession, dir: String): DataFrame =
     Multimodal.withMediaSchema(Tables.documents(s, dir), "doc_id", "text", "n_chars")
+
+  /** The corpus' ids rendered to real PNGs ([[Multimodal.withPngPayloads]]). */
+  private def pngs(s: SparkSession, dir: String): DataFrame =
+    Multimodal.withPngPayloads(Tables.documents(s, dir), "doc_id")
+
+  /** The three channel means of `means`, r6-rounded, as mean_r/g/b. */
+  private def rgbMeans(means: Column): Seq[Column] =
+    Seq("mean_r", "mean_g", "mean_b").zipWithIndex
+      .map { case (name, i) => r6(element_at(means, i + 1)).as(name) }
+
+  /** The decoded rows of a resize: source and output dims, [[rgbMeans]]. */
+  private def resizeTail(out: Dataset[Multimodal.ResizedFeatures]): DataFrame =
+    out.toDF().filter(col("decoded"))
+      .select(Seq("doc_id", "src_width", "src_height", "out_width",
+        "out_height").map(col) ++ rgbMeans(col("means")): _*)
 
   /** J1 `mm_schema` — binary payload + typed metadata struct.
     * SQL-oracled: the payload is the utf-8 text bytes, so byte_len is
@@ -55,18 +70,12 @@ object MultimodalQueries extends QueryPack {
     * the means match to the last bit; rounding (r6) only guards the
     * output hash, ann_brute-style.
     */
-  def mmDecode(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.withPngPayloads(
-      Tables.documents(s, dir), "doc_id")
-    Multimodal.extractFeatures(s, media, batchSize = 64)
+  def mmDecode(s: SparkSession, dir: String): DataFrame =
+    Multimodal.extractFeatures(s, pngs(s, dir), batchSize = 64)
       .toDF()
       .filter(col("decoded"))
-      .select(col("doc_id"), col("img_width"), col("img_height"),
-        col("channels"),
-        r6(element_at(col("features"), 1)).as("mean_r"),
-        r6(element_at(col("features"), 2)).as("mean_g"),
-        r6(element_at(col("features"), 3)).as("mean_b"))
-  }
+      .select(Seq(col("doc_id"), col("img_width"), col("img_height"),
+        col("channels")) ++ rgbMeans(col("features")): _*)
 
   /** J2+ `mm_resize` — REAL decode + nearest-neighbor resize to 4×3,
     * oracled: source images span 2..7 × 3..6 px so both up- and
@@ -76,18 +85,9 @@ object MultimodalQueries extends QueryPack {
     * the shared synthesis formula — so a hash match proves the resize
     * touched exactly the pixels the mapping names.
     */
-  def mmResize(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.withPngPayloads(
-      Tables.documents(s, dir), "doc_id")
-    Multimodal.resizeFeatures(s, media, outW = 4, outH = 3, batchSize = 64)
-      .toDF()
-      .filter(col("decoded"))
-      .select(col("doc_id"), col("src_width"), col("src_height"),
-        col("out_width"), col("out_height"),
-        r6(element_at(col("means"), 1)).as("mean_r"),
-        r6(element_at(col("means"), 2)).as("mean_g"),
-        r6(element_at(col("means"), 3)).as("mean_b"))
-  }
+  def mmResize(s: SparkSession, dir: String): DataFrame =
+    resizeTail(Multimodal.resizeFeatures(s, pngs(s, dir), outW = 4, outH = 3,
+      batchSize = 64))
 
   /** J2s+ `mm_resize_bilinear` — REAL decode + bilinear resize: each
     * target pixel blends its four source neighbors with integer
@@ -98,18 +98,9 @@ object MultimodalQueries extends QueryPack {
     * a hash match proves decode + stencil + weights + clamping
     * pixel-for-pixel.
     */
-  def mmResizeBilinear(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.withPngPayloads(
-      Tables.documents(s, dir), "doc_id")
-    Multimodal.resizeBilinearFeatures(s, media, outW = 4, outH = 3, batchSize = 64)
-      .toDF()
-      .filter(col("decoded"))
-      .select(col("doc_id"), col("src_width"), col("src_height"),
-        col("out_width"), col("out_height"),
-        r6(element_at(col("means"), 1)).as("mean_r"),
-        r6(element_at(col("means"), 2)).as("mean_g"),
-        r6(element_at(col("means"), 3)).as("mean_b"))
-  }
+  def mmResizeBilinear(s: SparkSession, dir: String): DataFrame =
+    resizeTail(Multimodal.resizeBilinearFeatures(s, pngs(s, dir), outW = 4,
+      outH = 3, batchSize = 64))
 
   /** J2+ `mm_frames` — video frame-sampling plumbing: one row per
     * 500 ms of each clip, with the frame index a decoder would seek to
@@ -169,13 +160,11 @@ object MultimodalQueries extends QueryPack {
     * match proves decode + floor mapping + luminance + threshold all
     * bit-for-bit.
     */
-  def mmPhash(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.withPngPayloads(Tables.documents(s, dir), "doc_id")
-    Multimodal.phashFeatures(s, media, gridW = 8, gridH = 8, batchSize = 64)
+  def mmPhash(s: SparkSession, dir: String): DataFrame =
+    Multimodal.phashFeatures(s, pngs(s, dir), gridW = 8, gridH = 8, batchSize = 64)
       .toDF()
       .filter(col("decoded"))
       .select(col("doc_id"), col("phash_bits"), col("n_set"))
-  }
 
   /** J4+/G12 `dedup_phash` — image-duplicate buckets: group the
     * corpus by its [[Multimodal.phashFeatures]] fingerprint and keep
@@ -185,16 +174,12 @@ object MultimodalQueries extends QueryPack {
     * (500 docs -> 293 distinct fingerprints at sf0.01). Oracled via
     * the same analytic per-bit derivation + regroup.
     */
-  def dedupPhash(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.withPngPayloads(Tables.documents(s, dir), "doc_id")
-    Multimodal.phashFeatures(s, media, gridW = 8, gridH = 8, batchSize = 64)
-      .toDF()
-      .filter(col("decoded"))
+  def dedupPhash(s: SparkSession, dir: String): DataFrame =
+    mmPhash(s, dir)
       .groupBy(col("phash_bits"))
       .agg(min(col("doc_id")).as("keep_id"),
         count(lit(1)).as("n_dups"))
       .filter(col("n_dups") >= 2)
-  }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mm_phash" -> mmPhash,
@@ -208,58 +193,78 @@ object MultimodalQueries extends QueryPack {
     "mm_resize_bilinear" -> mmResizeBilinear,
     "mm_frames" -> mmFrames)
 
+  /** The synthesized image corpus: every doc `id` with its image's
+    * width `w` and height `h` (the shared synthesis dims, restated).
+    */
+  private val imageSql =
+    """img AS (SELECT CAST(doc_id AS BIGINT) AS id,
+      |    CAST(doc_id % 6 + 2 AS INT) AS w,
+      |    CAST(doc_id % 4 + 3 AS INT) AS h
+      |  FROM documents)""".stripMargin
+
+  /** Channel `c` (0 = R, 1 = G, 2 = B) of synthesized pixel `k` of
+    * image `id`: the shared formula `(mc*id + ac*k) mod 256`.
+    */
+  private def channelSql(c: Int, k: String): String = {
+    val (mc, ac) = Seq((1, 3), (5, 7), (11, 13))(c)
+    s"(($mc * id + $ac * $k) % 256)"
+  }
+
+  /** mean_r, mean_g and mean_b: `mean(c)` of each channel c, r6-rounded. */
+  private def meansSql(mean: Int => String): String =
+    Seq("r", "g", "b").zipWithIndex.map { case (name, c) =>
+      s"floor(${mean(c)} * 1000000 + 0.5001) / 1000000 AS mean_$name"
+    }.mkString(",\n  ")
+
+  /** The mean of channel `c` over the synthesized pixels that the list
+    * `ks` of pixel indices names: list_avg then /255, the mm_decode
+    * division order.
+    */
+  private def pixelMeanSql(ks: String)(c: Int): String =
+    s"list_avg(list_transform($ks, k -> ${channelSql(c, "k")})) / 255.0"
+
+  /** The bilinear numerators n0, n1 and n2: per channel, the four
+    * corner pixels' values under their weights w00..w11, summed per
+    * image.
+    */
+  private val bilinearSumsSql =
+    (0 until 3).map { c =>
+      Seq("00", "01", "10", "11").map(q => s"${channelSql(c, s"k$q")} * w$q")
+        .mkString("SUM(", "\n      + ", s") AS n$c")
+    }.mkString(",\n    ")
+
+  /** `ph`: every synthesized image's aHash, every bit re-derived
+    * analytically: grid cell (tx, ty) reads source pixel
+    * k = (ty*h//8)*w + (tx*w//8), luminance is the integer
+    * 299r+587g+114b over the synthesis channel formulas, and the bit
+    * is the exact integer test lum*64 > sum(lums).
+    */
+  private val phashSql =
+    s"""WITH $imageSql,
+       |p AS (SELECT id,
+       |    list_transform(range(0, 64), i ->
+       |      ((i // 8) * h // 8) * w + ((i % 8) * w // 8)) AS ks
+       |  FROM img),
+       |l AS (SELECT id,
+       |    list_transform(ks, k -> 299 * ${channelSql(0, "k")}
+       |      + 587 * ${channelSql(1, "k")} + 114 * ${channelSql(2, "k")}) AS lums
+       |  FROM p),
+       |b AS (SELECT id, lums, list_sum(lums) AS s FROM l),
+       |ph AS (SELECT id,
+       |    array_to_string(list_transform(lums,
+       |      x -> CASE WHEN x * 64 > s THEN '1' ELSE '0' END), '') AS phash_bits,
+       |    CAST(len(list_filter(lums, x -> x * 64 > s)) AS BIGINT) AS n_set
+       |  FROM b)""".stripMargin
+
   val oracles: Map[String, String] = Map(
-    // the mm_phash analytic bit derivation, regrouped into buckets
+    // the mm_phash bits, regrouped into buckets
     "dedup_phash" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |    CAST(doc_id % 6 + 2 AS BIGINT) AS w,
-        |    CAST(doc_id % 4 + 3 AS BIGINT) AS h
-        |  FROM documents),
-        |p AS (SELECT doc_id,
-        |    list_transform(range(0, 64), i ->
-        |      ((i // 8) * h // 8) * w + ((i % 8) * w // 8)) AS ks
-        |  FROM d),
-        |l AS (SELECT doc_id,
-        |    list_transform(ks, k ->
-        |      299 * ((doc_id + 3 * k) % 256)
-        |      + 587 * ((5 * doc_id + 7 * k) % 256)
-        |      + 114 * ((11 * doc_id + 13 * k) % 256)) AS lums
-        |  FROM p),
-        |b AS (SELECT doc_id, lums, list_sum(lums) AS s FROM l),
-        |hh AS (SELECT doc_id, array_to_string(list_transform(lums,
-        |    x -> CASE WHEN x * 64 > s THEN '1' ELSE '0' END), '') AS phash_bits
-        |  FROM b)
-        |SELECT phash_bits, min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM hh GROUP BY phash_bits HAVING count(*) >= 2""".stripMargin,
-    // every bit re-derived analytically: sampled cell (tx, ty) reads
-    // source pixel k = (ty*h//8)*w + (tx*w//8), luminance is the
-    // integer 299r+587g+114b over the synthesis channel formulas, and
-    // the bit is the exact integer test lum*64 > sum(lums)
+      s"""$phashSql
+         |SELECT phash_bits, min(id) AS keep_id, count(*) AS n_dups
+         |FROM ph GROUP BY phash_bits HAVING count(*) >= 2""".stripMargin,
     "mm_phash" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |    CAST(doc_id % 6 + 2 AS BIGINT) AS w,
-        |    CAST(doc_id % 4 + 3 AS BIGINT) AS h
-        |  FROM documents),
-        |p AS (SELECT doc_id,
-        |    list_transform(range(0, 64), i ->
-        |      ((i // 8) * h // 8) * w + ((i % 8) * w // 8)) AS ks
-        |  FROM d),
-        |l AS (SELECT doc_id,
-        |    list_transform(ks, k ->
-        |      299 * ((doc_id + 3 * k) % 256)
-        |      + 587 * ((5 * doc_id + 7 * k) % 256)
-        |      + 114 * ((11 * doc_id + 13 * k) % 256)) AS lums
-        |  FROM p),
-        |b AS (SELECT doc_id, lums, list_sum(lums) AS s FROM l)
-        |SELECT doc_id,
-        |  array_to_string(list_transform(lums,
-        |    x -> CASE WHEN x * 64 > s THEN '1' ELSE '0' END), '') AS phash_bits,
-        |  CAST(len(list_filter(lums, x -> x * 64 > s)) AS BIGINT) AS n_set
-        |FROM b""".stripMargin,
-    // the oracle never decodes anything: it computes the EXPECTED
-    // per-channel means analytically from the synthesis pixel formula
-    // (exact integer arithmetic), so a hash match proves the Spark side
-    // decoded every PNG pixel bit-for-bit
+      s"""$phashSql
+         |SELECT id AS doc_id, phash_bits, n_set FROM ph""".stripMargin,
     // the audio oracle re-derives the PCM from the shared sample
     // formula and averages each 32-sample window (hop 16) analytically
     "mm_audio_decode" ->
@@ -284,105 +289,72 @@ object MultimodalQueries extends QueryPack {
     // re-derive the fallback byte histogram's bin-0 fraction (first
     // byte 0x01 plus the (7id+13k) mod 256 tail, bytes < 32 -> bin 0)
     "mm_features" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS id FROM documents),
-        |i AS (SELECT id, id % 6 + 2 AS w, id % 4 + 3 AS h
-        |  FROM d WHERE id % 2 = 0),
-        |im AS (SELECT id, TRUE AS decoded, w, h,
-        |    CAST(NULL AS BIGINT) AS raw_bytes,
-        |    list_avg(list_transform(range(0, w * h),
-        |      k -> (id + 3 * k) % 256)) / 255.0 AS f0
-        |  FROM i),
-        |r AS (SELECT id, id % 57 + 8 AS n FROM d WHERE id % 2 = 1),
-        |rm AS (SELECT id, FALSE AS decoded, CAST(NULL AS BIGINT) AS w,
-        |    CAST(NULL AS BIGINT) AS h, n AS raw_bytes,
-        |    (1 + len(list_filter(range(1, n),
-        |      k -> (7 * id + 13 * k) % 256 < 32))) / CAST(n AS DOUBLE) AS f0
-        |  FROM r)
-        |SELECT id AS doc_id, decoded, w AS width, h AS height, raw_bytes,
-        |  floor(f0 * 1000000 + 0.5001) / 1000000 AS f0
-        |FROM (SELECT * FROM im UNION ALL SELECT * FROM rm)""".stripMargin,
+      s"""WITH $imageSql,
+         |im AS (SELECT id, TRUE AS decoded, CAST(w AS BIGINT) AS w,
+         |    CAST(h AS BIGINT) AS h, CAST(NULL AS BIGINT) AS raw_bytes,
+         |    list_avg(list_transform(range(0, w * h),
+         |      k -> ${channelSql(0, "k")})) / 255.0 AS f0
+         |  FROM img WHERE id % 2 = 0),
+         |r AS (SELECT id, id % 57 + 8 AS n FROM img WHERE id % 2 = 1),
+         |rm AS (SELECT id, FALSE AS decoded, CAST(NULL AS BIGINT) AS w,
+         |    CAST(NULL AS BIGINT) AS h, n AS raw_bytes,
+         |    (1 + len(list_filter(range(1, n),
+         |      k -> (7 * id + 13 * k) % 256 < 32))) / CAST(n AS DOUBLE) AS f0
+         |  FROM r)
+         |SELECT id AS doc_id, decoded, w AS width, h AS height, raw_bytes,
+         |  floor(f0 * 1000000 + 0.5001) / 1000000 AS f0
+         |FROM (SELECT * FROM im UNION ALL SELECT * FROM rm)""".stripMargin,
+    // the oracle never decodes anything: it computes the EXPECTED
+    // per-channel means analytically from the synthesis pixel formula
+    // (exact integer arithmetic), so a hash match proves the Spark side
+    // decoded every PNG pixel bit-for-bit
     "mm_decode" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |    CAST(doc_id % 6 + 2 AS INT) AS img_width,
-        |    CAST(doc_id % 4 + 3 AS INT) AS img_height
-        |  FROM documents),
-        |m AS (SELECT doc_id, img_width, img_height,
-        |    list_avg(list_transform(range(0, img_width * img_height),
-        |      k -> (doc_id + 3 * k) % 256)) / 255.0 AS mr,
-        |    list_avg(list_transform(range(0, img_width * img_height),
-        |      k -> (5 * doc_id + 7 * k) % 256)) / 255.0 AS mg,
-        |    list_avg(list_transform(range(0, img_width * img_height),
-        |      k -> (11 * doc_id + 13 * k) % 256)) / 255.0 AS mb
-        |  FROM d)
-        |SELECT doc_id, img_width, img_height, CAST(3 AS INT) AS channels,
-        |  floor(mr * 1000000 + 0.5001) / 1000000 AS mean_r,
-        |  floor(mg * 1000000 + 0.5001) / 1000000 AS mean_g,
-        |  floor(mb * 1000000 + 0.5001) / 1000000 AS mean_b
-        |FROM m""".stripMargin,
-    // the resize oracle samples the same (tx*w/4, ty*h/3) source
-    // pixels by integer floor division and averages the synthesis
-    // formula's channel values over the 12 sampled cells — list_avg
-    // then /255, the mm_decode division order
+      s"""WITH $imageSql
+         |SELECT id AS doc_id, w AS img_width, h AS img_height,
+         |  CAST(3 AS INT) AS channels,
+         |  ${meansSql(pixelMeanSql("range(0, w * h)"))}
+         |FROM img""".stripMargin,
     // analytic bilinear twin: per (doc, target-pixel) rows carry the
     // integer stencil (x0/x1/y0/y1, remainders rx/ry), the four corner
     // weights, and the synthPixel channel formulas; integer numerators
     // sum per doc, then the exact division sequence /12 /12 /255 and r6
     "mm_resize_bilinear" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |    CAST(doc_id % 6 + 2 AS INT) AS w, CAST(doc_id % 4 + 3 AS INT) AS h
-        |  FROM documents),
-        |g AS (SELECT doc_id, w, h, t % 4 AS tx, t // 4 AS ty
-        |  FROM d CROSS JOIN (SELECT unnest(range(0, 12)) AS t)),
-        |c AS (SELECT doc_id, w, h,
-        |    (tx * w) // 4 AS x0, (tx * w) % 4 AS rx,
-        |    least((tx * w) // 4 + 1, w - 1) AS x1,
-        |    (ty * h) // 3 AS y0, (ty * h) % 3 AS ry,
-        |    least((ty * h) // 3 + 1, h - 1) AS y1
-        |  FROM g),
-        |v AS (SELECT doc_id, w, h,
-        |    (4 - rx) * (3 - ry) AS w00, rx * (3 - ry) AS w01,
-        |    (4 - rx) * ry AS w10, rx * ry AS w11,
-        |    y0 * w + x0 AS k00, y0 * w + x1 AS k01,
-        |    y1 * w + x0 AS k10, y1 * w + x1 AS k11
-        |  FROM c),
-        |n AS (SELECT doc_id, w, h,
-        |    SUM(((doc_id + 3 * k00) % 256) * w00 + ((doc_id + 3 * k01) % 256) * w01
-        |      + ((doc_id + 3 * k10) % 256) * w10 + ((doc_id + 3 * k11) % 256) * w11) AS nr,
-        |    SUM(((5 * doc_id + 7 * k00) % 256) * w00 + ((5 * doc_id + 7 * k01) % 256) * w01
-        |      + ((5 * doc_id + 7 * k10) % 256) * w10 + ((5 * doc_id + 7 * k11) % 256) * w11) AS ng,
-        |    SUM(((11 * doc_id + 13 * k00) % 256) * w00 + ((11 * doc_id + 13 * k01) % 256) * w01
-        |      + ((11 * doc_id + 13 * k10) % 256) * w10 + ((11 * doc_id + 13 * k11) % 256) * w11) AS nb
-        |  FROM v GROUP BY doc_id, w, h)
-        |SELECT doc_id, w AS src_width, h AS src_height,
-        |  CAST(4 AS INT) AS out_width, CAST(3 AS INT) AS out_height,
-        |  floor(CAST(nr AS DOUBLE) / 12 / 12 / 255 * 1000000 + 0.5001) / 1000000 AS mean_r,
-        |  floor(CAST(ng AS DOUBLE) / 12 / 12 / 255 * 1000000 + 0.5001) / 1000000 AS mean_g,
-        |  floor(CAST(nb AS DOUBLE) / 12 / 12 / 255 * 1000000 + 0.5001) / 1000000 AS mean_b
-        |FROM n""".stripMargin,
+      s"""WITH $imageSql,
+         |g AS (SELECT id, w, h, t % 4 AS tx, t // 4 AS ty
+         |  FROM img CROSS JOIN (SELECT unnest(range(0, 12)) AS t)),
+         |c AS (SELECT id, w, h,
+         |    (tx * w) // 4 AS x0, (tx * w) % 4 AS rx,
+         |    least((tx * w) // 4 + 1, w - 1) AS x1,
+         |    (ty * h) // 3 AS y0, (ty * h) % 3 AS ry,
+         |    least((ty * h) // 3 + 1, h - 1) AS y1
+         |  FROM g),
+         |v AS (SELECT id, w, h,
+         |    (4 - rx) * (3 - ry) AS w00, rx * (3 - ry) AS w01,
+         |    (4 - rx) * ry AS w10, rx * ry AS w11,
+         |    y0 * w + x0 AS k00, y0 * w + x1 AS k01,
+         |    y1 * w + x0 AS k10, y1 * w + x1 AS k11
+         |  FROM c),
+         |n AS (SELECT id, w, h,
+         |    $bilinearSumsSql
+         |  FROM v GROUP BY id, w, h)
+         |SELECT id AS doc_id, w AS src_width, h AS src_height,
+         |  CAST(4 AS INT) AS out_width, CAST(3 AS INT) AS out_height,
+         |  ${meansSql(c => s"CAST(n$c AS DOUBLE) / 12 / 12 / 255")}
+         |FROM n""".stripMargin,
+    // the resize oracle samples the same (tx*w/4, ty*h/3) source
+    // pixels by integer floor division and averages the synthesis
+    // formula's channel values over the 12 sampled cells — list_avg
+    // then /255, the mm_decode division order
     "mm_resize" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |    CAST(doc_id % 6 + 2 AS INT) AS src_width,
-        |    CAST(doc_id % 4 + 3 AS INT) AS src_height
-        |  FROM documents),
-        |k AS (SELECT doc_id, src_width, src_height,
-        |    list_transform(range(0, 12), t ->
-        |      ((t // 4) * src_height // 3) * src_width
-        |        + ((t % 4) * src_width // 4)) AS ks
-        |  FROM d),
-        |m AS (SELECT doc_id, src_width, src_height,
-        |    list_avg(list_transform(ks, k -> (doc_id + 3 * k) % 256))
-        |      / 255.0 AS mr,
-        |    list_avg(list_transform(ks, k -> (5 * doc_id + 7 * k) % 256))
-        |      / 255.0 AS mg,
-        |    list_avg(list_transform(ks, k -> (11 * doc_id + 13 * k) % 256))
-        |      / 255.0 AS mb
-        |  FROM k)
-        |SELECT doc_id, src_width, src_height,
-        |  CAST(4 AS INT) AS out_width, CAST(3 AS INT) AS out_height,
-        |  floor(mr * 1000000 + 0.5001) / 1000000 AS mean_r,
-        |  floor(mg * 1000000 + 0.5001) / 1000000 AS mean_g,
-        |  floor(mb * 1000000 + 0.5001) / 1000000 AS mean_b
-        |FROM m""".stripMargin,
+      s"""WITH $imageSql,
+         |k AS (SELECT id, w, h,
+         |    list_transform(range(0, 12), t ->
+         |      ((t // 4) * h // 3) * w + ((t % 4) * w // 4)) AS ks
+         |  FROM img)
+         |SELECT id AS doc_id, w AS src_width, h AS src_height,
+         |  CAST(4 AS INT) AS out_width, CAST(3 AS INT) AS out_height,
+         |  ${meansSql(pixelMeanSql("ks"))}
+         |FROM k""".stripMargin,
     "mm_schema" ->
       """SELECT CAST(doc_id AS BIGINT) AS doc_id,
         |  CAST(octet_length(encode(text)) AS INT) AS byte_len,

@@ -23,6 +23,8 @@ trait QueryPack {
   /** Timestamp -> canonical microsecond string (oracle: strftime %f). */
   protected def fmtTs(c: Column): Column =
     date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
+  /** [[fmtTs]]' format in the oracle SQL (DuckDB `strftime`). */
+  protected final val fmt = "%Y-%m-%d %H:%M:%S.%f"
   /** Timestamp -> canonical date string (oracle: strftime %Y-%m-%d). */
   protected def fmtDay(c: Column): Column = date_format(c, "yyyy-MM-dd")
 

@@ -240,6 +240,18 @@ object RelationalQueries extends QueryPack {
         col("q_2_4").as("p50"),
         col("q_3_4").as("p75"))
 
+  /** The sketch-only aggregation both q_approx variants share: one
+    * scan, map-side-combining HLL++ and percentile sketches, 3 output
+    * rows.
+    */
+  private def sketchAggs(li: DataFrame): DataFrame =
+    li.groupBy(col("l_returnflag"))
+      .agg(
+        approx_count_distinct(col("l_orderkey")).as("_e_o"),
+        approx_count_distinct(col("l_partkey")).as("_e_p"),
+        expr("approx_percentile(l_extendedprice, array(0.25, 0.5, 0.75), 1000)")
+          .as("_q"))
+
   /** F+ `q_approx` — the sketch aggregates that replace their exact
     * twins at 100 TB: HyperLogLog++ distinct counts
     * (approx_count_distinct) and a single-pass approximate percentile
@@ -260,18 +272,6 @@ object RelationalQueries extends QueryPack {
     * dim; at 100 TB a user runs only the sketch half (the raw
     * estimates stay pinned by RelationalSketchSpec).
     */
-  /** The sketch-only aggregation both q_approx variants share: one
-    * scan, map-side-combining HLL++ and percentile sketches, 3 output
-    * rows.
-    */
-  private def sketchAggs(li: DataFrame): DataFrame =
-    li.groupBy(col("l_returnflag"))
-      .agg(
-        approx_count_distinct(col("l_orderkey")).as("_e_o"),
-        approx_count_distinct(col("l_partkey")).as("_e_p"),
-        expr("approx_percentile(l_extendedprice, array(0.25, 0.5, 0.75), 1000)")
-          .as("_q"))
-
   def qApprox(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
     // three SEPARATE aggregations joined on the 3-row key dim: mixing

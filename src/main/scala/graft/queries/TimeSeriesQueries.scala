@@ -260,12 +260,12 @@ object TimeSeriesQueries extends QueryPack {
     "ts_quadrature" -> tsQuadrature,
     "ts_clip_window" -> tsClipWindow)
 
-  private val fmt = "%Y-%m-%d %H:%M:%S.%f"
-
   /** The `ts_asof_*` oracles' shared CTEs: click/view events (side 0)
     * and purchases (side 1) unioned per user, each purchase carrying
     * ONE row struct `pt` of its exact-µs timestamp and value, so every
-    * direction returns the value of the one row it matched.
+    * direction returns the value of the one row it matched. A null `ts`
+    * matches nothing: such purchases are dropped here, and each
+    * oracle's `ref_value` is null on such clicks and views.
     */
   private val asofUnionSql =
     """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
@@ -273,7 +273,7 @@ object TimeSeriesQueries extends QueryPack {
       |l AS (SELECT event_id, user_id, ts, value FROM e
       |      WHERE event_type IN ('click', 'view')),
       |r AS (SELECT user_id, ts, value AS ref_value FROM e
-      |      WHERE event_type = 'purchase'),
+      |      WHERE event_type = 'purchase' AND ts IS NOT NULL),
       |u AS (
       |  SELECT 0 AS side, event_id, user_id, ts, value,
       |         CAST(NULL AS DOUBLE) AS ref_value,
@@ -378,7 +378,7 @@ object TimeSeriesQueries extends QueryPack {
          |u AS (
          |  SELECT user_id, ts, CAST(NULL AS DOUBLE) AS v, 0 AS side FROM grid
          |  UNION ALL
-         |  SELECT user_id, ts, value, 1 FROM e),
+         |  SELECT user_id, ts, value, 1 FROM e WHERE ts IS NOT NULL),
          |w AS (SELECT *,
          |  last_value(CASE WHEN v IS NOT NULL THEN struct_pack(t := epoch_us(ts), v := v) END IGNORE NULLS)
          |    OVER (PARTITION BY user_id ORDER BY ts ASC, side DESC, v ASC NULLS FIRST
@@ -458,7 +458,7 @@ object TimeSeriesQueries extends QueryPack {
          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pr
          |      FROM u)
          |SELECT event_id, user_id, strftime(ts, '$fmt') AS ts, value,
-         |       pr.v AS ref_value
+         |       CASE WHEN ts IS NOT NULL THEN pr.v END AS ref_value
          |FROM f WHERE side = 0""".stripMargin,
     "ts_asof_forward" ->
       s"""$asofUnionSql,
@@ -468,7 +468,7 @@ object TimeSeriesQueries extends QueryPack {
          |        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nx
          |      FROM u)
          |SELECT event_id, user_id, strftime(ts, '$fmt') AS ts, value,
-         |       nx.v AS ref_value
+         |       CASE WHEN ts IS NOT NULL THEN nx.v END AS ref_value
          |FROM f WHERE side = 0""".stripMargin,
     "ts_asof_nearest" ->
       s"""$asofUnionSql,
@@ -483,7 +483,8 @@ object TimeSeriesQueries extends QueryPack {
          |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nx
          |  FROM u)
          |SELECT event_id, user_id, strftime(ts, '$fmt') AS ts, value,
-         |  CASE WHEN nx IS NULL THEN pr.v
+         |  CASE WHEN ts IS NULL THEN NULL
+         |       WHEN nx IS NULL THEN pr.v
          |       WHEN pr IS NULL THEN nx.v
          |       WHEN epoch_us(ts) - pr.t <= nx.t - epoch_us(ts) THEN pr.v
          |       ELSE nx.v END AS ref_value

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.Diurnal
@@ -279,21 +279,22 @@ object Streaming {
 
   /** Streaming winsorize gate (L18's stream twin): clip each stream
     * row's value to PREFIT per-key [lo, hi] cutpoints
-    * ([[graft.mix.Mix.winsorize]]'s quantile band, fit as a BATCH job
-    * over the accumulated corpus — a stream cannot fit the quantiles
-    * it clips against, the dsirScoreStream contract). The cutpoint
-    * table is key-domain-bounded, so it rides a stream-static
-    * broadcast join; the clip + direction tag are the same row-local
-    * comparison chain as the batch operator (null value → null
-    * clipped/tag, never a silent clip), so batch and stream label
-    * every row identically (spec-pinned). Unseen keys pass through
-    * unclipped with a null tag — admission policy stays with the
-    * caller.
+    * ([[winsorizeCutpoints]], fit as a BATCH job over the accumulated
+    * corpus — a stream cannot fit the quantiles it clips against, the
+    * dsirScoreStream contract). The cutpoint table is
+    * key-domain-bounded, so it rides a stream-static broadcast join.
+    * This is also the batch operator's clip: [[graft.mix.Mix.winsorize]]
+    * applies it to the cutpoints of its own input, so batch and stream
+    * label every row identically. A null value gets a null clipped
+    * value and tag, never a silent clip (Spark's greatest/least SKIP
+    * nulls). Unseen keys pass through unclipped with a null tag —
+    * admission policy stays with the caller.
     */
   def winsorizeStream(docs: DataFrame, keyCol: String, valCol: String,
                       cutpoints: DataFrame): DataFrame = {
     val cuts = cutpoints
       .select(col(keyCol), col("_lo"), col("_hi"))
+    // left join: a row whose key has no cutpoints must surface, never drop
     docs.join(broadcast(cuts), Seq(keyCol), "left")
       .withColumn("clipped",
         when(col(valCol).isNull, lit(null))
@@ -308,9 +309,9 @@ object Streaming {
   }
 
   /** The cutpoint dim [[winsorizeStream]] expects, fit from a BATCH
-    * corpus: per-key exact [lo, hi] histogram quantiles (the
-    * [[graft.mix.Mix.winsorize]] arithmetic, exposed so the batch fit
-    * and the stream gate share one definition).
+    * corpus: per-key exact LOWER [lo, hi] quantiles from
+    * [[graft.mix.Mix.histogramQuantiles]] (integer reach arithmetic,
+    * engine-portable), shared with [[graft.mix.Mix.winsorize]].
     */
   def winsorizeCutpoints(corpus: DataFrame, keyCol: String, valCol: String,
                          loNum: Int, loDen: Int, hiNum: Int,
@@ -326,41 +327,74 @@ object Streaming {
     * — a stream cannot fit the quantiles it flags against, the
     * winsorizeStream contract). The center table is key-domain-bounded
     * and rides a stream-static broadcast join; snap + deviation + flag
-    * are the same row-local arithmetic as
-    * [[graft.operators.TimeSeriesOps.madOutliers]] (null value → null
-    * flag, never a silent pass), so batch and stream flag every seen
-    * key's row identically (spec-pinned). Unseen keys pass with a
-    * null flag — admission policy stays with the caller. FLAGS, never
-    * drops — the droplist decision stays with the caller too.
+    * are row-local. This is also the batch flag:
+    * [[graft.operators.TimeSeriesOps.madOutliers]] applies it to the
+    * centers of its own input, so batch and stream flag every seen
+    * key's row identically. A null value gets a null flag, never a
+    * silent pass; unseen keys pass with a null flag — admission policy
+    * stays with the caller. FLAGS, never drops — the droplist decision
+    * stays with the caller too.
+    *
+    * Output: input row (key first) + `snapped`, `med`, `mad`,
+    * `is_outlier`.
     */
   def madStream(docs: DataFrame, keyCol: String, valCol: String,
                 cutpoints: DataFrame, k: Double = 3.5,
                 gridScale: Int = 4): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val p = math.pow(10.0, gridScale)
-    docs
+    // left join: a row whose key has no centers (an unseen key, or one
+    // whose fit values were all null) must surface, never drop
+    docs.withColumn("snapped", madSnap(col(valCol), gridScale))
       .join(broadcast(cutpoints.select(col(keyCol), col("med"), col("mad"))),
         Seq(keyCol), "left")
-      .withColumn("snapped",
-        when(col(valCol).isNull, lit(null))
-          .otherwise(floor(col(valCol) * p + 0.5001) / p))
       .withColumn("is_outlier",
-        when(col(valCol).isNull || col("med").isNull,
-          lit(null).cast("boolean"))
-          .otherwise(abs(col("snapped") - col("med")) > lit(k) * col("mad")))
+        abs(col("snapped") - col("med")) > lit(k) * col("mad"))
+  }
+
+  /** A value snapped to the 10^-`gridScale` grid the MAD fit and flag
+    * both read (null stays null).
+    */
+  private def madSnap(v: Column, gridScale: Int): Column = {
+    val p = math.pow(10.0, gridScale)
+    floor(v * p + 0.5001) / p
   }
 
   /** The per-key robust-center dim [[madStream]] expects, fit from a
-    * BATCH corpus — literally [[TimeSeriesOps.madOutliers]]' own
-    * (median, MAD) columns, deduplicated per key, so the batch flagger
-    * and the stream gate share ONE definition (the winsorizeCutpoints
-    * principle).
+    * BATCH corpus: (key, `med`, `mad`), both exact lower medians from
+    * [[graft.mix.Mix.histogramQuantilesFromHist]] over the snapped
+    * values, shared with [[graft.operators.TimeSeriesOps.madOutliers]].
+    *
+    * Scale shape: the median comes out of the groupBy(key, value)
+    * histogram's reach arithmetic, and the MAD's |x − median|
+    * distribution is a RE-GROUPING of that histogram weighted by its
+    * counts (equal deviations merge with summed counts; abs() is the
+    * same IEEE op on the same grid doubles) — histogram-sized work,
+    * never a second corpus-wide groupBy over a corpus joined with the
+    * median dim. Two alternatives were MEASURED at mult=1000 and
+    * rejected: (a) eager localCheckpoint of the histogram — 89.7 s vs
+    * ~42 s, block-storage serialization of a ~100M-row histogram costs
+    * more than the reused exchange; (b) fusing med+mad into one window
+    * chain over the histogram (one exchange, zero recompute) — 53.0 s,
+    * two full re-sorts plus whole-partition window buffering of a
+    * histogram that is nearly corpus-sized at this fixture.
     */
   def madCutpoints(corpus: DataFrame, keyCol: String, valCol: String,
-                   gridScale: Int = 4): DataFrame =
-    graft.operators.TimeSeriesOps
-      .madOutliers(corpus, keyCol, valCol, gridScale = gridScale)
-      .select(col(keyCol), col("med"), col("mad")).distinct()
+                   gridScale: Int = 4): DataFrame = {
+    val hist = corpus.select(col(keyCol), madSnap(col(valCol), gridScale).as("_sv"))
+      .filter(col("_sv").isNotNull)
+      .groupBy(col(keyCol), col("_sv"))
+      .agg(count(lit(1)).as("_n"))
+    val med = graft.mix.Mix
+      .histogramQuantilesFromHist(hist, keyCol, "_sv", "_n", Seq((1, 2)))
+      .select(col(keyCol), col("q_1_2").as("med"))
+    val adHist = hist.join(broadcast(med), Seq(keyCol))
+      .groupBy(col(keyCol), abs(col("_sv") - col("med")).as("_ad"))
+      .agg(sum(col("_n")).as("_n"))
+    val mad = graft.mix.Mix
+      .histogramQuantilesFromHist(adHist, keyCol, "_ad", "_n", Seq((1, 2)))
+      .select(col(keyCol), col("q_1_2").as("mad"))
+    med.join(broadcast(mad), Seq(keyCol))
+  }
 
   /** Streaming hybrid-retrieval scorer (I14's stream twin): each
     * stream doc gets BOTH cascade scores — BM25 against a fixed query
@@ -1025,7 +1059,8 @@ object Streaming {
     * batch operator's tie, whatever their arrival order or micro-batch.
     * Disorder ACROSS batches is bounded by the source's watermark, the
     * same contract as any event-time streaming join. State never grows
-    * with data volume — one (ts, value) pair per key.
+    * with data volume — one (ts, value) pair per key. A null timestamp
+    * matches nothing, the batch operator's rule.
     *
     * Checkpoint note: [[AsofState]] holds microseconds (`rightUs`); it
     * held milliseconds before, so restart a query checkpointed by an
@@ -1039,10 +1074,14 @@ object Streaming {
       .flatMapGroupsWithState[AsofState, AsofOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key, batch, state: GroupState[AsofState]) =>
-          val sorted = batch.toSeq.sortBy(e => (micros(e.ts), -e.side))
+          val (timed, untimed) = batch.toSeq.partition(_.ts != null)
           val out = Seq.newBuilder[AsofOut]
+          // a null timestamp matches nothing: such a right event leaves
+          // the state alone and such a left event gets no right value
+          untimed.filter(_.side == 0)
+            .foreach(e => out += AsofOut(key, e.ts, e.value, None))
           var cur = state.getOption
-          sorted.foreach { e =>
+          timed.sortBy(e => (micros(e.ts), -e.side)).foreach { e =>
             val us = micros(e.ts)
             if (e.side == 1) {
               if (cur.forall(s => s.rightUs < us ||

@@ -363,26 +363,6 @@ object TextAnalysis {
       i => md5(concat_ws(" ", slice(words, i, lit(n)))))
   }
 
-  /** TF-IDF keyword extraction (I8): the top `topK` terms of each
-    * document by `tf x (N / df)` — the classic saliency score, here
-    * with the raw N/df quotient (no log) so every score is ONE exact
-    * integer product and ONE correctly-rounded IEEE division:
-    * bit-reproducible across engines, unlike log-weighted variants
-    * whose libm log differs by ulps between engines. Ranking is
-    * unchanged by the monotone log anyway.
-    *
-    * Scale shape: explode → two map-side-combining aggregates (tf keyed
-    * by (doc, term), df reduced FROM the tf table, so the corpus is
-    * exploded once) → broadcast-join the df dim back (vocabulary is
-    * orders smaller than the corpus) → per-doc top-k window. The corpus
-    * count N rides along as a cross-joined 1-row aggregate (the
-    * Salting totals pattern), so CONSTRUCTING the DataFrame costs
-    * nothing — N evaluates with the query itself, not eagerly on the
-    * driver (ADVICE r6: the former eager count() here made merely
-    * building the plan scan the corpus). Terms are split on single
-    * spaces, the corpus-vocabulary convention shared with
-    * text_topterms.
-    */
   /** Bigram language-model quality score (I11, CCNet-style LM
     * filtering): fit an add-one-smoothed bigram model on the corpus
     * itself, then score every document by its average negative
@@ -436,6 +416,26 @@ object TextAnalysis {
         exp(-col("_s") / col("n_bigrams")).as("ppl"))
   }
 
+  /** TF-IDF keyword extraction (I8): the top `topK` terms of each
+    * document by `tf x (N / df)` — the classic saliency score, here
+    * with the raw N/df quotient (no log) so every score is ONE exact
+    * integer product and ONE correctly-rounded IEEE division:
+    * bit-reproducible across engines, unlike log-weighted variants
+    * whose libm log differs by ulps between engines. Ranking is
+    * unchanged by the monotone log anyway.
+    *
+    * Scale shape: explode → two map-side-combining aggregates (tf keyed
+    * by (doc, term), df reduced FROM the tf table, so the corpus is
+    * exploded once) → broadcast-join the df dim back (vocabulary is
+    * orders smaller than the corpus) → per-doc top-k window. The corpus
+    * count N rides along as a cross-joined 1-row aggregate (the
+    * Salting totals pattern), so CONSTRUCTING the DataFrame costs
+    * nothing — N evaluates with the query itself, not eagerly on the
+    * driver (ADVICE r6: the former eager count() here made merely
+    * building the plan scan the corpus). Terms are split on single
+    * spaces, the corpus-vocabulary convention shared with
+    * text_topterms.
+    */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
                     topK: Int): DataFrame = {
     require(topK > 0, "topK must be positive")

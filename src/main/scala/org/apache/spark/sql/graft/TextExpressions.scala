@@ -283,17 +283,6 @@ object ShingleHashes {
   }
 }
 
-/** True when ANY element of the child long-array is in the static set —
-  * the [[org.apache.spark.sql.catalyst.expressions.InSet]] idea lifted
-  * to array elements. The membership gate of streaming decontamination:
-  * the benchmark's shingle-hash set is built ONCE (driver-side, bounded
-  * — eval sets are tiny by contract) and each row pays O(|its own
-  * array|) hash probes, independent of the benchmark size. The
-  * alternatives are all benchmark-linear per row: a broadcast
-  * nested-loop anti-join probes every bench row per doc, and
-  * `arrays_overlap` against a literal array hashes the SMALLER side
-  * but still iterates the bigger (the benchmark) per row.
-  */
 /** Plan-friendly large-membership holder: a big set must NOT
   * participate in TreeNode structural equality/hashing — Catalyst
   * hashes and compares expression trees many times per rule batch
@@ -325,6 +314,17 @@ object LongMembership {
   }
 }
 
+/** True when ANY element of the child long-array is in the static set —
+  * the [[org.apache.spark.sql.catalyst.expressions.InSet]] idea lifted
+  * to array elements. The membership gate of streaming decontamination:
+  * the benchmark's shingle-hash set is built ONCE (driver-side, bounded
+  * — eval sets are tiny by contract) and each row pays O(|its own
+  * array|) hash probes, independent of the benchmark size. The
+  * alternatives are all benchmark-linear per row: a broadcast
+  * nested-loop anti-join probes every bench row per doc, and
+  * `arrays_overlap` against a literal array hashes the SMALLER side
+  * but still iterates the bigger (the benchmark) per row.
+  */
 case class ArrayLongAnyInSet(child: Expression, hset: LongMembership)
   extends UnaryExpression with ExpectsInputTypes {
 

@@ -278,4 +278,54 @@ class ContractSpec extends AnyFunSuite {
       |    lead(v, 1, null, ignoreNulls = true).over(w)""".stripMargin)
       .foreach(planted => assert(neighbourTwins(planted).nonEmpty, planted.takeRight(80)))
   }
+
+  /** "file:line" of each Scaladoc block that is followed, across
+    * whitespace only, by another one: the first block documents
+    * nothing.
+    */
+  private def stackedDocs(files: Seq[(String, String)]): Seq[String] =
+    files.flatMap { case (name, src) =>
+      """(?s)/\*\*(?:(?!\*/).)*\*/(?=\s*/\*\*)""".r.findAllMatchIn(src)
+        .map(m => s"$name:${src.take(m.start).count(_ == '\n') + 1}")
+    }
+
+  test("no Scaladoc block in src/main is followed directly by another one") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .map(p => p.toString -> Files.readString(p))
+    assert(stackedDocs(files).isEmpty, stackedDocs(files).mkString(", "))
+    // the guard sees the form it forbids, a block directly below a block
+    assert(stackedDocs(Seq("X.scala" ->
+      "/** a */\n  /** b\n    */\n  /** c */\n  def f = 1")) === Seq("X.scala:1", "X.scala:2"))
+  }
+
+  /** Each decode entry point that `Multimodal.scala`'s code does not
+    * hold exactly once, and the synthesis dims if `MultimodalQueries`'
+    * code does not state them exactly once.
+    */
+  private def multimodalTwins(mm: String, queries: String): Seq[String] = {
+    def count(code: String, s: String) = code.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    (Seq("ImageIO.read(", "AudioSystem.getAudioInputStream(", ".grouped(").map(_ -> mm) :+
+        ("% 6 + 2" -> queries))
+      .collect { case (s, code) if count(code, s) != 1 => s"${count(code, s)} x $s" }
+  }
+
+  test("the multimodal family has one batched decode body and one synthesis oracle") {
+    // every decoder runs the one batchDecode body, and every image
+    // oracle reads the one synthesized-image CTE; a copied decoder or
+    // oracle grows back as a second read, grouping or dims formula
+    def code(name: String) = mainCode()
+      .collectFirst { case (p, c) if p.getFileName.toString == name => c }.get
+    val (mm, queries) = (code("Multimodal.scala"), code("MultimodalQueries.scala"))
+    assert(multimodalTwins(mm, queries).isEmpty, multimodalTwins(mm, queries).mkString(", "))
+    // the guard sees each form it forbids
+    val decodeTwin = mm + """
+      |  def extractFeatures2(spark: SparkSession, media: DataFrame) =
+      |    media.as[MediaRecord].mapPartitions(_.grouped(64).flatMap(_.map(r =>
+      |      javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload)))))""".stripMargin
+    assert(multimodalTwins(decodeTwin, queries).length === 2)
+    assert(multimodalTwins(mm, queries + "CAST(doc_id % 6 + 2 AS INT) AS w").nonEmpty)
+  }
 }

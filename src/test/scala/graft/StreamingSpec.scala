@@ -615,6 +615,25 @@ class StreamingSpec extends SparkSpec {
       (us("2024-01-01 03:00:00"), 30.0, Some(100.0))))
   }
 
+  test("asofJoinBackwardStream: a null timestamp matches nothing, like the batch join") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[AsofEvent]
+    val q = Streaming.asofJoinBackwardStream(spark, input.toDS())
+      .writeStream.format("memory").queryName("asof_null_ts")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      input.addData(AsofEvent(1L, null, 1, 7.0), // right, null ts
+        AsofEvent(1L, ts("2024-01-01 02:00:00"), 1, 8.0),
+        AsofEvent(1L, ts("2024-01-01 01:00:00"), 0, 1.0),
+        AsofEvent(1L, null, 0, 2.0)) // left, null ts
+      q.processAllAvailable()
+      val got = spark.table("asof_null_ts").collect()
+        .map(r => r.getAs[Double]("value") -> Option(r.get(r.fieldIndex("right_value"))))
+        .toMap
+      assert(got === Map(1.0 -> None, 2.0 -> None))
+    } finally q.stop()
+  }
+
   test("asofJoinBackwardStream compares microseconds, not milliseconds") {
     // the right event is 400 µs AFTER the left one, in the same millisecond
     val got = asofStream("asof_us", Seq(

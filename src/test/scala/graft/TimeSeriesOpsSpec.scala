@@ -183,6 +183,38 @@ class TimeSeriesOpsSpec extends SparkSpec {
       Seq("k"), "t", Seq("a", "b"))) === Seq((Some(1), None)))
   }
 
+  test("a null timestamp matches nothing in the as-of joins") {
+    val left = series(("a", "2024-01-01 01:00:00", 1.0), ("a", null, 2.0))
+      .withColumnRenamed("v", "lv")
+    val right = series(("a", null, 7.0), ("a", "2024-01-01 02:00:00", 8.0))
+      .withColumnRenamed("v", "rv")
+    // the null-ts right row is never a match, and the null-ts left row
+    // gets no right value in any direction
+    Seq((TimeSeriesOps.asofJoinBackward _, None),
+        (TimeSeriesOps.asofJoinForward _, Some(8.0)),
+        (TimeSeriesOps.asofJoinNearest _, Some(8.0))).foreach { case (op, at0100) =>
+      val out = op(left, right, Seq("k"), "t", Seq("rv")).collect()
+        .map(r => r.getAs[Double]("lv") -> Option(r.getAs[java.lang.Double]("rv"))).toMap
+      assert(out === Map(1.0 -> at0100.map(Double.box), 2.0 -> None))
+    }
+    // upsample: the only valued observation has a null ts, so the grid
+    // point the null-valued 01:00 row spans gets no value
+    val up = TimeSeriesOps.upsampleNearest(
+      series(("a", null, 7.0), ("a", "2024-01-01 01:00:00", null)), Seq("k"), "t", "v", 3600)
+      .select(col("v")).collect().map(r => Option(r.get(0)))
+    assert(up === Array(None))
+  }
+
+  test("Gps.velocity floors pre-1970 instants into their own bucket") {
+    val df = series(
+      ("a", "1969-12-31 23:59:59.999999", 1.0), // -1 µs: the bucket at -3600 s
+      ("a", "1970-01-01 00:00:00", 5.0))
+    val out = graft.operators.Gps.velocity(df, Seq("k"), "t", "v", 3600)
+      .select(unix_micros(col("bucket_start")), col("vel_mpd")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1))
+    assert(out === Array(-3600000000L -> (5.0 - 1.0) / (3600.0 / 86400.0)))
+  }
+
   test("interpolateLinear and upsampleNearest order same-ts rows by value, nulls first") {
     val df = series(
       ("a", "2024-01-01 00:00:00", 10.0),
